@@ -141,7 +141,9 @@ object Streams {
     * ([[graft.view.View.updateIndex]]'s `deletedIds`). With `_deleted`
     * present, live docs' ids also come from the raw feed via `id`, so a
     * doc whose conditional map phase stops emitting still has its old
-    * rows retired. Tombstones before the index exists are no-ops.
+    * rows retired. An id with both an update and a tombstone in one
+    * batch is retired (the tombstone wins, as on the batch path).
+    * Tombstones before the index exists are no-ops.
     *
     * `locale = true` keys the index with the locale-aware collator,
     * matching a view declared with `View(..., locale = true)`.
@@ -169,7 +171,11 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val hasDel = batch.columns.contains("_deleted")
         val deleted = coalesce(col("_deleted"), lit(false))
-        val live = if (hasDel) batch.filter(!deleted) else batch
+        val live =
+          if (hasDel) batch.filter(!deleted).join(
+            broadcast(batch.filter(deleted).select(id.as("_graft_del"))),
+            id === col("_graft_del"), "left_anti")
+          else batch
         val rows = emit(live)
           .withColumn("_ck", keyFn(col("key")))
         val n = if (buckets > 0) buckets
@@ -184,12 +190,10 @@ object Streams {
           val newRows =
             rows.withColumn("_kb", IndexStore.bucketCol(col("_ck"), meta))
           val changedIds =
-            if (hasDel) batch.select(id.as("_id")).distinct()
-            else rows.select(col("_id")).distinct()
-          val affected = IndexStore.merge(spark, path, meta, newRows,
-            changedIds, newSeq = batchId + 1)
-          reduce.foreach(rf =>
-            IndexStore.refreshReduced(spark, path, rf, affected))
+            if (hasDel) batch.select(id.as("_id"))
+            else rows.select(col("_id"))
+          IndexStore.merge(spark, path, meta, newRows, changedIds,
+            newSeq = batchId + 1, reduce = reduce)
           if (autoCompactSkew > 0)
             IndexStore.maybeCompact(spark, path, reduce, autoCompactSkew)
         }

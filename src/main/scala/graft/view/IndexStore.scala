@@ -1,10 +1,19 @@
 package graft.view
 
 import java.io.IOException
+import java.util.concurrent.CompletionException
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Index metadata persisted alongside the data: the change-feed sequence
   * the index is current through (CouchDB's `update_seq`), the bucket
@@ -18,7 +27,8 @@ final case class IndexMeta(updateSeq: Long, buckets: Int,
                              * envelope's total_rows without a count job
                              * per page. Stamped by every reduced-dir
                              * write ([[IndexStore.writeReduced]] /
-                             * [[IndexStore.refreshReduced]]). */
+                             * [[IndexStore.merge]]) from Parquet
+                             * footer row counts. */
                            reducedGroups: Long = -1L,
                            /** CouchDB's `purge_seq`: on a document
                              * store, how many purge batches it has
@@ -62,6 +72,7 @@ final case class IndexMeta(updateSeq: Long, buckets: Int,
   *                      doc emitted into (the role of CouchDB's by-id
   *                      btree: find a changed doc's OLD rows without
   *                      scanning the index)
+  *   reduced/_kb=<b>/   optional per-key aggregates of data bucket b
   * }}}
   *
   * The layout is what makes maintenance O(changed buckets), not
@@ -70,14 +81,33 @@ final case class IndexMeta(updateSeq: Long, buckets: Int,
   * changed docs' old rows, then rewrites ONLY those `_kb` directories.
   * Untouched bucket directories are never read or written — at 100 TB a
   * small change-feed batch touches a handful of buckets, not the index.
+  * The reduced group count is kept the same way: as a delta of the
+  * Parquet footer row counts of the reduced buckets swapped out and in.
   * Queries prune the same way: `startkey`/`endkey` become a `_kb` range
   * (directory-level partition pruning) plus a binary `_ck` range pushed
   * to parquet (row-group min/max pruning within the bucket).
   *
-  * A failed update is safe to retry: the merge is idempotent (affected
-  * buckets are rebuilt from surviving rows + the batch's new rows), and
-  * each bucket directory is swapped by rename with failures thrown, so
-  * a crash leaves buckets either old or new, never truncated.
+  * One [[merge]] batch writes all, then swaps:
+  *  1. data, sidecar and reduced buckets are written concurrently to
+  *     `data._tmp`, `ids._tmp` and `reduced._tmp`; if any write fails,
+  *     the temp dirs are deleted and nothing on the live side changes;
+  *  2. `_graft_swap` records the affected and written buckets of each
+  *     directory and the batch's new meta, with a closing `end` line;
+  *  3. the buckets are swapped in by rename in the fixed order data →
+  *     ids → reduced, then `_graft_meta` (update_seq and the reduced
+  *     group count together) is written and `_graft_swap` dropped.
+  *
+  * A replay after a crash at any point converges. Before step 2 is
+  * complete the live directories and meta are the pre-state, and the
+  * replay rebuilds the temp dirs from scratch. Once it is complete the
+  * next merge (or [[compact]]) first rolls the record forward: a bucket
+  * whose temp dir still exists is swapped, a written bucket without
+  * one was swapped already, an affected bucket that received no rows
+  * is dropped — each step is idempotent, so a crash inside the roll
+  * forward is rolled forward again — and the recorded meta is written.
+  * Data goes before ids so that the sidecar, until it is swapped
+  * itself, still names every bucket the changed docs' old rows were in:
+  * a replay of the batch reaches the same buckets as the first run.
   */
 object IndexStore {
 
@@ -159,25 +189,38 @@ object IndexStore {
                                part: String,
                                keep: Long => Boolean): DataFrame = {
     val fs = fsFor(spark, dir)
-    val p = new Path(dir)
-    if (!fs.exists(p)) return spark.read.parquet(dir) // loud, as before
-    val all = fs.listStatus(p).filter(s =>
-      s.isDirectory && s.getPath.getName.startsWith(part + "="))
-    val hit = all.filter(s => scala.util.Try(
-      s.getPath.getName.substring(part.length + 1).toLong)
-      .toOption.exists(keep))
+    if (!fs.exists(new Path(dir))) return spark.read.parquet(dir) // loud, as before
+    val all = bucketDirs(fs, dir, part)
+    val hit = all.filter(d => keep(d._1))
     // nothing in range: one partition dir supplies the schema, the
     // caller's partition-column filter drops its rows
     val toRead = if (hit.nonEmpty) hit else all.take(1)
     if (toRead.isEmpty) spark.read.parquet(dir)
     else spark.read.option("basePath", dir)
-      .parquet(toRead.map(_.getPath.toString).toIndexedSeq: _*)
+      .parquet(toRead.map(_._2.toString): _*)
+  }
+
+  /** The `part=<n>` partition directories of `dir` with an integral
+    * `n` (none if `dir` is absent). */
+  private def bucketDirs(fs: FileSystem, dir: String,
+                         part: String): Seq[(Long, Path)] = {
+    val p = new Path(dir)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
+      .filter(_.getName.startsWith(part + "="))
+      .flatMap(d => scala.util.Try(
+        d.getName.substring(part.length + 1).toLong).toOption.map(_ -> d))
   }
 
   def exists(spark: SparkSession, path: String): Boolean =
     fsFor(spark, path).exists(new Path(path, "_graft_meta"))
 
-  def writeMeta(spark: SparkSession, path: String, meta0: IndexMeta): Unit = {
+  def writeMeta(spark: SparkSession, path: String, meta: IndexMeta): Unit =
+    writeText(fsFor(spark, path), new Path(path, "_graft_meta"),
+      metaText(spark, path, meta))
+
+  private def metaText(spark: SparkSession, path: String,
+                       meta0: IndexMeta): String = {
     // creation-seq bookkeeping is automatic: the first write of a meta
     // file stamps createdSeq = its updateSeq (the creation event's seq);
     // later writes that pass the -1 default inherit the stored value so
@@ -204,14 +247,22 @@ object IndexStore {
     if (meta.countsSeq >= 0)
       sb.append(s"counts=${meta.docCount}:${meta.delCount}:" +
         s"${meta.countsSeq}\n")
-    val out = fsFor(spark, path).create(new Path(path, "_graft_meta"), true)
-    try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
+    sb.toString
+  }
+
+  private def writeText(fs: FileSystem, file: Path, text: String): Unit = {
+    val out = fs.create(file, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def readText(fs: FileSystem, file: Path): String = {
+    val in = fs.open(file)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
   }
 
   def readMeta(spark: SparkSession, path: String): IndexMeta = {
-    val in = fsFor(spark, path).open(new Path(path, "_graft_meta"))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
+    val text = readText(fsFor(spark, path), new Path(path, "_graft_meta"))
     val dec = java.util.Base64.getDecoder
     var seq = 0L; var buckets = 0; var rgroups = -1L; var pq = 0L
     var created = -1L; var doc = -1L; var del = -1L; var cseq = -1L
@@ -269,55 +320,95 @@ object IndexStore {
 
   /** Incremental merge of one change batch. `newRows` are the mapped
     * view rows of the changed docs (with `_kb` routed via [[bucketCol]]);
-    * `changedIds` holds every changed OR deleted doc id. Only the key
-    * buckets that contain old rows of changed ids (found via the by-id
-    * sidecar) or receive new rows are read and rewritten. */
-  def merge(spark: SparkSession, path: String, meta: IndexMeta,
+    * `changedIds` holds every changed OR deleted doc id (duplicates are
+    * harmless). Only the key buckets that contain old rows of changed
+    * ids (found via the by-id sidecar) or receive new rows are read and
+    * rewritten; with `reduce` and a materialized reduced index, the
+    * same buckets of the reduced index are re-aggregated from the
+    * merged rows (a key's rows never span buckets, so bucket-local
+    * re-aggregation is complete). The data, sidecar and reduced
+    * rewrites run concurrently and are swapped in only when all three
+    * succeeded (see the class doc for the order). */
+  def merge(spark: SparkSession, path: String, meta0: IndexMeta,
             newRows0: DataFrame, changedIds: DataFrame,
             newSeq: Long,
-            dataSortCols: Seq[Column] = Seq(col("_kb"), col("_ck"))): Seq[Int] = {
+            dataSortCols: Seq[Column] = Seq(col("_kb"), col("_ck")),
+            reduce: Option[Reduce] = None): Seq[Int] = {
     val fs = fsFor(spark, path)
-    // the batch rows and ids feed several jobs (bucket discovery, data
-    // swap, sidecar swap) — pin them so the upstream map phase runs
-    // once per batch, not once per consumer
-    val cids = changedIds.toDF("_id").distinct().persist()
+    // a batch cut off mid-swap is rolled forward first; its meta is
+    // then the one this batch builds on
+    val meta = if (finishSwap(spark, path)) readMeta(spark, path) else meta0
+    // the batch rows and ids feed every job of the batch — pin them so
+    // the upstream map phase runs once per batch, not once per consumer
+    val cids = changedIds.toDF("_id").persist()
     val newRows = newRows0.persist()
+    var merged: DataFrame = null
     try {
-      val withIb = cids.withColumn("_ib", idBucket(col("_id"), meta.buckets))
-      val ibs = withIb.select(col("_ib")).distinct()
-        .collect().map(_.getInt(0)).toSeq
+      val found = bucketPairs(
+        cids.select(lit(0), idBucket(col("_id"), meta.buckets))
+          .union(newRows.select(lit(1), col("_kb"))))
+      val ibs = found.collect { case (0, b) => b }.toSeq.sorted
       // by-id lookup, pruned to the changed ids' hash buckets — O(batch),
       // never a scan of the whole sidecar, let alone the index
-      val oldKbs = spark.read.parquet(idsDir(path))
+      def oldIds = readKnown(spark, idsDir(path), "_ib", ibs)
         .filter(col("_ib").isin(ibs: _*))
-        .join(cids, Seq("_id"), "left_semi")
-        .select(col("_kb")).distinct().collect().map(_.getInt(0)).toSeq
-      val newKbs = newRows.select(col("_kb")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val affected = (oldKbs ++ newKbs).distinct.sorted
-      if (affected.nonEmpty) {
-        val merged = readBuckets(spark, dataDir(path), "_kb", affected)
-          .filter(col("_kb").isin(affected: _*))
-          .join(cids, Seq("_id"), "left_anti")
-          .unionByName(newRows)
-        writeSwap(spark, fs, merged, dataDir(path), "_kb", affected,
-          dataSortCols)
-        val mergedIds = spark.read.parquet(idsDir(path))
-          .filter(col("_ib").isin(ibs: _*))
-          .join(cids, Seq("_id"), "left_anti")
-          .unionByName(
-            newRows.select(col("_id"), col("_kb")).distinct()
-              .withColumn("_ib", idBucket(col("_id"), meta.buckets)))
-        writeSwap(spark, fs, mergedIds, idsDir(path), "_ib", ibs,
-          Seq(col("_ib"), col("_id")))
+      val oldKbs =
+        if (ibs.isEmpty) Set.empty[(Int, Int)]
+        else bucketPairs(oldIds.join(cids, Seq("_id"), "left_semi")
+          .select(lit(1), col("_kb")))
+      val affected = (oldKbs ++ found).collect { case (1, b) => b }
+        .toSeq.sorted
+      if (affected.isEmpty) {
+        writeMeta(spark, path, meta.copy(updateSeq = newSeq))
+        return affected
       }
-      writeMeta(spark, path, meta.copy(updateSeq = newSeq))
+      // the affected buckets' merged rows, pinned once and hash-placed
+      // by bucket: the data write and the reduced aggregation both read
+      // them without another exchange or a re-read of written buckets
+      merged = readKnown(spark, dataDir(path), "_kb", affected)
+        .filter(col("_kb").isin(affected: _*))
+        .join(cids, Seq("_id"), "left_anti")
+        .unionByName(newRows)
+        .repartition(affected.size, col("_kb"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val dataW = Write(dataDir(path), "_kb", affected,
+        merged.sortWithinPartitions(dataSortCols: _*))
+      val idsW = Option.when(ibs.nonEmpty)(Write(idsDir(path), "_ib", ibs,
+        oldIds.join(cids, Seq("_id"), "left_anti")
+          .unionByName(newRows.select(col("_id"), col("_kb"))
+            .withColumn("_ib", idBucket(col("_id"), meta.buckets)))
+          // one exchange: hash placement by _ib also clusters the dedup
+          .repartition(ibs.size, col("_ib")).distinct()
+          .sortWithinPartitions(col("_ib"), col("_id"))))
+      val reducedW = reduce.filter(_ => hasReduced(spark, path)).map(rf =>
+        Write(reducedDir(path), "_kb", affected,
+          reducedRowsOf(merged, rf).sortWithinPartitions(col("_kb"), col("_ck"))))
+      val writes = Seq(dataW) ++ idsW ++ reducedW
+      val written = writeAll(spark, fs, writes)
+      val isAffected = affected.map(_.toLong).toSet
+      val groups = reducedW.fold(meta.reducedGroups) { w =>
+        val kept =
+          if (meta.reducedGroups >= 0)
+            meta.reducedGroups - footerRows(fs, w.dir, "_kb", isAffected)
+          else footerRows(fs, w.dir, "_kb", b => !isAffected(b))
+        kept + footerRows(fs, w.dir + "._tmp", "_kb", isAffected)
+      }
+      commit(spark, path, writes.zip(written),
+        meta.copy(updateSeq = newSeq, reducedGroups = groups))
       affected
     } finally {
+      if (merged != null) merged.unpersist()
       cids.unpersist()
       newRows.unpersist()
     }
   }
+
+  /** The distinct (tag, bucket) int pairs of `df`, deduplicated inside
+    * each partition before the collect: one job and no shuffle, and
+    * the driver receives at most partitions × buckets pairs. */
+  private def bucketPairs(df: DataFrame): Set[(Int, Int)] =
+    df.rdd.mapPartitions(_.map(r => (r.getInt(0), r.getInt(1))).toSet.iterator)
+      .collect().toSet
 
   /** Purge-propagation primitive for every IndexStore-layout secondary
     * index (materialized views, Mango JSON indexes, IVF-family ANN
@@ -343,13 +434,9 @@ object IndexStore {
     val affected =
       if (ids.isEmpty) Nil
       else {
-        val data = spark.read.parquet(dataDir(path))
-        val got = merge(spark, path, meta, data.limit(0).select(
-            data.columns.map(col).toIndexedSeq: _*),
-          idsDf(spark, data.select(col("_id")), ids), meta.updateSeq,
-          dataSortCols)
-        rf.foreach(r => refreshReduced(spark, path, r, got))
-        got
+        val none = readKnown(spark, dataDir(path), "_kb", Nil).limit(0)
+        merge(spark, path, meta, none, idsDf(spark, none, ids),
+          meta.updateSeq, dataSortCols, rf)
       }
     if (newPurgeSeq >= 0)
       writeMeta(spark, path,
@@ -359,30 +446,119 @@ object IndexStore {
 
   /** Rebuild the `affected` partition directories of `destDir` from
     * `df`: write to a temp dir, then swap each affected directory by
-    * rename. An affected bucket with no surviving rows is deleted (a
-    * dynamic-partition overwrite would silently leave its stale
-    * directory behind). Rename/delete failures throw — a failed swap
-    * must never pass silently. */
+    * rename ([[writeTmp]] + [[swapIn]]). */
   private[graft] def writeSwap(spark: SparkSession, fs: FileSystem,
                               df: DataFrame,
                               destDir: String, pcol: String,
                               affected: Seq[Int],
                               sortCols: Seq[Column]): Unit = {
+    val written = writeTmp(fs, df.repartition(math.max(affected.size, 1),
+      col(pcol)).sortWithinPartitions(sortCols: _*), destDir, pcol)
+    swapIn(fs, destDir, pcol, affected, written)
+  }
+
+  /** Write `df`, partitioned by `pcol`, to `destDir._tmp`; returns the
+    * buckets that received rows. */
+  private def writeTmp(fs: FileSystem, df: DataFrame, destDir: String,
+                       pcol: String): Set[Int] = {
+    val tmp = new Path(destDir + "._tmp")
+    fs.delete(tmp, true)
+    df.write.mode("overwrite").partitionBy(pcol).parquet(tmp.toString)
+    bucketDirs(fs, tmp.toString, pcol).map(_._1.toInt).toSet
+  }
+
+  /** Swap the `affected` buckets of `destDir` in from `destDir._tmp`,
+    * each by rename; an affected bucket that has no rows left
+    * (`written` lacks it) is deleted — a dynamic-partition overwrite
+    * would silently leave its stale directory behind. A bucket in
+    * `written` whose temp directory is gone was swapped in before, so
+    * re-running a swap is a no-op for it. Rename/delete failures throw
+    * — a failed swap must never pass silently. */
+  private def swapIn(fs: FileSystem, destDir: String, pcol: String,
+                     affected: Seq[Int], written: Set[Int]): Unit = {
     val tmp = destDir + "._tmp"
-    fs.delete(new Path(tmp), true)
-    df.repartition(math.max(affected.size, 1), col(pcol))
-      .sortWithinPartitions(sortCols: _*)
-      .write.mode("overwrite").partitionBy(pcol).parquet(tmp)
     affected.foreach { b =>
       val dst = new Path(s"$destDir/$pcol=$b")
       val src = new Path(s"$tmp/$pcol=$b")
-      if (fs.exists(dst) && !fs.delete(dst, true))
+      val fresh = fs.exists(src)
+      if ((fresh || !written(b)) && fs.exists(dst) && !fs.delete(dst, true))
         throw new IOException(s"index update: could not drop stale bucket $dst")
-      if (fs.exists(src) && !fs.rename(src, dst))
+      if (fresh && !fs.rename(src, dst))
         throw new IOException(
           s"index update: bucket swap failed ($src -> $dst); rerun the update")
     }
     fs.delete(new Path(tmp), true)
+  }
+
+  /** One directory's rewrite in a batch: `rows` (already partitioned
+    * for the write) replace the `buckets` of `dir`. */
+  private final case class Write(dir: String, pcol: String,
+                                 buckets: Seq[Int], rows: DataFrame)
+
+  /** Run the temp writes of one batch concurrently — the first on the
+    * calling thread, the others on writer threads that carry its
+    * session and local properties — and join them all. Returns each
+    * write's written buckets; if any write failed, every temp dir is
+    * deleted and the first failure is thrown with the others attached
+    * as suppressed. */
+  private def writeAll(spark: SparkSession, fs: FileSystem,
+                       writes: Seq[Write]): Seq[Set[Int]] = {
+    def run(w: Write) = writeTmp(fs, w.rows, w.dir, w.pcol)
+    val others = writes.tail.map(w => Bridge.async(spark)(run(w)))
+    val first = try Right(run(writes.head)) catch { case e: Throwable => Left(e) }
+    val results = first +: others.map(f =>
+      try Right(f.join()) catch { case e: CompletionException => Left(e.getCause) })
+    val errs = results.collect { case Left(e) => e }
+    if (errs.nonEmpty) {
+      writes.foreach(w => fs.delete(new Path(w.dir + "._tmp"), true))
+      errs.tail.foreach(errs.head.addSuppressed)
+      throw errs.head
+    }
+    results.collect { case Right(b) => b }
+  }
+
+  private def swapLog(path: String) = new Path(path, "_graft_swap")
+
+  /** Make one batch's temp writes live: record each write's affected
+    * and written buckets plus the new meta in `_graft_swap`, apply the
+    * record, then drop it. */
+  private def commit(spark: SparkSession, path: String,
+                     writes: Seq[(Write, Set[Int])], meta: IndexMeta): Unit = {
+    val fs = fsFor(spark, path)
+    val text = writes.map { case (w, written) =>
+        s"swap=${w.dir.drop(path.length + 1)}|${w.pcol}|" +
+          s"${w.buckets.mkString(",")}|${written.toSeq.sorted.mkString(",")}\n"
+      }.mkString + metaText(spark, path, meta) + "end\n"
+    writeText(fs, swapLog(path), text)
+    applySwaps(fs, path, text)
+    fs.delete(swapLog(path), false)
+  }
+
+  private def applySwaps(fs: FileSystem, path: String, text: String): Unit = {
+    val (swaps, metaLines) = text.linesIterator.filter(_ != "end").toSeq
+      .partition(_.startsWith("swap="))
+    def ints(s: String) = s.split(",").filter(_.nonEmpty).map(_.toInt)
+    swaps.foreach { l =>
+      val Array(dir, pcol, affected, written) = l.drop(5).split("\\|", -1)
+      swapIn(fs, s"$path/$dir", pcol, ints(affected).toSeq,
+        ints(written).toSet)
+    }
+    writeText(fs, new Path(path, "_graft_meta"),
+      metaLines.mkString("", "\n", "\n"))
+  }
+
+  /** Roll forward a batch commit that a crash cut off after its swap
+    * record was complete (every temp write had finished); a record
+    * without its `end` line was cut off before any swap and is
+    * dropped. Returns true when a commit was rolled forward. */
+  private def finishSwap(spark: SparkSession, path: String): Boolean = {
+    val fs = fsFor(spark, path)
+    if (!fs.exists(swapLog(path))) return false
+    val text = readText(fs, swapLog(path))
+    val complete = text.linesIterator.toSeq.lastOption.contains("end")
+    if (complete) applySwaps(fs, path, text)
+    fs.delete(swapLog(path), false)
+    complete
   }
 
   /** (_kb, key, value, _ck) per-key aggregate rows of raw index rows —
@@ -391,26 +567,45 @@ object IndexStore {
     data.groupBy(col("_kb"), col("key"))
       .agg(Reduce.aggFor(rf), min(col("_ck")).as("_ck"))
 
-  /** Re-aggregate the reduced index for the `affected` raw buckets (a
-    * key's rows never span buckets, so bucket-local re-aggregation is
-    * complete). No-op when no reduced index exists. */
-  private[graft] def refreshReduced(spark: SparkSession, path: String,
-                                    rf: Reduce, affected: Seq[Int]): Unit =
-    if (affected.nonEmpty && hasReduced(spark, path)) {
-      val data = readBuckets(spark, dataDir(path), "_kb", affected)
-        .filter(col("_kb").isin(affected: _*))
-      writeSwap(spark, fsFor(spark, path), reducedRowsOf(data, rf),
-        reducedDir(path), "_kb", affected, Seq(col("_kb"), col("_ck")))
-      stampReducedGroups(spark, path)
-    }
+  /** Visible (not `_`/`.`-prefixed) files of the given bucket dirs. */
+  private def dataFiles(fs: FileSystem, dirs: Seq[(Long, Path)]): Iterator[Path] =
+    dirs.iterator.flatMap(d => fs.listStatus(d._2).iterator.map(_.getPath))
+      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
 
-  /** Re-stamp `reducedGroups` after a reduced-dir write. The count job
-    * is parquet-footer-speed (empty read schema) and runs ONCE per
-    * write, so every later paging envelope serves total_rows straight
-    * from the meta — no count job per page. */
-  private def stampReducedGroups(spark: SparkSession, path: String): Unit = {
-    val n = spark.read.parquet(reducedDir(path)).count()
-    writeMeta(spark, path, readMeta(spark, path).copy(reducedGroups = n))
+  private def footer(fs: FileSystem, file: Path) = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, fs.getConf))
+    try r.getFooter finally r.close()
+  }
+
+  /** Row count of the selected buckets from their Parquet footers — no
+    * Spark job, O(files). */
+  private def footerRows(fs: FileSystem, dir: String, pcol: String,
+                         keep: Long => Boolean): Long =
+    dataFiles(fs, bucketDirs(fs, dir, pcol).filter(d => keep(d._1)))
+      .map(f => footer(fs, f).getBlocks.asScala.map(_.getRowCount).sum).sum
+
+  /** [[readBuckets]] with the store's own row schema taken on the
+    * driver from one Parquet footer (Spark's row-schema JSON plus the
+    * partition column) instead of from a schema-inference job. Falls
+    * back to [[readBuckets]] for a store without that footer entry. */
+  private def readKnown(spark: SparkSession, dir: String, pcol: String,
+                        ids: Seq[Int]): DataFrame = {
+    val fs = fsFor(spark, dir)
+    val all = bucketDirs(fs, dir, pcol)
+    val want = ids.map(_.toLong).toSet
+    val hit = all.filter(d => want(d._1))
+    val schema = dataFiles(fs, hit ++ all).nextOption()
+      .flatMap(f => Option(footer(fs, f).getFileMetaData
+        .getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY)))
+      .map(json => DataType.fromJson(json).asInstanceOf[StructType]
+        .add(StructField(pcol, IntegerType)))
+    schema match {
+      case None => readBuckets(spark, dir, pcol, ids)
+      case Some(s) if hit.isEmpty =>
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
+      case Some(s) => spark.read.schema(s).option("basePath", dir)
+        .parquet(hit.map(_._2.toString): _*)
+    }
   }
 
   /** Per-bucket row counts — the skew diagnostic that tells an operator
@@ -424,15 +619,19 @@ object IndexStore {
 
   /** Derive (or re-derive) the materialized reduced index from the
     * current raw data — used by [[graft.view.View.materializeReduced]]
-    * and after [[compact]] re-sampled the bucket layout. */
+    * and after [[compact]] re-sampled the bucket layout. Stamps
+    * `reducedGroups` from the written files' Parquet footers, so every
+    * later paging envelope serves total_rows straight from the meta. */
   private[graft] def writeReduced(spark: SparkSession, path: String,
                                   rf: Reduce): Unit = {
+    finishSwap(spark, path)
     reducedRowsOf(spark.read.parquet(dataDir(path)), rf)
       .repartition(col("_kb"))
       .sortWithinPartitions(col("_kb"), col("_ck"))
       .write.mode("overwrite").partitionBy("_kb")
       .parquet(reducedDir(path))
-    stampReducedGroups(spark, path)
+    val n = footerRows(fsFor(spark, path), reducedDir(path), "_kb", _ => true)
+    writeMeta(spark, path, readMeta(spark, path).copy(reducedGroups = n))
   }
 
   /** Automatic compaction policy for long-lived maintained indexes:
@@ -468,6 +667,7 @@ object IndexStore {
     * index is written beside the live one and swapped in two renames;
     * a crash between them leaves the old index at `path + "._old"`. */
   def compact(spark: SparkSession, path: String, numBuckets: Int = 0): Unit = {
+    finishSwap(spark, path)
     val meta = readMeta(spark, path)
     val n = if (numBuckets > 0) numBuckets else meta.buckets
     val rows = spark.read.parquet(dataDir(path)).drop("_kb")

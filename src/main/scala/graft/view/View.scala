@@ -805,14 +805,13 @@ final class View private (
     val meta = IndexStore.readMeta(spark, path)
     val newRows = mapPhase(minusDeleted(spark, changedDocs, deletedIds))
       .withColumn("_kb", IndexStore.bucketCol(col("_ck"), meta))
-    val cids = changedDocs.select(idCol.as("_id")).distinct()
+    val cids = changedDocs.select(idCol.as("_id"))
     val allIds =
       if (deletedIds.isEmpty) cids
       else cids.unionByName(IndexStore.idsDf(spark, cids, deletedIds))
     val seq = if (newSeq >= 0) newSeq else meta.updateSeq + 1
-    val affected = IndexStore.merge(spark, path, meta, newRows, allIds, seq)
-    reduceFn.foreach(rf =>
-      IndexStore.refreshReduced(spark, path, rf, affected))
+    IndexStore.merge(spark, path, meta, newRows, allIds, seq,
+      reduce = reduceFn)
   }
 
   /** Catch this view's materialized index up to its document store's

@@ -528,6 +528,99 @@ class IndexStoreSpec extends SparkSpecBase {
     r.rows.unpersist()
   }
 
+  test("a failed reduced write leaves data, sidecar, reduced and meta unchanged") {
+    val dir = Files.createTempDirectory("graft-atomic").toString
+    val path = s"$dir/v"
+    val marker = 666.0
+    // a custom reduce that fails on the marker value: only the reduced
+    // write of the batch evaluates it
+    val boom = Reduce.Custom(v =>
+      sum(when(v === marker, raise_error(lit("reduce marker")))
+        .otherwise(v)))
+    val docs = orders.limit(300).select($"o_orderkey".as("_id"),
+      $"o_orderstatus".as("k"), $"o_totalprice".as("v"))
+    val v = View(docs, col("_id"), col("k"), col("v"), Some(boom))
+    v.materialize(path, numBuckets = 3, seq = 1)
+    v.materializeReduced(spark, path)
+    def snapshot() = Seq("data", "ids", "reduced").map(d => fileHashes(s"$path/$d"))
+    val before = snapshot()
+    val meta0 = IndexStore.readMeta(spark, path)
+    val ids = docs.select($"_id").as[Long].take(3)
+    val changed = docs.filter($"_id".isin(ids: _*))
+      .withColumn("k", when($"_id" === ids(0), lit("moved")).otherwise($"k"))
+      .withColumn("v", when($"_id" === ids(1), lit(marker)).otherwise($"v"))
+    val err = intercept[Exception](
+      v.updateIndex(spark, path, changed, deletedIds = Seq(ids(2))))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("reduce marker")),
+      s"unexpected failure: $err")
+    assert(snapshot() == before, "a live directory changed")
+    val meta1 = IndexStore.readMeta(spark, path)
+    assert(meta1.updateSeq == meta0.updateSeq)
+    assert(meta1.reducedGroups == meta0.reducedGroups)
+    val left = Files.list(Paths.get(path)).iterator().asScala
+      .map(_.getFileName.toString)
+      .filter(n => n.endsWith("._tmp") || n == "_graft_swap").toSeq
+    assert(left.isEmpty, s"leftovers after a failed batch: $left")
+    // the same batch without the marker then goes through
+    v.updateIndex(spark, path, changed.withColumn("v", lit(1.0)),
+      deletedIds = Seq(ids(2)))
+    assert(IndexStore.readMeta(spark, path).updateSeq == meta0.updateSeq + 1)
+    assert(spark.read.parquet(s"$path/reduced")
+      .filter($"key" === "moved").count() == 1)
+  }
+
+  for (crashDir <- Seq("data", "reduced"))
+    test(s"a crash during the $crashDir bucket swaps is rolled forward by the replay") {
+      val dir = Files.createTempDirectory("graft-crash").toString
+      val docs = orders.limit(300).select($"o_orderkey".as("_id"),
+        $"o_custkey".as("k"), $"o_totalprice".as("v"))
+      val v = View(docs, col("_id"), col("k"), col("v"), Some(Reduce.Sum))
+      val (crashed, clean) = (s"$dir/a", s"$dir/b")
+      v.materialize(crashed, numBuckets = 3, seq = 1)
+      v.materializeReduced(spark, crashed)
+      Files.walk(Paths.get(crashed)).iterator().asScala.foreach(f =>
+        Files.copy(f, Paths.get(clean).resolve(Paths.get(crashed).relativize(f))))
+      val ids = docs.select($"_id").as[Long].take(4)
+      // key moves to both ends of the key range, a new doc, a tombstone
+      val changed = docs.filter($"_id".isin(ids.take(2): _*))
+        .withColumn("k", when($"_id" === ids(0), lit(0L)).otherwise(lit(1L << 40)))
+        .unionByName(docs.filter($"_id" === ids(2))
+          .withColumn("_id", lit(-1L)).withColumn("k", lit(7L)))
+      def update(p: String) =
+        v.updateIndex(spark, p, changed, deletedIds = Seq(ids(3)), newSeq = 2)
+      update(clean)
+      val conf = spark.sparkContext.hadoopConfiguration
+      conf.set("fs.file.impl", classOf[CrashingLocalFs].getName)
+      conf.setBoolean("fs.file.impl.disable.cache", true)
+      CrashingLocalFs.crashAt = s"$crashDir._tmp"
+      try intercept[java.io.IOException](update(crashed))
+      finally {
+        CrashingLocalFs.crashAt = null
+        conf.unset("fs.file.impl")
+        conf.unset("fs.file.impl.disable.cache")
+      }
+      assert(Files.exists(Paths.get(crashed, "_graft_swap")),
+        "the crash hit after the swap record was written")
+      assert(IndexStore.readMeta(spark, crashed).updateSeq == 1L)
+      update(crashed) // the replay
+      def state(p: String) = (
+        spark.read.parquet(s"$p/data").select("_id", "key", "value", "_kb")
+          .collect().map(_.toSeq).toSet,
+        spark.read.parquet(s"$p/ids").select("_id", "_kb", "_ib")
+          .collect().map(_.toSeq).toSet,
+        spark.read.parquet(s"$p/reduced").select("key", "value", "_kb")
+          .collect().map(_.toSeq).toSet,
+        IndexStore.readMeta(spark, p).copy(bounds = Nil))
+      assert(state(crashed) == state(clean))
+      assert(IndexStore.readMeta(spark, crashed).reducedGroups ==
+        spark.read.parquet(s"$crashed/reduced").count())
+      val left = Files.list(Paths.get(crashed)).iterator().asScala
+        .map(_.getFileName.toString)
+        .filter(n => n.endsWith("._tmp") || n == "_graft_swap").toSeq
+      assert(left.isEmpty, s"leftovers after the replay: $left")
+    }
+
   test("update+tombstone for one id in ONE batch: the delete wins, never resurrection") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft-delwin").toString
@@ -571,4 +664,23 @@ class IndexStoreSpec extends SparkSpecBase {
       .filter($"doc_id" === 3L).count() == 0,
       "text: the tombstoned doc must not re-enter via its update row")
   }
+}
+
+/** The local filesystem with one injected crash: the first bucket
+  * rename out of a `<dir>._tmp` directory named by `crashAt` throws,
+  * as if the process died there. */
+class CrashingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean = {
+    val at = CrashingLocalFs.crashAt
+    if (at != null && src.getParent.getName == at) {
+      CrashingLocalFs.crashAt = null
+      throw new java.io.IOException(s"injected crash renaming $src")
+    }
+    super.rename(src, dst)
+  }
+}
+
+object CrashingLocalFs {
+  @volatile var crashAt: String = null
 }

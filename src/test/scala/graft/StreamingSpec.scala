@@ -165,6 +165,54 @@ class StreamingSpec extends SparkSpecBase {
     assert(graft.view.IndexStore.readMeta(spark, path).updateSeq == 2L)
   }
 
+  test("one view-maintenance micro-batch stays within its job budget") {
+    implicit val sql = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-stream-jobs").toString
+    val path = s"$dir/idx"
+    val in = MemoryStream[ChangeDel]
+    val emit = (batch: org.apache.spark.sql.DataFrame) =>
+      batch.select(col("_docid").as("_id"), col("status").as("key"),
+        col("price").as("value"))
+    val q = Streams.maintainViewIndex(spark, in.toDF(), emit, path,
+      s"$dir/ckpt", buckets = 4, reduce = Some(Reduce.Sum),
+      id = col("_docid"))
+    val keys = ('a' to 'p').map(_.toString)
+    def doc(i: Int, k: String, del: Boolean = false) =
+      ChangeDel(i.toLong, k, i.toDouble, _deleted = del)
+    in.addData((1 to 64).map(i => doc(i, keys(i % 16))): _*)
+    q.processAllAvailable()
+    View(Seq((1L, "a", 1.0)).toDF("_docid", "status", "price"),
+      col("_docid"), col("status"), col("price"), Some(Reduce.Sum))
+      .materializeReduced(spark, path)
+    // one warm batch: the budget is for a steady-state batch
+    in.addData(doc(2, "c"))
+    q.processAllAvailable()
+    // key moves across buckets, a price update, new docs, tombstones
+    val jobs = org.apache.spark.graft.JobCounter(spark.sparkContext,
+        q.runId.toString) {
+      in.addData(doc(3, "o"), doc(4, "a"), doc(5, "f"), doc(70, "b"),
+        doc(71, "n"), doc(6, "g", del = true), doc(7, "h", del = true))
+      q.processAllAvailable()
+    }
+    q.stop()
+    info(s"$jobs Spark jobs in the micro-batch")
+    // 14-15 jobs measured (two writes may each start the pinned
+    // rows' cache stage); one job of slack
+    val budget = 16
+    assert(jobs <= budget,
+      s"$jobs Spark jobs for one maintenance micro-batch (budget $budget)")
+    val red = spark.read.parquet(s"$path/reduced")
+      .select(col("key"), col("value")).collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val live = (1 to 64).filterNot(Set(6, 7)).map(i =>
+      i -> (i match {
+        case 2 => "c"; case 3 => "o"; case 4 => "a"; case 5 => "f"
+        case _ => keys(i % 16)
+      })) ++ Seq(70 -> "b", 71 -> "n")
+    assert(red == live.groupBy(_._2).map { case (k, ds) =>
+      k -> ds.map(_._1.toDouble).sum })
+  }
+
   test("skewed change feed triggers auto-compaction with re-sampled bounds") {
     import graft.view.IndexStore
     implicit val sql = spark.sqlContext

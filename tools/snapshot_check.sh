@@ -5,12 +5,13 @@
 #
 # Compiles the EXACT tree about to be committed, then runs the sf0.01
 # Verify slice for the given comma-separated gate keys (default: a
-# smoke set) and checks them against the DuckDB oracle. Exits non-zero
-# on any failure — do NOT snapshot-commit if this script fails.
+# smoke set plus the four view-maintenance gates) and checks them
+# against the DuckDB oracle. Exits non-zero on any failure — do NOT
+# snapshot-commit if this script fails.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-GATES="${1:-q01_emit_sum,q115_mango_find,q158_ivfpq_ann}"
+GATES="${1:-q01_emit_sum,q115_mango_find,q158_ivfpq_ann,q94_view_maintenance,q105_view_upsert,q109_compaction,q242_purge_view_index}"
 SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/snapshot_check.XXXXXX)"
 
