@@ -1040,10 +1040,14 @@ object Similarity {
       .withColumn("n_nrm", sqrt(dot(col("n_vec"), col("n_vec"))))
       .withColumn("_kb", nearestCidCol(col("n_vec"), col("n_nrm"), cents))
 
+  /** Row bound of a stored centroid table's driver-side read: a
+    * coarse quantizer of up to 2^16 lists. */
+  private val MaxCentroids = 1L << 16
+
   private[operators] def readCentroids(spark: SparkSession,
                             path: String): Seq[(Int, Array[Double])] =
-    spark.read.parquet(path + "/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
+    IndexStore.readSmall(spark, path + "/centroids", MaxCentroids)
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
 
   /** Deterministic centroid init: the `nCentroids` lowest vec_ids —
@@ -1166,8 +1170,8 @@ object Similarity {
                             changed: DataFrame, deletedIds: Seq[Any] = Nil,
                             newSeq: Long = -1L): Seq[Int] = {
     val meta = IndexStore.readMeta(spark, path)
-    val tau = spark.read.parquet(path + "/params")
-      .collect()(0).getDouble(0)
+    val tau = IndexStore.readSmall(spark, path + "/params", 1).head
+      .getDouble(0)
     val cents = readCentroids(spark, path)
     // verdict column is recomputed below once the touched clusters'
     // membership is final; the merge only needs the row shape
@@ -1257,20 +1261,35 @@ object Similarity {
     * and ranks exactly within them. */
   def ivfTopK(spark: SparkSession, path: String, queries: DataFrame,
               k: Int, nProbe: Int = 4): DataFrame = {
-    val cents = readCentroids(spark, path)
-    val q = queries.select(col("vec_id").as("q_id"),
-      asDouble(col("embedding")).as("q_vec"))
-      .withColumn("q_nrm", sqrt(dot(col("q_vec"), col("q_vec"))))
-      .withColumn("bucket",
-        explode(probeCidsCol(col("q_vec"), col("q_nrm"), cents, nProbe)))
-      .select(col("q_id"), col("q_vec"), col("q_nrm"), col("bucket"))
-    val buckets = q.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val (q, buckets) = ivfProbes(spark, path, queries, nProbe)
     val c = IndexStore.readBuckets(spark, path + "/data", "_kb", buckets)
       .filter(col("_kb").isin(buckets: _*))
       .select(col("_id").as("n_id"), col("n_vec"), col("n_nrm"),
         col("_kb").as("bucket"))
     rankWithinBuckets(c, q, k)
+  }
+
+  /** The probe side of an IVF serve: one `(q_id, q_vec, q_nrm,
+    * bucket)` row per query and probed list, and the distinct probed
+    * list ids. The per-query probe arrays are computed once, feed both,
+    * and are collected BEFORE the explode and deduplicated on the
+    * driver: no shuffle, one job, and none at all for a local query
+    * frame (the optimizer folds the projection at plan time). The
+    * driver receives |queries| × `nProbe` list ids. */
+  private def ivfProbes(spark: SparkSession, path: String,
+                        queries: DataFrame,
+                        nProbe: Int): (DataFrame, Seq[Int]) = {
+    val cents = readCentroids(spark, path)
+    val qp = queries.select(col("vec_id").as("q_id"),
+      asDouble(col("embedding")).as("q_vec"))
+      .withColumn("q_nrm", sqrt(dot(col("q_vec"), col("q_vec"))))
+      .withColumn("probe",
+        probeCidsCol(col("q_vec"), col("q_nrm"), cents, nProbe))
+    val buckets = qp.select(col("probe")).collect().iterator
+      .filterNot(_.isNullAt(0)).flatMap(_.getSeq[Int](0)).toSeq
+      .distinct.sorted
+    (qp.select(col("q_id"), col("q_vec"), col("q_nrm"),
+      explode(col("probe")).as("bucket")), buckets)
   }
 
   /** Attribute-FILTERED ANN from the IVF index — the vector-database
@@ -1290,15 +1309,7 @@ object Similarity {
     require(allowed.columns.length == 1,
       s"allowed must be a single vec-id column; got " +
         s"[${allowed.columns.mkString(", ")}]")
-    val cents = readCentroids(spark, path)
-    val q = queries.select(col("vec_id").as("q_id"),
-      asDouble(col("embedding")).as("q_vec"))
-      .withColumn("q_nrm", sqrt(dot(col("q_vec"), col("q_vec"))))
-      .withColumn("bucket",
-        explode(probeCidsCol(col("q_vec"), col("q_nrm"), cents, nProbe)))
-      .select(col("q_id"), col("q_vec"), col("q_nrm"), col("bucket"))
-    val buckets = q.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val (q, buckets) = ivfProbes(spark, path, queries, nProbe)
     val c = IndexStore.readBuckets(spark, path + "/data", "_kb", buckets)
       .filter(col("_kb").isin(buckets: _*))
       .join(allowed.toDF("_id").distinct(), Seq("_id"), "left_semi")

@@ -307,14 +307,41 @@ object TextSearch {
     * callers to rebuild. */
   val FormatVersion = 3
 
-  /** True iff a readable text index of the CURRENT layout exists at
-    * `path` — the check lazily-building callers should gate on. */
+  /** True iff a text index of the CURRENT layout exists at `path` —
+    * the check lazily-building callers should gate on. An absent or
+    * empty `stats/`, a partitioned index's stats or a stamp of another
+    * layout give false; a `stats/` that exists but cannot be read
+    * throws, naming its path. */
   def indexCurrent(spark: SparkSession, path: String): Boolean =
-    try {
-      val st = spark.read.parquet(path + "/stats")
-      st.columns.contains("fmt") &&
-        st.head().getAs[Int]("fmt") == FormatVersion
-    } catch { case _: Exception => false }
+    !isPartitioned(spark, path) &&
+      stamped(statsRows(spark, path + "/stats", FieldStatsRows),
+        FormatVersion)
+
+  /** Row bounds of the driver-side stats reads: a global index's stats
+    * table is one row, a fielded index's one row per field. */
+  private val StatsRows = 1L
+  private val FieldStatsRows = 256L
+
+  /** The rows of the stats table at `dir`, read on the driver; none
+    * when `dir` is absent. */
+  private def statsRows(spark: SparkSession, dir: String,
+                        maxRows: Long): Seq[org.apache.spark.sql.Row] =
+    if (!graft.view.IndexStore.fsFor(spark, dir)
+        .exists(new org.apache.hadoop.fs.Path(dir))) Nil
+    else graft.view.IndexStore.readSmall(spark, dir, maxRows)
+
+  /** True iff `path` is a PARTITIONED text index: its stats table
+    * has `_p=` partition directories. */
+  private def isPartitioned(spark: SparkSession, path: String): Boolean =
+    graft.view.IndexStore.partDirs(spark, path + "/stats", "_p").nonEmpty
+
+  /** True iff the first stats row carries `cols` and the format stamp
+    * `fmt`. */
+  private def stamped(rows: Seq[org.apache.spark.sql.Row], fmt: Int,
+                      cols: String*): Boolean =
+    rows.headOption.exists(r =>
+      (cols :+ "fmt").forall(r.schema.fieldNames.contains) &&
+        r.getAs[Int]("fmt") == fmt)
 
   /** One-row stats table; `avgdl` is always re-derived as
     * `sum_dl/n` in the same double division, so a maintained index
@@ -354,7 +381,7 @@ object TextSearch {
     import graft.view.IndexStore
     val fs = IndexStore.fsFor(spark, path)
     val meta = IndexStore.readMeta(spark, path)
-    val st = spark.read.parquet(path + "/stats").head()
+    val st = IndexStore.readSmall(spark, path + "/stats", StatsRows).head
     val nB = st.getAs[Int]("n_buckets")
     // changed docs tokenize under the STORED analyzer — a maintained
     // index must stay homogeneous with its build
@@ -683,15 +710,15 @@ object TextSearch {
     IndexStore.writeMeta(spark, path, IndexMeta(seq, nBuckets, Nil))
   }
 
-  /** True iff a readable PARTITIONED text index of the current layout
-    * exists at `path` — the lazily-building caller's gate. */
+  /** True iff a PARTITIONED text index of the current layout exists
+    * at `path` — the lazily-building caller's gate. The stamp is read
+    * from one partition's stats row; a stats table that exists but
+    * cannot be read throws, as in [[indexCurrent]]. */
   def partitionedIndexCurrent(spark: SparkSession, path: String)
       : Boolean =
-    try {
-      val st = spark.read.parquet(path + "/stats")
-      st.columns.contains("_p") && st.columns.contains("fmt") &&
-        st.head().getAs[Int]("fmt") == FormatVersion
-    } catch { case _: Exception => false }
+    graft.view.IndexStore.partDirs(spark, path + "/stats", "_p")
+      .headOption.exists(p =>
+        stamped(statsRows(spark, p.toString, StatsRows), FormatVersion))
 
   /** Rename-swap the given `(_p, _tb)` pair directories of a
     * two-level hive layout — the [[graft.view.IndexStore]] writeSwap
@@ -1565,7 +1592,7 @@ object TextSearch {
   private def readPruned(spark: SparkSession, path: String, sub: String,
                          terms: Seq[String], nBuckets: Int): DataFrame = {
     val buckets = terms.map(termBucketJvm(_, nBuckets)).distinct
-    spark.read.parquet(s"$path/$sub")
+    graft.view.IndexStore.readBuckets(spark, s"$path/$sub", "_tb", buckets)
       .filter(col("_tb").isin(buckets: _*) && col("term").isin(terms: _*))
   }
 
@@ -1580,15 +1607,15 @@ object TextSearch {
       st.getAs[Boolean]("an_stem"))
 
   private def statsOf(spark: SparkSession, path: String): TextStats = {
-    val stDf = spark.read.parquet(path + "/stats")
     // family separation: a PARTITIONED index's stats are per-`_p`
     // rows — a global serve reading an arbitrary partition's stats
     // would score silently wrong, so refuse loudly (the A34d
     // planner discipline: global planners skip partitioned indexes)
-    require(!stDf.columns.contains("_p"),
+    require(!isPartitioned(spark, path),
       s"$path is a PARTITIONED text index — scope the query with " +
         "searchPartitioned(partition, ...)")
-    val st = stDf.head()
+    val st = graft.view.IndexStore.readSmall(spark, path + "/stats",
+      StatsRows).head
     TextStats(st.getAs[Long]("n"), st.getAs[Double]("avgdl"),
       st.getAs[Int]("n_buckets"), analyzerFromRow(st))
   }
@@ -1847,8 +1874,7 @@ object TextSearch {
     import org.apache.spark.sql.functions.{count => fcount}
     val fs = IndexStore.fsFor(spark, path)
     val meta = IndexStore.readMeta(spark, path)
-    val stRows = spark.read.parquet(path + "/stats")
-      .orderBy(col("ord")).collect()
+    val stRows = fieldedStatRows(spark, path)
     val nB = stRows.head.getAs[Int]("n_buckets")
     // perfield: each field tokenizes under ITS stamped analyzer
     val anByField = stRows.map(r =>
@@ -1952,14 +1978,18 @@ object TextSearch {
     }
   }
 
-  /** True iff a readable FIELDED text index of the current layout
-    * exists at `path`. */
+  /** True iff a FIELDED text index of the current layout exists at
+    * `path`; absent, empty and unreadable stats as in [[indexCurrent]]. */
   def fieldedCurrent(spark: SparkSession, path: String): Boolean =
-    try {
-      val st = spark.read.parquet(path + "/stats")
-      st.columns.contains("ord") && st.columns.contains("fmt") &&
-        st.head().getAs[Int]("fmt") == FieldedFormatVersion
-    } catch { case _: Exception => false }
+    !isPartitioned(spark, path) &&
+      stamped(statsRows(spark, path + "/stats", FieldStatsRows),
+        FieldedFormatVersion, "ord")
+
+  /** A fielded index's per-field stats rows in build order. */
+  private def fieldedStatRows(spark: SparkSession,
+                              path: String): Seq[org.apache.spark.sql.Row] =
+    graft.view.IndexStore.readSmall(spark, path + "/stats", FieldStatsRows)
+      .sortBy(_.getAs[Int]("ord"))
 
   private final case class FieldStat(name: String, weight: Double,
                                      n: Long, avgdl: Double,
@@ -1969,8 +1999,7 @@ object TextSearch {
 
   private def fieldedStatsOf(spark: SparkSession,
                              path: String): FieldedStats = {
-    val rows = spark.read.parquet(path + "/stats")
-      .orderBy(col("ord")).collect()
+    val rows = fieldedStatRows(spark, path)
     require(rows.nonEmpty, s"no fielded stats at $path")
     FieldedStats(
       rows.map(r => FieldStat(r.getAs[String]("field"),

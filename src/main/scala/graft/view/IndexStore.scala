@@ -1,18 +1,18 @@
 package graft.view
 
-import java.io.IOException
+import java.io.{FileNotFoundException, IOException}
 import java.util.concurrent.CompletionException
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Index metadata persisted alongside the data: the change-feed sequence
@@ -108,6 +108,12 @@ final case class IndexMeta(updateSeq: Long, buckets: Int,
   * Data goes before ids so that the sidecar, until it is swapped
   * itself, still names every bucket the changed docs' old rows were in:
   * a replay of the batch reaches the same buckets as the first run.
+  *
+  * Opening a store costs no Spark job. [[readWhere]] takes the row
+  * schema from one Parquet footer on the driver instead of running a
+  * schema-inference job, and small side tables (a stats row, centroids,
+  * params) are read on the driver by [[readSmall]], which refuses a
+  * table past its row bound.
   */
 object IndexStore {
 
@@ -162,7 +168,7 @@ object IndexStore {
   def idBucket(id: Column, buckets: Int): Column =
     pmod(xxhash64(id.cast("string")), lit(buckets.toLong)).cast("int")
 
-  /** Read a hive-partitioned store directory pruned at the
+  /** Open a hive-partitioned store directory pruned at the
     * partition-directory-NAME level to the given integer bucket ids:
     * a bare `read.parquet(dir)` enumerates EVERY partition's leaf
     * files before partition-pruning, so a touched-bucket read over a
@@ -173,8 +179,7 @@ object IndexStore {
     * parquet reader then enumerates leaf files only under the hit
     * buckets. Callers KEEP their own partition-column filter — the
     * name cut is a listing optimization, never the correctness cut.
-    * Falls back to one bucket (schema only) or the full read when
-    * nothing matches. */
+    * See [[readWhere]] for the schema and the empty case. */
   private[graft] def readBuckets(spark: SparkSession, dir: String,
                                  part: String, ids: Seq[Int]): DataFrame = {
     val want = ids.map(_.toLong).toSet
@@ -184,33 +189,103 @@ object IndexStore {
   /** The predicate form of [[readBuckets]] — one listing-prune
     * implementation for every integral partition scheme: exact bucket
     * sets (`readBuckets`), checkpoint tails (ChangesFeed's
-    * `_kb >= minKb`), day windows (EventStore's `_day` range). */
+    * `_kb >= minKb`), day windows (EventStore's `_day` range).
+    *
+    * The open costs no Spark job: see [[storeSchema]]. A predicate
+    * that hits no bucket opens an empty frame of that schema. An
+    * absent store, or one without any bucket directory, fails in
+    * Spark's own open. */
   private[graft] def readWhere(spark: SparkSession, dir: String,
                                part: String,
                                keep: Long => Boolean): DataFrame = {
     val fs = fsFor(spark, dir)
-    if (!fs.exists(new Path(dir))) return spark.read.parquet(dir) // loud, as before
     val all = bucketDirs(fs, dir, part)
+    if (all.isEmpty) return spark.read.parquet(dir) // loud, as before
     val hit = all.filter(d => keep(d._1))
-    // nothing in range: one partition dir supplies the schema, the
-    // caller's partition-column filter drops its rows
-    val toRead = if (hit.nonEmpty) hit else all.take(1)
-    if (toRead.isEmpty) spark.read.parquet(dir)
-    else spark.read.option("basePath", dir)
-      .parquet(toRead.map(_._2.toString): _*)
+    val schema = storeSchema(spark, fs, dir, part,
+      if (hit.nonEmpty) hit else all, all)
+    if (hit.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).option("basePath", dir)
+      .parquet(hit.map(_._2.toString): _*)
+  }
+
+  /** Open a whole store at its root directory, with the job-free
+    * schema of [[readWhere]]. */
+  private[graft] def readStore(spark: SparkSession, dir: String,
+                               part: String): DataFrame = {
+    val fs = fsFor(spark, dir)
+    val all = bucketDirs(fs, dir, part)
+    if (all.isEmpty) spark.read.parquet(dir) // loud, as before
+    else spark.read.schema(storeSchema(spark, fs, dir, part, all, all))
+      .parquet(dir)
+  }
+
+  /** The row schema of a store opened over the bucket dirs `read`,
+    * taken on the driver instead of by a schema-inference job: one
+    * Parquet footer (the first file of `read`, else of `all`) gives the
+    * data schema as inference derives it, and the partition column is
+    * `IntegerType` — `LongType` once a bucket id leaves the int range —
+    * as inference types integral directory names. */
+  private def storeSchema(spark: SparkSession, fs: FileSystem, dir: String,
+                          part: String, read: Seq[(Long, Path)],
+                          all: Seq[(Long, Path)]): StructType = {
+    val file = dataFiles(fs, read ++ all).nextOption().getOrElse(
+      throw new IOException(s"$dir has bucket directories but no data file"))
+    Bridge.footerSchema(spark, file, footer(fs, file))
+      .add(StructField(part,
+        if (read.forall(_._1.isValidInt)) IntegerType else LongType))
+  }
+
+  /** Read a small side table — a stats row, a centroid table, a
+    * params row — on the driver with Spark's own Parquet reader, so it
+    * decodes exactly as a scan task would and costs no Spark job. The
+    * footers are counted first: a table of more than `maxRows` rows is
+    * refused, so a driver-side read stays bounded by construction.
+    * Partition directories become columns as in `read.parquet`. A
+    * directory without data files reads as no rows; an absent `dir`
+    * or an unreadable file throws, naming the path. */
+  def readSmall(spark: SparkSession, dir: String, maxRows: Long): Seq[Row] = {
+    val fs = fsFor(spark, dir)
+    if (!fs.exists(new Path(dir)))
+      throw new FileNotFoundException(s"no table at $dir")
+    def unreadable(e: Throwable) =
+      new IOException(s"unreadable table at $dir: ${e.getMessage}", e)
+    val (files, footers, partSchema) =
+      try {
+        val (files, partSchema) = Bridge.listTable(spark, dir)
+        (files, files.map(f => footer(fs, f._2.getPath)), partSchema)
+      } catch { case NonFatal(e) => throw unreadable(e) }
+    val rows = footers.map(_.getBlocks.asScala.map(_.getRowCount).sum).sum
+    if (rows > maxRows)
+      throw new IllegalStateException(
+        s"$dir holds $rows rows; this driver-side read takes at most $maxRows")
+    if (files.isEmpty) Nil
+    else try Bridge.decodeLocal(spark, files,
+        Bridge.footerSchema(spark, files.head._2.getPath, footers.head),
+        partSchema)
+      catch { case NonFatal(e) => throw unreadable(e) }
+  }
+
+  /** The `part=<value>` partition directories of `dir`, any value
+    * (none if `dir` is absent). */
+  private[graft] def partDirs(spark: SparkSession, dir: String,
+                              part: String): Seq[Path] =
+    partDirs(fsFor(spark, dir), dir, part)
+
+  private def partDirs(fs: FileSystem, dir: String, part: String): Seq[Path] = {
+    val p = new Path(dir)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
+      .filter(_.getName.startsWith(part + "="))
   }
 
   /** The `part=<n>` partition directories of `dir` with an integral
     * `n` (none if `dir` is absent). */
   private def bucketDirs(fs: FileSystem, dir: String,
-                         part: String): Seq[(Long, Path)] = {
-    val p = new Path(dir)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith(part + "="))
-      .flatMap(d => scala.util.Try(
-        d.getName.substring(part.length + 1).toLong).toOption.map(_ -> d))
-  }
+                         part: String): Seq[(Long, Path)] =
+    partDirs(fs, dir, part).flatMap(d => scala.util.Try(
+      d.getName.substring(part.length + 1).toLong).toOption.map(_ -> d))
 
   def exists(spark: SparkSession, path: String): Boolean =
     fsFor(spark, path).exists(new Path(path, "_graft_meta"))
@@ -306,7 +381,7 @@ object IndexStore {
       // requirement, so the writer does not re-sort and break _ck order
       .sortWithinPartitions(col("_kb"), col("_ck"))
       .write.mode("overwrite").partitionBy("_kb").parquet(dataDir(path))
-    val data = spark.read.parquet(dataDir(path))
+    val data = readStore(spark, dataDir(path), "_kb")
     val bounds = data.groupBy(col("_kb")).agg(min(col("_ck")).as("lo"))
       .orderBy(col("_kb")).collect()
       .map(r => (r.getInt(0), r.getAs[Array[Byte]]("lo"))).toSeq
@@ -350,7 +425,7 @@ object IndexStore {
       val ibs = found.collect { case (0, b) => b }.toSeq.sorted
       // by-id lookup, pruned to the changed ids' hash buckets — O(batch),
       // never a scan of the whole sidecar, let alone the index
-      def oldIds = readKnown(spark, idsDir(path), "_ib", ibs)
+      def oldIds = readBuckets(spark, idsDir(path), "_ib", ibs)
         .filter(col("_ib").isin(ibs: _*))
       val oldKbs =
         if (ibs.isEmpty) Set.empty[(Int, Int)]
@@ -365,7 +440,7 @@ object IndexStore {
       // the affected buckets' merged rows, pinned once and hash-placed
       // by bucket: the data write and the reduced aggregation both read
       // them without another exchange or a re-read of written buckets
-      merged = readKnown(spark, dataDir(path), "_kb", affected)
+      merged = readBuckets(spark, dataDir(path), "_kb", affected)
         .filter(col("_kb").isin(affected: _*))
         .join(cids, Seq("_id"), "left_anti")
         .unionByName(newRows)
@@ -434,7 +509,7 @@ object IndexStore {
     val affected =
       if (ids.isEmpty) Nil
       else {
-        val none = readKnown(spark, dataDir(path), "_kb", Nil).limit(0)
+        val none = readBuckets(spark, dataDir(path), "_kb", Nil).limit(0)
         merge(spark, path, meta, none, idsDf(spark, none, ids),
           meta.updateSeq, dataSortCols, rf)
       }
@@ -584,30 +659,6 @@ object IndexStore {
     dataFiles(fs, bucketDirs(fs, dir, pcol).filter(d => keep(d._1)))
       .map(f => footer(fs, f).getBlocks.asScala.map(_.getRowCount).sum).sum
 
-  /** [[readBuckets]] with the store's own row schema taken on the
-    * driver from one Parquet footer (Spark's row-schema JSON plus the
-    * partition column) instead of from a schema-inference job. Falls
-    * back to [[readBuckets]] for a store without that footer entry. */
-  private def readKnown(spark: SparkSession, dir: String, pcol: String,
-                        ids: Seq[Int]): DataFrame = {
-    val fs = fsFor(spark, dir)
-    val all = bucketDirs(fs, dir, pcol)
-    val want = ids.map(_.toLong).toSet
-    val hit = all.filter(d => want(d._1))
-    val schema = dataFiles(fs, hit ++ all).nextOption()
-      .flatMap(f => Option(footer(fs, f).getFileMetaData
-        .getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY)))
-      .map(json => DataType.fromJson(json).asInstanceOf[StructType]
-        .add(StructField(pcol, IntegerType)))
-    schema match {
-      case None => readBuckets(spark, dir, pcol, ids)
-      case Some(s) if hit.isEmpty =>
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
-      case Some(s) => spark.read.schema(s).option("basePath", dir)
-        .parquet(hit.map(_._2.toString): _*)
-    }
-  }
-
   /** Per-bucket row counts — the skew diagnostic that tells an operator
     * (or a maintenance policy) when to [[compact]]. Scans only the
     * partition column, so the cost is footer metadata per file, not the
@@ -625,7 +676,7 @@ object IndexStore {
   private[graft] def writeReduced(spark: SparkSession, path: String,
                                   rf: Reduce): Unit = {
     finishSwap(spark, path)
-    reducedRowsOf(spark.read.parquet(dataDir(path)), rf)
+    reducedRowsOf(readStore(spark, dataDir(path), "_kb"), rf)
       .repartition(col("_kb"))
       .sortWithinPartitions(col("_kb"), col("_ck"))
       .write.mode("overwrite").partitionBy("_kb")
@@ -670,7 +721,7 @@ object IndexStore {
     finishSwap(spark, path)
     val meta = readMeta(spark, path)
     val n = if (numBuckets > 0) numBuckets else meta.buckets
-    val rows = spark.read.parquet(dataDir(path)).drop("_kb")
+    val rows = readStore(spark, dataDir(path), "_kb").drop("_kb")
     val tmp = path + "._compact"
     create(spark, tmp, rows, n, meta.updateSeq)
     val fs = fsFor(spark, path)

@@ -677,7 +677,7 @@ final class View private (
   def fromIndex(spark: SparkSession, path: String): View = {
     val meta = IndexStore.readMeta(spark, path)
     new View(docs, idCol, mapPhase, reduceFn,
-      Some(spark.read.parquet(path + "/data")),
+      Some(IndexStore.readStore(spark, path + "/data", "_kb")),
       indexMeta = Some(meta), indexPath = Some(path), locale = locale,
       conflictsRel = conflictsRel)
   }
@@ -867,7 +867,7 @@ final class View private (
   def fromReducedIndex(spark: SparkSession, path: String): ReducedView = {
     require(reduceFn.isDefined, "fromReducedIndex requires a reduce")
     new ReducedView(
-      spark.read.parquet(IndexStore.reducedDir(path)),
+      IndexStore.readStore(spark, IndexStore.reducedDir(path), "_kb"),
       IndexStore.readMeta(spark, path), reduceFn.get, locale)
   }
 

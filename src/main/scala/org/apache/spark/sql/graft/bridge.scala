@@ -2,10 +2,19 @@ package org.apache.spark.sql.graft
 
 import java.util.concurrent.CompletableFuture
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{FileFormat, InMemoryFileIndex, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.ThreadUtils
 
 /** Bridge into Spark's package-private Column↔Expression conversions
@@ -27,4 +36,49 @@ object Bridge {
     SQLExecution.withThreadLocalCaptured(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       writers)(body)
+
+  /** The data schema Spark's Parquet schema inference derives from one
+    * file's footer — its row-schema JSON when the file carries one, else
+    * the converted Parquet schema — made nullable as a file-source
+    * relation makes it. Driver-side; no job. */
+  def footerSchema(spark: SparkSession, file: Path,
+                   footer: ParquetMetadata): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
+
+  /** Every Parquet file of the table at `dir` with its partition values
+    * and the table's partition schema, as Spark's file index lists and
+    * infers them (hidden files skipped, `_name=value` directories kept).
+    * Driver-side; no job below Spark's parallel-listing threshold. */
+  def listTable(spark: SparkSession,
+                dir: String): (Seq[(InternalRow, FileStatus)], StructType) = {
+    val index = new InMemoryFileIndex(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      Seq(new Path(dir)), Map.empty, None)
+    (index.listFiles(Nil, Nil)
+      .flatMap(p => p.files.map(f => (p.values, f.fileStatus))),
+      index.partitionSchema)
+  }
+
+  /** Decode `files` on the driver with Spark's own Parquet reader — the
+    * reader a scan task runs, under the session's settings — into rows
+    * of `dataSchema` followed by `partSchema`. Meant for tables of a
+    * bounded handful of rows: every row is materialized. */
+  def decodeLocal(spark: SparkSession,
+                  files: Seq[(InternalRow, FileStatus)],
+                  dataSchema: StructType, partSchema: StructType): Seq[Row] = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+      session, dataSchema, partSchema, dataSchema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      session.sessionState.newHadoopConf())
+    val toRow = ExpressionEncoder(StructType(dataSchema ++ partSchema))
+      .resolveAndBind().createDeserializer()
+    // each row is decoded before the reader advances: the reader reuses
+    // its row object
+    files.flatMap { case (values, f) =>
+      read(PartitionedFile(values, SparkPath.fromFileStatus(f), 0L, f.getLen,
+        Array.empty, f.getModificationTime, f.getLen)).map(toRow).toVector
+    }
+  }
 }

@@ -493,6 +493,49 @@ class StreamingSpec extends SparkSpecBase {
     }
   }
 
+  test("one text-index maintenance micro-batch stays within its job budget") {
+    import graft.operators.TextSearch
+    implicit val sql = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-stream-txt-jobs").toString
+    val path = s"$dir/idx"
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select($"doc_id", $"text").as[(Long, String)].collect().toSeq
+    val in = MemoryStream[TextChg]
+    val q = Streams.maintainTextIndex(spark, in.toDF(), path, s"$dir/ckpt",
+      nBuckets = 8)
+    val (h1, h2) = docs.splitAt(docs.size / 2)
+    in.addData(h1.map { case (i, t) => TextChg(i, t, _deleted = false) }: _*)
+    q.processAllAvailable()
+    // one warm batch: the budget is for a steady-state batch
+    in.addData(TextChg(h1.head._1, "warm hash join", _deleted = false))
+    q.processAllAvailable()
+    // new docs, an edit and a tombstone
+    val jobs = org.apache.spark.graft.JobCounter(spark.sparkContext,
+        q.runId.toString) {
+      in.addData((h2.take(3).map { case (i, t) => TextChg(i, t, _deleted = false) } :+
+        TextChg(h1(2)._1, "hash stream zebra", _deleted = false) :+
+        TextChg(h1(3)._1, "", _deleted = true)): _*)
+      q.processAllAvailable()
+    }
+    q.stop()
+    info(s"$jobs Spark jobs in the micro-batch")
+    // 26 measured (34 before the format check and the stats read moved
+    // to the driver and the store opens to footer schemas)
+    val budget = 26
+    assert(jobs <= budget,
+      s"$jobs Spark jobs for one text maintenance micro-batch (budget $budget)")
+    val corpus = (docs.take(docs.size / 2 + 3).filterNot(d =>
+        d._1 == h1(2)._1 || d._1 == h1(3)._1 || d._1 == h1.head._1) ++
+      Seq(h1(2)._1 -> "hash stream zebra", h1.head._1 -> "warm hash join"))
+      .toDF("doc_id", "text")
+    val fresh = s"$dir/fresh"
+    TextSearch.buildTextIndex(corpus, $"doc_id", $"text", fresh, nBuckets = 8)
+    for (t <- Seq(Seq("hash", "stream"), Seq("zebra", "warm")))
+      assert(TextSearch.searchIndexed(spark, path, t, 10).collect().toSeq ==
+        TextSearch.searchIndexed(spark, fresh, t, 10).collect().toSeq,
+        s"maintained text index diverges from rebuild for $t")
+  }
+
   test("streamed FIELDED index builds then upserts; matches a rebuild") {
     import graft.operators.TextSearch
     import org.apache.spark.sql.functions.{concat_ws, greatest, lit, size, slice}

@@ -25,4 +25,17 @@ object JobCounter {
     } finally sc.removeSparkListener(listener)
     jobs.get
   }
+
+  /** `body`'s value and the Spark jobs it starts, run under a fresh job
+    * group on this thread (threads that capture its local properties
+    * count too). */
+  def counted[T](sc: SparkContext)(body: => T): (T, Int) = {
+    val group = s"graft-counted-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, group)
+    try {
+      var out: Option[T] = None
+      val n = apply(sc, group) { out = Some(body) }
+      (out.get, n)
+    } finally sc.clearJobGroup()
+  }
 }

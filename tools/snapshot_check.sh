@@ -5,13 +5,14 @@
 #
 # Compiles the EXACT tree about to be committed, then runs the sf0.01
 # Verify slice for the given comma-separated gate keys (default: a
-# smoke set plus the four view-maintenance gates) and checks them
+# smoke set, the four view-maintenance gates and the three serve gates
+# of searchIndexed, ivfTopK and findIndexed) and checks them
 # against the DuckDB oracle. Exits non-zero on any failure — do NOT
 # snapshot-commit if this script fails.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-GATES="${1:-q01_emit_sum,q115_mango_find,q158_ivfpq_ann,q94_view_maintenance,q105_view_upsert,q109_compaction,q242_purge_view_index}"
+GATES="${1:-q01_emit_sum,q115_mango_find,q158_ivfpq_ann,q94_view_maintenance,q105_view_upsert,q109_compaction,q242_purge_view_index,q60_text_search,q53_ann_ivf,q116_mango_find_indexed}"
 SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/snapshot_check.XXXXXX)"
 
