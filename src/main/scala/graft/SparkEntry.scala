@@ -3531,7 +3531,7 @@ object SparkEntry {
   private def q207(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity
     val emb = t(s, dir, "embeddings")
-    val path = idxPath("q207sq8", dir, "embeddings")
+    val path = idxPath("q207sq8kb", dir, "embeddings")
     if (!hasFile(s, s"$path/data/_SUCCESS"))
       Similarity.buildSq8Index(emb, path)
     val changed = emb
@@ -3574,7 +3574,7 @@ object SparkEntry {
     val emb = t(s, dir, "embeddings")
     val inDir = idxPath("q209in", dir, "embeddings") + "/in"
     stageChunks(s, emb, col("vec_id"), inDir)
-    val idx = idxPath("q209bx", dir, "embeddings") + "/idx"
+    val idx = idxPath("q209bkb", dir, "embeddings") + "/idx"
     val ck = java.nio.file.Files.createTempDirectory("graft-q209ck").toString
     val feed = s.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
@@ -3598,7 +3598,7 @@ object SparkEntry {
     val emb = t(s, dir, "embeddings")
     val inDir = idxPath("q210in", dir, "embeddings") + "/in"
     stageChunks(s, emb, col("vec_id"), inDir)
-    val idx = idxPath("q210sx", dir, "embeddings") + "/idx"
+    val idx = idxPath("q210skb", dir, "embeddings") + "/idx"
     val ck = java.nio.file.Files.createTempDirectory("graft-q210ck").toString
     val feed = s.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
@@ -3721,7 +3721,7 @@ object SparkEntry {
   private def q218(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity
     val emb = t(s, dir, "embeddings")
-    val path = idxPath("sq8x", dir, "embeddings")
+    val path = idxPath("sq8kb", dir, "embeddings")
     if (!hasFile(s, s"$path/data/_SUCCESS"))
       Similarity.buildSq8Index(emb, path)
     Similarity.cascadeTopKIndexed(s, path, emb,
@@ -4102,7 +4102,7 @@ object SparkEntry {
   private def q237(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity
     val emb = t(s, dir, "embeddings")
-    val path = idxPath("sq8x", dir, "embeddings")
+    val path = idxPath("sq8kb", dir, "embeddings")
     if (!hasFile(s, s"$path/data/_SUCCESS"))
       Similarity.buildSq8Index(emb, path)
     Similarity.cascadeTopKIndexedWhere(s, path, emb,
@@ -6213,7 +6213,7 @@ object SparkEntry {
         idxPath("ivfsq8", dir, "embeddings"))),
     "q218_cascade_indexed" -> ((s, dir) => graft.operators.Similarity
       .buildSq8Index(t(s, dir, "embeddings"),
-        idxPath("sq8x", dir, "embeddings"))),
+        idxPath("sq8kb", dir, "embeddings"))),
     "q223_cascade_pq" -> ((s, dir) => graft.operators.Pq
       .buildPqIndex(t(s, dir, "embeddings"),
         idxPath("q223pq", dir, "embeddings"))),

@@ -64,11 +64,10 @@ object DedupIndex {
     * `nBuckets · MemberSub` — linear, never nB². */
   val MemberSub = 8
 
-  /** True iff a readable cluster index of the CURRENT layout exists. */
+  /** True iff a cluster index of the CURRENT layout exists; an
+    * unreadable `/fmt` stamp throws, naming the path. */
   def indexCurrent(spark: SparkSession, path: String): Boolean =
-    try spark.read.parquet(path + "/fmt").head()
-      .getAs[Int]("fmt") == FormatVersion
-    catch { case _: Exception => false }
+    IndexStore.stampIs(spark, path + "/fmt", FormatVersion)
 
   private def bandBucket(band: Column, n: Int): Column =
     pmod(conv(substring(band, 1, 8), 16, 10).cast("long"), lit(n.toLong))

@@ -148,11 +148,10 @@ object Pipeline {
   private def fpsDir(path: String) = path + "/fps"
   private def dedupDir(path: String) = path + "/dedup"
 
-  /** True iff a readable release state of the current layout exists. */
+  /** True iff a release state of the current layout exists; an
+    * unreadable `params` stamp throws, naming the path. */
   def stateCurrent(spark: SparkSession, path: String): Boolean =
-    try spark.read.parquet(path + "/params").head()
-      .getAs[Int]("fmt") == StateFormat
-    catch { case _: Exception => false }
+    graft.view.IndexStore.stampIs(spark, path + "/params", StateFormat)
 
   private def writeParams(spark: SparkSession, path: String,
                           p: ReleaseParams): Unit = {

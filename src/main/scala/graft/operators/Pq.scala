@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.gfunctions.round4
+import graft.view.IndexStore
 
 /** Product-quantization ANN (Jégou, Douze, Schmid, "Product Quantization
   * for Nearest Neighbor Search", TPAMI 2011) — the memory-scale tier of
@@ -210,13 +210,22 @@ object Pq {
     * `(q_id, rank, n_id, cos)` — the q53 serving shape. */
   def adcTopK(codes: DataFrame, corpus: DataFrame, queries: DataFrame,
               cbs: Codebooks, k: Int, refine: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("q_id"),
+    val q = queryVecs(queries)
+    shortlistAndRefine(adcScored(codes, q, cbs), corpus, q, k, refine)
+  }
+
+  /** `(q_id, q_vec)` query rows. */
+  private def queryVecs(queries: DataFrame): DataFrame =
+    queries.select(col("vec_id").as("q_id"),
       asDouble(col("embedding")).as("q_vec"))
-    val shortlist = codes.join(broadcast(q), col("vec_id") =!= col("q_id"))
+
+  /** `(q_id, n_id, adc)`: every `(vec_id, codes)` row ADC-scored
+    * against every other query of `q`. */
+  private def adcScored(codes: DataFrame, q: DataFrame,
+                        cbs: Codebooks): DataFrame =
+    codes.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
         adcExpr(cbs, col("q_vec"), col("codes")).as("adc"))
-    shortlistAndRefine(shortlist, corpus, q, k, refine)
-  }
 
   /** The ADC distance of one (query, code-row) pair: per-subspace
     * distance between the query's subvector and the codeword the
@@ -289,45 +298,39 @@ object Pq {
                                  refine: Int): DataFrame = {
     val cand = adcShortlist(shortlist, refine)
     // exact refinement over the shortlist only
-    val c = corpus.select(col("vec_id").as("n_id"),
-      asDouble(col("embedding")).as("n_vec"))
-      .withColumn("n_nrm", sqrt(Similarity.dot(col("n_vec"), col("n_vec"))))
     val qn = q.select(col("q_id"), col("q_vec")).withColumn("q_nrm",
       sqrt(Similarity.dot(col("q_vec"), col("q_vec"))))
-    val exact = cand.join(c, "n_id").join(broadcast(qn), "q_id")
-      .select(col("q_id"), col("n_id"),
-        (Similarity.dot(col("q_vec"), col("n_vec")) /
-          (col("q_nrm") * col("n_nrm"))).as("cos"))
-    val rankAgg = udaf(new graft.functions.TopKPairs(k))
-    exact.groupBy("q_id").agg(rankAgg(col("cos"), col("n_id")).as("_top"))
-      .select(col("q_id"), posexplode(col("_top")).as(Seq("_i", "_t")))
-      .select(col("q_id"), (col("_i") + 1).cast("long").as("rank"),
-        col("_t._2").as("n_id"), round4(col("_t._1")).as("cos"))
+    Similarity.rankTopK(cand.join(Similarity.vecRows(corpus, "n"), "n_id")
+      .join(broadcast(qn), "q_id")
+      .select(col("q_id"), col("n_id"), Similarity.qnCos.as("cos")), k)
   }
 
   /** The composed serving chain at gate shape: deterministic codebooks,
     * encode, ADC shortlist, exact refine. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, m: Int = 8,
              ks: Int = 16, refine: Int = 50, refineIters: Int = 0): DataFrame = {
-    val cbs0 = initCodebooks(corpus, m, ks)
-    val cbs = if (refineIters > 0) refineCodebooks(corpus, cbs0, refineIters)
-              else cbs0
+    val cbs = trainCodebooks(corpus, m, ks, refineIters)
     adcTopK(encode(corpus, cbs), corpus, queries, cbs, k, refine)
+  }
+
+  /** [[initCodebooks]], Lloyd-refined by `refineIters` iterations. */
+  private def trainCodebooks(corpus: DataFrame, m: Int, ks: Int,
+                             refineIters: Int): Codebooks = {
+    val cbs = initCodebooks(corpus, m, ks)
+    if (refineIters > 0) refineCodebooks(corpus, cbs, refineIters) else cbs
   }
 
   // --------------------------------------------------------- persisted index
 
-  import org.apache.spark.sql.SparkSession
-  import graft.view.{IndexMeta, IndexStore}
-
-  /** Persist the PQ index: FROZEN codebooks (`codebooks/` — the same
-    * freeze discipline as the IVF/SemDeDup quantizers: upserts and
-    * serving read the STORED codebooks, never re-derive them, so codes
-    * stay comparable across deltas) plus the m-int code rows under
-    * `data/_kb=<idBucket>` with the standard by-id sidecar. Codes have
-    * no query-pruned access path — ADC is a deliberate compressed FULL
-    * scan — so `_kb` is an id-hash bucket purely for O(changed buckets)
-    * maintenance locality.
+  /** Persist the PQ index on the shared vector store
+    * ([[Similarity.buildVecStore]]): FROZEN codebooks (`codebooks/` —
+    * the same freeze discipline as the IVF/SemDeDup quantizers: upserts
+    * and serving read the STORED codebooks, never re-derive them, so
+    * codes stay comparable across deltas) plus the m-int code rows
+    * `(_id, codes)` under `data/_kb=<idBucket>` with the standard by-id
+    * sidecar. Codes have no query-pruned access path — ADC is a
+    * deliberate compressed FULL scan — so `_kb` is an id-hash bucket
+    * purely for O(changed buckets) maintenance locality.
     *
     * Operational note: frozen codebooks drift if the embedding
     * distribution shifts over many deltas — the remedy is a rebuild to
@@ -336,78 +339,64 @@ object Pq {
   def buildPqIndex(corpus: DataFrame, path: String, m: Int = 8,
                    ks: Int = 16, idBuckets: Int = 16, seq: Long = 0L,
                    refineIters: Int = 0): Unit = {
-    val spark = corpus.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    val cbs0 = initCodebooks(corpus, m, ks)
-    val cbs = if (refineIters > 0) refineCodebooks(corpus, cbs0, refineIters)
-              else cbs0
+    val cbs = trainCodebooks(corpus, m, ks, refineIters)
+    Similarity.buildVecStore(corpus, path, idBuckets, seq,
+      Seq("codebooks" -> codebooksDf(corpus.sparkSession, cbs)))(pqRows(cbs))
+  }
+
+  /** A codebook table `(j, c, cw)`: codeword `c` of subspace `j`. */
+  private def codebooksDf(spark: SparkSession, cbs: Codebooks): DataFrame = {
     import spark.implicits._
     cbs.zipWithIndex.flatMap { case (cb, j) =>
       cb.zipWithIndex.map { case (cw, c) => (j, c, cw.toSeq) }
     }.toSeq.toDF("j", "c", "cw")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    pqRows(corpus, cbs, idBuckets)
-      .repartition(col("_kb"))
-      .sortWithinPartitions(col("_kb"), col("_id"))
-      .write.mode("overwrite").partitionBy("_kb").parquet(s"$path/data")
-    spark.read.parquet(s"$path/data")
-      .select(col("_id"), col("_kb")).distinct()
-      .withColumn("_ib", IndexStore.idBucket(col("_id"), idBuckets))
-      .repartition(idBuckets, col("_ib"))
-      .sortWithinPartitions(col("_ib"), col("_id"))
-      .write.mode("overwrite").partitionBy("_ib").parquet(s"$path/ids")
-    IndexStore.writeMeta(spark, path, IndexMeta(seq, idBuckets, Nil))
   }
 
-  private def pqRows(corpus: DataFrame, cbs: Codebooks,
-                     idBuckets: Int): DataFrame =
-    encode(corpus, cbs)
-      .select(col("vec_id").as("_id"), col("codes"))
-      .withColumn("_kb", IndexStore.idBucket(col("_id"), idBuckets))
+  private def pqRows(cbs: Codebooks)(corpus: DataFrame,
+                                     idBuckets: Int): DataFrame =
+    Similarity.idRouted(encode(corpus, cbs).withColumnRenamed("vec_id", "_id"),
+      idBuckets)
 
-  /** The stored (frozen) codebooks of an index. */
+  /** Row bound of a stored codebook table's driver-side read: m·ks
+    * codewords. */
+  private val MaxCodewords = 1L << 16
+
+  /** The stored (frozen) codebooks of an index, read on the driver (no
+    * Spark job). */
   def readCodebooks(spark: SparkSession, path: String): Codebooks = {
-    val rows = spark.read.parquet(s"$path/codebooks")
-      .orderBy(col("j"), col("c")).collect()
-    val m = rows.map(_.getInt(0)).max + 1
-    val ks = rows.map(_.getInt(1)).max + 1
-    val out: Codebooks = Array.ofDim[Array[Double]](m, ks)
-    rows.foreach(r => out(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
+    val rows = IndexStore.readSmall(spark, s"$path/codebooks", MaxCodewords)
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+    val out: Codebooks =
+      Array.ofDim[Array[Double]](rows.map(_._1).max + 1, rows.map(_._2).max + 1)
+    rows.foreach { case (j, c, cw) => out(j)(c) = cw }
     out
   }
 
-  /** Incremental maintenance: re-encode the changed vectors against the
-    * FROZEN codebooks and rewrite only the id buckets holding their old
-    * or new rows (the by-id-sidecar merge every graft index uses);
-    * `deletedIds` retire codes. O(changed buckets), never a rebuild,
-    * never a codebook re-derivation. Returns affected bucket ids. */
+  /** Incremental maintenance through the shared
+    * [[Similarity.upsertVecStore]]: re-encode the changed vectors
+    * against the FROZEN codebooks and rewrite only the id buckets
+    * holding their old or new rows; `deletedIds` retire codes.
+    * O(changed buckets), never a rebuild, never a codebook
+    * re-derivation. Returns affected bucket ids. */
   def upsertPqVectors(spark: SparkSession, path: String,
                       changed: DataFrame, deletedIds: Seq[Any] = Nil,
-                      newSeq: Long = -1L): Seq[Int] = {
-    val meta = IndexStore.readMeta(spark, path)
-    val cbs = readCodebooks(spark, path)
-    val cids0 = changed.select(col("vec_id").as("_id")).distinct()
-    val cids = if (deletedIds.isEmpty) cids0
-               else cids0.unionByName(IndexStore.idsDf(spark, cids0, deletedIds))
-    val seq = if (newSeq >= 0) newSeq else meta.updateSeq + 1
-    IndexStore.merge(spark, path, meta,
-      pqRows(IndexStore.minusDeleted(spark, changed, "vec_id",
-        deletedIds), cbs, meta.buckets),
-      cids, seq, dataSortCols = Seq(col("_kb"), col("_id")))
-  }
+                      newSeq: Long = -1L): Seq[Int] =
+    Similarity.upsertVecStore(spark, path, changed, deletedIds, newSeq)(
+      pqRows(readCodebooks(spark, path)))
 
   /** Serve ADC top-k from the persisted index: the compressed code scan
     * + shortlist + exact refinement against `corpus` (the raw vectors
     * live in the source table — PQ's point is that the HOT scan is the
     * codes, 32× smaller). */
   def pqTopKIndexed(spark: SparkSession, path: String, corpus: DataFrame,
-                    queries: DataFrame, k: Int, refine: Int = 50): DataFrame = {
-    val cbs = readCodebooks(spark, path)
-    val codes = spark.read.parquet(s"$path/data")
+                    queries: DataFrame, k: Int, refine: Int = 50): DataFrame =
+    adcTopK(storedCodes(spark, path), corpus, queries,
+      readCodebooks(spark, path), k, refine)
+
+  /** The `(vec_id, codes)` rows of a persisted flat-PQ store. */
+  private def storedCodes(spark: SparkSession, path: String): DataFrame =
+    Similarity.storeRows(spark, path)
       .select(col("_id").as("vec_id"), col("codes"))
-    adcTopK(codes, corpus, queries, cbs, k, refine)
-  }
 
   /** The `(q_id, n_id)` ADC shortlist of the persisted FLAT-PQ tier —
     * [[pqTopKIndexed]]'s compressed full code scan STOPPED before its
@@ -416,18 +405,9 @@ object Pq {
     * `"pq"`) scores against the float corpus. Stored codes + frozen
     * codebooks only; the embedding column is never read here. */
   def pqShortlistIndexed(spark: SparkSession, path: String,
-                         queries: DataFrame, shortlist: Int): DataFrame = {
-    val cbs = readCodebooks(spark, path)
-    val q = queries.select(col("vec_id").as("q_id"),
-      asDouble(col("embedding")).as("q_vec"))
-    val codes = spark.read.parquet(s"$path/data")
-      .select(col("_id").as("n_id"), col("codes"))
-    adcShortlist(
-      codes.join(broadcast(q), col("n_id") =!= col("q_id"))
-        .select(col("q_id"), col("n_id"),
-          adcExpr(cbs, col("q_vec"), col("codes")).as("adc")),
-      shortlist)
-  }
+                         queries: DataFrame, shortlist: Int): DataFrame =
+    adcShortlist(adcScored(storedCodes(spark, path), queryVecs(queries),
+      readCodebooks(spark, path)), shortlist)
 
   /** The `(q_id, n_id)` probed-list ADC shortlist of the persisted
     * IVFADC tier — [[ivfPqTopK]]'s probe → pruned `_kb` code read →
@@ -435,26 +415,44 @@ object Pq {
     * cascade feed. Only the probed inverted lists are read. */
   def ivfPqShortlistIndexed(spark: SparkSession, path: String,
                             queries: DataFrame, shortlist: Int,
-                            nProbe: Int = 4): DataFrame = {
+                            nProbe: Int = 4): DataFrame =
+    adcShortlist(ivfAdc(spark, path, queries, nProbe, resid = false)._1,
+      shortlist)
+
+  /** The probed-list ADC scores `(q_id, n_id, adc)` of a persisted
+    * IVFADC store and its `(q_id, q_vec)` query rows: each query
+    * probes its `nProbe` nearest stored centroids (the shared
+    * [[Similarity.probes]] side — the union of probe lists is bounded
+    * driver metadata and prunes the code read to those `_kb`
+    * directories), and ADC-scores ONLY the codes in its own probed
+    * lists (a hash join on the list id). `resid`: the residual tier,
+    * whose query side is the query's residual AGAINST EACH PROBED
+    * LIST'S centroid (Jégou §IV.A's "one distance table per probed
+    * list"; each (query, list) pair computes its residual once in the
+    * projection and the per-subspace lookups fold over it). */
+  private def ivfAdc(spark: SparkSession, path: String, queries: DataFrame,
+                     nProbe: Int, resid: Boolean): (DataFrame, DataFrame) = {
     val cents = Similarity.readCentroids(spark, path)
     val cbs = readCodebooks(spark, path)
-    val q = queries.select(col("vec_id").as("q_id"),
-        asDouble(col("embedding")).as("q_vec"))
-      .withColumn("q_nrm", sqrt(Similarity.dot(col("q_vec"), col("q_vec"))))
-      .withColumn("bucket", explode(
-        Similarity.probeCidsCol(col("q_vec"), col("q_nrm"), cents, nProbe)))
-      .select(col("q_id"), col("q_vec"), col("bucket"))
-    val buckets = q.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val codes = IndexStore.readBuckets(spark, s"$path/data", "_kb", buckets)
-      .filter(col("_kb").isin(buckets: _*))
-      .select(col("_id").as("n_id"), col("codes"), col("_kb").as("bucket"))
-    adcShortlist(
-      codes.join(broadcast(q), Seq("bucket"))
-        .filter(col("n_id") =!= col("q_id"))
-        .select(col("q_id"), col("n_id"),
-          adcExpr(cbs, col("q_vec"), col("codes")).as("adc")),
-      shortlist)
+    val (q0, buckets) = Similarity.probes(
+      Similarity.ivfQueries(cents, queries, nProbe).drop("q_nrm"))
+    val q = if (!resid) q0 else joinCentroidVec(q0, cents, col("bucket"))
+      .select(col("q_id"), col("q_vec"), col("bucket"),
+        residual(col("q_vec"), col("_cvec")).as("q_res"))
+    // UNLIKE the raw path, the dropped |query-side|² ADC term is NOT
+    // constant per query for residuals — the query residual differs per
+    // probed list — so it must be added back for candidates from
+    // different lists to rank comparably: adc = |r_q|² + Σ(|cw|² −
+    // 2·r_q·cw) = the full estimated |r_q − cw|².
+    val adc =
+      if (!resid) adcExpr(cbs, col("q_vec"), col("codes"))
+      else Similarity.dot(col("q_res"), col("q_res")) +
+        adcExpr(cbs, col("q_res"), col("codes"))
+    (Similarity.probedRows(spark, path, buckets)
+      .join(broadcast(q), Seq("bucket"))
+      .filter(col("n_id") =!= col("q_id"))
+      .select(col("q_id"), col("n_id"), adc.as("adc")),
+      q.select(col("q_id"), col("q_vec")).distinct())
   }
 
   // ------------------------------------------------------------------ IVFADC
@@ -466,12 +464,12 @@ object Pq {
     * makes compressed ANN sublinear in the corpus, where
     * [[pqTopKIndexed]] is a deliberate full (if 32×-compressed) scan.
     *
-    * Layout: `centroids/` (the IVF coarse quantizer — the
-    * [[Similarity]] lowest-id init, optionally Lloyd-refined; FROZEN),
-    * `codebooks/` (the PQ subspace tables; FROZEN), `data/_kb=<cid>`
-    * (m-int code rows in their inverted list), `ids/` by-id sidecar +
-    * `_meta` — the standard graft maintenance surface, so upserts are
-    * O(changed buckets) against the stored quantizers.
+    * Layout: the shared vector store ([[Similarity.buildVecStore]]) —
+    * `centroids/` (the IVF coarse quantizer — the [[Similarity]]
+    * lowest-id init, optionally Lloyd-refined; FROZEN), `codebooks/`
+    * (the PQ subspace tables; FROZEN), `data/_kb=<cid>` (m-int code
+    * rows in their inverted list), `ids/` by-id sidecar + `_meta`, so
+    * upserts are O(changed buckets) against the stored quantizers.
     *
     * Codes quantize the RAW vector, not Jégou's per-list residual
     * (§IV.A): raw-vector codes are list-invariant — identical to the
@@ -484,43 +482,30 @@ object Pq {
                       m: Int = 8, ks: Int = 16, idBuckets: Int = 16,
                       seq: Long = 0L, refineIters: Int = 0,
                       lloydIters: Int = 0): Unit = {
+    val cents = Similarity.trainCentroids(corpus, nCentroids, lloydIters)
+    val cbs = trainCodebooks(corpus, m, ks, refineIters)
+    buildIvfAdc(corpus, path, idBuckets, seq, cents, cbs)(
+      ivfPqRows(cents, cbs))
+  }
+
+  /** The shared vector-store build of both IVFADC tiers: the frozen
+    * `centroids/` and `codebooks/`, then the `rows`. */
+  private def buildIvfAdc(corpus: DataFrame, path: String, idBuckets: Int,
+                          seq: Long, cents: Seq[(Int, Array[Double])],
+                          cbs: Codebooks)
+                         (rows: (DataFrame, Int) => DataFrame): Unit = {
     val spark = corpus.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    val init = Similarity.initCentroids(corpus, nCentroids)
-    val cents = if (lloydIters > 0) {
-      val vecs = corpus.select(col("vec_id").as("n_id"),
-        asDouble(col("embedding")).as("n_vec"))
-        .withColumn("n_nrm",
-          sqrt(Similarity.dot(col("n_vec"), col("n_vec"))))
-      Similarity.lloydRefine(vecs, init, lloydIters)
-    } else init
-    val cbs0 = initCodebooks(corpus, m, ks)
-    val cbs = if (refineIters > 0) refineCodebooks(corpus, cbs0, refineIters)
-              else cbs0
-    import spark.implicits._
-    cents.map { case (cid, v) => (cid, v.toSeq) }.toDF("cid", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    cbs.zipWithIndex.flatMap { case (cb, j) =>
-      cb.zipWithIndex.map { case (cw, c) => (j, c, cw.toSeq) }
-    }.toSeq.toDF("j", "c", "cw")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    ivfPqRows(corpus, cents, cbs)
-      .repartition(col("_kb"))
-      .sortWithinPartitions(col("_kb"), col("_id"))
-      .write.mode("overwrite").partitionBy("_kb").parquet(s"$path/data")
-    Similarity.writeAnnSidecar(spark, path, idBuckets, seq)
+    Similarity.buildVecStore(corpus, path, idBuckets, seq,
+      Seq("centroids" -> Similarity.centroidsDf(spark, cents),
+        "codebooks" -> codebooksDf(spark, cbs)))(rows)
   }
 
   /** Code rows with their inverted-list assignment: `(_id, codes,
     * _kb = nearest stored centroid)` — both the PQ encode and the IVF
     * assignment are codegen'd projections over the same scan. */
-  private def ivfPqRows(corpus: DataFrame, cents: Seq[(Int, Array[Double])],
-                        cbs: Codebooks): DataFrame =
-    corpus
-      .withColumn("_v", asDouble(col("embedding")))
-      .withColumn("_nrm", sqrt(Similarity.dot(col("_v"), col("_v"))))
-      .select(col("vec_id").as("_id"),
+  private def ivfPqRows(cents: Seq[(Int, Array[Double])], cbs: Codebooks)
+                       (corpus: DataFrame, idBuckets: Int): DataFrame =
+    Similarity.withVecNorm(corpus).select(col("vec_id").as("_id"),
         array((0 until cbs.length).map(j =>
           codeCol(col("_v"), cbs, j)): _*).as("codes"),
         Similarity.nearestCidCol(col("_v"), col("_nrm"), cents).as("_kb"))
@@ -531,50 +516,20 @@ object Pq {
     * `deletedIds` retire codes. O(changed buckets). */
   def upsertIvfPqVectors(spark: SparkSession, path: String,
                          changed: DataFrame, deletedIds: Seq[Any] = Nil,
-                         newSeq: Long = -1L): Seq[Int] = {
-    val meta = IndexStore.readMeta(spark, path)
-    val cents = Similarity.readCentroids(spark, path)
-    val cbs = readCodebooks(spark, path)
-    val cids0 = changed.select(col("vec_id").as("_id")).distinct()
-    val cids = if (deletedIds.isEmpty) cids0
-               else cids0.unionByName(IndexStore.idsDf(spark, cids0, deletedIds))
-    val seq = if (newSeq >= 0) newSeq else meta.updateSeq + 1
-    IndexStore.merge(spark, path, meta,
-      ivfPqRows(IndexStore.minusDeleted(spark, changed, "vec_id",
-        deletedIds), cents, cbs),
-      cids, seq, dataSortCols = Seq(col("_kb"), col("_id")))
-  }
+                         newSeq: Long = -1L): Seq[Int] =
+    Similarity.upsertVecStore(spark, path, changed, deletedIds, newSeq)(
+      ivfPqRows(Similarity.readCentroids(spark, path),
+        readCodebooks(spark, path)))
 
-  /** Serve IVFADC top-k: each query probes its `nProbe` nearest
-    * inverted lists (the [[Similarity.ivfTopK]] probe discipline —
-    * the union of probe lists is bounded driver metadata, queries ×
-    * nProbe ids, and prunes the code scan to those `_kb` partitions),
-    * ADC-scores ONLY the codes in its own probed lists (a hash join
-    * on the list id — never the full code table), shortlists
-    * `refine` candidates, and exact-cosine ranks the shortlist
-    * against `corpus`. Output `(q_id, rank, n_id, cos)`. */
+  /** Serve IVFADC top-k: the probed-list ADC scores ([[ivfAdc]] — never
+    * the full code table), a `refine`-candidate shortlist, and the
+    * exact-cosine rank of the shortlist against `corpus`. Output
+    * `(q_id, rank, n_id, cos)`. */
   def ivfPqTopK(spark: SparkSession, path: String, corpus: DataFrame,
                 queries: DataFrame, k: Int, nProbe: Int = 4,
                 refine: Int = 50): DataFrame = {
-    val cents = Similarity.readCentroids(spark, path)
-    val cbs = readCodebooks(spark, path)
-    val q = queries.select(col("vec_id").as("q_id"),
-        asDouble(col("embedding")).as("q_vec"))
-      .withColumn("q_nrm", sqrt(Similarity.dot(col("q_vec"), col("q_vec"))))
-      .withColumn("bucket", explode(
-        Similarity.probeCidsCol(col("q_vec"), col("q_nrm"), cents, nProbe)))
-      .select(col("q_id"), col("q_vec"), col("bucket"))
-    val buckets = q.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val codes = IndexStore.readBuckets(spark, s"$path/data", "_kb", buckets)
-      .filter(col("_kb").isin(buckets: _*))
-      .select(col("_id").as("n_id"), col("codes"), col("_kb").as("bucket"))
-    val shortlist = codes.join(broadcast(q), Seq("bucket"))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        adcExpr(cbs, col("q_vec"), col("codes")).as("adc"))
-    shortlistAndRefine(shortlist, corpus,
-      q.select(col("q_id"), col("q_vec")).distinct(), k, refine)
+    val (scored, q) = ivfAdc(spark, path, queries, nProbe, resid = false)
+    shortlistAndRefine(scored, corpus, q, k, refine)
   }
 
   // --------------------------------------------- residual IVFADC (Jégou §IV.A)
@@ -602,33 +557,17 @@ object Pq {
                               nCentroids: Int = 16, m: Int = 8,
                               ks: Int = 16, idBuckets: Int = 16,
                               seq: Long = 0L): Unit = {
-    val spark = corpus.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     val cents = Similarity.initCentroids(corpus, nCentroids)
     val cbs = initCodebooks(residualCorpus(corpus, cents), m, ks)
-    import spark.implicits._
-    cents.map { case (cid, v) => (cid, v.toSeq) }.toDF("cid", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    cbs.zipWithIndex.flatMap { case (cb, j) =>
-      cb.zipWithIndex.map { case (cw, c) => (j, c, cw.toSeq) }
-    }.toSeq.toDF("j", "c", "cw")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    ivfPqResidualRows(corpus, cents, cbs)
-      .repartition(col("_kb"))
-      .sortWithinPartitions(col("_kb"), col("_id"))
-      .write.mode("overwrite").partitionBy("_kb").parquet(s"$path/data")
-    Similarity.writeAnnSidecar(spark, path, idBuckets, seq)
+    buildIvfAdc(corpus, path, idBuckets, seq, cents, cbs)(
+      ivfPqResidualRows(cents, cbs))
   }
 
   /** The corpus with `embedding` replaced by the per-list residual —
     * the relation codebooks are learned from. */
   private def residualCorpus(corpus: DataFrame,
                              cents: Seq[(Int, Array[Double])]): DataFrame = {
-    val withCid = corpus
-      .withColumn("_v", asDouble(col("embedding")))
-      .withColumn("_nrm", sqrt(Similarity.dot(col("_v"), col("_v"))))
-      .withColumn("_cid", Similarity.nearestCidCol(col("_v"), col("_nrm"), cents))
+    val withCid = Similarity.withVecNorm(corpus).withColumn("_cid", Similarity.nearestCidCol(col("_v"), col("_nrm"), cents))
     joinCentroidVec(withCid, cents, col("_cid"))
       .select(col("vec_id"), residual(col("_v"), col("_cvec")).as("embedding"))
   }
@@ -637,19 +576,15 @@ object Pq {
     * against the (bounded) centroid table. */
   private def joinCentroidVec(df: DataFrame, cents: Seq[(Int, Array[Double])],
                               cid: Column): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ctab = cents.map { case (c, v) => (c, v.toSeq) }.toDF("_ccid", "_cvec")
+    val ctab = Similarity.centroidsDf(df.sparkSession, cents)
+      .toDF("_ccid", "_cvec")
     df.join(broadcast(ctab), cid === col("_ccid")).drop("_ccid")
   }
 
-  private def ivfPqResidualRows(corpus: DataFrame,
-                                cents: Seq[(Int, Array[Double])],
-                                cbs: Codebooks): DataFrame = {
-    val withCid = corpus
-      .withColumn("_v", asDouble(col("embedding")))
-      .withColumn("_nrm", sqrt(Similarity.dot(col("_v"), col("_v"))))
-      .withColumn("_kb", Similarity.nearestCidCol(col("_v"), col("_nrm"), cents))
+  private def ivfPqResidualRows(cents: Seq[(Int, Array[Double])],
+                                cbs: Codebooks)
+                               (corpus: DataFrame, idBuckets: Int): DataFrame = {
+    val withCid = Similarity.withVecNorm(corpus).withColumn("_kb", Similarity.nearestCidCol(col("_v"), col("_nrm"), cents))
     joinCentroidVec(withCid, cents, col("_kb"))
       .withColumn("_r", residual(col("_v"), col("_cvec")))
       .select(col("vec_id").as("_id"),
@@ -664,56 +599,18 @@ object Pq {
     * what re-running [[ivfPqResidualRows]] on the delta does. */
   def upsertIvfPqResiduals(spark: SparkSession, path: String,
                            changed: DataFrame, deletedIds: Seq[Any] = Nil,
-                           newSeq: Long = -1L): Seq[Int] = {
-    val meta = IndexStore.readMeta(spark, path)
-    val cents = Similarity.readCentroids(spark, path)
-    val cbs = readCodebooks(spark, path)
-    val cids0 = changed.select(col("vec_id").as("_id")).distinct()
-    val cids = if (deletedIds.isEmpty) cids0
-               else cids0.unionByName(IndexStore.idsDf(spark, cids0, deletedIds))
-    val seq = if (newSeq >= 0) newSeq else meta.updateSeq + 1
-    IndexStore.merge(spark, path, meta,
-      ivfPqResidualRows(IndexStore.minusDeleted(spark, changed, "vec_id",
-        deletedIds), cents, cbs),
-      cids, seq, dataSortCols = Seq(col("_kb"), col("_id")))
-  }
+                           newSeq: Long = -1L): Seq[Int] =
+    Similarity.upsertVecStore(spark, path, changed, deletedIds, newSeq)(
+      ivfPqResidualRows(Similarity.readCentroids(spark, path),
+        readCodebooks(spark, path)))
 
   /** Serve residual IVFADC: the [[ivfPqTopK]] probe/prune/shortlist
-    * shape, with the query's residual AGAINST EACH PROBED LIST'S
-    * centroid as the ADC query side (the query residual differs per
-    * list — Jégou §IV.A's "one distance table per probed list"; here
-    * each (query, list) pair computes its residual once in the
-    * projection and the per-subspace lookups fold over it). */
+    * shape over the residual query side ([[ivfAdc]] with `resid`). */
   def ivfPqResidualTopK(spark: SparkSession, path: String, corpus: DataFrame,
                         queries: DataFrame, k: Int, nProbe: Int = 4,
                         refine: Int = 50): DataFrame = {
-    val cents = Similarity.readCentroids(spark, path)
-    val cbs = readCodebooks(spark, path)
-    val q0 = queries.select(col("vec_id").as("q_id"),
-        asDouble(col("embedding")).as("q_vec"))
-      .withColumn("q_nrm", sqrt(Similarity.dot(col("q_vec"), col("q_vec"))))
-      .withColumn("bucket", explode(
-        Similarity.probeCidsCol(col("q_vec"), col("q_nrm"), cents, nProbe)))
-    val q = joinCentroidVec(q0, cents, col("bucket"))
-      .select(col("q_id"), col("q_vec"), col("bucket"),
-        residual(col("q_vec"), col("_cvec")).as("q_res"))
-    val buckets = q.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val codes = IndexStore.readBuckets(spark, s"$path/data", "_kb", buckets)
-      .filter(col("_kb").isin(buckets: _*))
-      .select(col("_id").as("n_id"), col("codes"), col("_kb").as("bucket"))
-    // UNLIKE the raw path, the dropped |query-side|² ADC term is NOT
-    // constant per query here — the query residual differs per probed
-    // list — so it must be added back for candidates from different
-    // lists to rank comparably: adc = |r_q|² + Σ(|cw|² − 2·r_q·cw)
-    // = the full estimated |r_q − cw|².
-    val shortlist = codes.join(broadcast(q), Seq("bucket"))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        (Similarity.dot(col("q_res"), col("q_res")) +
-          adcExpr(cbs, col("q_res"), col("codes"))).as("adc"))
-    shortlistAndRefine(shortlist, corpus,
-      q.select(col("q_id"), col("q_vec")).distinct(), k, refine)
+    val (scored, q) = ivfAdc(spark, path, queries, nProbe, resid = true)
+    shortlistAndRefine(scored, corpus, q, k, refine)
   }
 
   /** The `(q_id, n_id)` probed-list shortlist of the RESIDUAL IVFADC
@@ -723,28 +620,7 @@ object Pq {
     * feed. Only the probed inverted lists are read. */
   def ivfPqResidualShortlistIndexed(spark: SparkSession, path: String,
                                     queries: DataFrame, shortlist: Int,
-                                    nProbe: Int = 4): DataFrame = {
-    val cents = Similarity.readCentroids(spark, path)
-    val cbs = readCodebooks(spark, path)
-    val q0 = queries.select(col("vec_id").as("q_id"),
-        asDouble(col("embedding")).as("q_vec"))
-      .withColumn("q_nrm", sqrt(Similarity.dot(col("q_vec"), col("q_vec"))))
-      .withColumn("bucket", explode(
-        Similarity.probeCidsCol(col("q_vec"), col("q_nrm"), cents, nProbe)))
-    val q = joinCentroidVec(q0, cents, col("bucket"))
-      .select(col("q_id"), col("bucket"),
-        residual(col("q_vec"), col("_cvec")).as("q_res"))
-    val buckets = q.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val codes = IndexStore.readBuckets(spark, s"$path/data", "_kb", buckets)
-      .filter(col("_kb").isin(buckets: _*))
-      .select(col("_id").as("n_id"), col("codes"), col("_kb").as("bucket"))
-    adcShortlist(
-      codes.join(broadcast(q), Seq("bucket"))
-        .filter(col("n_id") =!= col("q_id"))
-        .select(col("q_id"), col("n_id"),
-          (Similarity.dot(col("q_res"), col("q_res")) +
-            adcExpr(cbs, col("q_res"), col("codes"))).as("adc")),
+                                    nProbe: Int = 4): DataFrame =
+    adcShortlist(ivfAdc(spark, path, queries, nProbe, resid = true)._1,
       shortlist)
-  }
 }

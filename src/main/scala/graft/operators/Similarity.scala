@@ -1,13 +1,17 @@
 package graft.operators
 
+import java.io.IOException
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
 import graft.functions.DotProduct
 import graft.gfunctions.round4
-import graft.view.{IndexMeta, IndexStore}
+import graft.view.IndexStore
 
 /** Similarity search over embedding columns (`array<float>`).
   * Scalar math runs through the native [[graft.functions.DotProduct]]
@@ -37,18 +41,27 @@ object Similarity {
                      k: Int): DataFrame = {
     // Norms precomputed per vector BEFORE the join: |q|+|n| sqrt's
     // instead of one per candidate pair. Same doubles, same result.
-    val c = corpus.select(col("vec_id").as("n_id"),
-      asDouble(col("embedding")).as("n_vec"))
-      .withColumn("n_nrm", sqrt(dot(col("n_vec"), col("n_vec"))))
-    val q = queries.select(col("vec_id").as("q_id"),
-      asDouble(col("embedding")).as("q_vec"))
-      .withColumn("q_nrm", sqrt(dot(col("q_vec"), col("q_vec"))))
+    val (c, q) = (vecRows(corpus, "n"), vecRows(queries, "q"))
     rankTopK(
-      c.join(broadcast(q), col("n_id") =!= col("q_id"))
-        .withColumn("cos",
-          dot(col("q_vec"), col("n_vec")) / (col("q_nrm") * col("n_nrm"))),
+      c.join(broadcast(q), col("n_id") =!= col("q_id")).withColumn("cos", qnCos),
       k)
   }
+
+  /** `(<p>_id, <p>_vec, <p>_nrm)` rows of a `(vec_id, embedding)`
+    * frame: the vector as doubles and its norm. */
+  private[operators] def vecRows(df: DataFrame, p: String): DataFrame =
+    df.select(col("vec_id").as(s"${p}_id"),
+      asDouble(col("embedding")).as(s"${p}_vec"))
+      .withColumn(s"${p}_nrm", sqrt(dot(col(s"${p}_vec"), col(s"${p}_vec"))))
+
+  /** The cosine of `q_vec` and `n_vec` from their norms. */
+  private[operators] def qnCos: Column =
+    dot(col("q_vec"), col("n_vec")) / (col("q_nrm") * col("n_nrm"))
+
+  /** `df` with `_v` (the embedding as doubles) and its norm `_nrm`. */
+  private[operators] def withVecNorm(df: DataFrame): DataFrame =
+    df.withColumn("_v", asDouble(col("embedding")))
+      .withColumn("_nrm", sqrt(dot(col("_v"), col("_v"))))
 
   /** Distributed top-k per query via the bounded [[graft.functions
     * .TopKPairs]] aggregate: map-side partial aggregation keeps k pairs
@@ -57,7 +70,7 @@ object Similarity {
     * move them ALL to one partition per query — the n/k scale fix the
     * round-1 audit called out). Identical output to the window form:
     * same score ordering, same id tie-break. */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+  private[operators] def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     val agg = udaf(new graft.functions.TopKPairs(k))
     scored
       .groupBy(col("q_id"))
@@ -65,6 +78,123 @@ object Similarity {
       .select(col("q_id"), posexplode(col("_top")).as(Seq("_i", "_t")))
       .select(col("q_id"), (col("_i") + 1).cast("long").as("rank"),
         col("_t._2").as("n_id"), round4(col("_t._1")).as("cos"))
+  }
+
+  // ----------------------------------------- the persisted vector store
+
+  /** The one store path of every persisted vector tier (LSH, IVF, SQ8,
+    * IVF-SQ8, binary, PQ, IVF-PQ, IVF-PQ-residual, SemDeDup): the
+    * [[graft.view.IndexStore]] layout — `data/_kb=<bucket>` rows
+    * `(_id, payload…)`, the by-id sidecar `ids/_ib=`, `_graft_meta`
+    * (update_seq and the id-bucket count) — plus the tier's FROZEN side
+    * tables. A tier supplies only its rows function: corpus rows →
+    * `(_id, payload…, _kb)` under its stored quantizers, given the
+    * store's id-bucket count (the router of the flat tiers,
+    * [[idRouted]]). A build deletes `path`, writes the side tables
+    * (`centroids/`, `model/`, `codebooks/`, `params/`, one file each),
+    * then the rows through [[graft.view.IndexStore.writeStore]];
+    * `rows` runs after the side tables are written, so it may read
+    * them back. `sortCols` order the rows within each bucket. */
+  private[operators] def buildVecStore(corpus: DataFrame, path: String,
+                                       idBuckets: Int, seq: Long,
+                                       sides: Seq[(String, DataFrame)] = Nil,
+                                       sortCols: Seq[String] = Seq("_id"))
+                                      (rows: (DataFrame, Int) => DataFrame)
+      : Unit = {
+    val spark = corpus.sparkSession
+    IndexStore.fsFor(spark, path).delete(new Path(path), true)
+    sides.foreach { case (dir, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$path/$dir")
+    }
+    IndexStore.writeStore(spark, path,
+      rows(corpus, idBuckets).repartition(col("_kb")),
+      sortCols.map(col), idBuckets, seq, _ => Nil)
+  }
+
+  /** The one incremental upsert of every persisted vector tier: the
+    * changed vectors (`vec_id`, `embedding`) minus the tombstoned ids
+    * become stored rows through the tier's `rows`, and
+    * [[graft.view.IndexStore.merge]] rewrites only the buckets holding
+    * the changed or deleted ids' old rows or the new rows, all in one
+    * swap. `finish` is the tier's bucket-local step over the merged
+    * rows (SemDeDup's verdicts). `newSeq` defaults to update_seq + 1.
+    * Returns the rewritten bucket ids. */
+  private[operators] def upsertVecStore(spark: SparkSession, path: String,
+                                        changed: DataFrame,
+                                        deletedIds: Seq[Any], newSeq: Long,
+                                        sortCols: Seq[String] = Seq("_id"),
+                                        finish: DataFrame => DataFrame =
+                                          identity)
+                                       (rows: (DataFrame, Int) => DataFrame)
+      : Seq[Int] = {
+    requireKbLayout(spark, path)
+    val meta = IndexStore.readMeta(spark, path)
+    // merge tolerates duplicate ids: no distinct
+    val ids = changed.select(col("vec_id").as("_id"))
+    IndexStore.merge(spark, path, meta,
+      rows(IndexStore.minusDeleted(spark, changed, "vec_id", deletedIds),
+        meta.buckets),
+      if (deletedIds.isEmpty) ids
+      else ids.unionByName(IndexStore.idsDf(spark, ids, deletedIds)),
+      if (newSeq >= 0) newSeq else meta.updateSeq + 1,
+      ("_kb" +: sortCols).map(col), finish = finish)
+  }
+
+  /** A vector store written before the flat tiers joined the shared
+    * layout keeps `data/_b=` buckets and no sidecar: refuse it, naming
+    * the path, rather than misread it. */
+  private def requireKbLayout(spark: SparkSession, path: String): Unit =
+    if (IndexStore.partDirs(spark, path + "/data", "_b").nonEmpty)
+      throw new IOException(s"$path is a vector store in the retired " +
+        "`_b=` layout (no id sidecar): rebuild it")
+
+  /** The whole `data/` table of a persisted vector store, opened with
+    * no Spark job (see [[requireKbLayout]] for old layouts). */
+  private[operators] def storeRows(spark: SparkSession,
+                                   path: String): DataFrame = {
+    requireKbLayout(spark, path)
+    IndexStore.readStore(spark, path + "/data", "_kb")
+  }
+
+  /** The stored rows of the probed `buckets`, partition-pruned, with
+    * `_id` as `n_id` and `_kb` as `bucket`. */
+  private[operators] def probedRows(spark: SparkSession, path: String,
+                                    buckets: Seq[Int]): DataFrame = {
+    val df = IndexStore.readBuckets(spark, path + "/data", "_kb", buckets)
+      .filter(col("_kb").isin(buckets: _*))
+    df.select(df.columns.toSeq.map {
+      case "_id" => col("_id").as("n_id")
+      case "_kb" => col("_kb").as("bucket")
+      case c => col(c)
+    }: _*)
+  }
+
+  /** The flat tiers' router: `_kb` = the id-hash bucket of `_id`. */
+  private[operators] def idRouted(rows: DataFrame, idBuckets: Int): DataFrame =
+    rows.withColumn("_kb", IndexStore.idBucket(col("_id"), idBuckets))
+
+  /** The probe side of a bucketed serve, from query rows carrying a
+    * per-query `probe` array of bucket ids: one row per query and
+    * probed bucket (`probe` exploded to `bucket`), and the distinct
+    * probed buckets. The probe arrays are collected BEFORE the explode
+    * and deduplicated on the driver: no shuffle, one job, and none at
+    * all for a local query frame (the optimizer folds the projection
+    * at plan time). The driver receives |queries| × probes ids. */
+  private[operators] def probes(qp: DataFrame): (DataFrame, Seq[Int]) = {
+    val buckets = qp.select(col("probe")).collect().iterator
+      .filterNot(_.isNullAt(0)).flatMap(_.getSeq[Int](0)).toSeq
+      .distinct.sorted
+    (qp.select(qp.columns.toSeq.filter(_ != "probe").map(col) :+
+      explode(col("probe")).as("bucket"): _*), buckets)
+  }
+
+  /** A centroid table `(cid int, cvec array<double>)` — the stored
+    * coarse quantizer of the IVF-family tiers. */
+  private[operators] def centroidsDf(spark: SparkSession,
+                                     cents: Seq[(Int, Array[Double])])
+      : DataFrame = {
+    import spark.implicits._
+    cents.map { case (cid, v) => (cid, v.toSeq) }.toDF("cid", "cvec")
   }
 
   // ----------------------------------------- SQ8 scalar quantization
@@ -94,16 +224,17 @@ object Similarity {
     * one-row model, codegen'd array transform, no shuffle. */
   def sq8Codes(corpus: DataFrame, model: DataFrame): DataFrame =
     corpus.crossJoin(broadcast(model))
-      .select(col("vec_id"),
-        sq8CodesExpr(asDouble(col("embedding"))).as("codes"))
+      .select(col("vec_id"), sq8CodesExpr(asDouble(col("embedding")),
+        col("mins"), col("maxs")).as("codes"))
 
-  /** The SQ8 encode expression over a double-array column — requires
-    * the model's `mins`/`maxs` columns in scope (one broadcast row).
-    * Shared by the flat tier, the IVF tier and query-side encoding so
-    * every path produces identical codes. */
-  private def sq8CodesExpr(v: Column): Column =
+  /** The SQ8 encode expression over a double-array column under the
+    * per-dimension `mn`/`mx` arrays (a model's columns, or the literals
+    * of a stored model, [[sq8Stored]]). Shared by the flat tier, the
+    * IVF tier and query-side encoding so every path produces identical
+    * codes. */
+  private def sq8CodesExpr(v: Column, mn: Column, mx: Column): Column =
     transform(
-      arrays_zip(v.as("x"), col("mins").as("mn"), col("maxs").as("mx")),
+      arrays_zip(v.as("x"), mn.as("mn"), mx.as("mx")),
       s => when(s.getField("mx") === s.getField("mn"), lit(0))
         .otherwise(least(greatest(
           floor((s.getField("x") - s.getField("mn")) * lit(255.0) /
@@ -142,17 +273,19 @@ object Similarity {
       (a, b) => ((a - b) * (a - b)).cast("long")),
     lit(0L), (acc, x) => acc + x)
 
-  /** Rank `(q_id, n_id, _d2)` pairs ascending with id tie-break
-    * through the bounded [[graft.functions.TopKPairs]] partial
-    * aggregate — the shared rank tail of every SQ8 serve path. */
-  private def rankSq8Pairs(scored: DataFrame, k: Int): DataFrame = {
+  /** Rank `(q_id, n_id, _d)` pairs by the integer distance `_d`
+    * ascending with id tie-break through the bounded
+    * [[graft.functions.TopKPairs]] partial aggregate → `(q_id, rank,
+    * n_id, <dist>)` — the shared rank tail of every SQ8 and binary
+    * serve path. */
+  private def rankAsc(scored: DataFrame, k: Int, dist: String): DataFrame = {
     val agg = udaf(new graft.functions.TopKPairs(k))
     scored
       .groupBy(col("q_id"))
-      .agg(agg(-col("_d2").cast("double"), col("n_id")).as("_top"))
+      .agg(agg(-col("_d").cast("double"), col("n_id")).as("_top"))
       .select(col("q_id"), posexplode(col("_top")).as(Seq("_i", "_t")))
       .select(col("q_id"), (col("_i") + 1).cast("long").as("rank"),
-        col("_t._2").as("n_id"), (-col("_t._1")).cast("long").as("d2"))
+        col("_t._2").as("n_id"), (-col("_t._1")).cast("long").as(dist))
   }
 
   /** Integer-L2-rank a query code set against a corpus code set (both
@@ -160,88 +293,78 @@ object Similarity {
     * [[sq8TopK]] and [[sq8TopKIndexed]], so the scan path and the
     * index path cannot drift. */
   private def rankSq8(n: DataFrame, q: DataFrame, k: Int): DataFrame =
-    rankSq8Pairs(
-      n.join(broadcast(q), col("n_id") =!= col("q_id"))
-        .select(col("q_id"), col("n_id"), sq8D2.as("_d2")), k)
+    rankAsc(n.join(broadcast(q), col("n_id") =!= col("q_id"))
+      .select(col("q_id"), col("n_id"), sq8D2.as("_d")), k, "d2")
 
-  /** Persist the SQ8 tier: the `[min, max]` model FROZEN at build time
+  /** Persist the SQ8 tier on the shared vector store
+    * ([[buildVecStore]]): the `[min, max]` model FROZEN at build time
     * (`model/` — one row, the PQ frozen-codebook discipline,
-    * Pq.buildPqIndex) plus one code row per vector (`vec_id, codes`)
-    * hive-partitioned by id-hash bucket (`_b` — the incremental-
-    * maintenance layout of [[buildBinaryIndex]]). Codes are computed
-    * ONCE under the stored model; serving ([[sq8TopKIndexed]]) scans
-    * stored 8-bit codes only and never re-reads the embedding column —
-    * the point of SQ8 at 100 TB (the hot scan is a quarter of the
-    * float corpus), and codes stay STABLE across deltas because the
-    * model never moves. */
+    * Pq.buildPqIndex) plus one code row `(_id, codes)` per vector
+    * under `data/_kb=<id-hash bucket>` (flat PQ's router,
+    * [[idRouted]]) with the by-id sidecar `ids/_ib=`. Codes are
+    * computed ONCE under the stored model; serving
+    * ([[sq8TopKIndexed]]) scans stored 8-bit codes only and never
+    * re-reads the embedding column — the point of SQ8 at 100 TB (the
+    * hot scan is a quarter of the float corpus), and codes stay STABLE
+    * across deltas because the model never moves. */
   def buildSq8Index(corpus: DataFrame, path: String, idBuckets: Int = 16,
-                    seq: Long = 0L): Unit = {
-    val spark = corpus.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    sq8Train(corpus).coalesce(1).write.mode("overwrite")
-      .parquet(path + "/model")
-    val model = sq8Model(spark, path)
-    sq8Codes(corpus, model)
-      .withColumn("_b", IndexStore.idBucket(col("vec_id"), idBuckets))
-      .repartition(idBuckets, col("_b"))
-      .sortWithinPartitions(col("_b"), col("vec_id"))
-      .write.mode("overwrite").partitionBy("_b").parquet(path + "/data")
-    IndexStore.writeMeta(spark, path, IndexMeta(seq, idBuckets, Nil))
+                    seq: Long = 0L): Unit =
+    buildVecStore(corpus, path, idBuckets, seq,
+      Seq("model" -> sq8Train(corpus)))(sq8Rows(corpus.sparkSession, path))
+
+  /** `(_id, codes, _kb)` rows of a corpus batch under the stored model,
+    * routed by id hash. */
+  private def sq8Rows(spark: SparkSession, path: String)
+                     (corpus: DataFrame, idBuckets: Int): DataFrame = {
+    val (mn, mx) = sq8Stored(spark, path)
+    idRouted(corpus.select(col("vec_id").as("_id"),
+      sq8CodesExpr(asDouble(col("embedding")), mn, mx).as("codes")),
+      idBuckets)
   }
 
   /** The stored (frozen) `[min, max]` model of a [[buildSq8Index]]
-    * store — one row, `(mins array<double>, maxs array<double>)`. */
-  def sq8Model(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path + "/model")
+    * store — one row, `(mins array<double>, maxs array<double>)`, read
+    * on the driver (no Spark job). */
+  def sq8Model(spark: SparkSession, path: String): DataFrame = {
+    val rows = IndexStore.readSmall(spark, path + "/model", 1)
+    spark.createDataFrame(rows.asJava, rows.head.schema)
+  }
 
-  /** Incremental maintenance of a [[buildSq8Index]] index: changed
-    * vectors re-encode under the STORED model (never retrained — the
-    * q120 frozen-codebook discipline), `deletedIds` retire, and ONLY
-    * the id-hash bucket directories holding touched ids are read and
-    * rewritten behind rename swaps — O(changed buckets) whatever the
-    * corpus size. Returns the rewritten bucket ids. */
+  /** The stored model's `mins`/`maxs` as literal columns. */
+  private def sq8Stored(spark: SparkSession, path: String): (Column, Column) = {
+    val m = IndexStore.readSmall(spark, path + "/model", 1).head
+    (lit(m.getSeq[Double](0).toArray), lit(m.getSeq[Double](1).toArray))
+  }
+
+  /** Incremental maintenance of a [[buildSq8Index]] index through the
+    * shared [[upsertVecStore]]: changed vectors re-encode under the
+    * STORED model (never retrained — the q120 frozen-codebook
+    * discipline), `deletedIds` retire, and ONLY the id-hash buckets
+    * holding touched ids are rewritten — O(changed buckets) whatever
+    * the corpus size. Returns the rewritten bucket ids. */
   def upsertSq8Vectors(spark: SparkSession, path: String,
                        changed: DataFrame, deletedIds: Seq[Any] = Nil,
-                       newSeq: Long = -1L): Seq[Int] = {
-    val meta = IndexStore.readMeta(spark, path)
-    val model = sq8Model(spark, path)
-    val delDf = IndexStore.idsDf(spark,
-      changed.select(col("vec_id").as("_id")), deletedIds).toDF("vec_id")
-    val touched = changed.select(col("vec_id"))
-      .unionByName(delDf).distinct().persist()
-    try {
-      val bs = touched
-        .select(IndexStore.idBucket(col("vec_id"), meta.buckets).as("_b"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
-      if (bs.isEmpty) return Nil
-      val cur = IndexStore.readBuckets(spark, path + "/data", "_b", bs)
-        .filter(col("_b").isin(bs: _*))
-      val out = cur.join(touched, Seq("vec_id"), "left_anti")
-        .unionByName(sq8Codes(
-            IndexStore.minusDeleted(spark, changed, "vec_id", deletedIds),
-            model)
-          .withColumn("_b", IndexStore.idBucket(col("vec_id"),
-            meta.buckets)))
-      IndexStore.writeSwap(spark, IndexStore.fsFor(spark, path), out,
-        path + "/data", "_b", bs, Seq(col("_b"), col("vec_id")))
-      IndexStore.writeMeta(spark, path, meta.copy(updateSeq =
-        if (newSeq >= 0) newSeq else meta.updateSeq + 1))
-      bs
-    } finally touched.unpersist()
-  }
+                       newSeq: Long = -1L): Seq[Int] =
+    upsertVecStore(spark, path, changed, deletedIds, newSeq)(
+      sq8Rows(spark, path))
 
   /** [[sq8TopK]] served from a [[buildSq8Index]] store: the corpus
     * side is the stored 8-bit codes (no embedding read, no retrain,
     * no re-encode); queries encode on the fly under the STORED
     * model. Same [[rankSq8]] scorer as the scan path. */
   def sq8TopKIndexed(spark: SparkSession, path: String,
-                     queries: DataFrame, k: Int): DataFrame = {
-    val stored = spark.read.parquet(path + "/data")
-      .select(col("vec_id").as("n_id"), col("codes").as("n_c"))
-    val q = sq8Codes(queries, sq8Model(spark, path))
-      .select(col("vec_id").as("q_id"), col("codes").as("q_c"))
-    rankSq8(stored, q, k)
+                     queries: DataFrame, k: Int): DataFrame =
+    sq8Indexed(spark, path, queries, k, identity)
+
+  /** [[sq8TopKIndexed]] over the stored code rows `keep` retains. */
+  private def sq8Indexed(spark: SparkSession, path: String,
+                         queries: DataFrame, k: Int,
+                         keep: DataFrame => DataFrame): DataFrame = {
+    val (mn, mx) = sq8Stored(spark, path)
+    rankSq8(keep(storeRows(spark, path)
+        .select(col("_id").as("n_id"), col("codes").as("n_c"))),
+      queries.select(col("vec_id").as("q_id"),
+        sq8CodesExpr(asDouble(col("embedding")), mn, mx).as("q_c")), k)
   }
 
   // --------------------------------------- IVF-pruned SQ8 (sublinear serve)
@@ -255,41 +378,28 @@ object Similarity {
     * probed lists — the code read is partition-pruned to the probed
     * `_kb` directories, so serve cost tracks probed-list size, not the
     * corpus. Layout: `centroids/` + `model/` (both frozen) +
-    * `data/_kb=` + the ids sidecar/meta — the standard graft
-    * maintenance surface (the [[graft.operators.Pq.buildIvfPqIndex]]
-    * shape with SQ8 codes in place of PQ codes). */
+    * `data/_kb=` + the ids sidecar/meta — the shared vector store
+    * ([[buildVecStore]]) with SQ8 codes in place of PQ codes. */
   def buildIvfSq8Index(corpus: DataFrame, path: String,
                        nCentroids: Int = 16, idBuckets: Int = 16,
                        seq: Long = 0L): Unit = {
     val spark = corpus.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    val cents = initCentroids(corpus, nCentroids)
-    import spark.implicits._
-    cents.map { case (cid, v) => (cid, v.toSeq) }.toDF("cid", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    sq8Train(corpus).coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/model")
-    val model = sq8Model(spark, path)
-    ivfSq8Rows(corpus, cents, model)
-      .repartition(col("_kb"))
-      .sortWithinPartitions(col("_kb"), col("_id"))
-      .write.mode("overwrite").partitionBy("_kb").parquet(s"$path/data")
-    writeAnnSidecar(spark, path, idBuckets, seq)
+    buildVecStore(corpus, path, idBuckets, seq,
+      Seq("centroids" -> centroidsDf(spark, initCentroids(corpus, nCentroids)),
+        "model" -> sq8Train(corpus)))(ivfSq8Rows(spark, path))
   }
 
-  /** Code rows with their inverted-list assignment: `(_id, codes,
-    * _kb = nearest stored centroid)` — the encode and the assignment
-    * are projections over ONE scan. */
-  private def ivfSq8Rows(corpus: DataFrame,
-                         cents: Seq[(Int, Array[Double])],
-                         model: DataFrame): DataFrame =
-    corpus.crossJoin(broadcast(model))
-      .withColumn("_v", asDouble(col("embedding")))
-      .withColumn("_nrm", sqrt(dot(col("_v"), col("_v"))))
-      .select(col("vec_id").as("_id"),
-        sq8CodesExpr(col("_v")).as("codes"),
+  /** Code rows with their inverted-list assignment under the stored
+    * quantizers: `(_id, codes, _kb = nearest stored centroid)` — the
+    * encode and the assignment are projections over ONE scan. */
+  private def ivfSq8Rows(spark: SparkSession, path: String)
+                        (corpus: DataFrame, idBuckets: Int): DataFrame = {
+    val cents = readCentroids(spark, path)
+    val (mn, mx) = sq8Stored(spark, path)
+    withVecNorm(corpus).select(col("vec_id").as("_id"),
+        sq8CodesExpr(col("_v"), mn, mx).as("codes"),
         nearestCidCol(col("_v"), col("_nrm"), cents).as("_kb"))
+  }
 
   /** Incremental maintenance against the FROZEN quantizers: changed
     * vectors re-assign (stored centroids) and re-encode (stored
@@ -297,20 +407,9 @@ object Similarity {
     * retire codes. O(changed buckets). */
   def upsertIvfSq8Vectors(spark: SparkSession, path: String,
                           changed: DataFrame, deletedIds: Seq[Any] = Nil,
-                          newSeq: Long = -1L): Seq[Int] = {
-    val meta = IndexStore.readMeta(spark, path)
-    val cents = readCentroids(spark, path)
-    val model = sq8Model(spark, path)
-    val cids0 = changed.select(col("vec_id").as("_id")).distinct()
-    val cids = if (deletedIds.isEmpty) cids0
-               else cids0.unionByName(
-                 IndexStore.idsDf(spark, cids0, deletedIds))
-    val seq = if (newSeq >= 0) newSeq else meta.updateSeq + 1
-    IndexStore.merge(spark, path, meta,
-      ivfSq8Rows(IndexStore.minusDeleted(spark, changed, "vec_id",
-        deletedIds), cents, model),
-      cids, seq, dataSortCols = Seq(col("_kb"), col("_id")))
-  }
+                          newSeq: Long = -1L): Seq[Int] =
+    upsertVecStore(spark, path, changed, deletedIds, newSeq)(
+      ivfSq8Rows(spark, path))
 
   /** Catch an [[IndexStore]]-layout ANN store (IVF-SQ8 and every
     * other `_kb`-listed, by-id-sidecar tier maintained through
@@ -335,7 +434,7 @@ object Similarity {
   }
 
   /** Serve IVF-SQ8 top-k: each query probes its `nProbe` nearest
-    * inverted lists (the [[ivfTopK]] probe discipline — the probed-id
+    * inverted lists (the shared [[probes]] side — the probed-list
     * union is bounded driver metadata), integer-scores ONLY the codes
     * in its probed `_kb` directories (hash join on the list id), and
     * ranks through the shared SQ8 rank tail. Returns
@@ -343,25 +442,14 @@ object Similarity {
     * reranking over the shortlist when exact cosine order matters. */
   def ivfSq8TopK(spark: SparkSession, path: String, queries: DataFrame,
                  k: Int, nProbe: Int = 4): DataFrame = {
-    val cents = readCentroids(spark, path)
-    val model = sq8Model(spark, path)
-    val q = queries.crossJoin(broadcast(model))
-      .withColumn("_v", asDouble(col("embedding")))
-      .withColumn("_nrm", sqrt(dot(col("_v"), col("_v"))))
-      .select(col("vec_id").as("q_id"),
-        sq8CodesExpr(col("_v")).as("q_c"),
-        explode(probeCidsCol(col("_v"), col("_nrm"), cents, nProbe))
-          .as("bucket"))
-    val buckets = q.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val codes = IndexStore.readBuckets(spark, s"$path/data", "_kb", buckets)
-      .filter(col("_kb").isin(buckets: _*))
-      .select(col("_id").as("n_id"), col("codes").as("n_c"),
-        col("_kb").as("bucket"))
-    rankSq8Pairs(
-      codes.join(broadcast(q), Seq("bucket"))
-        .filter(col("n_id") =!= col("q_id"))
-        .select(col("q_id"), col("n_id"), sq8D2.as("_d2")), k)
+    val (mn, mx) = sq8Stored(spark, path)
+    val (q, buckets) = probes(
+      ivfQueries(readCentroids(spark, path), queries, nProbe)
+        .select(col("q_id"), sq8CodesExpr(col("q_vec"), mn, mx).as("q_c"),
+          col("probe")))
+    rankAsc(probedRows(spark, path, buckets).withColumnRenamed("codes", "n_c")
+      .join(broadcast(q), Seq("bucket")).filter(col("n_id") =!= col("q_id"))
+      .select(col("q_id"), col("n_id"), sq8D2.as("_d")), k, "d2")
   }
 
   // ------------------------------------------- binary (1-bit) quantization
@@ -401,14 +489,16 @@ object Similarity {
   def binaryTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                  dims: Int = 64): DataFrame = {
     val words = (dims + 63) / 64
-    val n = binaryCodes(corpus, dims)
-      .select(col("vec_id").as("n_id") +:
-        (0 until words).map(w => col(s"w$w").as(s"n$w")): _*)
-    val q = binaryCodes(queries, dims)
-      .select(col("vec_id").as("q_id") +:
-        (0 until words).map(w => col(s"w$w").as(s"q$w")): _*)
-    rankHamming(n, q, k, words)
+    rankHamming(codeSide(binaryCodes(corpus, dims), "vec_id", "n", words),
+      codeSide(binaryCodes(queries, dims), "vec_id", "q", words), k, words)
   }
+
+  /** Binary code rows as one side of [[rankHamming]]: `id` as
+    * `<p>_id`, words `w0..wN` as `<p>0..<p>N`. */
+  private def codeSide(codes: DataFrame, id: String, p: String,
+                       words: Int): DataFrame =
+    codes.select(col(id).as(s"${p}_id") +:
+      (0 until words).map(w => col(s"w$w").as(s"$p$w")): _*)
 
   /** Hamming-rank a query code set against a corpus code set (both in
     * the `w0..wN` packed-word shape) — the shared scorer of
@@ -419,71 +509,38 @@ object Similarity {
     val ham = (0 until words)
       .map(w => bit_count(col(s"q$w").bitwiseXOR(col(s"n$w"))))
       .reduceLeft(_ + _).cast("long")
-    val agg = udaf(new graft.functions.TopKPairs(k))
-    n.join(broadcast(q), col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"), ham.as("_h"))
-      .groupBy(col("q_id"))
-      .agg(agg(-col("_h").cast("double"), col("n_id")).as("_top"))
-      .select(col("q_id"), posexplode(col("_top")).as(Seq("_i", "_t")))
-      .select(col("q_id"), (col("_i") + 1).cast("long").as("rank"),
-        col("_t._2").as("n_id"), (-col("_t._1")).cast("long").as("hamming"))
+    rankAsc(n.join(broadcast(q), col("n_id") =!= col("q_id"))
+      .select(col("q_id"), col("n_id"), ham.as("_d")), k, "hamming")
   }
 
-  /** Persist the binary-code tier: one row per vector
-    * (`vec_id, w0..wN`) hive-partitioned by id-HASH bucket (`_b`,
-    * arithmetic on the id — the incremental-maintenance layout).
-    * Codes are computed ONCE at build; serving
-    * ([[binaryTopKIndexed]]) scans stored longs only — at 1
+  /** Persist the binary-code tier on the shared vector store
+    * ([[buildVecStore]]): one row `(_id, w0..wN)` per vector under
+    * `data/_kb=<id-hash bucket>` (flat PQ's router, [[idRouted]]) with
+    * the by-id sidecar `ids/_ib=`. Codes are computed ONCE at build;
+    * serving ([[binaryTopKIndexed]]) scans stored longs only — at 1
     * bit/dimension the full scan IS the design (a 100 TB float corpus
     * is ~3 TB of codes), and the embedding column is never re-read.
     * The word count is recoverable from the stored schema; no extra
     * metadata. */
   def buildBinaryIndex(corpus: DataFrame, path: String, dims: Int = 64,
-                       idBuckets: Int = 16, seq: Long = 0L): Unit = {
-    val spark = corpus.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    binaryCodes(corpus, dims)
-      .withColumn("_b", IndexStore.idBucket(col("vec_id"), idBuckets))
-      .repartition(idBuckets, col("_b"))
-      .sortWithinPartitions(col("_b"), col("vec_id"))
-      .write.mode("overwrite").partitionBy("_b").parquet(path + "/data")
-    IndexStore.writeMeta(spark, path, IndexMeta(seq, idBuckets, Nil))
-  }
+                       idBuckets: Int = 16, seq: Long = 0L): Unit =
+    buildVecStore(corpus, path, idBuckets, seq)(binaryRows(dims))
 
-  /** Incremental maintenance of a [[buildBinaryIndex]] index: changed
-    * vectors re-encode, `deletedIds` retire, and ONLY the id-hash
-    * bucket directories holding touched ids are read and rewritten
-    * behind rename swaps — O(changed buckets) whatever the corpus
-    * size. Returns the rewritten bucket ids. */
+  private def binaryRows(dims: Int)(corpus: DataFrame,
+                                    idBuckets: Int): DataFrame =
+    idRouted(binaryCodes(corpus, dims).withColumnRenamed("vec_id", "_id"),
+      idBuckets)
+
+  /** Incremental maintenance of a [[buildBinaryIndex]] index through
+    * the shared [[upsertVecStore]]: changed vectors re-encode,
+    * `deletedIds` retire, and ONLY the id-hash buckets holding touched
+    * ids are rewritten — O(changed buckets) whatever the corpus size.
+    * Returns the rewritten bucket ids. */
   def upsertBinaryVectors(spark: SparkSession, path: String,
                           changed: DataFrame, deletedIds: Seq[Any] = Nil,
-                          dims: Int = 64, newSeq: Long = -1L): Seq[Int] = {
-    val meta = IndexStore.readMeta(spark, path)
-    val delDf = IndexStore.idsDf(spark,
-      changed.select(col("vec_id").as("_id")), deletedIds).toDF("vec_id")
-    val touched = changed.select(col("vec_id"))
-      .unionByName(delDf).distinct().persist()
-    try {
-      val bs = touched
-        .select(IndexStore.idBucket(col("vec_id"), meta.buckets).as("_b"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
-      if (bs.isEmpty) return Nil
-      val cur = IndexStore.readBuckets(spark, path + "/data", "_b", bs)
-        .filter(col("_b").isin(bs: _*))
-      val out = cur.join(touched, Seq("vec_id"), "left_anti")
-        .unionByName(binaryCodes(
-            IndexStore.minusDeleted(spark, changed, "vec_id", deletedIds),
-            dims)
-          .withColumn("_b", IndexStore.idBucket(col("vec_id"),
-            meta.buckets)))
-      IndexStore.writeSwap(spark, IndexStore.fsFor(spark, path), out,
-        path + "/data", "_b", bs, Seq(col("_b"), col("vec_id")))
-      IndexStore.writeMeta(spark, path, meta.copy(updateSeq =
-        if (newSeq >= 0) newSeq else meta.updateSeq + 1))
-      bs
-    } finally touched.unpersist()
-  }
+                          dims: Int = 64, newSeq: Long = -1L): Seq[Int] =
+    upsertVecStore(spark, path, changed, deletedIds, newSeq)(
+      binaryRows(dims))
 
   /** [[binaryTopK]] served from a [[buildBinaryIndex]] store: the
     * corpus side is the stored code words (longs only — no embedding
@@ -491,15 +548,16 @@ object Similarity {
     * [[rankHamming]] scorer as the scan path. */
   def binaryTopKIndexed(spark: SparkSession, path: String,
                         queries: DataFrame, k: Int,
-                        dims: Int = 64): DataFrame = {
+                        dims: Int = 64): DataFrame =
+    binaryIndexed(spark, path, queries, k, dims, identity)
+
+  /** [[binaryTopKIndexed]] over the stored code rows `keep` retains. */
+  private def binaryIndexed(spark: SparkSession, path: String,
+                            queries: DataFrame, k: Int, dims: Int,
+                            keep: DataFrame => DataFrame): DataFrame = {
     val words = (dims + 63) / 64
-    val stored = spark.read.parquet(path + "/data")
-      .select(col("vec_id").as("n_id") +:
-        (0 until words).map(w => col(s"w$w").as(s"n$w")): _*)
-    val q = binaryCodes(queries, dims)
-      .select(col("vec_id").as("q_id") +:
-        (0 until words).map(w => col(s"w$w").as(s"q$w")): _*)
-    rankHamming(stored, q, k, words)
+    rankHamming(keep(codeSide(storeRows(spark, path), "_id", "n", words)),
+      codeSide(binaryCodes(queries, dims), "vec_id", "q", words), k, words)
   }
 
   // --------------------------------------------- shortlist-rerank cascade
@@ -541,16 +599,10 @@ object Similarity {
     * and tie-break-identical to [[bruteForceTopK]]. */
   private def rerankExact(corpus: DataFrame, queries: DataFrame,
                           cand: DataFrame, k: Int): DataFrame = {
-    val c = corpus.select(col("vec_id").as("n_id"),
-      asDouble(col("embedding")).as("n_vec"))
-      .withColumn("n_nrm", sqrt(dot(col("n_vec"), col("n_vec"))))
-    val q = queries.select(col("vec_id").as("q_id"),
-      asDouble(col("embedding")).as("q_vec"))
-      .withColumn("q_nrm", sqrt(dot(col("q_vec"), col("q_vec"))))
+    val (c, q) = (vecRows(corpus, "n"), vecRows(queries, "q"))
     rankTopK(
       broadcast(cand).join(c, Seq("n_id")).join(broadcast(q), Seq("q_id"))
-        .withColumn("cos",
-          dot(col("q_vec"), col("n_vec")) / (col("q_nrm") * col("n_nrm"))),
+        .withColumn("cos", qnCos),
       k)
   }
 
@@ -595,13 +647,13 @@ object Similarity {
     * post-rank filter would under-return: k' shortlisted rows might
     * all be disallowed), so the shortlist is the top-k' OF THE
     * FILTERED SET; the exact rerank then reads floats for |q|·k'
-    * allowed rows only. The semi join rides the quantized scan —
-    * broadcast when the filter is small, shuffle otherwise (AQE
-    * decides); supported tiers are the flat code scans (`sq8` /
-    * `binary` — an IVF tier's probe set is computed from the UNfiltered
-    * corpus geometry and can starve under a selective filter, so it
-    * is rejected loudly rather than served with silent recall
-    * loss). */
+    * allowed rows only. The tier serve runs with the semi join on its
+    * stored codes — broadcast when the filter is small, shuffle
+    * otherwise (AQE decides); supported tiers are the flat code scans
+    * (`sq8` / `binary` — an IVF tier's probe set is computed from the
+    * UNfiltered corpus geometry and can starve under a selective
+    * filter, so it is rejected loudly rather than served with silent
+    * recall loss). */
   def cascadeTopKIndexedWhere(spark: SparkSession, path: String,
                               corpus: DataFrame, queries: DataFrame,
                               k: Int, shortlist: Int, allowed: DataFrame,
@@ -612,25 +664,12 @@ object Similarity {
       s"allowed must be a single vec-id column; got " +
         s"[${allowed.columns.mkString(", ")}] — select the id column " +
         "explicitly")
-    val ok = allowed.toDF("n_id").distinct()
+    val ok = allowed.toDF("n_id")
+    def keep(stored: DataFrame) = stored.join(ok, Seq("n_id"), "left_semi")
     val cand = (tier match {
-      case "sq8" =>
-        val stored = spark.read.parquet(path + "/data")
-          .select(col("vec_id").as("n_id"), col("codes").as("n_c"))
-          .join(ok, Seq("n_id"), "left_semi")
-        val q = sq8Codes(queries, sq8Model(spark, path))
-          .select(col("vec_id").as("q_id"), col("codes").as("q_c"))
-        rankSq8(stored, q, shortlist)
+      case "sq8" => sq8Indexed(spark, path, queries, shortlist, keep)
       case "binary" =>
-        val words = (dims + 63) / 64
-        val stored = spark.read.parquet(path + "/data")
-          .select(col("vec_id").as("n_id") +:
-            (0 until words).map(w => col(s"w$w").as(s"n$w")): _*)
-          .join(ok, Seq("n_id"), "left_semi")
-        val q = binaryCodes(queries, dims)
-          .select(col("vec_id").as("q_id") +:
-            (0 until words).map(w => col(s"w$w").as(s"q$w")): _*)
-        rankHamming(stored, q, shortlist, words)
+        binaryIndexed(spark, path, queries, shortlist, dims, keep)
       case t => throw new IllegalArgumentException(
         s"filtered cascade serves the flat tiers only (sq8|binary), " +
           s"got: $t")
@@ -654,10 +693,7 @@ object Similarity {
   def clusterBalancedSample(emb: DataFrame, num: Int, den: Int,
                             nCentroids: Int = 16): DataFrame = {
     val cents = initCentroids(emb, nCentroids)
-    val assigned = emb
-      .withColumn("_v", asDouble(col("embedding")))
-      .withColumn("_nrm", sqrt(dot(col("_v"), col("_v"))))
-      .select(col("vec_id"),
+    val assigned = withVecNorm(emb).select(col("vec_id"),
         nearestCidCol(col("_v"), col("_nrm"), cents).as("cluster_id"))
     Relational.stratifiedSampleExact(assigned, col("cluster_id"),
       col("vec_id"), num, den)
@@ -669,9 +705,7 @@ object Similarity {
     * A/B-timed in isolation. Never part of a gate. */
   private[graft] def clusterAssignProbe(emb: DataFrame): DataFrame = {
     val cents = initCentroids(emb, 16)
-    emb.withColumn("_v", asDouble(col("embedding")))
-      .withColumn("_nrm", sqrt(dot(col("_v"), col("_v"))))
-      .select(col("vec_id"),
+    withVecNorm(emb).select(col("vec_id"),
         nearestCidCol(col("_v"), col("_nrm"), cents).as("cid"))
   }
 
@@ -728,21 +762,23 @@ object Similarity {
       asDouble(col("embedding")).as("n_vec"),
       lshSignature(col("embedding"), planes).as("bucket"))
       .withColumn("n_nrm", sqrt(dot(col("n_vec"), col("n_vec"))))
-    rankWithinBuckets(c, probeRows(queries, planes), k)
+    val q = lshQueries(queries, planes)
+    rankWithinBuckets(c, q.select(col("q_id"), col("q_vec"), col("q_nrm"),
+      explode(col("probe")).as("bucket")), k)
   }
 
-  /** (q_id, q_vec, q_nrm, bucket) probe rows: each query's own signature
-    * bucket plus every 1-bit-flipped bucket (multi-probe). */
-  private def probeRows(queries: DataFrame, planes: Int): DataFrame = {
-    val probes = (0 until planes).foldLeft(array(col("_sig"))) {
+  /** (q_id, q_vec, q_nrm, probe) query rows: `probe` holds each query's
+    * own signature bucket plus every 1-bit-flipped bucket
+    * (multi-probe). */
+  private def lshQueries(queries: DataFrame, planes: Int): DataFrame = {
+    val probe = (0 until planes).foldLeft(array(col("_sig"))) {
       (acc, p) => array_append(acc, col("_sig").bitwiseXOR(lit(1L << p)))
     }
     queries.select(col("vec_id").as("q_id"),
       asDouble(col("embedding")).as("q_vec"),
       lshSignature(col("embedding"), planes).as("_sig"))
       .withColumn("q_nrm", sqrt(dot(col("q_vec"), col("q_vec"))))
-      .select(col("q_id"), col("q_vec"), col("q_nrm"),
-        explode(probes).as("bucket"))
+      .select(col("q_id"), col("q_vec"), col("q_nrm"), probe.as("probe"))
   }
 
   /** Bucket-join probes with corpus signature rows, dedup candidates
@@ -754,11 +790,8 @@ object Similarity {
         .filter(col("n_id") =!= col("q_id"))
         .select(col("q_id"), col("q_vec"), col("q_nrm"), col("n_id"),
           col("n_vec"), col("n_nrm")).distinct()
-        .withColumn("cos",
-          dot(col("q_vec"), col("n_vec")) / (col("q_nrm") * col("n_nrm"))),
+        .withColumn("cos", qnCos),
       k)
-
-
 
   /** Directory-group count of the persisted LSH layout: the 2^planes
     * signatures are stored as a SORTED `_sig` column inside
@@ -783,42 +816,21 @@ object Similarity {
       .withColumn("_kb", pmod(col("_sig"), lit(SigGroups)).cast("int"))
       .withColumn("n_nrm", sqrt(dot(col("n_vec"), col("n_vec"))))
 
-  /** Write the vector by-id sidecar + metadata beside a freshly built
-    * ANN index — the same incremental-maintenance layout as view
-    * indexes ([[graft.view.IndexStore]]): `data/_kb=*` holds the
-    * bucketed vectors, `ids/_ib=*` maps each vector id to the bucket
-    * holding its CURRENT row (so an upsert finds old rows without
-    * scanning), `_graft_meta` stamps update_seq + id-bucket count. */
-  private[operators] def writeAnnSidecar(spark: SparkSession, path: String,
-                              idBuckets: Int, seq: Long): Unit = {
-    spark.read.parquet(path + "/data")
-      .select(col("_id"), col("_kb")).distinct()
-      .withColumn("_ib", IndexStore.idBucket(col("_id"), idBuckets))
-      .repartition(idBuckets, col("_ib"))
-      .sortWithinPartitions(col("_ib"), col("_id"))
-      .write.mode("overwrite").partitionBy("_ib").parquet(path + "/ids")
-    IndexStore.writeMeta(spark, path, IndexMeta(seq, idBuckets, Nil))
-  }
-
-  /** Persist the corpus LSH signature index: (_id, n_vec, n_nrm) rows
-    * in parquet partitioned by signature bucket, plus the by-id sidecar
-    * for incremental maintenance ([[upsertLshVectors]]). The 100 TB
-    * posture: signatures and norms are computed ONCE at build time and
-    * amortized over every query — [[lshTopKIndexed]] reads only the
-    * probed bucket directories instead of recomputing signatures
-    * corpus-wide per query (the gap flagged in round 1). */
+  /** Persist the corpus LSH signature index on the shared vector store
+    * ([[buildVecStore]]): `(_id, n_vec, _sig, n_nrm)` rows under their
+    * signature-group directory, sorted by `_sig`, plus the by-id
+    * sidecar for incremental maintenance ([[upsertLshVectors]]). The
+    * 100 TB posture: signatures and norms are computed ONCE at build
+    * time and amortized over every query — [[lshTopKIndexed]] reads
+    * only the probed bucket directories instead of recomputing
+    * signatures corpus-wide per query (the gap flagged in round 1). */
   def buildLshIndex(corpus: DataFrame, path: String,
                     planes: Int = 8, idBuckets: Int = 16,
-                    seq: Long = 0L): Unit = {
-    val spark = corpus.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    lshRows(corpus, planes)
-      .repartition(col("_kb"))
-      .sortWithinPartitions(col("_kb"), col("_sig"), col("_id"))
-      .write.mode("overwrite").partitionBy("_kb").parquet(path + "/data")
-    writeAnnSidecar(spark, path, idBuckets, seq)
-  }
+                    seq: Long = 0L): Unit =
+    buildVecStore(corpus, path, idBuckets, seq, sortCols = LshSort)(
+      (c, _) => lshRows(c, planes))
+
+  private val LshSort = Seq("_sig", "_id")
 
   /** Incremental maintenance of a [[buildLshIndex]] index — the same
     * by-id-sidecar merge as view indexes: changed vectors are re-signed
@@ -829,29 +841,21 @@ object Similarity {
     * views. Returns the affected bucket ids. */
   def upsertLshVectors(spark: SparkSession, path: String,
                        changed: DataFrame, deletedIds: Seq[Any] = Nil,
-                       planes: Int = 8, newSeq: Long = -1L): Seq[Int] = {
-    val meta = IndexStore.readMeta(spark, path)
-    val cids0 = changed.select(col("vec_id").as("_id")).distinct()
-    val cids = if (deletedIds.isEmpty) cids0
-               else cids0.unionByName(IndexStore.idsDf(spark, cids0, deletedIds))
-    val seq = if (newSeq >= 0) newSeq else meta.updateSeq + 1
-    IndexStore.merge(spark, path, meta,
-      lshRows(IndexStore.minusDeleted(spark, changed, "vec_id",
-        deletedIds), planes),
-      cids, seq, dataSortCols = Seq(col("_kb"), col("_sig"), col("_id")))
-  }
+                       planes: Int = 8, newSeq: Long = -1L): Seq[Int] =
+    upsertVecStore(spark, path, changed, deletedIds, newSeq, LshSort)(
+      (c, _) => lshRows(c, planes))
 
-  /** ANN against a persisted [[buildLshIndex]] index. The probe bucket
-    * ids are collected driver-side — O(|queries| × (planes+1)) ints for
-    * an interactive query set — and pushed as literal partition filters,
-    * so the scan touches only the probed bucket directories (partition
-    * pruning visible in the plan). Results are identical to [[lshTopK]]
-    * over the same corpus. */
+  /** ANN against a persisted [[buildLshIndex]] index. The probe
+    * signatures (each query's own plus its 1-bit flips) are collected
+    * driver-side by the shared [[probes]] side — O(|queries| ×
+    * (planes+1)) ints for an interactive query set — and pushed as
+    * literal partition filters, so the scan touches only the probed
+    * bucket directories (partition pruning visible in the plan).
+    * Results are identical to [[lshTopK]] over the same corpus. */
   def lshTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
                      k: Int, planes: Int = 8): DataFrame = {
-    val q = probeRows(queries, planes)
-    val sigs = q.select(col("bucket").cast("int")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val (q, sigs) = probes(lshQueries(queries, planes)
+      .withColumn("probe", col("probe").cast("array<int>")))
     // two-level prune: signature-group directories first, then the
     // pushed `_sig IN` filter prunes row groups inside each file
     // (files are `_sig`-sorted by build and upsert)
@@ -1040,6 +1044,16 @@ object Similarity {
       .withColumn("n_nrm", sqrt(dot(col("n_vec"), col("n_vec"))))
       .withColumn("_kb", nearestCidCol(col("n_vec"), col("n_nrm"), cents))
 
+  /** The stored IVF quantizer of a build: [[initCentroids]], refined by
+    * `refineIters` spherical k-means iterations ([[lloydRefine]]). */
+  private[operators] def trainCentroids(corpus: DataFrame, nCentroids: Int,
+                                        refineIters: Int)
+      : Seq[(Int, Array[Double])] = {
+    val init = initCentroids(corpus, nCentroids)
+    if (refineIters <= 0) init
+    else lloydRefine(vecRows(corpus, "n"), init, refineIters)
+  }
+
   /** Row bound of a stored centroid table's driver-side read: a
     * coarse quantizer of up to 2^16 lists. */
   private val MaxCentroids = 1L << 16
@@ -1072,19 +1086,10 @@ object Similarity {
     * distribution, not corpus². Returns (vec_id, cluster, keep). */
   def semDedup(corpus: DataFrame, tau: Double, nCentroids: Int = 16,
                refineIters: Int = 0): DataFrame = {
-    val init = initCentroids(corpus, nCentroids)
-    val cents =
-      if (refineIters > 0) {
-        val vecs = corpus.select(col("vec_id").as("n_id"),
-          asDouble(col("embedding")).as("n_vec"))
-          .withColumn("n_nrm", sqrt(dot(col("n_vec"), col("n_vec"))))
-        lloydRefine(vecs, init, refineIters)
-      } else init
-    val clustered = corpus
-      .withColumn("_nv", asDouble(col("embedding")))
-      .withColumn("_nrm", sqrt(dot(col("_nv"), col("_nv"))))
-      .withColumn("cluster", nearestCidCol(col("_nv"), col("_nrm"), cents))
-      .drop("_nv", "_nrm")
+    val cents = trainCentroids(corpus, nCentroids, refineIters)
+    val clustered = withVecNorm(corpus)
+      .withColumn("cluster", nearestCidCol(col("_v"), col("_nrm"), cents))
+      .drop("_v", "_nrm")
     val dups = blockedNearDupPairs(clustered, col("cluster"), tau)
       .select(col("id_b").as("vec_id")).distinct()
       .withColumn("_dup", lit(true))
@@ -1100,7 +1105,8 @@ object Similarity {
     * rule as the scan-time [[semDedup]]/[[blockedNearDupPairs]], so
     * stored verdicts replay in the oracle. Pairwise only within `_kb`:
     * the caller controls the blast radius by passing only the touched
-    * clusters' membership. */
+    * clusters' membership. Every join is keyed by `_kb`, so rows
+    * placed by `_kb` (a merge's affected buckets) stay placed. */
   private def keepVerdicts(rows: DataFrame, tau: Double): DataFrame = {
     val a = rows.select(col("_kb"), col("_id").as("id_a"),
       col("n_vec").as("v_a"), col("n_nrm").as("nrm_a"))
@@ -1110,129 +1116,84 @@ object Similarity {
       .withColumn("cos", round4(
         dot(col("v_a"), col("v_b")) / (col("nrm_a") * col("nrm_b"))))
       .filter(col("cos") >= tau)
-      .select(col("id_b").as("_id")).distinct()
+      .select(col("_kb"), col("id_b").as("_id")).distinct()
       .withColumn("_dup", lit(true))
-    rows.join(dups, Seq("_id"), "left")
+    rows.join(dups, Seq("_kb", "_id"), "left")
       .select(col("_id"), col("n_vec"), col("n_nrm"), col("_kb"),
         (coalesce(col("_dup"), lit(false)) === lit(false)).as("keep"))
   }
 
   /** Build the PERSISTED SemDeDup index — the round-6 gap: [[semDedup]]
     * was scan-only, so a crawl delta re-ran the whole pairwise stage.
-    * Layout follows every other graft index family: `centroids/` (the
-    * coarse quantizer, FROZEN between compactions like any deployed
-    * IVF), `params/` (tau — persisted so maintenance can never apply a
-    * mismatched threshold), `data/_kb=<cluster>/` holding
-    * `(_id, n_vec, n_nrm, keep)` with the verdicts MATERIALIZED, the
-    * by-id sidecar, and `_graft_meta`. Build-time verdicts are
-    * byte-identical to `semDedup(corpus, tau, nCentroids, refineIters)`
-    * (spec-pinned). */
+    * Layout is the shared vector store ([[buildVecStore]]):
+    * `centroids/` (the coarse quantizer, FROZEN between compactions
+    * like any deployed IVF), `params/` (tau — persisted so maintenance
+    * can never apply a mismatched threshold), `data/_kb=<cluster>/`
+    * holding `(_id, n_vec, n_nrm, keep)` with the verdicts
+    * MATERIALIZED, the by-id sidecar, and `_graft_meta`. Build-time
+    * verdicts are byte-identical to
+    * `semDedup(corpus, tau, nCentroids, refineIters)` (spec-pinned). */
   def buildSemDedupIndex(corpus: DataFrame, path: String, tau: Double,
                          nCentroids: Int = 16, refineIters: Int = 0,
                          idBuckets: Int = 16, seq: Long = 0L): Unit = {
     val spark = corpus.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    val init = initCentroids(corpus, nCentroids)
-    val cArr =
-      if (refineIters > 0) {
-        val vecs = corpus.select(col("vec_id").as("n_id"),
-          asDouble(col("embedding")).as("n_vec"))
-          .withColumn("n_nrm", sqrt(dot(col("n_vec"), col("n_vec"))))
-        lloydRefine(vecs, init, refineIters)
-      } else init
     import spark.implicits._
-    cArr.map { case (cid, v) => (cid, v.toSeq) }
-      .toDF("cid", "cvec")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path + "/centroids")
-    Seq(tau).toDF("tau").coalesce(1)
-      .write.mode("overwrite").parquet(path + "/params")
-    keepVerdicts(ivfRows(corpus, cArr), tau)
-      .repartition(col("_kb"))
-      .sortWithinPartitions(col("_kb"), col("_id"))
-      .write.mode("overwrite").partitionBy("_kb").parquet(path + "/data")
-    writeAnnSidecar(spark, path, idBuckets, seq)
+    val cents = trainCentroids(corpus, nCentroids, refineIters)
+    buildVecStore(corpus, path, idBuckets, seq,
+      Seq("centroids" -> centroidsDf(spark, cents),
+        "params" -> Seq(tau).toDF("tau")))(
+      (c, _) => keepVerdicts(ivfRows(c, cents), tau))
   }
 
   /** Incremental maintenance of a [[buildSemDedupIndex]] index: changed
     * vectors are assigned against the STORED quantizer and merged
-    * bucket-locally via the by-id sidecar, then the keep verdicts are
-    * RE-PAIRED for the touched clusters only — their full membership
-    * lives inside the affected `_kb` directories, so the pairwise cost
-    * of a delta is Σ|touched cluster|², never the corpus (the C8
-    * discipline; untouched buckets stay byte-identical, spec-pinned).
-    * A vector that moves clusters re-pairs both its old and new
-    * cluster; `deletedIds` retire vectors and can resurrect cluster-
-    * mates their presence had marked duplicate. Returns the affected
-    * cluster ids. */
+    * bucket-locally via the by-id sidecar, and the keep verdicts of
+    * the touched clusters are RE-PAIRED inside the same merge (its
+    * bucket-local finishing step) — their full membership lives
+    * inside the affected `_kb` directories, so the pairwise cost of a
+    * delta is Σ|touched cluster|², never the corpus (the C8
+    * discipline; untouched buckets stay byte-identical, spec-pinned),
+    * and the new verdicts commit in the merge's one swap. A vector
+    * that moves clusters re-pairs both its old and new cluster;
+    * `deletedIds` retire vectors and can resurrect cluster-mates their
+    * presence had marked duplicate. Returns the affected cluster ids. */
   def upsertSemDedupVectors(spark: SparkSession, path: String,
                             changed: DataFrame, deletedIds: Seq[Any] = Nil,
                             newSeq: Long = -1L): Seq[Int] = {
-    val meta = IndexStore.readMeta(spark, path)
     val tau = IndexStore.readSmall(spark, path + "/params", 1).head
       .getDouble(0)
     val cents = readCentroids(spark, path)
-    // verdict column is recomputed below once the touched clusters'
-    // membership is final; the merge only needs the row shape
-    val newRows = ivfRows(IndexStore.minusDeleted(spark, changed,
-      "vec_id", deletedIds), cents).withColumn("keep", lit(true))
-    val cids0 = changed.select(col("vec_id").as("_id")).distinct()
-    val cids = if (deletedIds.isEmpty) cids0
-               else cids0.unionByName(IndexStore.idsDf(spark, cids0, deletedIds))
-    val seq = if (newSeq >= 0) newSeq else meta.updateSeq + 1
-    val affected = IndexStore.merge(spark, path, meta, newRows, cids, seq,
-      dataSortCols = Seq(col("_kb"), col("_id")))
-    if (affected.nonEmpty) {
-      val rows = IndexStore
-        .readBuckets(spark, path + "/data", "_kb", affected)
-        .filter(col("_kb").isin(affected: _*))
-        .select(col("_id"), col("n_vec"), col("n_nrm"), col("_kb"))
-      IndexStore.writeSwap(spark, IndexStore.fsFor(spark, path),
-        keepVerdicts(rows, tau), path + "/data", "_kb", affected,
-        Seq(col("_kb"), col("_id")))
-    }
-    affected
+    upsertVecStore(spark, path, changed, deletedIds, newSeq,
+      finish = keepVerdicts(_, tau))(
+      // a placeholder verdict: `finish` re-pairs the merged buckets
+      (c, _) => ivfRows(c, cents).withColumn("keep", lit(true)))
   }
 
   /** Serve the stored SemDeDup verdicts: `(vec_id, cluster, keep)` —
     * the same shape as [[semDedup]], read straight off the index (no
     * pairwise work at serve time; that is the point of persisting). */
   def semDedupVerdicts(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path + "/data")
+    storeRows(spark, path)
       .select(col("_id").as("vec_id"), col("_kb").cast("int").as("cluster"),
         col("keep"))
 
-  /** Build an IVF (inverted-file) ANN index: a deterministic centroid
-    * init ([[initCentroids]]), optionally refined with `refineIters`
+  /** Build an IVF (inverted-file) ANN index on the shared vector store
+    * ([[buildVecStore]]): a deterministic centroid init
+    * ([[initCentroids]]), optionally refined with `refineIters`
     * spherical k-means iterations ([[lloydRefine]]), every corpus
     * vector assigned to its nearest-by-cosine centroid, inverted lists
-    * written as parquet partitioned by centroid id under `data/`, plus
-    * the by-id sidecar for incremental maintenance
+    * `(_id, n_vec, n_nrm)` partitioned by centroid id under
+    * `data/_kb=`, plus the by-id sidecar for incremental maintenance
     * ([[upsertIvfVectors]]). The coarse-quantizer alternative to
     * [[buildLshIndex]]: fewer, data-adaptive buckets. Queries read the
     * STORED centroids, so refinement is transparent to [[ivfTopK]]. */
   def buildIvfIndex(corpus: DataFrame, path: String,
                     nCentroids: Int = 16, refineIters: Int = 0,
                     idBuckets: Int = 16, seq: Long = 0L): Unit = {
-    val spark = corpus.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    val init = initCentroids(corpus, nCentroids)
-    val vecs = corpus.select(col("vec_id").as("n_id"),
-      asDouble(col("embedding")).as("n_vec"))
-      .withColumn("n_nrm", sqrt(dot(col("n_vec"), col("n_vec"))))
-    val cArr =
-      if (refineIters > 0) lloydRefine(vecs, init, refineIters) else init
-    import spark.implicits._
-    cArr.map { case (cid, v) => (cid, v.toSeq) }
-      .toDF("cid", "cvec")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path + "/centroids")
-    ivfRows(corpus, cArr)
-      .repartition(col("_kb"))
-      .write.mode("overwrite").partitionBy("_kb").parquet(path + "/data")
-    writeAnnSidecar(spark, path, idBuckets, seq)
+    val cents = trainCentroids(corpus, nCentroids, refineIters)
+    buildVecStore(corpus, path, idBuckets, seq,
+      Seq("centroids" -> centroidsDf(corpus.sparkSession, cents)))(
+      (c, _) => ivfRows(c, cents))
   }
 
   /** Incremental maintenance of a [[buildIvfIndex]] index: changed
@@ -1243,16 +1204,9 @@ object Similarity {
   def upsertIvfVectors(spark: SparkSession, path: String,
                        changed: DataFrame, deletedIds: Seq[Any] = Nil,
                        newSeq: Long = -1L): Seq[Int] = {
-    val meta = IndexStore.readMeta(spark, path)
     val cents = readCentroids(spark, path)
-    val cids0 = changed.select(col("vec_id").as("_id")).distinct()
-    val cids = if (deletedIds.isEmpty) cids0
-               else cids0.unionByName(IndexStore.idsDf(spark, cids0, deletedIds))
-    val seq = if (newSeq >= 0) newSeq else meta.updateSeq + 1
-    IndexStore.merge(spark, path, meta,
-      ivfRows(IndexStore.minusDeleted(spark, changed, "vec_id",
-        deletedIds), cents),
-      cids, seq, dataSortCols = Seq(col("_kb"), col("_id")))
+    upsertVecStore(spark, path, changed, deletedIds, newSeq)(
+      (c, _) => ivfRows(c, cents))
   }
 
   /** ANN against a persisted [[buildIvfIndex]] index: each query scores
@@ -1261,36 +1215,19 @@ object Similarity {
     * and ranks exactly within them. */
   def ivfTopK(spark: SparkSession, path: String, queries: DataFrame,
               k: Int, nProbe: Int = 4): DataFrame = {
-    val (q, buckets) = ivfProbes(spark, path, queries, nProbe)
-    val c = IndexStore.readBuckets(spark, path + "/data", "_kb", buckets)
-      .filter(col("_kb").isin(buckets: _*))
-      .select(col("_id").as("n_id"), col("n_vec"), col("n_nrm"),
-        col("_kb").as("bucket"))
-    rankWithinBuckets(c, q, k)
+    val (q, buckets) =
+      probes(ivfQueries(readCentroids(spark, path), queries, nProbe))
+    rankWithinBuckets(probedRows(spark, path, buckets), q, k)
   }
 
-  /** The probe side of an IVF serve: one `(q_id, q_vec, q_nrm,
-    * bucket)` row per query and probed list, and the distinct probed
-    * list ids. The per-query probe arrays are computed once, feed both,
-    * and are collected BEFORE the explode and deduplicated on the
-    * driver: no shuffle, one job, and none at all for a local query
-    * frame (the optimizer folds the projection at plan time). The
-    * driver receives |queries| × `nProbe` list ids. */
-  private def ivfProbes(spark: SparkSession, path: String,
-                        queries: DataFrame,
-                        nProbe: Int): (DataFrame, Seq[Int]) = {
-    val cents = readCentroids(spark, path)
-    val qp = queries.select(col("vec_id").as("q_id"),
-      asDouble(col("embedding")).as("q_vec"))
-      .withColumn("q_nrm", sqrt(dot(col("q_vec"), col("q_vec"))))
-      .withColumn("probe",
+  /** `(q_id, q_vec, q_nrm, probe)` query rows of an IVF-family serve:
+    * `probe` holds each query's `nProbe` nearest centroids of `cents`
+    * (the [[probes]] input). */
+  private[operators] def ivfQueries(cents: Seq[(Int, Array[Double])],
+                                    queries: DataFrame,
+                                    nProbe: Int): DataFrame =
+    vecRows(queries, "q").withColumn("probe",
         probeCidsCol(col("q_vec"), col("q_nrm"), cents, nProbe))
-    val buckets = qp.select(col("probe")).collect().iterator
-      .filterNot(_.isNullAt(0)).flatMap(_.getSeq[Int](0)).toSeq
-      .distinct.sorted
-    (qp.select(col("q_id"), col("q_vec"), col("q_nrm"),
-      explode(col("probe")).as("bucket")), buckets)
-  }
 
   /** Attribute-FILTERED ANN from the IVF index — the vector-database
     * metadata-filter pattern (`lang = 'en' AND similar to q`): the
@@ -1309,13 +1246,10 @@ object Similarity {
     require(allowed.columns.length == 1,
       s"allowed must be a single vec-id column; got " +
         s"[${allowed.columns.mkString(", ")}]")
-    val (q, buckets) = ivfProbes(spark, path, queries, nProbe)
-    val c = IndexStore.readBuckets(spark, path + "/data", "_kb", buckets)
-      .filter(col("_kb").isin(buckets: _*))
-      .join(allowed.toDF("_id").distinct(), Seq("_id"), "left_semi")
-      .select(col("_id").as("n_id"), col("n_vec"), col("n_nrm"),
-        col("_kb").as("bucket"))
-    rankWithinBuckets(c, q, k)
+    val (q, buckets) =
+      probes(ivfQueries(readCentroids(spark, path), queries, nProbe))
+    rankWithinBuckets(probedRows(spark, path, buckets)
+      .join(allowed.toDF("n_id").distinct(), Seq("n_id"), "left_semi"), q, k)
   }
 
   /** k-NN graph over the whole corpus — the neighborhood structure
@@ -1353,8 +1287,7 @@ object Similarity {
         col("v").as("q_vec"), col("nrm").as("q_nrm"))
     val edges = rankTopK(
       a.join(b, Seq("blk")).filter(col("q_id") =!= col("n_id"))
-        .withColumn("cos",
-          dot(col("q_vec"), col("n_vec")) / (col("q_nrm") * col("n_nrm"))),
+        .withColumn("cos", qnCos),
       k)
     val rev = edges.select(col("q_id").as("n_id"), col("n_id").as("q_id"))
       .withColumn("_m", lit(true))

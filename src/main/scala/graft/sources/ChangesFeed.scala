@@ -65,25 +65,32 @@ object ChangesFeed {
     * present and of this code's format — an old-layout store reads as
     * absent, so exists-guarded writers rebuild instead of appending
     * into a layout the readers no longer understand). */
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val fs = fsFor(spark, path)
-    fs.exists(new Path(path, "_graft_meta")) &&
-      (try { readWidth(spark, path); true }
-       catch { case _: Exception => false })
+  def exists(spark: SparkSession, path: String): Boolean =
+    fsFor(spark, path).exists(new Path(path, "_graft_meta")) &&
+      metaLines(spark, path).contains("fmt=2")
+
+  /** The lines of the store's meta stamp. A stamp cut short (no final
+    * newline) or without a `width` line is unreadable and throws,
+    * naming the path. */
+  private def metaLines(spark: SparkSession, path: String): Seq[String] = {
+    val meta = new Path(path, "_graft_meta")
+    val in = fsFor(spark, path).open(meta)
+    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    val lines = text.linesIterator.toSeq
+    if (!text.endsWith("\n") || !lines.exists(_.matches("width=\\d+")))
+      throw new java.io.IOException(s"unreadable changes-feed stamp at $meta")
+    lines
   }
 
   private def readWidth(spark: SparkSession, path: String): Long = {
-    val in = fsFor(spark, path).open(new Path(path, "_graft_meta"))
-    val txt = new String(in.readAllBytes(), "UTF-8")
-    in.close()
-    val lines = txt.linesIterator.toSeq
+    val lines = metaLines(spark, path)
     require(lines.contains("fmt=2"),
       s"changes feed at $path has a pre-grouping layout (fmt 1) — " +
         "rebuild it (artifact kinds were bumped precisely so a stale " +
         "store cannot serve)")
     lines.collectFirst {
       case l if l.startsWith("width=") => l.stripPrefix("width=").toLong
-    }.getOrElse(sys.error(s"changes feed at $path: no width in meta"))
+    }.get
   }
 
   private def routed(changes: DataFrame, width: Long): DataFrame =

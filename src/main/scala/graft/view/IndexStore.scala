@@ -109,6 +109,12 @@ final case class IndexMeta(updateSeq: Long, buckets: Int,
   * itself, still names every bucket the changed docs' old rows were in:
   * a replay of the batch reaches the same buckets as the first run.
   *
+  * Every store is created by one writer, [[writeStore]]: [[create]]
+  * range-buckets view rows into it, and the persisted vector tiers
+  * ([[graft.operators.Similarity.buildVecStore]]) route their rows by
+  * list, signature group or id hash. Every store is then maintained
+  * by [[merge]].
+  *
   * Opening a store costs no Spark job. [[readWhere]] takes the row
   * schema from one Parquet footer on the driver instead of running a
   * schema-inference job, and small side tables (a stats row, centroids,
@@ -267,6 +273,15 @@ object IndexStore {
       catch { case NonFatal(e) => throw unreadable(e) }
   }
 
+  /** True iff the one-row Parquet stamp table at `dir` carries format
+    * `fmt` in its `fmt` column. An absent `dir` or another format is
+    * false; an unreadable stamp throws, naming the path ([[readSmall]]). */
+  private[graft] def stampIs(spark: SparkSession, dir: String,
+                             fmt: Int): Boolean =
+    fsFor(spark, dir).exists(new Path(dir)) &&
+      readSmall(spark, dir, 1).headOption.exists(r =>
+        r.schema.fieldNames.contains("fmt") && r.getAs[Int]("fmt") == fmt)
+
   /** The `part=<value>` partition directories of `dir`, any value
     * (none if `dir` is absent). */
   private[graft] def partDirs(spark: SparkSession, dir: String,
@@ -360,9 +375,9 @@ object IndexStore {
       doc, del, cseq)
   }
 
-  /** Full (re)build: range-bucket the view rows by collation key, write
-    * each bucket as its own partition directory sorted by `_ck`, derive
-    * the bucket bounds and the by-id sidecar, stamp the metadata. */
+  /** Full (re)build: range-bucket the view rows by collation key and
+    * write them through [[writeStore]], deriving the bucket bounds
+    * from the written buckets. */
   def create(spark: SparkSession, path: String, rows: DataFrame,
              buckets: Int, seq: Long): Unit = {
     // a zero-row build would write no bucket files and leave the index
@@ -372,25 +387,42 @@ object IndexStore {
       "cannot build an index from an empty view: materialize after the " +
         "first documents exist (the streaming maintainer defers creation " +
         "past empty batches)")
-    val fs = fsFor(spark, path)
-    fs.delete(new Path(path), true)
+    fsFor(spark, path).delete(new Path(path), true)
+    writeStore(spark, path,
+      rows.repartitionByRange(buckets, col("_ck"))
+        .withColumn("_kb", spark_partition_id()),
+      Seq(col("_ck")), buckets, seq,
+      _.groupBy(col("_kb")).agg(min(col("_ck")).as("lo"))
+        .orderBy(col("_kb")).collect()
+        .map(r => (r.getInt(0), r.getAs[Array[Byte]]("lo"))).toSeq)
+  }
+
+  /** The one fresh-store writer, shared by [[create]] and every
+    * persisted vector tier: `rows` (already placed, one partition per
+    * `_kb` bucket or several) are written to `data/` partitioned by
+    * `_kb` and sorted by `sortCols` within each bucket, the by-id
+    * sidecar is derived from the written data (opened by
+    * [[readStore]], no schema job) and hashed into `buckets` id
+    * buckets, and `_graft_meta` stamps `seq`, `buckets` and the bounds
+    * `bounds` derives from the written data. */
+  private[graft] def writeStore(spark: SparkSession, path: String,
+                                rows: DataFrame, sortCols: Seq[Column],
+                                buckets: Int, seq: Long,
+                                bounds: DataFrame => Seq[(Int, Array[Byte])])
+      : Unit = {
     rows
-      .repartitionByRange(buckets, col("_ck"))
-      .withColumn("_kb", spark_partition_id())
       // the _kb prefix satisfies the writer's partition-column ordering
-      // requirement, so the writer does not re-sort and break _ck order
-      .sortWithinPartitions(col("_kb"), col("_ck"))
+      // requirement, so the writer does not re-sort and break the order
+      .sortWithinPartitions(col("_kb") +: sortCols: _*)
       .write.mode("overwrite").partitionBy("_kb").parquet(dataDir(path))
     val data = readStore(spark, dataDir(path), "_kb")
-    val bounds = data.groupBy(col("_kb")).agg(min(col("_ck")).as("lo"))
-      .orderBy(col("_kb")).collect()
-      .map(r => (r.getInt(0), r.getAs[Array[Byte]]("lo"))).toSeq
+    val bs = bounds(data)
     data.select(col("_id"), col("_kb")).distinct()
       .withColumn("_ib", idBucket(col("_id"), buckets))
       .repartition(buckets, col("_ib"))
       .sortWithinPartitions(col("_ib"), col("_id"))
       .write.mode("overwrite").partitionBy("_ib").parquet(idsDir(path))
-    writeMeta(spark, path, IndexMeta(seq, buckets, bounds))
+    writeMeta(spark, path, IndexMeta(seq, buckets, bs))
   }
 
   /** Incremental merge of one change batch. `newRows` are the mapped
@@ -401,14 +433,18 @@ object IndexStore {
     * rewritten; with `reduce` and a materialized reduced index, the
     * same buckets of the reduced index are re-aggregated from the
     * merged rows (a key's rows never span buckets, so bucket-local
-    * re-aggregation is complete). The data, sidecar and reduced
+    * re-aggregation is complete). `finish` is a bucket-local step over
+    * the merged rows of the affected buckets, applied before the data
+    * write (SemDeDup re-pairs its keep verdicts there), so its result
+    * commits in the same swap. The data, sidecar and reduced
     * rewrites run concurrently and are swapped in only when all three
     * succeeded (see the class doc for the order). */
   def merge(spark: SparkSession, path: String, meta0: IndexMeta,
             newRows0: DataFrame, changedIds: DataFrame,
             newSeq: Long,
             dataSortCols: Seq[Column] = Seq(col("_kb"), col("_ck")),
-            reduce: Option[Reduce] = None): Seq[Int] = {
+            reduce: Option[Reduce] = None,
+            finish: DataFrame => DataFrame = identity): Seq[Int] = {
     val fs = fsFor(spark, path)
     // a batch cut off mid-swap is rolled forward first; its meta is
     // then the one this batch builds on
@@ -447,7 +483,7 @@ object IndexStore {
         .repartition(affected.size, col("_kb"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       val dataW = Write(dataDir(path), "_kb", affected,
-        merged.sortWithinPartitions(dataSortCols: _*))
+        finish(merged).sortWithinPartitions(dataSortCols: _*))
       val idsW = Option.when(ibs.nonEmpty)(Write(idsDir(path), "_ib", ibs,
         oldIds.join(cids, Seq("_id"), "left_anti")
           .unionByName(newRows.select(col("_id"), col("_kb"))

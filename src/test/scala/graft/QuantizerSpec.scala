@@ -173,7 +173,7 @@ class QuantizerSpec extends SparkSpecBase {
     // stored codes == a frozen-model re-encode of the modified corpus
     def codes(df: DataFrame) = df.select($"vec_id", $"codes")
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
-    assert(codes(spark.read.parquet(s"$p/data")) ==
+    assert(codes(spark.read.parquet(s"$p/data").withColumnRenamed("_id", "vec_id")) ==
       codes(Similarity.sq8Codes(modified, Similarity.sq8Model(spark, p))),
       "upserted codes must be the frozen-model encoding, nothing else")
     // indexed serve == frozen-model scan over the modified corpus
@@ -183,9 +183,9 @@ class QuantizerSpec extends SparkSpecBase {
         Some(Similarity.sq8Model(spark, p)))),
       "post-delta index path must equal the frozen-model scan path")
     // idempotence: replaying the same delta changes nothing
-    val before = codes(spark.read.parquet(s"$p/data"))
+    val before = codes(spark.read.parquet(s"$p/data").withColumnRenamed("_id", "vec_id"))
     Similarity.upsertSq8Vectors(spark, p, changed, delIds)
-    assert(codes(spark.read.parquet(s"$p/data")) == before)
+    assert(codes(spark.read.parquet(s"$p/data").withColumnRenamed("_id", "vec_id")) == before)
   }
 
   test("binary persisted tier: indexed == scan across a delta") {

@@ -6,7 +6,7 @@ import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Mango, Similarity, TextSearch}
+import graft.operators.{Mango, Pq, Similarity, TextSearch}
 import graft.view.{QueryOpts, View}
 
 /** Job budgets of the serve path. Opening an index store reads one
@@ -89,5 +89,41 @@ class ServeJobBudgetSpec extends SparkSpecBase {
     assert(built == 0, s"fromIndex(...).query ran $built Spark jobs")
     assert(q.count() ==
       orders.filter($"o_totalprice".between(1000.0, 50000.0)).count())
+  }
+
+  test("persisted vector tiers over a local query frame: no job to build the serve") {
+    val dir = Files.createTempDirectory("graft-serve-vec").toString
+    Similarity.buildLshIndex(emb, s"$dir/lsh", idBuckets = 4)
+    Similarity.buildSq8Index(emb, s"$dir/sq8", idBuckets = 4)
+    Similarity.buildBinaryIndex(emb, s"$dir/bin", idBuckets = 4)
+    Similarity.buildIvfSq8Index(emb, s"$dir/ivfsq8", idBuckets = 4)
+    Pq.buildPqIndex(emb, s"$dir/pq", idBuckets = 4)
+    Pq.buildIvfPqIndex(emb, s"$dir/ivfpq", idBuckets = 4)
+    Pq.buildIvfPqResidualIndex(emb, s"$dir/ivfpqr", idBuckets = 4)
+    val v = emb.filter($"vec_id" === 7L).select("embedding").head()
+      .getSeq[Float](0)
+    val queries = spark.createDataFrame(
+      java.util.Arrays.asList(Row(-1L, v)),
+      emb.select("vec_id", "embedding").schema)
+    Seq[(String, () => DataFrame)](
+      "lshTopKIndexed" -> (() =>
+        Similarity.lshTopKIndexed(spark, s"$dir/lsh", queries, 5)),
+      "sq8TopKIndexed" -> (() =>
+        Similarity.sq8TopKIndexed(spark, s"$dir/sq8", queries, 5)),
+      "binaryTopKIndexed" -> (() =>
+        Similarity.binaryTopKIndexed(spark, s"$dir/bin", queries, 5)),
+      "ivfSq8TopK" -> (() =>
+        Similarity.ivfSq8TopK(spark, s"$dir/ivfsq8", queries, 5)),
+      "pqTopKIndexed" -> (() =>
+        Pq.pqTopKIndexed(spark, s"$dir/pq", emb, queries, 5)),
+      "ivfPqTopK" -> (() =>
+        Pq.ivfPqTopK(spark, s"$dir/ivfpq", emb, queries, 5)),
+      "ivfPqResidualTopK" -> (() =>
+        Pq.ivfPqResidualTopK(spark, s"$dir/ivfpqr", emb, queries, 5))
+    ).foreach { case (what, serve) =>
+      val (df, built) = jobs(serve())
+      assert(built == 0, s"$what: building the DataFrame ran $built Spark jobs")
+      assert(df.collect().length == 5, s"$what: top-5 of one query")
+    }
   }
 }

@@ -147,4 +147,66 @@ class StoreReaderSpec extends SparkSpecBase {
     assert(!TextSearch.indexCurrent(spark, path))
     assert(!TextSearch.fieldedCurrent(spark, path))
   }
+
+  /** Cut `file` to its first `n` bytes, in place. */
+  private def truncate(file: Path, n: Int): Unit = {
+    val fs = IndexStore.fsFor(spark, file.toString)
+    val bytes = {
+      val in = fs.open(file)
+      try in.readNBytes(n) finally in.close()
+    }
+    val out = fs.create(file, true)
+    try out.write(bytes) finally out.close()
+  }
+
+  /** The first Parquet file of the table at `dir`. */
+  private def parquetFile(dir: String): Path =
+    IndexStore.fsFor(spark, dir).listStatus(new Path(dir)).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+
+  /** `check` is true on the built store, throws an `IOException` naming
+    * `stamp` once `cut` truncated it, and is false once it is gone. */
+  private def assertStampCheck(stamp: String, check: () => Boolean)
+                              (cut: => Unit): Unit = {
+    assert(check(), s"$stamp: a fresh store must be current")
+    cut
+    val e = intercept[java.io.IOException](check())
+    assert(e.getMessage.contains(stamp),
+      s"the check must name the unreadable stamp: ${e.getMessage}")
+    IndexStore.fsFor(spark, stamp).delete(new Path(stamp), true)
+    assert(!check(), s"$stamp: an absent stamp is just not current")
+  }
+
+  test("DedupIndex.indexCurrent throws on a truncated /fmt stamp") {
+    val path = tmp("graft-stamp-dedup")
+    graft.operators.DedupIndex.build(docs.limit(40), $"doc_id", $"text",
+      path, nBuckets = 4)
+    assertStampCheck(s"$path/fmt",
+      () => graft.operators.DedupIndex.indexCurrent(spark, path))(
+      truncate(parquetFile(s"$path/fmt"), 16))
+  }
+
+  test("Pipeline.stateCurrent throws on a truncated params stamp") {
+    val path = tmp("graft-stamp-release")
+    val base = docs.limit(40).select($"doc_id", $"text", $"lang",
+      $"n_chars", $"source")
+    graft.operators.Pipeline.releaseInit(base, $"doc_id", $"text", $"lang",
+      $"n_chars", $"source", base.filter($"doc_id" % 7 === 0)
+        .select($"doc_id", $"text"), $"doc_id", $"text", path, nBuckets = 4)
+    assertStampCheck(s"$path/params",
+      () => graft.operators.Pipeline.stateCurrent(spark, path))(
+      truncate(parquetFile(s"$path/params"), 16))
+  }
+
+  test("ChangesFeed.exists throws on a truncated meta stamp") {
+    val path = tmp("graft-stamp-feed")
+    graft.sources.ChangesFeed.write((0L until 16L)
+      .map(i => (i, i % 5, s"r$i", false)).toDF("seq", "id", "rev", "deleted"),
+      path, width = 8)
+    val meta = new Path(s"$path/_graft_meta")
+    val len = IndexStore.fsFor(spark, path).getFileStatus(meta).getLen
+    assertStampCheck(meta.toString,
+      () => graft.sources.ChangesFeed.exists(spark, path))(
+      truncate(meta, (len / 2).toInt))
+  }
 }

@@ -493,6 +493,42 @@ class StreamingSpec extends SparkSpecBase {
     }
   }
 
+  // 17 jobs measured for each (18 and 22 before the tiers shared one
+  // store path); one job of slack, as for the view batch
+  for ((tier, budget) <- Seq("ivf" -> 18, "pq" -> 18))
+    test(s"one $tier vector-index maintenance micro-batch stays within its job budget") {
+      implicit val sql = spark.sqlContext
+      val dir = Files.createTempDirectory(s"graft-stream-$tier-jobs").toString
+      val path = s"$dir/idx"
+      val all = spark.read.parquet(s"$sfDir/embeddings.parquet")
+        .select($"vec_id", $"embedding").as[(Long, Array[Float])].collect()
+      val in = MemoryStream[VecChg]
+      val q =
+        if (tier == "ivf")
+          Streams.maintainAnnIndex(spark, in.toDF(), path, s"$dir/ckpt",
+            ivf = true)
+        else Streams.maintainPqIndex(spark, in.toDF(), path, s"$dir/ckpt")
+      def chg(i: Int, neg: Boolean = false, del: Boolean = false) =
+        VecChg(all(i)._1, if (neg) all(i)._2.map(-_) else all(i)._2, del)
+      in.addData((0 until 400).map(chg(_)): _*)
+      q.processAllAvailable()
+      // one warm batch: the budget is for a steady-state batch
+      in.addData(chg(20, neg = true))
+      q.processAllAvailable()
+      // list-moving updates, new vectors and a tombstone
+      val jobs = org.apache.spark.graft.JobCounter(spark.sparkContext,
+          q.runId.toString) {
+        in.addData(chg(21, neg = true), chg(22, neg = true), chg(401),
+          chg(402), chg(30, del = true))
+        q.processAllAvailable()
+      }
+      q.stop()
+      info(s"$jobs Spark jobs in the $tier micro-batch")
+      assert(jobs <= budget,
+        s"$jobs Spark jobs for one $tier maintenance micro-batch (budget $budget)")
+      assert(graft.view.IndexStore.readMeta(spark, path).updateSeq == 3L)
+    }
+
   test("one text-index maintenance micro-batch stays within its job budget") {
     import graft.operators.TextSearch
     implicit val sql = spark.sqlContext
