@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
@@ -92,11 +94,20 @@ object Bench {
     // pays. SPARK_GRAFT_BUILD_THREADS=1 restores the serial phase.
     val buildThreads = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BUILD_THREADS", "4").toInt)
+    // A failed build or gate still reports -1; its cause (exception
+    // class and message, first failure per key) is kept here and
+    // published in the additive `failures` field.
+    val failures = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    def failed(key: String, e: Throwable): Boolean = {
+      failures.putIfAbsent(key,
+        s"${e.getClass.getName}: ${String.valueOf(e.getMessage)}".take(500))
+      false
+    }
     def runBuild(name: String,
                  fn: (SparkSession, String) => Unit): Double = {
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir); true }
-               catch { case _: Throwable => false }
+               catch { case e: Throwable => failed(s"build_$name", e) }
       if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
     }
     val builds: Map[String, Double] =
@@ -158,7 +169,7 @@ object Bench {
                 fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
       val ok = try { run(fn, sfDir); true }
-               catch { case _: Throwable => false }
+               catch { case e: Throwable => failed(name, e) }
       // a failed query reports -1, not a plausible-looking duration
       if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
     }
@@ -213,8 +224,11 @@ object Bench {
     // a second per failure from the published figure.
     val total = results.values.filter(_ >= 0).sum
     val nFailed = results.values.count(_ < 0)
+    val fs = failures.asScala.toSeq.sorted
+      .map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
+      .mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"index_builds":$bs,"index_builds_wall":$buildsWall,"samples":$ss,"workload_versions":$ws,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"index_builds":$bs,"index_builds_wall":$buildsWall,"samples":$ss,"workload_versions":$ws,"failures":$fs,"sf":"$sfDir"}"""
     // The full contract line (with build.sbt's StdoutOutput it reaches
     // stdout verbatim — no "[info] " prefix, the parse-breaker of all
     // 16 prior rounds)...
@@ -238,4 +252,13 @@ object Bench {
     } catch { case _: Exception => () }
     spark.stop()
   }
+
+  /** `s` as a JSON string literal. */
+  private def jsonString(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
 }

@@ -5,9 +5,10 @@ import java.io.IOException
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 import graft.functions.DotProduct
 import graft.gfunctions.round4
@@ -174,18 +175,30 @@ object Similarity {
     rows.withColumn("_kb", IndexStore.idBucket(col("_id"), idBuckets))
 
   /** The probe side of a bucketed serve, from query rows carrying a
-    * per-query `probe` array of bucket ids: one row per query and
-    * probed bucket (`probe` exploded to `bucket`), and the distinct
-    * probed buckets. The probe arrays are collected BEFORE the explode
-    * and deduplicated on the driver: no shuffle, one job, and none at
-    * all for a local query frame (the optimizer folds the projection
-    * at plan time). The driver receives |queries| × probes ids. */
+    * per-query `probe` array of bucket ids: one row per distinct query
+    * row and probed bucket (`probe` exploded to `bucket`), and the
+    * distinct probed buckets. The query rows are collected with their
+    * probe arrays, deduplicated and exploded ON THE DRIVER, and come
+    * back as a local frame: at most |queries| × probes rows, the rows a
+    * broadcast of the exploded side would ship anyway. A duplicated
+    * query row therefore probes once (its neighbours are not
+    * duplicated), the serve plan holds no shuffle on the query side
+    * and no dynamic-pruning subquery, and a local query frame costs no
+    * job at all (the optimizer folds the projection at plan time). */
   private[operators] def probes(qp: DataFrame): (DataFrame, Seq[Int]) = {
-    val buckets = qp.select(col("probe")).collect().iterator
-      .filterNot(_.isNullAt(0)).flatMap(_.getSeq[Int](0)).toSeq
-      .distinct.sorted
-    (qp.select(qp.columns.toSeq.filter(_ != "probe").map(col) :+
-      explode(col("probe")).as("bucket"): _*), buckets)
+    val keep = qp.schema.fields.toSeq.filter(_.name != "probe")
+    val elem = qp.schema("probe").dataType.asInstanceOf[ArrayType].elementType
+    val rows = qp.select((keep.map(_.name) :+ "probe").map(col): _*)
+      .collect().toSeq.distinct
+      .filterNot(_.isNullAt(keep.size))
+      .flatMap { r =>
+        val q = r.toSeq.take(keep.size)
+        r.getSeq[Any](keep.size).filter(_ != null).distinct
+          .map(b => Row.fromSeq(q :+ b))
+      }
+    (qp.sparkSession.createDataFrame(rows.asJava,
+        StructType(keep :+ StructField("bucket", elem, nullable = false))),
+      rows.map(_.getAs[Number](keep.size).intValue).distinct.sorted)
   }
 
   /** A centroid table `(cid int, cvec array<double>)` — the stored
@@ -428,9 +441,28 @@ object Similarity {
     val meta = IndexStore.readMeta(spark, path)
     val p = Replication.pendingPurges(spark, storePath, meta.purgeSeq)
     if (p.purgeSeq <= meta.purgeSeq) return meta.purgeSeq
+    val (sortCols, finish) = tierLayout(spark, path)
     IndexStore.purgeIndex(spark, path, p.goneIds, None, p.purgeSeq,
-      dataSortCols = Seq(col("_kb"), col("_id")))
+      dataSortCols = ("_kb" +: sortCols).map(col), finish = finish)
     p.purgeSeq
+  }
+
+  /** The within-bucket sort and the bucket-local `finish` that every
+    * rewrite of the vector store at `path` keeps, read off its stored
+    * layout: an LSH store (a `_sig` column) sorts by `(_sig, _id)` so
+    * its pushed `_sig IN` filter keeps pruning row groups; a SemDeDup
+    * store (a `keep` column and `params/`) re-pairs the verdicts of
+    * the rewritten clusters under its stored tau; every other tier
+    * sorts by `_id`. */
+  private def tierLayout(spark: SparkSession, path: String)
+      : (Seq[String], DataFrame => DataFrame) = {
+    val cols = storeRows(spark, path).columns.toSet
+    if (cols("_sig")) (LshSort, identity)
+    else if (cols("keep") &&
+        IndexStore.fsFor(spark, path).exists(new Path(path, "params"))) {
+      val tau = semDedupTau(spark, path)
+      (Seq("_id"), keepVerdicts(_, tau))
+    } else (Seq("_id"), identity)
   }
 
   /** Serve IVF-SQ8 top-k: each query probes its `nProbe` nearest
@@ -762,9 +794,10 @@ object Similarity {
       asDouble(col("embedding")).as("n_vec"),
       lshSignature(col("embedding"), planes).as("bucket"))
       .withColumn("n_nrm", sqrt(dot(col("n_vec"), col("n_vec"))))
+    // distinct: a duplicated query row probes once (as [[probes]])
     val q = lshQueries(queries, planes)
     rankWithinBuckets(c, q.select(col("q_id"), col("q_vec"), col("q_nrm"),
-      explode(col("probe")).as("bucket")), k)
+      explode(col("probe")).as("bucket")).distinct(), k)
   }
 
   /** (q_id, q_vec, q_nrm, probe) query rows: `probe` holds each query's
@@ -781,17 +814,25 @@ object Similarity {
       .select(col("q_id"), col("q_vec"), col("q_nrm"), probe.as("probe"))
   }
 
-  /** Bucket-join probes with corpus signature rows, dedup candidates
-    * across probes, exact-cosine rank via the bounded top-k aggregate. */
+  /** Bucket-join the distinct `(query, bucket)` probe rows `q` with
+    * the stored rows `c` of the probed buckets and exact-cosine rank
+    * via the bounded top-k aggregate. A stored vector lies in exactly
+    * one bucket, so each (query, candidate) pair is joined once: no
+    * distinct over the joined vector arrays, no array-keyed exchange.
+    * The at most k × |queries| ranked rows merge into ONE partition,
+    * sorted by `(q_id, rank)`: a caller's `orderBy("rank")` then sorts
+    * locally with no range exchange (no sampling job, no sort job).
+    * Whole-corpus rankings ([[knnGraph]]) keep [[rankTopK]]'s
+    * hash-partitioned output. */
   private def rankWithinBuckets(c: DataFrame, q: DataFrame,
                                 k: Int): DataFrame =
     rankTopK(
       c.join(broadcast(q), Seq("bucket"))
         .filter(col("n_id") =!= col("q_id"))
         .select(col("q_id"), col("q_vec"), col("q_nrm"), col("n_id"),
-          col("n_vec"), col("n_nrm")).distinct()
+          col("n_vec"), col("n_nrm"))
         .withColumn("cos", qnCos),
-      k)
+      k).coalesce(1).sortWithinPartitions(col("q_id"), col("rank"))
 
   /** Directory-group count of the persisted LSH layout: the 2^planes
     * signatures are stored as a SORTED `_sig` column inside
@@ -1160,14 +1201,17 @@ object Similarity {
   def upsertSemDedupVectors(spark: SparkSession, path: String,
                             changed: DataFrame, deletedIds: Seq[Any] = Nil,
                             newSeq: Long = -1L): Seq[Int] = {
-    val tau = IndexStore.readSmall(spark, path + "/params", 1).head
-      .getDouble(0)
+    val tau = semDedupTau(spark, path)
     val cents = readCentroids(spark, path)
     upsertVecStore(spark, path, changed, deletedIds, newSeq,
       finish = keepVerdicts(_, tau))(
       // a placeholder verdict: `finish` re-pairs the merged buckets
       (c, _) => ivfRows(c, cents).withColumn("keep", lit(true)))
   }
+
+  /** The tau stamped into a SemDeDup store's `params/`. */
+  private def semDedupTau(spark: SparkSession, path: String): Double =
+    IndexStore.readSmall(spark, path + "/params", 1).head.getDouble(0)
 
   /** Serve the stored SemDeDup verdicts: `(vec_id, cluster, keep)` —
     * the same shape as [[semDedup]], read straight off the index (no

@@ -934,13 +934,15 @@ object TextSearch {
   }
 
   /** Partition-scoped top-k BM25 from a [[buildPartitionedTextIndex]]
-    * index: ONE `_p` stats directory read (the partition's N/avgdl as
-    * literals), then postings+terms pruned to `_p = partition` AND
-    * the probed `_tb` buckets (both are hive partition columns —
-    * directory pruning at two levels) with `term IN` pushed to the
-    * scan. Cost is O(the partition's matching postings) at any corpus
-    * size. A partition holding no docs (or an all-stopword query)
-    * returns the empty response, CouchDB's shape. */
+    * index: the partition's one stats row and its query terms' dfs are
+    * read on the driver from its own `_p=` directories (N, avgdl and
+    * df enter the weight as literals, as in [[searchIndexed]]), then
+    * one postings scan opened at `postings/_p=<partition>` and pruned
+    * to the probed `_tb` buckets with `term IN` pushed to the scan.
+    * Building the query runs no Spark job. Cost is O(the partition's
+    * matching postings) at any corpus size. A partition holding no docs
+    * (or an all-stopword query) returns the empty response, CouchDB's
+    * shape. */
   def searchPartitioned(spark: SparkSession, path: String,
                         partition: String, queryTerms: Seq[String],
                         k: Int, k1: Double = 1.2, b: Double = 0.75)
@@ -948,15 +950,20 @@ object TextSearch {
     graft.view.PartitionedStore.requireValidPartition(partition)
     require(queryTerms.nonEmpty && queryTerms.distinct == queryTerms,
       "queryTerms must be non-empty and distinct")
-    val stAll = spark.read.parquet(path + "/stats")
-    require(stAll.columns.contains("_p"),
+    if (!graft.view.IndexStore.fsFor(spark, path)
+        .exists(new org.apache.hadoop.fs.Path(path + "/stats")))
+      throw new java.io.FileNotFoundException(s"no text index at $path")
+    require(isPartitioned(spark, path),
       s"$path is a GLOBAL text index — use searchIndexed (a global " +
         "index cannot promise partition-local cost)")
     def empty = spark.range(0).select(
       col("id").cast("string").as("doc_id"), lit(0.0).as("score"))
-    val stRows = stAll.filter(col("_p") === partition).collect()
-    if (stRows.isEmpty) return empty
-    val st = stRows.head
+    val pdir = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      .getPartitionPathString("_p", partition)
+    val stDir = s"$path/stats/$pdir"
+    if (!graft.view.IndexStore.fsFor(spark, stDir)
+        .exists(new org.apache.hadoop.fs.Path(stDir))) return empty
+    val st = graft.view.IndexStore.readSmall(spark, stDir, StatsRows).head
     require(st.getAs[Int]("fmt") == FormatVersion,
       s"partitioned text index at $path has layout fmt " +
         s"${st.getAs[Int]("fmt")}, need $FormatVersion — rebuild")
@@ -964,31 +971,86 @@ object TextSearch {
     val terms = an.queryTerms(queryTerms)
     if (terms.isEmpty) return empty
     val nB = st.getAs[Int]("n_buckets")
-    val buckets = terms.map(termBucketJvm(_, nB)).distinct
-    def pruned(sub: String) = spark.read.parquet(s"$path/$sub")
-      .filter(col("_p") === partition &&
-        col("_tb").isin(buckets: _*) && col("term").isin(terms: _*))
-    val scored = pruned("postings")
-      .join(broadcast(pruned("terms").select(col("term"), col("df"))),
-        Seq("term"))
-      .withColumn("_s", bm25Weight(col("tf"), col("dl"), col("df"),
-        lit(st.getAs[Long]("n")), lit(st.getAs[Double]("avgdl")),
-        k1, b))
+    val dfs = storedDfs(spark, s"$path/terms/$pdir", terms, nB)
+    val scored = withBm25(
+      prunedTable(spark, s"$path/postings/$pdir", dfs.map(_._1), nB),
+      dfs, lit(st.getAs[Long]("n")), lit(st.getAs[Double]("avgdl")), k1, b)
     sumInTermOrder(scored, terms)
       .orderBy(col("score").desc, col("doc_id").asc).limit(k)
   }
 
-  /** Pruned postings ⋈ dfs for the (already-normalized) `terms`, with
-    * the per-(doc, term) BM25 partial `_s` attached — the shared front
-    * half of every indexed search operator. */
+  /** The bucket-pruned postings of the (already-normalized) `terms`
+    * with the per-(doc, term) BM25 partial `_s` attached — the shared
+    * front half of every indexed search operator. The terms' document
+    * frequencies are read on the driver first ([[storedDfs]]) and
+    * enter the weight as a literal `CASE` on `term`, so the plan is one
+    * pruned postings scan with no join and no broadcast; postings are
+    * read for the terms the index holds. */
   private def bm25Partials(spark: SparkSession, path: String,
                            terms: Seq[String], st: TextStats,
                            k1: Double, b: Double): DataFrame =
-    readPruned(spark, path, "postings", terms, st.nBuckets)
-      .join(broadcast(readPruned(spark, path, "terms", terms, st.nBuckets)
-        .select(col("term"), col("df"))), Seq("term"))
-      .withColumn("_s", bm25Weight(col("tf"), col("dl"), col("df"),
-        lit(st.n), lit(st.avgdl), k1, b))
+    bm25PartialsOf(spark, path, storedDfs(spark, s"$path/terms", terms,
+      st.nBuckets), st, k1, b)
+
+  /** [[bm25Partials]] over already-read `(term, df)` rows. */
+  private def bm25PartialsOf(spark: SparkSession, path: String,
+                             dfs: Seq[(String, Long)], st: TextStats,
+                             k1: Double, b: Double): DataFrame =
+    withBm25(readPruned(spark, path, "postings", dfs.map(_._1), st.nBuckets),
+      dfs, lit(st.n), lit(st.avgdl), k1, b)
+
+  /** `postings` with the literal `df` of its term and the BM25 partial
+    * `_s` under the corpus stats `n` and `avgdl`. */
+  private def withBm25(postings: DataFrame, dfs: Seq[(String, Long)],
+                       n: Column, avgdl: Column, k1: Double,
+                       b: Double): DataFrame =
+    postings
+      .withColumn("df", literalOf(dfs.map { case (t, d) =>
+        (col("term") === t) -> d }))
+      .withColumn("_s", bm25Weight(col("tf"), col("dl"), col("df"), n,
+        avgdl, k1, b))
+
+  /** A literal `CASE` over `(condition, value)` branches; NULL when none
+    * holds (and when there are none). */
+  private def literalOf(branches: Seq[(Column, Long)]): Column =
+    if (branches.isEmpty) lit(null).cast("long")
+    else branches.tail.foldLeft(when(branches.head._1,
+      lit(branches.head._2))) { case (c, (p, v)) => c.when(p, lit(v)) }
+
+  /** The stored rows of the literal `terms` in the term table at `dir`
+    * (`_tb=` bucket directories), read on the driver by
+    * [[graft.view.IndexStore.readSmall]]: only the terms' own bucket
+    * directories, with `term IN (…)` pushed into Spark's Parquet
+    * reader. An index holds each `key` of a row once — the term, or
+    * `(field, term)` in a fielded index with `perTerm` fields — so at
+    * most `perTerm × |terms|` rows can match; a read past that bound,
+    * or a repeated key, throws naming the table. */
+  private def termRows(spark: SparkSession, dir: String, terms: Seq[String],
+                       nBuckets: Int, perTerm: Int = 1)
+                      (key: org.apache.spark.sql.Row => Any)
+      : Seq[org.apache.spark.sql.Row] = {
+    val present = graft.view.IndexStore.partDirs(spark, dir, "_tb")
+      .map(_.getName).toSet
+    val rows = terms.groupBy(termBucketJvm(_, nBuckets)).toSeq.sortBy(_._1)
+      .flatMap { case (tb, ts) =>
+        if (!present(s"_tb=$tb")) Nil
+        else graft.view.IndexStore.readSmall(spark, s"$dir/_tb=$tb",
+          perTerm.toLong * ts.size,
+          Some(org.apache.spark.sql.sources.In("term", ts.toArray[Any])))
+      }
+    rows.groupBy(key).find(_._2.size > 1).foreach { case (k, rs) =>
+      throw new IllegalStateException(s"$dir holds term $k ${rs.size} " +
+        "times; an index holds each term once")
+    }
+    rows
+  }
+
+  /** `(term, df)` of each of `terms` the term table at `dir` holds
+    * ([[termRows]]). */
+  private def storedDfs(spark: SparkSession, dir: String, terms: Seq[String],
+                        nBuckets: Int): Seq[(String, Long)] =
+    termRows(spark, dir, terms, nBuckets)(_.getAs[String]("term"))
+      .map(r => r.getAs[String]("term") -> r.getAs[Long]("df"))
 
   /** Attribute-filtered BM25: [[searchIndexed]] restricted to an
     * allowed-doc set (one `doc_id` column — e.g. `docs.filter(lang ===
@@ -1480,15 +1542,13 @@ object TextSearch {
     val st = statsOf(spark, path)
     val terms = st.analyzer.queryTerms(queryTerms)
     // lexical candidates + raw BM25 (searchIndexed without the limit)
+    val dfs = storedDfs(spark, s"$path/terms", terms, st.nBuckets)
     val bm = sumInTermOrder(
-        bm25Partials(spark, path, terms, st, 1.2, 0.75), terms)
+        bm25PartialsOf(spark, path, dfs, st, 1.2, 0.75), terms)
       .withColumnRenamed("score", "bm25")
     val maxB = bm.agg(max(col("bm25")).as("_maxb"))
     // the query's own TF-IDF vector: tf=1 per term, stored dfs
-    val qv = weighted(
-      readPruned(spark, path, "terms", terms, st.nBuckets)
-        .select(lit(-1L).as("doc_id"), col("term"), lit(1L).as("tf"),
-          col("df")), lit(st.n), dim)
+    val qv = weighted(queryTfDf(spark, dfs), lit(st.n), dim)
     val qvec = densify(qv, dim)
       .select(col("embedding").as("_qv"))
     // candidate-bounded vectors: docs matching ≥1 query term (the BM25
@@ -1532,13 +1592,11 @@ object TextSearch {
       "queryTerms must be non-empty and distinct")
     val st = statsOf(spark, path)
     val terms = st.analyzer.queryTerms(queryTerms)
+    val dfs = storedDfs(spark, s"$path/terms", terms, st.nBuckets)
     val bm = sumInTermOrder(
-        bm25Partials(spark, path, terms, st, 1.2, 0.75), terms)
+        bm25PartialsOf(spark, path, dfs, st, 1.2, 0.75), terms)
       .withColumnRenamed("score", "bm25")
-    val qv = weighted(
-      readPruned(spark, path, "terms", terms, st.nBuckets)
-        .select(lit(-1L).as("doc_id"), col("term"), lit(1L).as("tf"),
-          col("df")), lit(st.n), dim)
+    val qv = weighted(queryTfDf(spark, dfs), lit(st.n), dim)
     val qvec = densify(qv, dim).select(col("embedding").as("_qv"))
     val dv = tfidfVectorsFor(spark, path, bm.select(col("doc_id")), dim)
       .select(col("vec_id").as("doc_id"), col("embedding").as("_dv"))
@@ -1560,6 +1618,13 @@ object TextSearch {
           lit(1.0) / (lit(k0) + col("_r2"))).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc).limit(k)
   }
+
+  /** The query's own `(doc_id = -1, term, tf = 1, df)` rows from its
+    * stored dfs, as a local frame. */
+  private def queryTfDf(spark: SparkSession,
+                        dfs: Seq[(String, Long)]): DataFrame =
+    spark.createDataFrame(dfs.map { case (t, d) => (-1L, t, 1L, d) })
+      .toDF("doc_id", "term", "tf", "df")
 
   /** `(doc_id, _feat, _wi)` integer hashed-TF-IDF weights. The idf is
     * rounded at 1e-6 and carried as an integer so downstream
@@ -1590,9 +1655,13 @@ object TextSearch {
     * driver-side-computed buckets become `_tb` partition filters
     * (directory pruning) and `term IN` reaches the parquet row groups. */
   private def readPruned(spark: SparkSession, path: String, sub: String,
-                         terms: Seq[String], nBuckets: Int): DataFrame = {
+                         terms: Seq[String], nBuckets: Int): DataFrame =
+    prunedTable(spark, s"$path/$sub", terms, nBuckets)
+
+  private def prunedTable(spark: SparkSession, dir: String,
+                          terms: Seq[String], nBuckets: Int): DataFrame = {
     val buckets = terms.map(termBucketJvm(_, nBuckets)).distinct
-    graft.view.IndexStore.readBuckets(spark, s"$path/$sub", "_tb", buckets)
+    graft.view.IndexStore.readBuckets(spark, dir, "_tb", buckets)
       .filter(col("_tb").isin(buckets: _*) && col("term").isin(terms: _*))
   }
 
@@ -2065,10 +2134,17 @@ object TextSearch {
         when(col("field") === fs.fields.head.name, g(fs.fields.head))) {
         (acc, f) => acc.when(col("field") === f.name, g(f))
       }
-    val scored = readPruned(spark, path, "postings", terms, fs.nBuckets)
-      .join(broadcast(readPruned(spark, path, "terms", terms, fs.nBuckets)
-        .select(col("field"), col("term"), col("df"))),
-        Seq("field", "term"))
+    // each (field, term) df read on the driver, as for searchIndexed;
+    // the filter drops what an inner join with the term table would
+    val dfs = termRows(spark, s"$path/terms", terms, fs.nBuckets,
+        fs.fields.size)(r => (r.getAs[String]("field"), r.getAs[String]("term")))
+      .map(r => (r.getAs[String]("field"), r.getAs[String]("term"),
+        r.getAs[Long]("df")))
+    val scored = readPruned(spark, path, "postings",
+        dfs.map(_._2).distinct, fs.nBuckets)
+      .withColumn("df", literalOf(dfs.map { case (f, t, d) =>
+        (col("field") === f && col("term") === t) -> d }))
+      .filter(col("df").isNotNull)
       .withColumn("_s", perField(f => lit(f.weight)) *
         bm25Weight(col("tf"), col("dl"), col("df"),
           perField(f => lit(f.n)), perField(f => lit(f.avgdl)), k1, b))

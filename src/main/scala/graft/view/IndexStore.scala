@@ -12,6 +12,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
@@ -244,33 +245,51 @@ object IndexStore {
   }
 
   /** Read a small side table — a stats row, a centroid table, a
-    * params row — on the driver with Spark's own Parquet reader, so it
-    * decodes exactly as a scan task would and costs no Spark job. The
-    * footers are counted first: a table of more than `maxRows` rows is
-    * refused, so a driver-side read stays bounded by construction.
+    * params row — on the driver with Spark's own Parquet row reader
+    * ([[Bridge.decodeLocal]]), so it decodes exactly as a scan task
+    * would and costs no Spark job, no broadcast and no generated code.
+    * Without a `filter` the footers are counted first: a table of more
+    * than `maxRows` rows is refused before a row is decoded. With one
+    * (say `In("term", …)` over a term table), Spark's Parquet filter
+    * conversion prunes row groups and records, and the read is bounded
+    * by the rows it returns instead: the `maxRows + 1`-th match throws.
+    * Either way a driver-side read stays bounded by construction.
     * Partition directories become columns as in `read.parquet`. A
     * directory without data files reads as no rows; an absent `dir`
     * or an unreadable file throws, naming the path. */
-  def readSmall(spark: SparkSession, dir: String, maxRows: Long): Seq[Row] = {
+  def readSmall(spark: SparkSession, dir: String, maxRows: Long,
+                filter: Option[Filter] = None): Seq[Row] = {
     val fs = fsFor(spark, dir)
     if (!fs.exists(new Path(dir)))
       throw new FileNotFoundException(s"no table at $dir")
     def unreadable(e: Throwable) =
       new IOException(s"unreadable table at $dir: ${e.getMessage}", e)
-    val (files, footers, partSchema) =
+    val (files, partSchema) =
       try {
         val (files, partSchema) = Bridge.listTable(spark, dir)
-        (files, files.map(f => footer(fs, f._2.getPath)), partSchema)
+        (files.map { case (v, f) => (v, f, footer(fs, f.getPath)) }, partSchema)
       } catch { case NonFatal(e) => throw unreadable(e) }
-    val rows = footers.map(_.getBlocks.asScala.map(_.getRowCount).sum).sum
-    if (rows > maxRows)
-      throw new IllegalStateException(
-        s"$dir holds $rows rows; this driver-side read takes at most $maxRows")
-    if (files.isEmpty) Nil
-    else try Bridge.decodeLocal(spark, files,
-        Bridge.footerSchema(spark, files.head._2.getPath, footers.head),
-        partSchema)
-      catch { case NonFatal(e) => throw unreadable(e) }
+    if (filter.isEmpty) {
+      val rows = files.map(_._3.getBlocks.asScala.map(_.getRowCount).sum).sum
+      if (rows > maxRows)
+        throw new IllegalStateException(
+          s"$dir holds $rows rows; this driver-side read takes at most $maxRows")
+    }
+    val got =
+      if (files.isEmpty) Nil
+      else try Bridge.decodeLocal(spark, files,
+          Bridge.footerSchema(spark, files.head._2.getPath, files.head._3),
+          partSchema, filter,
+          if (maxRows < Long.MaxValue) maxRows + 1 else maxRows)
+        catch {
+          case e: IllegalArgumentException => throw e
+          case NonFatal(e) => throw unreadable(e)
+        }
+    if (got.size > maxRows)
+      throw new IllegalStateException(s"$dir holds more than $maxRows " +
+        s"rows matching ${filter.mkString}; this driver-side read takes " +
+        s"at most $maxRows")
+    got
   }
 
   /** True iff the one-row Parquet stamp table at `dir` carries format
@@ -535,19 +554,22 @@ object IndexStore {
     * idempotent and resumable. A still-alive doc whose winner changed
     * under a branch purge must be RE-UPSERTED by the owning index's
     * normal maintenance path after this retire (the View catch-up
-    * does both in one merge). Cost: O(purged ids' buckets) — the
-    * purge-request size, never the index. */
+    * does both in one merge). `dataSortCols` and `finish` are the
+    * store's own, as in every other [[merge]] of it (a vector tier's
+    * sort order and bucket-local step). Cost: O(purged ids' buckets) —
+    * the purge-request size, never the index. */
   def purgeIndex(spark: SparkSession, path: String, ids: Seq[Any],
                  rf: Option[Reduce] = None, newPurgeSeq: Long = -1L,
                  dataSortCols: Seq[Column] =
-                   Seq(col("_kb"), col("_ck"))): Seq[Int] = {
+                   Seq(col("_kb"), col("_ck")),
+                 finish: DataFrame => DataFrame = identity): Seq[Int] = {
     val meta = readMeta(spark, path)
     val affected =
       if (ids.isEmpty) Nil
       else {
         val none = readBuckets(spark, dataDir(path), "_kb", Nil).limit(0)
         merge(spark, path, meta, none, idsDf(spark, none, ids),
-          meta.updateSeq, dataSortCols, rf)
+          meta.updateSeq, dataSortCols, rf, finish)
       }
     if (newPurgeSeq >= 0)
       writeMeta(spark, path,

@@ -3,17 +3,22 @@ package org.apache.spark.sql.graft
 import java.util.concurrent.CompletableFuture
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.Footer
+import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.lib.input.FileSplit
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.hadoop.{Footer, ParquetInputFormat, ParquetRecordReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, JoinedRow}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.{FileFormat, InMemoryFileIndex, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFilters, ParquetOptions, ParquetReadSupport, ParquetToSparkSchemaConverter, ParquetWriteSupport}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.ThreadUtils
 
@@ -60,25 +65,91 @@ object Bridge {
       index.partitionSchema)
   }
 
-  /** Decode `files` on the driver with Spark's own Parquet reader — the
-    * reader a scan task runs, under the session's settings — into rows
-    * of `dataSchema` followed by `partSchema`. Meant for tables of a
-    * bounded handful of rows: every row is materialized. */
+  /** Decode `files` (each with its already-read footer) on the driver
+    * with Spark's own Parquet row reader into rows of `dataSchema`
+    * followed by `partSchema`: the `ParquetReadSupport` a
+    * non-vectorized scan task runs, given the requested schema, the
+    * session's schema-conversion settings and each footer's datetime
+    * rebase specs, as `ParquetFileFormat` sets them. Rows convert
+    * through `CatalystTypeConverters`: no broadcast of the Hadoop conf
+    * and no generated code. `filter`, when given, is converted by
+    * Spark's `ParquetFilters` and applied to row groups and to records,
+    * so only matching rows are decoded; a filter Parquet cannot express
+    * is refused. Decoding stops after `limit` rows: every row is
+    * materialized, so the read is meant for a bounded handful. */
   def decodeLocal(spark: SparkSession,
-                  files: Seq[(InternalRow, FileStatus)],
-                  dataSchema: StructType, partSchema: StructType): Seq[Row] = {
-    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val read = new ParquetFileFormat().buildReaderWithPartitionValues(
-      session, dataSchema, partSchema, dataSchema, Nil,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      session.sessionState.newHadoopConf())
-    val toRow = ExpressionEncoder(StructType(dataSchema ++ partSchema))
-      .resolveAndBind().createDeserializer()
-    // each row is decoded before the reader advances: the reader reuses
-    // its row object
-    files.flatMap { case (values, f) =>
-      read(PartitionedFile(values, SparkPath.fromFileStatus(f), 0L, f.getLen,
-        Array.empty, f.getModificationTime, f.getLen)).map(toRow).toVector
+                  files: Seq[(InternalRow, FileStatus, ParquetMetadata)],
+                  dataSchema: StructType, partSchema: StructType,
+                  filter: Option[Filter], limit: Long): Seq[Row] = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState
+    val sqlConf = state.conf
+    val conf = state.newHadoopConf()
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, dataSchema.json)
+    conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, dataSchema.json)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+    Seq(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED -> sqlConf.nestedSchemaPruningEnabled,
+      SQLConf.CASE_SENSITIVE -> sqlConf.caseSensitiveAnalysis,
+      SQLConf.PARQUET_BINARY_AS_STRING -> sqlConf.isParquetBinaryAsString,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP -> sqlConf.isParquetINT96AsTimestamp,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED ->
+        sqlConf.parquetInferTimestampNTZEnabled,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> sqlConf.legacyParquetNanosAsLong,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION ->
+        sqlConf.parquetReaderRespectUnknownTypeAnnotation
+    ).foreach { case (k, v) => conf.setBoolean(k.key, v) }
+    val opts = new ParquetOptions(Map.empty[String, String], sqlConf)
+    val toRow = CatalystTypeConverters
+      .createToScalaConverter(StructType(dataSchema ++ partSchema))
+    val out = Vector.newBuilder[Row]
+    var n = 0L
+    files.foreach { case (values, f, footer) =>
+      val fileMeta = footer.getFileMetaData
+      val kv = fileMeta.getKeyValueMetaData
+      val rebase = DataSourceUtils.datetimeRebaseSpec(kv.get,
+        opts.datetimeRebaseModeInRead)
+      val convertTz =
+        if (sqlConf.isParquetINT96TimestampConversion &&
+            !fileMeta.getCreatedBy.startsWith("parquet-mr"))
+          Some(DateTimeUtils.getZoneId(sqlConf.sessionLocalTimeZone))
+        else None
+      val support = new ParquetReadSupport(convertTz,
+        enableVectorizedReader = false, rebase,
+        DataSourceUtils.int96RebaseSpec(kv.get, opts.int96RebaseModeInRead))
+      // the conf is this call's own: a file's pushed predicate replaces
+      // the previous file's
+      val context = new TaskAttemptContextImpl(conf,
+        new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0))
+      val pushed = filter.map { fl =>
+        new ParquetFilters(fileMeta.getSchema, sqlConf.parquetFilterPushDownDate,
+          sqlConf.parquetFilterPushDownTimestamp,
+          sqlConf.parquetFilterPushDownDecimal,
+          sqlConf.parquetFilterPushDownStringPredicate,
+          // one exact equality per IN value, never a min/max range
+          Int.MaxValue, sqlConf.caseSensitiveAnalysis, rebase)
+          .createFilter(fl).getOrElse(throw new IllegalArgumentException(
+            s"Parquet cannot push the filter $fl to ${f.getPath}"))
+      }
+      val reader = pushed match {
+        case Some(p) =>
+          ParquetInputFormat.setFilterPredicate(context.getConfiguration, p)
+          new ParquetRecordReader[InternalRow](support, FilterCompat.get(p, null))
+        case None => new ParquetRecordReader[InternalRow](support)
+      }
+      try {
+        reader.initialize(new FileSplit(f.getPath, 0L, f.getLen, Array.empty[String]),
+          context)
+        // each row converts before the reader advances: the reader
+        // reuses its row object
+        while (n < limit && reader.nextKeyValue()) {
+          n += 1
+          out += toRow(new JoinedRow(reader.getCurrentValue, values))
+            .asInstanceOf[Row]
+        }
+      } finally reader.close()
     }
+    out.result()
   }
 }

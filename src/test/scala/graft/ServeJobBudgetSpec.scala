@@ -12,7 +12,10 @@ import graft.view.{QueryOpts, View}
 /** Job budgets of the serve path. Opening an index store reads one
   * Parquet footer and its small side tables on the driver, so building a
   * served DataFrame runs no Spark job; collecting it runs only the jobs
-  * of its own plan. */
+  * of its own plan: for BM25 the postings scan's aggregation (the dfs
+  * are literals), for IVF the probe side's broadcast, the bounded top-k
+  * merge and the single-partition tail a caller's sort needs no
+  * exchange for. */
 class ServeJobBudgetSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -38,19 +41,19 @@ class ServeJobBudgetSpec extends SparkSpecBase {
     rows
   }
 
-  test("BM25 top-k: no job to build, at most 3 to collect") {
+  test("BM25 top-k: no job to build, at most 2 to collect") {
     val path = tmp("graft-serve-bm25")
     TextSearch.buildTextIndex(docs, $"doc_id", $"text", path, nBuckets = 8)
     val terms = spark.read.parquet(s"$path/terms")
       .orderBy(col("df").desc, col("term")).limit(2)
       .collect().map(_.getString(0)).toSeq
     val warm = TextSearch.searchIndexed(spark, path, terms, 10).collect()
-    val rows = withinBudget("searchIndexed", 3)(
+    val rows = withinBudget("searchIndexed", 2)(
       TextSearch.searchIndexed(spark, path, terms, 10))
     assert(rows.nonEmpty && rows == warm.toSeq)
   }
 
-  test("IVF top-k over a local query frame: no job to build, at most 6 to collect") {
+  test("IVF top-k over a local query frame: no job to build, at most 3 to collect") {
     val path = tmp("graft-serve-ivf")
     Similarity.buildIvfIndex(emb, path, idBuckets = 4)
     val v = emb.filter($"vec_id" === 7L).select("embedding").head()
@@ -58,11 +61,36 @@ class ServeJobBudgetSpec extends SparkSpecBase {
     val queries = spark.createDataFrame(
       java.util.Arrays.asList(Row(-1L, v)),
       emb.select("vec_id", "embedding").schema)
-    val rows = withinBudget("ivfTopK", 6)(
+    val rows = withinBudget("ivfTopK", 3)(
       Similarity.ivfTopK(spark, path, queries, 5).orderBy("rank"))
     assert(rows.map(_.getAs[Long]("rank")) == (1L to 5L))
     assert(rows.head.getAs[Long]("n_id") == 7L,
       "the query's own vector is its nearest neighbour")
+  }
+
+  test("partitioned and fielded BM25: no job to build") {
+    val dir = Files.createTempDirectory("graft-serve-ptext").toString
+    val small = docs.limit(200)
+    TextSearch.buildPartitionedTextIndex(
+      small.select(concat(lit("p"), ($"doc_id" % 3).cast("string"), lit(":"),
+        $"doc_id".cast("string")).as("doc_id"), $"text"),
+      $"doc_id", $"text", s"$dir/part", nBuckets = 4)
+    TextSearch.buildFieldedTextIndex(small, $"doc_id",
+      Seq(("title", substring($"text", 1, 40), 2.0), ("body", $"text", 1.0)),
+      s"$dir/fielded", nBuckets = 4)
+    val terms = spark.read.parquet(s"$dir/part/terms")
+      .orderBy(col("df").desc, col("term")).limit(2)
+      .collect().map(_.getString(0)).toSeq
+    val part = TextSearch.searchPartitioned(spark, s"$dir/part", "p1", terms, 10)
+      .collect().toSeq
+    val fielded = TextSearch.searchFielded(spark, s"$dir/fielded", terms, 10)
+      .collect().toSeq
+    assert(withinBudget("searchPartitioned", 2)(
+      TextSearch.searchPartitioned(spark, s"$dir/part", "p1", terms, 10)) == part)
+    assert(part.nonEmpty)
+    assert(withinBudget("searchFielded", 2)(
+      TextSearch.searchFielded(spark, s"$dir/fielded", terms, 10)) == fielded)
+    assert(fielded.nonEmpty)
   }
 
   test("covered Mango find: no job to build, at most 1 to collect") {

@@ -105,6 +105,30 @@ class StoreReaderSpec extends SparkSpecBase {
     assert(absent.getMessage.contains(s"$ivf/nothing"))
   }
 
+  test("a filtered readSmall decodes the matching rows, bounded by rows returned") {
+    val text = tmp("graft-small-filter")
+    TextSearch.buildTextIndex(docs, $"doc_id", $"text", text, nBuckets = 2)
+    val dir = s"$text/terms/_tb=0"
+    val all = spark.read.parquet(dir)
+    val held = all.count()
+    val terms = all.select($"term").as[String].collect().sorted.take(3).toSeq
+    val want = all.filter($"term".isin(terms: _*)).collect().map(_.toSeq).toSet
+    // a table past the bound reads fine when the filter matches within it
+    assert(held > terms.size)
+    val got = IndexStore.readSmall(spark, dir, terms.size,
+      Some(org.apache.spark.sql.sources.In("term", terms.toArray[Any])))
+    assert(got.map(_.toSeq).toSet == want && got.size == terms.size)
+    assert(IndexStore.readSmall(spark, dir, 1,
+      Some(org.apache.spark.sql.sources.In("term", Array[Any]("absentterm"))))
+      .isEmpty)
+    val over = intercept[IllegalStateException] {
+      IndexStore.readSmall(spark, dir, terms.size - 1,
+        Some(org.apache.spark.sql.sources.In("term", terms.toArray[Any])))
+    }
+    assert(over.getMessage.contains(dir) &&
+      over.getMessage.contains(s"at most ${terms.size - 1}"), over.getMessage)
+  }
+
   test("searchIndexed still refuses a partitioned text index") {
     val path = tmp("graft-small-refuse")
     TextSearch.buildPartitionedTextIndex(
