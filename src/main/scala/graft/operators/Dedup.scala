@@ -421,7 +421,8 @@ object Dedup {
                         newSeq: Long = -1L): Seq[Int] = {
     import spark.implicits._
     import graft.view.IndexStore
-    val fs = IndexStore.fsFor(spark, path)
+    import IndexStore.Write
+    IndexStore.finishSwap(spark, path)
     val meta = IndexStore.readMeta(spark, path)
     val nB = meta.buckets
     val live =
@@ -437,41 +438,30 @@ object Dedup {
                 else cids0.unionByName(deletedIds.toDF("doc_id")))
       .distinct().persist()
     try {
-      val ibs = cids
-        .withColumn("_ib", IndexStore.idBucket(col("doc_id"), nB))
-        .select(col("_ib")).distinct().collect().map(_.getInt(0)).toSeq
-      val oldSide = spark.read.parquet(path + "/ids")
+      val ibs = IndexStore.bucketsOf(
+        cids.select(IndexStore.idBucket(col("doc_id"), nB)))
+      def oldIds = IndexStore.readBuckets(spark, path + "/ids", "_ib", ibs)
         .filter(col("_ib").isin(ibs: _*))
-        .join(cids, Seq("doc_id"), "left_semi")
-      val oldSbs = oldSide.select(col("_sb")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val newSbs = newRows.select(col("_sb")).distinct()
-        .collect().map(_.getInt(0)).toSeq
+      val oldSbs = IndexStore.bucketsOf(
+        oldIds.join(cids, Seq("doc_id"), "left_semi").select(col("_sb")))
+      val newSbs = IndexStore.bucketsOf(newRows.select(col("_sb")))
       val affected = (oldSbs ++ newSbs).distinct.sorted
-      if (affected.nonEmpty) {
-        val survivors = spark.read.parquet(path + "/bands")
-          .filter(col("_sb").isin(affected: _*))
-          .join(cids, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("simhash"), col("i"), col("v"),
-            col("_sb"))
-        IndexStore.writeSwap(spark, fs,
-          survivors.unionByName(newRows
-            .select(col("doc_id"), col("simhash"), col("i"), col("v"),
-              col("_sb"))),
-          path + "/bands", "_sb", affected, Seq(col("_sb"), col("i"),
-            col("v")))
-        val sideSurvivors = spark.read.parquet(path + "/ids")
-          .filter(col("_ib").isin(ibs: _*))
-          .join(cids, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("_sb"), col("_ib"))
-        IndexStore.writeSwap(spark, fs,
-          sideSurvivors.unionByName(
-            newRows.select(col("doc_id"), col("_sb")).distinct()
+      val bandCols = Seq("doc_id", "simhash", "i", "v", "_sb").map(col)
+      val writes = if (affected.isEmpty) Nil else Seq(
+        Write.sorted(path + "/bands", "_sb", affected,
+          IndexStore.readBuckets(spark, path + "/bands", "_sb", affected)
+            .filter(col("_sb").isin(affected: _*))
+            .join(cids, Seq("doc_id"), "left_anti").select(bandCols: _*)
+            .unionByName(newRows.select(bandCols: _*)),
+          Seq(col("_sb"), col("i"), col("v"))),
+        Write.sorted(path + "/ids", "_ib", ibs,
+          oldIds.join(cids, Seq("doc_id"), "left_anti")
+            .select(col("doc_id"), col("_sb"), col("_ib"))
+            .unionByName(newRows.select(col("doc_id"), col("_sb")).distinct()
               .withColumn("_ib", IndexStore.idBucket(col("doc_id"), nB))),
-          path + "/ids", "_ib", ibs, Seq(col("_ib"), col("doc_id")))
-      }
-      val seq = if (newSeq >= 0) newSeq else meta.updateSeq + 1
-      IndexStore.writeMeta(spark, path, meta.copy(updateSeq = seq))
+          Seq(col("_ib"), col("doc_id"))))
+      IndexStore.commitBatch(spark, path, writes, Some(meta.copy(
+        updateSeq = if (newSeq >= 0) newSeq else meta.updateSeq + 1)))
       affected
     } finally {
       newRows.unpersist()

@@ -14,7 +14,8 @@ import graft.view.{IndexMeta, IndexStore}
   * docs, never billions.
   *
   * Layout (the standard graft index discipline — partition-pruned
-  * reads, by-id sidecar, rename-swapped updates):
+  * reads, by-id sidecar, every batch's rewrites committed in one
+  * [[IndexStore.commitBatch]]):
   * {{{
   * path/
   *   bands/_bb=<b>/   (doc_id, j, band) MinHash band rows, bucketed by
@@ -191,7 +192,8 @@ object DedupIndex {
              k: Int = 8, bands: Int = 4, maxBucket: Int = 1000,
              newSeq: Long = -1L): Long = {
     import spark.implicits._
-    val fs = IndexStore.fsFor(spark, path)
+    import IndexStore.Write
+    IndexStore.finishSwap(spark, path)
     val meta = IndexStore.readMeta(spark, path)
     val nB = meta.buckets
     val live =
@@ -207,93 +209,82 @@ object DedupIndex {
     val cids = (if (deletedIds.isEmpty) liveIds
                 else liveIds.unionByName(deletedIds.toDF("doc_id")))
       .distinct().persist()
+    val pins = scala.collection.mutable.ListBuffer[DataFrame](
+      newRows, liveIds, cids)
+    def pin(df: DataFrame): DataFrame = { pins += df; df.persist() }
+    def buckets(df: DataFrame, c: Column) = IndexStore.bucketsOf(df.select(c))
     try {
-      // ---- band + sidecar merge (the standard sidecar-pruned swap)
-      val ibs = cids.withColumn("_ib", IndexStore.idBucket(col("doc_id"), nB))
-        .select(col("_ib")).distinct().collect().map(_.getInt(0)).toSeq
-      val oldSide = IndexStore.readBuckets(spark, path + "/ids", "_ib", ibs)
-        .filter(col("_ib").isin(ibs: _*))
-        .join(cids, Seq("doc_id"), "left_semi")
-      val affBb = (oldSide.select(col("_bb")).distinct()
-          .collect().map(_.getInt(0)) ++
-        newRows.select(col("_bb")).distinct()
-          .collect().map(_.getInt(0))).distinct.sorted
-      if (affBb.nonEmpty) {
-        val survivors = IndexStore.readBuckets(spark, path + "/bands",
-            "_bb", affBb)
-          .filter(col("_bb").isin(affBb: _*))
-          .join(cids, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("j"), col("band"), col("_bb"))
-        IndexStore.writeSwap(spark, fs,
-          survivors.unionByName(newRows
-            .select(col("doc_id"), col("j"), col("band"), col("_bb"))),
-          path + "/bands", "_bb", affBb,
-          Seq(col("_bb"), col("j"), col("band")))
-        val sideSurv = IndexStore.readBuckets(spark, path + "/ids",
-            "_ib", ibs)
-          .filter(col("_ib").isin(ibs: _*))
-          .join(cids, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("_bb"), col("_ib"))
-        IndexStore.writeSwap(spark, fs,
-          sideSurv.unionByName(
-            newRows.select(col("doc_id"), col("_bb")).distinct()
-              .withColumn("_ib", IndexStore.idBucket(col("doc_id"), nB))),
-          path + "/ids", "_ib", ibs, Seq(col("_ib"), col("doc_id")))
+      // every read below sees the store as it stands; the batch's own
+      // band and sidecar rows are merged in where the re-clustering
+      // needs the post-batch state
+      val newIds = newRows.select(col("doc_id"), col("_bb")).distinct()
+        .withColumn("_ib", IndexStore.idBucket(col("doc_id"), nB))
+      def merged(dir: String, part: String, bs: Seq[Int],
+                 batch: DataFrame): DataFrame = {
+        val cols = batch.columns.map(col)
+        IndexStore.readBuckets(spark, s"$path/$dir", part, bs)
+          .filter(col(part).isin(bs: _*))
+          .join(cids, Seq("doc_id"), "left_anti").select(cols: _*)
+          .unionByName(batch.filter(col(part).isin(bs: _*)).select(cols: _*))
       }
+      // ---- band + sidecar merge (the standard sidecar-pruned rewrite)
+      val ibs = buckets(cids, IndexStore.idBucket(col("doc_id"), nB))
+      val affBb = (buckets(IndexStore.readBuckets(spark, path + "/ids",
+          "_ib", ibs).filter(col("_ib").isin(ibs: _*))
+          .join(cids, Seq("doc_id"), "left_semi"), col("_bb")) ++
+        buckets(newRows, col("_bb"))).distinct.sorted
+      val bandCols = Seq(col("doc_id"), col("j"), col("band"), col("_bb"))
+      val newBands = newRows.select(bandCols: _*)
+      val bandWrites = if (affBb.isEmpty) Nil else Seq(
+        Write.sorted(path + "/bands", "_bb", affBb,
+          merged("bands", "_bb", affBb, newBands),
+          Seq(col("_bb"), col("j"), col("band"))),
+        Write.sorted(path + "/ids", "_ib", ibs,
+          merged("ids", "_ib", ibs, newIds),
+          Seq(col("_ib"), col("doc_id"))))
       // ---- affected membership: clusters of changed docs + clusters
-      // of their current band-mates
-      val mates = IndexStore.readBuckets(spark, path + "/bands",
-          "_bb", affBb)
-        .filter(col("_bb").isin(affBb: _*))
+      // of their band-mates after the batch
+      val mates = merged("bands", "_bb", affBb, newBands)
         .join(newRows.select(col("j"), col("band")).distinct(),
           Seq("j", "band"))
         .select(col("doc_id"))
-      val seeds = cids.unionByName(mates).distinct().persist()
-      val slbs = seeds.withColumn("_lb",
-          IndexStore.idBucket(col("doc_id"), nB))
-        .select(col("_lb")).distinct().collect().map(_.getInt(0)).toSeq
-      val affClusters = IndexStore.readBuckets(spark, path + "/labels",
+      val seeds = pin(cids.unionByName(mates).distinct())
+      val slbs = buckets(seeds, IndexStore.idBucket(col("doc_id"), nB))
+      val affClusters = pin(IndexStore.readBuckets(spark, path + "/labels",
           "_lb", slbs)
         .filter(col("_lb").isin(slbs: _*))
         .join(seeds, Seq("doc_id"), "left_semi")
-        .select(col("cluster_id")).distinct().persist()
-      val cbs = affClusters.withColumn("_cb",
-          IndexStore.idBucket(col("cluster_id"), nB))
-        .select(col("_cb")).distinct().collect().map(_.getInt(0)).toSeq
+        .select(col("cluster_id")).distinct())
+      val cbs = buckets(affClusters,
+        IndexStore.idBucket(col("cluster_id"), nB))
       val oldMembers = IndexStore.readBuckets(spark, path + "/members",
           "_cm", cmsOfClusterBuckets(cbs, nB))
         .filter(col("_cm").isin(cmsOfClusterBuckets(cbs, nB): _*))
         .join(affClusters, Seq("cluster_id"), "left_semi")
         .select(col("doc_id"))
       // M = surviving old members + live changed docs (deleted drop out)
-      val m = oldMembers.unionByName(liveIds).distinct()
+      val m = pin(oldMembers.unionByName(liveIds).distinct()
         .join(if (deletedIds.isEmpty) liveIds.limit(0)
               else deletedIds.toDF("doc_id"),
-          Seq("doc_id"), "left_anti").persist()
-      // ---- re-cluster M from its stored bands
-      val mibs = m.withColumn("_ib", IndexStore.idBucket(col("doc_id"), nB))
-        .select(col("_ib")).distinct().collect().map(_.getInt(0)).toSeq
+          Seq("doc_id"), "left_anti"))
+      // ---- re-cluster M from its bands after the batch
+      val mibs = buckets(m, IndexStore.idBucket(col("doc_id"), nB))
       val mbbs =
         if (mibs.isEmpty) Seq.empty[Int]
-        else IndexStore.readBuckets(spark, path + "/ids", "_ib", mibs)
-          .filter(col("_ib").isin(mibs: _*))
-          .join(m, Seq("doc_id"), "left_semi")
-          .select(col("_bb")).distinct().collect().map(_.getInt(0)).toSeq
+        else buckets(merged("ids", "_ib", mibs, newIds)
+          .join(m, Seq("doc_id"), "left_semi"), col("_bb"))
       val mPairs =
         if (mbbs.isEmpty)
           Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-        else pairsOf(
-          IndexStore.readBuckets(spark, path + "/bands", "_bb", mbbs)
-            .filter(col("_bb").isin(mbbs: _*))
-            .join(m, Seq("doc_id"), "left_semi"), maxBucket)
-      val newLabels = labelsOf(m, mPairs).persist()
-      // ---- rename-efficient swaps: only rows whose LABEL CHANGED (or
+        else pairsOf(merged("bands", "_bb", mbbs, newBands)
+          .join(m, Seq("doc_id"), "left_semi"), maxBucket)
+      val newLabels = pin(labelsOf(m, mPairs))
+      // ---- rename-efficient rewrites: only rows whose LABEL CHANGED (or
       // whose doc was deleted) rewrite. Unchanged M docs keep identical
       // (doc_id, cluster_id) rows, so leaving their buckets on disk is
       // exact — a delta brushing a huge stable cluster rewrites the
       // changed docs' sub-buckets, not the cluster.
-      val mlbs = m.withColumn("_lb", IndexStore.idBucket(col("doc_id"), nB))
-        .select(col("_lb")).distinct().collect().map(_.getInt(0)).toSeq
+      val mlbs = buckets(m, IndexStore.idBucket(col("doc_id"), nB))
       val oldLabelsM =
         if (mlbs.isEmpty)
           Seq.empty[(Long, Long)].toDF("doc_id", "cluster_id")
@@ -301,77 +292,48 @@ object DedupIndex {
           .filter(col("_lb").isin(mlbs: _*))
           .join(m, Seq("doc_id"), "left_semi")
           .select(col("doc_id"), col("cluster_id"))
-      // SNAPSHOT the changed-labels delta to disk before any swap:
-      // its lineage reads the pre-swap labels/, and the members swap
-      // below runs AFTER labels/ is replaced — a lost cached partition
-      // would otherwise recompute against the NEW labels, see an empty
-      // delta, and silently drop the changed docs' member rows. The
-      // snapshot makes every post-swap consumer read immutable bytes.
-      val snap = path + "._changed_tmp"
-      newLabels
-        .join(oldLabelsM, Seq("doc_id", "cluster_id"), "left_anti")
-        .write.mode("overwrite").parquet(snap)
-      val changed = spark.read.parquet(snap)
-      // the re-clustered count is also pinned pre-swap (a post-swap
-      // recompute of m/newLabels would read the already-swapped layouts)
+      // the changed-labels delta feeds two writes and a bucket collect
+      val changed = pin(newLabels
+        .join(oldLabelsM, Seq("doc_id", "cluster_id"), "left_anti"))
       val n = newLabels.count()
       val delDf =
         if (deletedIds.isEmpty) liveIds.limit(0)
         else deletedIds.toDF("doc_id")
-      val touched = changed.select(col("doc_id")).unionByName(delDf)
-        .distinct().persist()
-      val lbs = touched
-        .withColumn("_lb", IndexStore.idBucket(col("doc_id"), nB))
-        .select(col("_lb")).distinct().collect().map(_.getInt(0))
-        .toSeq.sorted
-      // the touched docs' OLD member rows drop from their sub-buckets;
-      // their _cm ids are collected BEFORE the labels swap replaces
-      // the rows they derive from
+      val touched = pin(changed.select(col("doc_id")).unionByName(delDf)
+        .distinct())
+      val lbs = buckets(touched, IndexStore.idBucket(col("doc_id"), nB))
+      // the touched docs' OLD member rows drop from their sub-buckets
       val cmsOld =
         if (lbs.isEmpty) Seq.empty[Int]
-        else IndexStore.readBuckets(spark, path + "/labels", "_lb", lbs)
+        else buckets(IndexStore.readBuckets(spark, path + "/labels", "_lb", lbs)
           .filter(col("_lb").isin(lbs: _*))
-          .join(touched, Seq("doc_id"), "left_semi")
-          .select(memberBucket(col("cluster_id"), col("doc_id"), nB)
-            .as("_cm")).distinct().collect().map(_.getInt(0)).toSeq
-      val cmsNew = changed
-        .select(memberBucket(col("cluster_id"), col("doc_id"), nB)
-          .as("_cm")).distinct().collect().map(_.getInt(0)).toSeq
-      if (lbs.nonEmpty) {
-        val labelSurv = IndexStore.readBuckets(spark, path + "/labels",
-            "_lb", lbs)
-          .filter(col("_lb").isin(lbs: _*))
-          .join(touched, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("cluster_id"), col("_lb"))
-        IndexStore.writeSwap(spark, fs,
-          labelSurv.unionByName(changed
-            .withColumn("_lb", IndexStore.idBucket(col("doc_id"), nB))),
-          path + "/labels", "_lb", lbs, Seq(col("_lb"), col("doc_id")))
-      }
+          .join(touched, Seq("doc_id"), "left_semi"),
+          memberBucket(col("cluster_id"), col("doc_id"), nB))
+      val cmsNew = buckets(changed,
+        memberBucket(col("cluster_id"), col("doc_id"), nB))
+      val labelWrites = Option.when(lbs.nonEmpty)(
+        Write.sorted(path + "/labels", "_lb", lbs,
+          IndexStore.readBuckets(spark, path + "/labels", "_lb", lbs)
+            .filter(col("_lb").isin(lbs: _*))
+            .join(touched, Seq("doc_id"), "left_anti")
+            .select(col("doc_id"), col("cluster_id"), col("_lb"))
+            .unionByName(changed
+              .withColumn("_lb", IndexStore.idBucket(col("doc_id"), nB))),
+          Seq(col("_lb"), col("doc_id"))))
       val cms = (cmsOld ++ cmsNew).distinct.sorted
-      if (cms.nonEmpty) {
-        val memberSurv = IndexStore.readBuckets(spark, path + "/members",
-            "_cm", cms)
-          .filter(col("_cm").isin(cms: _*))
-          .join(touched, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("cluster_id"), col("_cm"))
-        IndexStore.writeSwap(spark, fs,
-          memberSurv.unionByName(changed
-            .withColumn("_cm",
+      val memberWrites = Option.when(cms.nonEmpty)(
+        Write.sorted(path + "/members", "_cm", cms,
+          IndexStore.readBuckets(spark, path + "/members", "_cm", cms)
+            .filter(col("_cm").isin(cms: _*))
+            .join(touched, Seq("doc_id"), "left_anti")
+            .select(col("doc_id"), col("cluster_id"), col("_cm"))
+            .unionByName(changed.withColumn("_cm",
               memberBucket(col("cluster_id"), col("doc_id"), nB))),
-          path + "/members", "_cm", cms,
-          Seq(col("_cm"), col("cluster_id"), col("doc_id")))
-      }
-      val seq = if (newSeq >= 0) newSeq else meta.updateSeq + 1
-      IndexStore.writeMeta(spark, path, meta.copy(updateSeq = seq))
-      Seq(seeds, affClusters, m, newLabels, touched)
-        .foreach(_.unpersist())
-      fs.delete(new org.apache.hadoop.fs.Path(snap), true)
+          Seq(col("_cm"), col("cluster_id"), col("doc_id"))))
+      IndexStore.commitBatch(spark, path,
+        bandWrites ++ labelWrites ++ memberWrites, Some(meta.copy(
+          updateSeq = if (newSeq >= 0) newSeq else meta.updateSeq + 1)))
       n
-    } finally {
-      newRows.unpersist()
-      liveIds.unpersist()
-      cids.unpersist()
-    }
+    } finally pins.foreach(_.unpersist())
   }
 }

@@ -278,12 +278,14 @@ object Pipeline {
     * batch, never the corpus:
     *  1. `changedDocs` (new content) re-run the per-doc verdicts
     *     (quality, contamination, fingerprint) — O(delta) text work;
-    *  2. their `docs/` id buckets rename-swap;
+    *  2. their `docs/` id buckets are rewritten;
     *  3. the fp groups they enter or leave re-elect keepers from the
     *     fp-pruned `fps/` buckets;
     *  4. keeper changes flow into the [[DedupIndex]] as upserts and
     *     retirements — its own maintenance re-clusters only the
-    *     touched membership.
+    *     touched membership, and commits first; `docs/` and `fps/`
+    *     then commit together, so a replay after a crash sees this
+    *     store's pre-state and repeats the same nested upsert.
     * An EMPTY batch touches nothing (the no-op re-release: the state
     * is byte-identical, so [[releaseFromState]] returns the identical
     * release). Returns the number of keeper upserts + retirements the
@@ -295,8 +297,12 @@ object Pipeline {
                    deletedIds: Seq[Long] = Nil,
                    newSeq: Long = -1L): Long = {
     import graft.view.IndexStore
+    import IndexStore.Write
     import spark.implicits._
-    val fs = IndexStore.fsFor(spark, path)
+    // this store's record and its nested dedup tier's, each rolled
+    // forward before the batch reads them
+    IndexStore.finishSwap(spark, path)
+    IndexStore.finishSwap(spark, dedupDir(path))
     val meta = IndexStore.readMeta(spark, path)
     val nB = meta.buckets
     val params = readParams(spark, path)
@@ -325,111 +331,98 @@ object Pipeline {
     // accumulated blocks crowd the unified memory region and slow
     // every later job (guide §5 — cached data competes with execution
     // memory; unpersist when done)
-    val pins = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    val pins = scala.collection.mutable.ListBuffer[DataFrame](newV, cids)
     def pin(df: DataFrame): DataFrame = { pins += df; df }
     try {
       val bs = cids.withColumn("_b", IndexStore.idBucket(col("doc_id"), nB))
         .select(col("_b")).distinct().collect().map(_.getInt(0)).toSeq
       if (bs.isEmpty) return 0L // empty batch: the no-op re-release
-      // PIN the pre-swap rows the later stages need: old fps of the
-      // changed docs (their lineage reads the about-to-swap buckets)
-      val oldRows = pin(IndexStore.readBuckets(spark, docsDir(path),
-          "_b", bs)
+      // every read below sees the store as it stands; docs/ and fps/
+      // commit together after the dedup tier has committed
+      val docRows = IndexStore.readBuckets(spark, docsDir(path), "_b", bs)
         .filter(col("_b").isin(bs: _*))
+      val oldRows = pin(docRows
         .join(cids, Seq("doc_id"), "left_semi")
         .select(col("doc_id"), col("_fp"), col("q_keep"))
-        .localCheckpoint()) // pre-swap pin AND lineage cut
-      // ---- docs/ swap (bucket-local)
-      val survivors = IndexStore.readBuckets(spark, docsDir(path), "_b", bs)
-        .filter(col("_b").isin(bs: _*))
-        .join(cids, Seq("doc_id"), "left_anti")
-      IndexStore.writeSwap(spark, fs,
-        survivors.unionByName(newV.select(survivors.columns.map(col): _*)),
-        docsDir(path), "_b", bs, Seq(col("_b"), col("doc_id")))
+        .localCheckpoint()) // lineage cut
+      val survivors = docRows.join(cids, Seq("doc_id"), "left_anti")
+      val mergedDocs = survivors
+        .unionByName(newV.select(survivors.columns.map(col): _*))
+      val docsW = Write.sorted(docsDir(path), "_b", bs, mergedDocs,
+        Seq(col("_b"), col("doc_id")))
       // ---- affected fp groups: entered or left by a changed doc
       val affFps = pin((oldRows.filter(col("q_keep")).select(col("_fp"))
           unionByName newV.filter(col("q_keep")).select(col("_fp")))
         .distinct().localCheckpoint())
       val fbs = affFps.withColumn("_fb", IndexStore.idBucket(col("_fp"), nB))
         .select(col("_fb")).distinct().collect().map(_.getInt(0)).toSeq
-      val dedupWork: Long = if (fbs.isEmpty) 0L else {
-        // keepers BEFORE the swap (pin — same pre-swap discipline)
-        val oldKeepers = pin(IndexStore.readBuckets(spark, fpsDir(path),
-            "_fb", fbs)
+      val (dedupWork, fpsW) = if (fbs.isEmpty) (0L, None) else {
+        val fpRows = IndexStore.readBuckets(spark, fpsDir(path), "_fb", fbs)
           .filter(col("_fb").isin(fbs: _*))
+        val oldKeepers = pin(fpRows
           .join(affFps, Seq("_fp"), "left_semi")
           .groupBy(col("_fp")).agg(min(col("doc_id")).as("old_k"))
-          .localCheckpoint()) // pre-swap pin AND lineage cut
-        // ---- fps/ swap: drop the changed ids' rows, add new q-kept
-        val fpSurv = IndexStore.readBuckets(spark, fpsDir(path),
-            "_fb", fbs)
-          .filter(col("_fb").isin(fbs: _*))
+          .localCheckpoint()) // lineage cut
+        // ---- fps/: drop the changed ids' rows, add new q-kept
+        val mergedFps = fpRows
           .join(cids, Seq("doc_id"), "left_anti")
           .select(col("_fp"), col("doc_id"), col("_fb"))
-        val fpNew = newV.filter(col("q_keep"))
-          .select(col("_fp"), col("doc_id"))
-          .withColumn("_fb", IndexStore.idBucket(col("_fp"), nB))
-          .filter(col("_fb").isin(fbs: _*))
-        IndexStore.writeSwap(spark, fs, fpSurv.unionByName(fpNew),
-          fpsDir(path), "_fb", fbs,
-          Seq(col("_fb"), col("_fp"), col("doc_id")))
+          .unionByName(newV.filter(col("q_keep"))
+            .select(col("_fp"), col("doc_id"))
+            .withColumn("_fb", IndexStore.idBucket(col("_fp"), nB))
+            .filter(col("_fb").isin(fbs: _*)))
         // ---- keeper diff → dedup-index maintenance
-        val newKeepers = IndexStore.readBuckets(spark, fpsDir(path),
-            "_fb", fbs)
-          .filter(col("_fb").isin(fbs: _*))
+        val newKeepers = mergedFps
           .join(affFps, Seq("_fp"), "left_semi")
           .groupBy(col("_fp")).agg(min(col("doc_id")).as("new_k"))
         val diff = pin(oldKeepers.join(newKeepers, Seq("_fp"),
-          "full_outer").localCheckpoint());
-        {
-          // keeper churn is decided at the ID level, not per fp slot:
-          // a changed doc whose old fp group vanished and whose new
-          // fp group promotes the SAME id is still a keeper — a
-          // per-slot diff would list it as both retired and promoted,
-          // and the dedup tier's tombstone rule would then ERASE it
-          // (deletions beat upserts for the same id)
-          val oldSet = diff.filter(col("old_k").isNotNull)
-            .select(col("old_k").as("doc_id")).distinct()
-          val newSet = diff.filter(col("new_k").isNotNull)
-            .select(col("new_k").as("doc_id")).distinct()
-          val retired = oldSet.join(newSet, Seq("doc_id"), "left_anti")
-            .collect().map(_.getLong(0)).toSeq
-          // newly-minted keepers, PLUS standing keepers whose doc
-          // content changed in this batch (same keeper id, new bands)
-          val promoted = newSet.join(oldSet, Seq("doc_id"), "left_anti")
-          val touched = newSet.join(cids, Seq("doc_id"), "left_semi")
-          val upsertIds = pin(promoted.unionByName(touched).distinct()
+          "full_outer").localCheckpoint())
+        // keeper churn is decided at the ID level, not per fp slot:
+        // a changed doc whose old fp group vanished and whose new
+        // fp group promotes the SAME id is still a keeper — a
+        // per-slot diff would list it as both retired and promoted,
+        // and the dedup tier's tombstone rule would then ERASE it
+        // (deletions beat upserts for the same id)
+        val oldSet = diff.filter(col("old_k").isNotNull)
+          .select(col("old_k").as("doc_id")).distinct()
+        val newSet = diff.filter(col("new_k").isNotNull)
+          .select(col("new_k").as("doc_id")).distinct()
+        val retired = oldSet.join(newSet, Seq("doc_id"), "left_anti")
+          .collect().map(_.getLong(0)).toSeq
+        // newly-minted keepers, PLUS standing keepers whose doc
+        // content changed in this batch (same keeper id, new bands)
+        val promoted = newSet.join(oldSet, Seq("doc_id"), "left_anti")
+        val touched = newSet.join(cids, Seq("doc_id"), "left_semi")
+        val upsertIds = pin(promoted.unionByName(touched).distinct()
+          .localCheckpoint())
+        val nUp = upsertIds.count()
+        if (nUp > 0 || retired.nonEmpty) {
+          val ubs = upsertIds
+            .withColumn("_b", IndexStore.idBucket(col("doc_id"), nB))
+            .select(col("_b")).distinct().collect().map(_.getInt(0))
+            .toSeq
+          // the keepers' texts after the batch; checkpointed again at
+          // the operator boundary: everything DedupIndex.upsert builds
+          // references this relation many times over
+          val upsertDocs = pin(IndexStore.readBuckets(spark,
+              docsDir(path), "_b", ubs)
+            .filter(col("_b").isin(ubs: _*))
+            .join(cids, Seq("doc_id"), "left_anti")
+            .select(col("doc_id"), col("text"))
+            .unionByName(newV.select(col("doc_id"), col("text")))
+            .join(upsertIds, Seq("doc_id"), "left_semi")
             .localCheckpoint())
-          val nUp = upsertIds.count()
-          if (nUp > 0 || retired.nonEmpty) {
-            val ubs = upsertIds
-              .withColumn("_b", IndexStore.idBucket(col("doc_id"), nB))
-              .select(col("_b")).distinct().collect().map(_.getInt(0))
-              .toSeq
-            // checkpoint again at the operator boundary: everything
-            // DedupIndex.upsert builds references this relation many
-            // times over
-            val upsertDocs = pin(IndexStore.readBuckets(spark,
-                docsDir(path), "_b", ubs)
-              .filter(col("_b").isin(ubs: _*))
-              .join(upsertIds, Seq("doc_id"), "left_semi")
-              .select(col("doc_id"), col("text"))
-              .localCheckpoint())
-            DedupIndex.upsert(spark, dedupDir(path), upsertDocs,
-              col("doc_id"), col("text"), deletedIds = retired,
-              newSeq = newSeq)
-          }
-          nUp + retired.size
+          DedupIndex.upsert(spark, dedupDir(path), upsertDocs,
+            col("doc_id"), col("text"), deletedIds = retired,
+            newSeq = newSeq)
         }
+        (nUp + retired.size, Some(Write.sorted(fpsDir(path), "_fb", fbs,
+          mergedFps, Seq(col("_fb"), col("_fp"), col("doc_id")))))
       }
-      if (newSeq >= 0)
-        IndexStore.writeMeta(spark, path,
-          IndexStore.readMeta(spark, path).copy(updateSeq = newSeq))
+      IndexStore.commitBatch(spark, path, docsW +: fpsW.toSeq,
+        Option.when(newSeq >= 0)(meta.copy(updateSeq = newSeq)))
       dedupWork
-    } finally {
-      newV.unpersist(); cids.unpersist()
-      pins.foreach(_.unpersist())
-    }
+    } finally pins.foreach(_.unpersist())
   }
 
   /** Serve the release from the MAINTAINED state: reconstruct the

@@ -394,6 +394,12 @@ object Replication {
 
   private def dataDir(path: String) = s"$path/data"
 
+  /** The rewrite of the `bs` buckets of a target's `data/` with `out`. */
+  private def dataWrite(path: String, bs: Seq[Int],
+                        out: DataFrame): IndexStore.Write =
+    IndexStore.Write.sorted(dataDir(path), "_b", bs, out,
+      Seq(col("_b"), col("id"), col("rev_pos"), col("rev_hash")))
+
   private def normL(df: DataFrame, i: Column, p: Column, h: Column,
                     d: Column, a: Column): DataFrame =
     df.select(i.as("id"), p.cast("long").as("rev_pos"),
@@ -531,6 +537,7 @@ object Replication {
               else spark.sessionState.conf.numShufflePartitions).as("_b"))
           .distinct().collect().map(_.getInt(0)).toSeq.sorted
       }
+      IndexStore.finishSwap(spark, path)
       val meta = IndexStore.readMeta(spark, path)
       val bs = ids.select(IndexStore.idBucket(col("id"), meta.buckets)
           .as("_b")).distinct().collect().map(_.getInt(0)).toSeq.sorted
@@ -597,10 +604,8 @@ object Replication {
         // stamp — the documented idempotent retry would otherwise
         // delta from the wrong base and serve wrong counts forever
         IndexStore.writeMeta(spark, path, meta.copy(countsSeq = -1L))
-        IndexStore.writeSwap(spark, IndexStore.fsFor(spark, path), out,
-          dataDir(path), "_b", bs,
-          Seq(col("_b"), col("id"), col("rev_pos"), col("rev_hash")))
-        IndexStore.writeMeta(spark, path, newMeta)
+        IndexStore.commitBatch(spark, path, Seq(dataWrite(path, bs, out)),
+          Some(newMeta))
       } finally out.unpersist()
       bs
     } finally ids.unpersist()
@@ -657,6 +662,7 @@ object Replication {
         .distinct().collect().map(_.getInt(0)).toSeq.sorted
       return BulkDocsStoreResult(rep, bs)
     }
+    IndexStore.finishSwap(spark, path)
     val meta = IndexStore.readMeta(spark, path)
     val ids = writes.select(wId.as("id")).distinct().persist()
     try {
@@ -693,10 +699,8 @@ object Replication {
         // between swap and final meta falls back to the scan, never
         // deltas from a base that no longer matches the data
         IndexStore.writeMeta(spark, path, meta.copy(countsSeq = -1L))
-        IndexStore.writeSwap(spark, IndexStore.fsFor(spark, path), out,
-          dataDir(path), "_b", bs,
-          Seq(col("_b"), col("id"), col("rev_pos"), col("rev_hash")))
-        IndexStore.writeMeta(spark, path, newMeta)
+        IndexStore.commitBatch(spark, path, Seq(dataWrite(path, bs, out)),
+          Some(newMeta))
       } finally out.unpersist()
       BulkDocsStoreResult(rep, bs)
     } finally ids.unpersist()
@@ -734,15 +738,7 @@ object Replication {
       .write.partitionBy("_b").parquet(dataDir(tmp))
     IndexStore.writeMeta(spark, tmp, meta.copy(buckets = n2))
     carrySidecars(spark, fs, path, tmp, rebucketLocalTo = Some(n2))
-    val old = new Path(path + "._old")
-    fs.delete(old, true)
-    if (!fs.rename(new Path(path), old))
-      throw new java.io.IOException(
-        s"reshard: could not move live target aside ($path)")
-    if (!fs.rename(new Path(tmp), new Path(path)))
-      throw new java.io.IOException(
-        s"reshard: swap failed — old target preserved at $old, new at $tmp")
-    fs.delete(old, true)
+    IndexStore.replaceStore(spark, path, tmp, "reshard")
     n2
   }
 
@@ -1025,6 +1021,7 @@ object Replication {
   def purgeTarget(spark: SparkSession, path: String, requests: DataFrame,
                   reqId: Column, reqPos: Column, reqHash: Column,
                   newSeq: Long = -1L): Seq[Int] = {
+    IndexStore.finishSwap(spark, path)
     val meta = IndexStore.readMeta(spark, path)
     val req = requests.select(reqId.as("id"),
       reqPos.cast("long").as("rev_pos"),
@@ -1071,19 +1068,19 @@ object Replication {
             out.drop("_b"), seqF)
         // stamp-invalidate before the swap (see syncBatch)
         IndexStore.writeMeta(spark, path, meta.copy(countsSeq = -1L))
-        IndexStore.writeSwap(spark, IndexStore.fsFor(spark, path), out,
-          dataDir(path), "_b", bs,
-          Seq(col("_b"), col("id"), col("rev_pos"), col("rev_hash")))
-        // purge log BEFORE the meta stamp: a crash in between leaves an
-        // orphan _pq dir the retried purge overwrites (mode overwrite);
-        // catch-ups only read dirs at-or-below the stamped purge_seq
+        // the purge log's `_pq` entry commits with the data and the meta
+        // stamp; catch-ups only read dirs at-or-below the stamped
+        // purge_seq
         val pq = meta.purgeSeq + 1
-        req.join(present, Seq("id"), "left_semi")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$path/purges/_pq=$pq")
-        IndexStore.writeMeta(spark, path, newMeta.copy(purgeSeq = pq))
-      } finally out.unpersist()
-      present.unpersist()
+        IndexStore.commitBatch(spark, path, Seq(dataWrite(path, bs, out),
+          IndexStore.Write(s"$path/purges", Seq("_pq"), Seq(s"_pq=$pq"),
+            req.join(present, Seq("id"), "left_semi")
+              .withColumn("_pq", lit(pq)).coalesce(1))),
+          Some(newMeta.copy(purgeSeq = pq)))
+      } finally {
+        out.unpersist()
+        present.unpersist()
+      }
       bs
     } finally req.unpersist()
   }
@@ -1254,15 +1251,7 @@ object Replication {
       .write.partitionBy("_b").parquet(dataDir(tmp))
     IndexStore.writeMeta(spark, tmp, meta)
     carrySidecars(spark, fs, path, tmp, rebucketLocalTo = None)
-    val old = new Path(path + "._old")
-    fs.delete(old, true)
-    if (!fs.rename(new Path(path), old))
-      throw new java.io.IOException(
-        s"compact: could not move live target aside ($path)")
-    if (!fs.rename(new Path(tmp), new Path(path)))
-      throw new java.io.IOException(
-        s"compact: swap failed — old target preserved at $old, new at $tmp")
-    fs.delete(old, true)
+    IndexStore.replaceStore(spark, path, tmp, "compact")
   }
 
   /** Conflict REPAIR over a persisted target — the documented CouchDB
@@ -1472,8 +1461,7 @@ object Replication {
         // superseded by the live meta just read, so drop it first
         if (fs.exists(half) && !fs.delete(half, true))
           throw new IOException(s"destroy: could not drop stale $half")
-        if (!fs.rename(p, half))
-          throw new IOException(s"destroy rename failed: $p -> $half")
+        IndexStore.move(fs, p, half, s"destroy rename failed: $p -> $half")
         s
       } else if (already.isDefined) already.get
       else if (fs.exists(half)) // crashed between rename and breadcrumb
@@ -1484,8 +1472,7 @@ object Replication {
       val tmp = new Path(path + ".__tombstone")
       val out = fs.create(tmp, true)
       try out.write(s"v1\n$seq".getBytes("UTF-8")) finally out.close()
-      if (!fs.rename(tmp, p))
-        throw new IOException(s"breadcrumb rename failed: $tmp -> $p")
+      IndexStore.move(fs, tmp, p, s"breadcrumb rename failed: $tmp -> $p")
     }
     fs.delete(half, true)
     seq
@@ -1563,6 +1550,7 @@ object Replication {
                       delete: Column): Seq[Int] = {
     require(targetExists(spark, path),
       s"localDocsUpsert: no store at $path (create the target first)")
+    IndexStore.finishSwap(spark, path)
     val meta = IndexStore.readMeta(spark, path)
     val w = writes.select(id.cast("string").as("id"),
       body.cast("string").as("_nb"),
@@ -1595,9 +1583,8 @@ object Replication {
         col("_nb").as("body"))
     val out = untouched.unionByName(upserted)
       .withColumn("_lb", IndexStore.idBucket(col("id"), meta.buckets))
-    fs.mkdirs(new Path(localDir(path)))
-    IndexStore.writeSwap(spark, fs, out, localDir(path), "_lb", bs,
-      Seq(col("_lb"), col("id")))
+    IndexStore.commitBatch(spark, path, Seq(IndexStore.Write.sorted(
+      localDir(path), "_lb", bs, out, Seq(col("_lb"), col("id")))), None)
     bs
   }
 

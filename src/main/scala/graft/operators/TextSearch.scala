@@ -295,8 +295,8 @@ object TextSearch {
     val st = posts.groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
       .agg(count(lit(1)).as("n"),
         coalesce(sum(col("dl")), lit(0L)).as("sum_dl")).head()
-    writeStats(spark, path, st.getLong(0), st.getLong(1), nBuckets,
-      analyzer)
+    statsDf(spark, st.getLong(0), st.getLong(1), nBuckets, analyzer)
+      .coalesce(1).write.mode("overwrite").parquet(path + "/stats")
     IndexStore.writeMeta(spark, path, IndexMeta(seq, nBuckets, Nil))
   }
 
@@ -348,9 +348,8 @@ object TextSearch {
     * serves the identical average a fresh build would. Carries the
     * analyzer identity (`an_lc`, `an_stem`, sorted `an_stop`) so
     * serve-time term normalization always matches the build. */
-  private def writeStats(spark: SparkSession, path: String, n: Long,
-                         sumDl: Long, nBuckets: Int,
-                         an: Analyzer): Unit = {
+  private def statsDf(spark: SparkSession, n: Long, sumDl: Long,
+                      nBuckets: Int, an: Analyzer): DataFrame = {
     import spark.implicits._
     Seq((n, sumDl)).toDF("n", "sum_dl")
       .select(col("n"), col("sum_dl"),
@@ -358,7 +357,25 @@ object TextSearch {
         lit(nBuckets).as("n_buckets"), lit(FormatVersion).as("fmt"),
         lit(an.lowercase).as("an_lc"), lit(an.stem).as("an_stem"),
         typedLit(an.sortedStop).as("an_stop"))
-      .coalesce(1).write.mode("overwrite").parquet(path + "/stats")
+  }
+
+  /** `changedDocs` without the tombstoned ids' rows. */
+  private def liveDocs(changedDocs: DataFrame, id: Column,
+                       deletedIds: Seq[Long]): DataFrame =
+    if (deletedIds.isEmpty) changedDocs
+    // coalesce: three-valued logic would DROP null-id rows here while
+    // the deletedIds-empty branch keeps them; null ids never match a
+    // tombstone (the IndexStore.minusDeleted anti-join contract)
+    else changedDocs.filter(
+      coalesce(!id.cast("long").isin(deletedIds: _*), lit(true)))
+
+  /** Every changed or tombstoned doc id, as one `doc_id` column. */
+  private def changedIds(spark: SparkSession, changedDocs: DataFrame,
+                         id: Column, deletedIds: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    val cids = changedDocs.select(id.cast("long").as("doc_id")).distinct()
+    (if (deletedIds.isEmpty) cids
+     else cids.unionByName(deletedIds.toDF("doc_id"))).distinct()
   }
 
   /** Incremental maintenance of a [[buildTextIndex]] index — the same
@@ -377,96 +394,107 @@ object TextSearch {
                      changedDocs: DataFrame, id: Column, text: Column,
                      deletedIds: Seq[Long] = Nil,
                      newSeq: Long = -1L): Seq[Int] = {
-    import spark.implicits._
     import graft.view.IndexStore
-    val fs = IndexStore.fsFor(spark, path)
-    val meta = IndexStore.readMeta(spark, path)
+    IndexStore.finishSwap(spark, path)
     val st = IndexStore.readSmall(spark, path + "/stats", StatsRows).head
     val nB = st.getAs[Int]("n_buckets")
     // changed docs tokenize under the STORED analyzer — a maintained
     // index must stay homogeneous with its build
     val an = analyzerFromRow(st)
-    val live =
-      if (deletedIds.isEmpty) changedDocs
-      // coalesce: three-valued logic would DROP null-id rows here while
-      // the deletedIds-empty branch keeps them; null ids never match a
-      // tombstone (the IndexStore.minusDeleted anti-join contract)
-      else changedDocs.filter(
-        coalesce(!id.cast("long").isin(deletedIds: _*), lit(true)))
-    val newTf = termFreqs(live, id, text, an)
-      .withColumn("_tb", termBucket(col("term"), nB)).persist()
-    val cids0 = changedDocs.select(id.cast("long").as("doc_id")).distinct()
-    val cids = (if (deletedIds.isEmpty) cids0
-                else cids0.unionByName(deletedIds.toDF("doc_id")))
-      .distinct().persist()
+    upsertTerms(spark, path,
+      termFreqs(liveDocs(changedDocs, id, deletedIds), id, text, an),
+      changedIds(spark, changedDocs, id, deletedIds), nB, Nil, newSeq) {
+      (rem, add) =>
+        // exact integer deltas: a changed doc is removed with its old
+        // dl from the sidecar and re-added with its new one
+        statsDf(spark, st.getAs[Long]("n") - rem("")._1 + add("")._1,
+          st.getAs[Long]("sum_dl") - rem("")._2 + add("")._2, nB, an)
+    }
+  }
+
+  /** The one upsert of the global and fielded text stores. `newTf` are
+    * the changed docs' term-frequency rows and `cids` every changed or
+    * tombstoned `doc_id`; `fields` names the field column of a fielded
+    * store (none for a global one). The old rows are located through
+    * the sidecar, and every rewrite is computed from the store as it
+    * stands: the affected term buckets' postings, their dfs aggregated
+    * from the same merged postings, the changed ids' sidecar buckets,
+    * and the stats table that `stats` builds from the removed and added
+    * per-field `(n, sum_dl)` (keyed `""` without fields). All of them
+    * and the new update_seq go live in one
+    * [[graft.view.IndexStore.commitBatch]]. */
+  private def upsertTerms(spark: SparkSession, path: String,
+                          newTf0: DataFrame, cids0: DataFrame, nB: Int,
+                          fields: Seq[String], newSeq: Long)(
+      stats: (Map[String, (Long, Long)], Map[String, (Long, Long)]) =>
+        DataFrame): Seq[Int] = {
+    import graft.view.IndexStore
+    import IndexStore.Write
+    val meta = IndexStore.readMeta(spark, path)
+    val fcols = fields.map(col)
+    val newTf = newTf0.withColumn("_tb", termBucket(col("term"), nB)).persist()
+    val cids = cids0.persist()
+    var merged: DataFrame = null
     try {
-      val ibs = cids
-        .withColumn("_ib", IndexStore.idBucket(col("doc_id"), nB))
-        .select(col("_ib")).distinct().collect().map(_.getInt(0)).toSeq
-      val oldSide = IndexStore.readBuckets(spark, path + "/ids", "_ib", ibs)
+      val ibs = IndexStore.bucketsOf(
+        cids.select(IndexStore.idBucket(col("doc_id"), nB)))
+      def oldIds = IndexStore.readBuckets(spark, path + "/ids", "_ib", ibs)
         .filter(col("_ib").isin(ibs: _*))
-        .join(cids, Seq("doc_id"), "left_semi").persist()
-      // ONE aggregation per side yields both the touched term buckets
-      // and the exact integer stat deltas (dl is constant per doc, so
-      // per-doc max(dl) == the old distinct-pair count/sum) — the
-      // previous four separate jobs were pure per-micro-batch scheduler
-      // overhead (guide §1.2). Pinned BEFORE any swap: oldSide's
-      // lineage reads the pre-swap sidecar, and a cached partition
-      // lost after the ids/ swap would recompute against the
-      // already-merged sidecar and corrupt n/sum_dl silently.
-      def tbsAndDelta(df: DataFrame): (Seq[Int], Long, Long) = {
-        val r = df.groupBy(col("doc_id"))
+      // ONE aggregation per side yields the touched term buckets and the
+      // exact per-field integer stat deltas (dl is constant per (doc,
+      // field), so per-pair max(dl) == the old distinct-row count/sum)
+      def tbsAndDeltas(df: DataFrame): (Seq[Int], Map[String, (Long, Long)]) = {
+        val rows = df.groupBy(col("doc_id") +: fcols: _*)
           .agg(max(col("dl")).as("dl"), collect_set(col("_tb")).as("_tbs"))
-          .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)),
-            flatten(collect_list(col("_tbs"))))
-          .head()
-        (r.getSeq[Int](2).distinct, r.getLong(0), r.getLong(1))
+          .groupBy(fcols: _*)
+          .agg(count(lit(1)).as("_n"),
+            coalesce(sum(col("dl")), lit(0L)).as("_sd"),
+            flatten(collect_list(col("_tbs"))).as("_alltbs"))
+          .collect()
+        (rows.flatMap(r => r.getSeq[Int](r.fieldIndex("_alltbs")))
+          .distinct.toSeq,
+          rows.map(r => (if (fields.isEmpty) "" else r.getString(0)) ->
+            (r.getAs[Long]("_n"), r.getAs[Long]("_sd"))).toMap)
       }
-      val (oldTbs, remN, remSd) = tbsAndDelta(oldSide)
-      val (newTbs, addN, addSd) = tbsAndDelta(newTf)
+      val (oldTbs, rem) =
+        tbsAndDeltas(oldIds.join(cids, Seq("doc_id"), "left_semi"))
+      val (newTbs, add) = tbsAndDeltas(newTf)
       val affected = (oldTbs ++ newTbs).distinct.sorted
-      if (affected.nonEmpty) {
-        val survivors = IndexStore.readBuckets(spark, path + "/postings",
-            "_tb", affected)
+      val writes = if (affected.isEmpty) Nil else {
+        val cols = (col("doc_id") +: fcols) ++
+          Seq("term", "tf", "dl", "pos", "_tb").map(col)
+        val sortCols = Seq(col("_tb"), col("term")) ++ fcols
+        // the affected buckets' merged postings, pinned once and placed
+        // by bucket: the postings write and the df aggregation both
+        // read them without another exchange
+        merged = IndexStore.readBuckets(spark, path + "/postings", "_tb",
+            affected)
           .filter(col("_tb").isin(affected: _*))
-          .join(cids, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("term"), col("tf"), col("dl"),
-            col("pos"), col("_tb"))
-        IndexStore.writeSwap(spark, fs,
-          survivors.unionByName(newTf
-            .select(col("doc_id"), col("term"), col("tf"), col("dl"),
-              col("pos"), col("_tb"))),
-          path + "/postings", "_tb", affected,
-          Seq(col("_tb"), col("term")))
-        // dfs re-derived from the rewritten buckets only
-        IndexStore.writeSwap(spark, fs,
-          IndexStore.readBuckets(spark, path + "/postings", "_tb", affected)
-            .filter(col("_tb").isin(affected: _*))
-            .groupBy(col("_tb"), col("term")).agg(count(lit(1)).as("df")),
-          path + "/terms", "_tb", affected, Seq(col("_tb"), col("term")))
-        val sideSurvivors = IndexStore.readBuckets(spark, path + "/ids",
-            "_ib", ibs)
-          .filter(col("_ib").isin(ibs: _*))
-          .join(cids, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("_tb"), col("dl"), col("_ib"))
-        IndexStore.writeSwap(spark, fs,
-          sideSurvivors.unionByName(
-            newTf.select(col("doc_id"), col("_tb"), col("dl")).distinct()
-              .withColumn("_ib", IndexStore.idBucket(col("doc_id"), nB))),
-          path + "/ids", "_ib", ibs, Seq(col("_ib"), col("doc_id")))
+          .join(cids, Seq("doc_id"), "left_anti").select(cols: _*)
+          .unionByName(newTf.select(cols: _*))
+          .repartition(affected.size, col("_tb"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val idCols = (col("doc_id") +: fcols) :+ col("_tb") :+ col("dl")
+        Seq(
+          Write(path + "/postings", "_tb", affected,
+            merged.sortWithinPartitions(sortCols: _*)),
+          Write(path + "/terms", "_tb", affected,
+            merged.groupBy((col("_tb") +: fcols) :+ col("term"): _*)
+              .agg(count(lit(1)).as("df"))
+              .sortWithinPartitions(sortCols: _*)),
+          Write.sorted(path + "/ids", "_ib", ibs,
+            oldIds.join(cids, Seq("doc_id"), "left_anti")
+              .select(idCols :+ col("_ib"): _*)
+              .unionByName(newTf.select(idCols: _*).distinct()
+                .withColumn("_ib", IndexStore.idBucket(col("doc_id"), nB))),
+            Seq(col("_ib"), col("doc_id"))),
+          Write.whole(path + "/stats", stats(rem, add)))
       }
-      // exact integer deltas to the corpus stats: a changed doc is
-      // first removed (old dl from the sidecar) then re-added (new dl);
-      // rem/add were computed before the swaps above
-      writeStats(spark, path,
-        st.getAs[Long]("n") - remN + addN,
-        st.getAs[Long]("sum_dl") - remSd + addSd, nB,
-        an)
-      oldSide.unpersist()
-      val seq = if (newSeq >= 0) newSeq else meta.updateSeq + 1
-      IndexStore.writeMeta(spark, path, meta.copy(updateSeq = seq))
+      IndexStore.commitBatch(spark, path, writes, Some(meta.copy(
+        updateSeq = if (newSeq >= 0) newSeq else meta.updateSeq + 1)))
       affected
     } finally {
+      if (merged != null) merged.unpersist()
       newTf.unpersist()
       cids.unpersist()
     }
@@ -696,15 +724,10 @@ object TextSearch {
       .repartition(col("_p"))
       .sortWithinPartitions(col("doc_id"))
       .write.mode("overwrite").partitionBy("_p").parquet(path + "/ids")
-    posts.select(col("_p"), col("doc_id"), col("dl")).distinct()
-      .groupBy(col("_p"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-      .select(col("_p"), col("n"), col("sum_dl"),
-        (col("sum_dl").cast("double") / col("n")).as("avgdl"),
-        lit(nBuckets).as("n_buckets"), lit(FormatVersion).as("fmt"),
-        lit(an.lowercase).as("an_lc"), lit(an.stem).as("an_stem"),
-        typedLit(an.sortedStop).as("an_stop"))
+    partStats(posts.select(col("_p"), col("doc_id"), col("dl")).distinct()
+        .groupBy(col("_p"))
+        .agg(count(lit(1)).as("n"),
+          coalesce(sum(col("dl")), lit(0L)).as("sum_dl")), nBuckets, an)
       .repartition(col("_p"))
       .write.mode("overwrite").partitionBy("_p").parquet(path + "/stats")
     IndexStore.writeMeta(spark, path, IndexMeta(seq, nBuckets, Nil))
@@ -720,60 +743,15 @@ object TextSearch {
       .headOption.exists(p =>
         stamped(statsRows(spark, p.toString, StatsRows), FormatVersion))
 
-  /** Rename-swap the given `(_p, _tb)` pair directories of a
-    * two-level hive layout — the [[graft.view.IndexStore]] writeSwap
-    * discipline extended one level down: rows land in a temp tree,
-    * then ONLY the affected pair dirs rename into place (untouched
-    * pairs keep their bytes), and the temp tree drops. */
-  private def swapPairDirs(spark: SparkSession,
-                           fs: org.apache.hadoop.fs.FileSystem,
-                           df: DataFrame, destDir: String,
-                           affected: Seq[(String, Int)],
-                           sortCols: Seq[Column]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = destDir + "._tmp"
-    fs.delete(new Path(tmp), true)
-    df.repartition(math.max(affected.size, 1), col("_p"), col("_tb"))
-      .sortWithinPartitions(sortCols: _*)
-      .write.mode("overwrite").partitionBy("_p", "_tb").parquet(tmp)
-    affected.foreach { case (p, b) =>
-      val dst = new Path(s"$destDir/_p=$p/_tb=$b")
-      val src = new Path(s"$tmp/_p=$p/_tb=$b")
-      fs.mkdirs(dst.getParent)
-      if (fs.exists(dst) && !fs.delete(dst, true))
-        throw new java.io.IOException(s"pair swap: cannot drop $dst")
-      if (fs.exists(src) && !fs.rename(src, dst))
-        throw new java.io.IOException(
-          s"pair swap failed ($src -> $dst); rerun the update")
-    }
-    fs.delete(new Path(tmp), true)
-  }
-
-  /** One-level variant for string-valued `_p` directories (the ids
-    * sidecar and per-partition stats). */
-  private def swapPartDirs(spark: SparkSession,
-                           fs: org.apache.hadoop.fs.FileSystem,
-                           df: DataFrame, destDir: String,
-                           parts: Seq[String],
-                           sortCols: Seq[Column]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = destDir + "._tmp"
-    fs.delete(new Path(tmp), true)
-    df.repartition(math.max(parts.size, 1), col("_p"))
-      .sortWithinPartitions(sortCols: _*)
-      .write.mode("overwrite").partitionBy("_p").parquet(tmp)
-    parts.foreach { p =>
-      val dst = new Path(s"$destDir/_p=$p")
-      val src = new Path(s"$tmp/_p=$p")
-      fs.mkdirs(dst.getParent)
-      if (fs.exists(dst) && !fs.delete(dst, true))
-        throw new java.io.IOException(s"part swap: cannot drop $dst")
-      if (fs.exists(src) && !fs.rename(src, dst))
-        throw new java.io.IOException(
-          s"part swap failed ($src -> $dst); rerun the update")
-    }
-    fs.delete(new Path(tmp), true)
-  }
+  /** Per-partition stats rows from `(_p, n, sum_dl)` rows: the
+    * build's and the upsert's one stats layout. */
+  private def partStats(rows: DataFrame, nBuckets: Int,
+                        an: Analyzer): DataFrame =
+    rows.select(col("_p"), col("n"), col("sum_dl"),
+      (col("sum_dl").cast("double") / col("n")).as("avgdl"),
+      lit(nBuckets).as("n_buckets"), lit(FormatVersion).as("fmt"),
+      lit(an.lowercase).as("an_lc"), lit(an.stem).as("an_stem"),
+      typedLit(an.sortedStop).as("an_stop"))
 
   /** Incremental maintenance of a [[buildPartitionedTextIndex]]
     * index — the E7b upsert discipline in the `_p` layout, with the
@@ -786,7 +764,9 @@ object TextSearch {
     * term buckets), never the index. Per-pair dfs re-aggregate for
     * exactly those pairs, and each affected partition's stats adjust
     * by exact integer deltas, so a maintained partition serves
-    * bit-identical partition-local BM25 to a fresh rebuild.
+    * bit-identical partition-local BM25 to a fresh rebuild. Every
+    * rewrite is computed from the store as it stands and goes live in
+    * one [[graft.view.IndexStore.commitBatch]].
     * `deletedIds` retire docs. Returns the affected partitions. */
   def upsertPartitionedTextDocs(spark: SparkSession, path: String,
                                 changedDocs: DataFrame, id: Column,
@@ -794,13 +774,16 @@ object TextSearch {
                                 deletedIds: Seq[String] = Nil,
                                 newSeq: Long = -1L): Seq[String] = {
     import graft.view.{IndexStore, PartitionedStore}
+    import IndexStore.{Write, leaf, readLeaves}
+    import org.apache.spark.sql.types.{IntegerType, StringType}
     import spark.implicits._
-    val fs = IndexStore.fsFor(spark, path)
-    val stAll = spark.read.parquet(path + "/stats")
-    require(stAll.columns.contains("_p"),
+    IndexStore.finishSwap(spark, path)
+    val statDirs = IndexStore.partDirs(spark, path + "/stats", "_p")
+    require(statDirs.nonEmpty,
       s"$path is a GLOBAL text index — use upsertTextDocs")
-    val st0 = stAll.head() // the analyzer is index-wide (build stamps
-                           // the same one on every partition row)
+    // the analyzer is index-wide (build stamps the same one on every
+    // partition row)
+    val st0 = IndexStore.readSmall(spark, statDirs.head.toString, StatsRows).head
     require(st0.getAs[Int]("fmt") == FormatVersion,
       s"partitioned text index at $path needs rebuild (fmt)")
     val an = analyzerFromRow(st0)
@@ -828,109 +811,88 @@ object TextSearch {
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"),
         sort_array(collect_list(col("_pp"))).as("pos"))
       .withColumn("_tb", termBucket(col("term"), nB))
-      .localCheckpoint()
+      .persist()
     val cids = (changedDocs.select(id.cast("string").as("doc_id"))
         .distinct() unionByName deletedIds.toDF("doc_id"))
-      .distinct().localCheckpoint()
-    // intermediate checkpoints are released on exit — leaked blocks
-    // crowd the unified memory region over a long-lived session
-    // (guide §5); see the releaseDelta pin discipline
-    val pins = scala.collection.mutable.ListBuffer[DataFrame](newTf, cids)
-    def pin(df: DataFrame): DataFrame = { pins += df; df }
+      .distinct().persist()
+    var merged: DataFrame = null
     try {
-    val parts = cids
-      .select(PartitionedStore.partitionOf(col("doc_id")).as("_p"))
-      .distinct().collect().map(_.getString(0)).toSeq.sorted
-    if (parts.isEmpty) return Nil
-    // old side from the sidecar — pruned to the affected partitions,
-    // pinned pre-swap (its lineage reads dirs about to rename)
-    val oldSide = pin(spark.read.parquet(path + "/ids")
-      .filter(col("_p").isin(parts: _*))
-      .join(cids, Seq("doc_id"), "left_semi")
-      .localCheckpoint())
-    val affected = (oldSide.select(col("_p"), col("_tb"))
-        unionByName newTf.select(col("_p"), col("_tb")))
-      .distinct().collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSeq
-      .sortBy(pb => (pb._1, pb._2))
-    if (affected.nonEmpty) {
-      val affParts = affected.map(_._1).distinct
-      val affTbs = affected.map(_._2).distinct
-      val pairKeys = affected.map { case (p, b) => s"$p:$b" }
-      def pairPruned(sub: String) = spark.read.parquet(s"$path/$sub")
-        .filter(col("_p").isin(affParts: _*) &&
-          col("_tb").isin(affTbs: _*) &&
-          concat(col("_p"), lit(":"), col("_tb").cast("string"))
-            .isin(pairKeys: _*))
-      val survivors = pairPruned("postings")
-        .join(cids, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("term"), col("tf"), col("dl"),
-          col("pos"), col("_p"), col("_tb"))
-      val merged = pin(survivors.unionByName(newTf
-          .select(col("doc_id"), col("term"), col("tf"), col("dl"),
-            col("pos"), col("_p"), col("_tb")))
-        .localCheckpoint()) // pin: terms re-agg below reads post-swap
-      swapPairDirs(spark, fs, merged, path + "/postings", affected,
-        Seq(col("_p"), col("_tb"), col("term")))
-      swapPairDirs(spark, fs,
-        merged.groupBy(col("_p"), col("_tb"), col("term"))
-          .agg(count(lit(1)).as("df"))
-          .select(col("term"), col("df"), col("_p"), col("_tb")),
-        path + "/terms", affected,
-        Seq(col("_p"), col("_tb"), col("term")))
-      // ids sidecar: affected partitions' rows minus changed, plus new
-      val idsSurv = spark.read.parquet(path + "/ids")
-        .filter(col("_p").isin(parts: _*))
-        .join(cids, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("_tb"), col("dl"), col("_p"))
-      val idsNew = newTf
-        .select(col("doc_id"), col("_tb"), col("dl"), col("_p"))
-        .distinct()
-      // exact integer stat deltas, pinned pre-swap
-      val rem = oldSide.select(col("_p"), col("doc_id"), col("dl"))
-        .distinct().groupBy(col("_p"))
-        .agg(count(lit(1)).as("rn"),
-          coalesce(sum(col("dl")), lit(0L)).as("rdl"))
-      val add = newTf.select(col("_p"), col("doc_id"), col("dl"))
-        .distinct().groupBy(col("_p"))
-        .agg(count(lit(1)).as("an"),
-          coalesce(sum(col("dl")), lit(0L)).as("adl"))
-      val newStats = stAll.filter(col("_p").isin(parts: _*))
-        .join(rem, Seq("_p"), "left").join(add, Seq("_p"), "left")
-        .select(
-          (col("n") - coalesce(col("rn"), lit(0L)) +
-            coalesce(col("an"), lit(0L))).as("n"),
-          (col("sum_dl") - coalesce(col("rdl"), lit(0L)) +
-            coalesce(col("adl"), lit(0L))).as("sum_dl"),
-          col("n_buckets"), col("fmt"), col("an_lc"), col("an_stem"),
-          col("an_stop"), col("_p"))
-        .unionByName(
-          // a partition seen for the FIRST time in this batch
-          add.join(stAll.select(col("_p")), Seq("_p"), "left_anti")
-            .select(col("an").as("n"), col("adl").as("sum_dl"),
-              lit(nB).as("n_buckets"), lit(FormatVersion).as("fmt"),
-              lit(an.lowercase).as("an_lc"),
-              lit(an.stem).as("an_stem"),
-              typedLit(an.sortedStop).as("an_stop"), col("_p")))
-        .withColumn("avgdl",
-          col("sum_dl").cast("double") / col("n"))
-        .select(col("n"), col("sum_dl"), col("avgdl"),
-          col("n_buckets"), col("fmt"), col("an_lc"), col("an_stem"),
-          col("an_stop"), col("_p"))
-        .localCheckpoint() // pinned before the ids/stats swaps
-      pin(newStats)
-      swapPartDirs(spark, fs, idsSurv.unionByName(idsNew),
-        path + "/ids", parts, Seq(col("_p"), col("doc_id")))
-      val statsParts = (parts ++ newStats.select(col("_p"))
-        .collect().map(_.getString(0))).distinct.sorted
-      swapPartDirs(spark, fs, newStats, path + "/stats", statsParts,
-        Seq(col("_p")))
+      val parts = cids
+        .select(PartitionedStore.partitionOf(col("doc_id")).as("_p"))
+        .distinct().collect().map(_.getString(0)).toSeq.sorted
+      if (parts.isEmpty) return Nil
+      val partLeaves = parts.map(p => leaf("_p" -> p))
+      val byPart = Seq("_p" -> StringType)
+      // ONE aggregation per side yields each partition's touched term
+      // buckets and its exact integer stat deltas (dl is constant per doc)
+      def tbsAndDeltas(df: DataFrame): Map[String, (Long, Long, Seq[Int])] =
+        df.groupBy(col("_p"), col("doc_id"))
+          .agg(max(col("dl")).as("dl"), collect_set(col("_tb")).as("_tbs"))
+          .groupBy(col("_p"))
+          .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)),
+            flatten(collect_list(col("_tbs"))))
+          .collect().map(r => r.getString(0) ->
+            (r.getLong(1), r.getLong(2), r.getSeq[Int](3))).toMap
+      val rem = tbsAndDeltas(readLeaves(spark, path + "/ids", byPart,
+        partLeaves).join(cids, Seq("doc_id"), "left_semi"))
+      val add = tbsAndDeltas(newTf)
+      val affected = (rem.toSeq ++ add.toSeq)
+        .flatMap { case (p, (_, _, tbs)) => tbs.map(p -> _) }
+        .distinct.sorted
+      val writes = if (affected.isEmpty) Nil else {
+        val pairLeaves = affected.map { case (p, b) =>
+          leaf("_p" -> p, "_tb" -> b) }
+        val cols = Seq("doc_id", "term", "tf", "dl", "pos", "_p", "_tb")
+          .map(col)
+        val sortCols = Seq(col("_p"), col("_tb"), col("term"))
+        // read by both the postings and the df writes
+        merged = readLeaves(spark, path + "/postings",
+            byPart :+ ("_tb" -> IntegerType), pairLeaves)
+          .join(cids, Seq("doc_id"), "left_anti").select(cols: _*)
+          .unionByName(newTf.select(cols: _*))
+          .repartition(affected.size, col("_p"), col("_tb"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val idCols = Seq("doc_id", "_tb", "dl", "_p").map(col)
+        // each touched partition's stats row from its stored one and the
+        // exact deltas; a partition seen for the FIRST time starts at 0
+        val statParts = (parts ++ add.keys).distinct.sorted
+        val newStats = statParts.flatMap { p =>
+          val old = statDirs.find(_.getName == leaf("_p" -> p))
+            .map(d => IndexStore.readSmall(spark, d.toString, StatsRows).head)
+          Option.when(old.nonEmpty || add.contains(p)) {
+            val (rn, rs, _) = rem.getOrElse(p, (0L, 0L, Nil))
+            val (dn, ds, _) = add.getOrElse(p, (0L, 0L, Nil))
+            (p, old.fold(0L)(_.getAs[Long]("n")) - rn + dn,
+              old.fold(0L)(_.getAs[Long]("sum_dl")) - rs + ds)
+          }
+        }
+        Seq(
+          Write(path + "/postings", Seq("_p", "_tb"), pairLeaves,
+            merged.sortWithinPartitions(sortCols: _*)),
+          Write(path + "/terms", Seq("_p", "_tb"), pairLeaves,
+            merged.groupBy(col("_p"), col("_tb"), col("term"))
+              .agg(count(lit(1)).as("df"))
+              .select(col("term"), col("df"), col("_p"), col("_tb"))
+              .sortWithinPartitions(sortCols: _*)),
+          Write.sorted(path + "/ids", Seq("_p"), partLeaves,
+            readLeaves(spark, path + "/ids", byPart, partLeaves)
+              .join(cids, Seq("doc_id"), "left_anti").select(idCols: _*)
+              .unionByName(newTf.select(idCols: _*).distinct()),
+            Seq(col("_p"), col("doc_id"))),
+          Write.sorted(path + "/stats", Seq("_p"),
+            statParts.map(p => leaf("_p" -> p)),
+            partStats(newStats.toDF("_p", "n", "sum_dl"), nB, an),
+            Seq(col("_p"))))
+      }
+      IndexStore.commitBatch(spark, path, writes,
+        Option.when(newSeq >= 0)(
+          IndexStore.readMeta(spark, path).copy(updateSeq = newSeq)))
+      parts
+    } finally {
+      if (merged != null) merged.unpersist()
+      newTf.unpersist()
+      cids.unpersist()
     }
-    if (newSeq >= 0)
-      IndexStore.writeMeta(spark, path,
-        IndexStore.readMeta(spark, path).copy(updateSeq = newSeq))
-    parts
-    } finally pins.foreach(_.unpersist())
   }
 
   /** Partition-scoped top-k BM25 from a [[buildPartitionedTextIndex]]
@@ -1892,11 +1854,12 @@ object TextSearch {
       .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2))).toMap
-    writeFieldedStats(spark, path,
+    fieldedStatsDf(spark,
       fields.zipWithIndex.map { case ((nm, _, w), i) =>
         val (n, sd) = fst.getOrElse(nm, (0L, 0L))
         (nm, i, w, n, sd, anOf(nm))
       }, nBuckets)
+      .coalesce(1).write.mode("overwrite").parquet(path + "/stats")
     IndexStore.writeMeta(spark, path, IndexMeta(seq, nBuckets, Nil))
   }
 
@@ -1905,10 +1868,10 @@ object TextSearch {
     * double division (driver-side guard: ANSI division would throw on
     * an all-empty field), so a maintained index serves the identical
     * averages a fresh build would. */
-  private def writeFieldedStats(spark: SparkSession, path: String,
-                                rows: Seq[(String, Int, Double, Long,
-                                  Long, Analyzer)],
-                                nBuckets: Int): Unit = {
+  private def fieldedStatsDf(spark: SparkSession,
+                             rows: Seq[(String, Int, Double, Long,
+                               Long, Analyzer)],
+                             nBuckets: Int): DataFrame = {
     import spark.implicits._
     rows.map { case (nm, i, w, n, sd, an) =>
       (nm, i, w, n, sd, if (n > 0) sd.toDouble / n else 0.0,
@@ -1919,7 +1882,6 @@ object TextSearch {
         col("sum_dl"), col("avgdl"),
         lit(nBuckets).as("n_buckets"), lit(FieldedFormatVersion).as("fmt"),
         col("an_lc"), col("an_stem"), col("an_stop"))
-      .coalesce(1).write.mode("overwrite").parquet(path + "/stats")
   }
 
   /** Incremental maintenance of a [[buildFieldedTextIndex]] index —
@@ -1938,11 +1900,7 @@ object TextSearch {
                         changedFields: Seq[(String, Column)],
                         deletedIds: Seq[Long] = Nil,
                         newSeq: Long = -1L): Seq[Int] = {
-    import spark.implicits._
-    import graft.view.IndexStore
-    import org.apache.spark.sql.functions.{count => fcount}
-    val fs = IndexStore.fsFor(spark, path)
-    val meta = IndexStore.readMeta(spark, path)
+    graft.view.IndexStore.finishSwap(spark, path)
     val stRows = fieldedStatRows(spark, path)
     val nB = stRows.head.getAs[Int]("n_buckets")
     // perfield: each field tokenizes under ITS stamped analyzer
@@ -1952,98 +1910,21 @@ object TextSearch {
     require(changedFields.map(_._1) == stored,
       s"changed fields ${changedFields.map(_._1)} must match the " +
         s"stored field map $stored (in build order)")
-    val live =
-      if (deletedIds.isEmpty) changedDocs
-      // coalesce: three-valued logic would DROP null-id rows here while
-      // the deletedIds-empty branch keeps them; null ids never match a
-      // tombstone (the IndexStore.minusDeleted anti-join contract)
-      else changedDocs.filter(
-        coalesce(!id.cast("long").isin(deletedIds: _*), lit(true)))
-    val newTf = changedFields.map { case (nm, c) =>
-      termFreqs(live, id, c, anByField(nm)).withColumn("field", lit(nm))
-    }.reduce(_ unionByName _)
-      .withColumn("_tb", termBucket(col("term"), nB)).persist()
-    val cids0 = changedDocs.select(id.cast("long").as("doc_id")).distinct()
-    val cids = (if (deletedIds.isEmpty) cids0
-                else cids0.unionByName(deletedIds.toDF("doc_id")))
-      .distinct().persist()
-    try {
-      val ibs = cids
-        .withColumn("_ib", IndexStore.idBucket(col("doc_id"), nB))
-        .select(col("_ib")).distinct().collect().map(_.getInt(0)).toSeq
-      val oldSide = IndexStore.readBuckets(spark, path + "/ids", "_ib", ibs)
-        .filter(col("_ib").isin(ibs: _*))
-        .join(cids, Seq("doc_id"), "left_semi").persist()
-      // ONE aggregation per side yields the touched term buckets AND
-      // the per-FIELD exact integer stat deltas (dl is constant per
-      // (doc, field), so per-pair max(dl) == the old distinct-row
-      // count/sum) — four separate jobs per micro-batch fused to two
-      // (guide §1.2). Pinned before any swap (the same lost-cache
-      // hazard as upsertTextDocs).
-      def tbsAndFieldDeltas(df: DataFrame)
-          : (Seq[Int], Map[String, (Long, Long)]) = {
-        val rows = df.groupBy(col("doc_id"), col("field"))
-          .agg(max(col("dl")).as("dl"), collect_set(col("_tb")).as("_tbs"))
-          .groupBy(col("field"))
-          .agg(fcount(lit(1)).as("_n"),
-            coalesce(sum(col("dl")), lit(0L)).as("_sd"),
-            flatten(collect_list(col("_tbs"))).as("_alltbs"))
-          .collect()
-        (rows.flatMap(_.getSeq[Int](3)).distinct.toSeq,
-          rows.map(r => r.getString(0) ->
-            (r.getLong(1), r.getLong(2))).toMap)
-      }
-      val (oldTbs, rem) = tbsAndFieldDeltas(oldSide)
-      val (newTbs, add) = tbsAndFieldDeltas(newTf)
-      val affected = (oldTbs ++ newTbs).distinct.sorted
-      if (affected.nonEmpty) {
-        val cols = Seq("doc_id", "field", "term", "tf", "dl", "pos", "_tb")
-          .map(col)
-        val survivors = IndexStore.readBuckets(spark, path + "/postings",
-            "_tb", affected)
-          .filter(col("_tb").isin(affected: _*))
-          .join(cids, Seq("doc_id"), "left_anti")
-          .select(cols: _*)
-        IndexStore.writeSwap(spark, fs,
-          survivors.unionByName(newTf.select(cols: _*)),
-          path + "/postings", "_tb", affected,
-          Seq(col("_tb"), col("term"), col("field")))
-        IndexStore.writeSwap(spark, fs,
-          IndexStore.readBuckets(spark, path + "/postings", "_tb", affected)
-            .filter(col("_tb").isin(affected: _*))
-            .groupBy(col("_tb"), col("field"), col("term"))
-            .agg(fcount(lit(1)).as("df")),
-          path + "/terms", "_tb", affected,
-          Seq(col("_tb"), col("term"), col("field")))
-        val sideSurvivors = IndexStore.readBuckets(spark, path + "/ids",
-            "_ib", ibs)
-          .filter(col("_ib").isin(ibs: _*))
-          .join(cids, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("field"), col("_tb"), col("dl"),
-            col("_ib"))
-        IndexStore.writeSwap(spark, fs,
-          sideSurvivors.unionByName(
-            newTf.select(col("doc_id"), col("field"), col("_tb"),
-              col("dl")).distinct()
-              .withColumn("_ib", IndexStore.idBucket(col("doc_id"), nB))),
-          path + "/ids", "_ib", ibs, Seq(col("_ib"), col("doc_id")))
-      }
-      writeFieldedStats(spark, path,
-        stRows.map { r =>
-          val f = r.getAs[String]("field")
-          val (rn, rs) = rem.getOrElse(f, (0L, 0L))
-          val (dn, ds) = add.getOrElse(f, (0L, 0L))
-          (f, r.getAs[Int]("ord"), r.getAs[Double]("weight"),
-            r.getAs[Long]("n") - rn + dn,
-            r.getAs[Long]("sum_dl") - rs + ds, anByField(f))
-        }.toSeq, nB)
-      oldSide.unpersist()
-      val seq = if (newSeq >= 0) newSeq else meta.updateSeq + 1
-      IndexStore.writeMeta(spark, path, meta.copy(updateSeq = seq))
-      affected
-    } finally {
-      newTf.unpersist()
-      cids.unpersist()
+    val live = liveDocs(changedDocs, id, deletedIds)
+    upsertTerms(spark, path,
+      changedFields.map { case (nm, c) =>
+        termFreqs(live, id, c, anByField(nm)).withColumn("field", lit(nm))
+      }.reduce(_ unionByName _),
+      changedIds(spark, changedDocs, id, deletedIds), nB, Seq("field"),
+      newSeq) { (rem, add) =>
+      fieldedStatsDf(spark, stRows.map { r =>
+        val f = r.getAs[String]("field")
+        val (rn, rs) = rem.getOrElse(f, (0L, 0L))
+        val (dn, ds) = add.getOrElse(f, (0L, 0L))
+        (f, r.getAs[Int]("ord"), r.getAs[Double]("weight"),
+          r.getAs[Long]("n") - rn + dn,
+          r.getAs[Long]("sum_dl") - rs + ds, anByField(f))
+      }.toSeq, nB)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.view
 
 import java.io.{FileNotFoundException, IOException}
+import java.net.{URLDecoder, URLEncoder}
 import java.util.concurrent.CompletionException
 
 import scala.jdk.CollectionConverters._
@@ -10,10 +11,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Index metadata persisted alongside the data: the change-feed sequence
@@ -88,27 +90,36 @@ final case class IndexMeta(updateSeq: Long, buckets: Int,
   * (directory-level partition pruning) plus a binary `_ck` range pushed
   * to parquet (row-group min/max pruning within the bucket).
   *
-  * One [[merge]] batch writes all, then swaps:
-  *  1. data, sidecar and reduced buckets are written concurrently to
-  *     `data._tmp`, `ids._tmp` and `reduced._tmp`; if any write fails,
-  *     the temp dirs are deleted and nothing on the live side changes;
-  *  2. `_graft_swap` records the affected and written buckets of each
+  * Every bucketed graft store commits a batch through one record —
+  * views, Mango indexes and the vector tiers through [[merge]], and the
+  * text, SimHash, dedup-cluster, release-state, replication and
+  * partitioned stores through [[commitBatch]]; no other code renames or
+  * drops a bucket directory. One batch writes all, then swaps:
+  *  1. every rewritten directory is written concurrently to its
+  *     `<dir>._tmp` (a [[Write]] names the leaves it replaces: integer
+  *     buckets, escaped string partitions, two-level `_p=…/_tb=…`
+  *     pairs, or the whole table); if any write fails, the temp dirs
+  *     are deleted and nothing on the live side changes;
+  *  2. `_graft_swap` records the affected and written leaves of each
   *     directory and the batch's new meta, with a closing `end` line;
-  *  3. the buckets are swapped in by rename in the fixed order data →
-  *     ids → reduced, then `_graft_meta` (update_seq and the reduced
-  *     group count together) is written and `_graft_swap` dropped.
+  *  3. the leaves are swapped in by rename in record order (for a view
+  *     data → ids → reduced), then `_graft_meta` is written and
+  *     `_graft_swap` dropped.
   *
   * A replay after a crash at any point converges. Before step 2 is
   * complete the live directories and meta are the pre-state, and the
   * replay rebuilds the temp dirs from scratch. Once it is complete the
-  * next merge (or [[compact]]) first rolls the record forward: a bucket
-  * whose temp dir still exists is swapped, a written bucket without
-  * one was swapped already, an affected bucket that received no rows
-  * is dropped — each step is idempotent, so a crash inside the roll
-  * forward is rolled forward again — and the recorded meta is written.
+  * store's next batch (or [[compact]]) first rolls the record forward
+  * ([[finishSwap]]): a leaf whose temp dir still exists is swapped, a
+  * written leaf without one was swapped already, an affected leaf that
+  * received no rows is dropped — each step is idempotent, so a crash
+  * inside the roll forward is rolled forward again — and the recorded
+  * meta is written. Every rewrite of a batch is computed from the
+  * store as it stands before the commit, so no step reads a directory
+  * an earlier step of the same batch replaced. A store that feeds a
+  * nested store (the release state's dedup tier) commits after it.
   * Data goes before ids so that the sidecar, until it is swapped
-  * itself, still names every bucket the changed docs' old rows were in:
-  * a replay of the batch reaches the same buckets as the first run.
+  * itself, still names every bucket the changed docs' old rows were in.
   *
   * Every store is created by one writer, [[writeStore]]: [[create]]
   * range-buckets view rows into it, and the persisted vector tiers
@@ -226,6 +237,31 @@ object IndexStore {
     if (all.isEmpty) spark.read.parquet(dir) // loud, as before
     else spark.read.schema(storeSchema(spark, fs, dir, part, all, all))
       .parquet(dir)
+  }
+
+  /** Open the `leaves` of a store whose partition columns are `parts`
+    * ([[leaf]] names a leaf; absent ones are skipped) with the job-free
+    * schema of [[readWhere]]: one footer gives the data schema, and each
+    * partition column takes its given type. With no leaf present it
+    * opens an empty frame of the store's schema. */
+  private[graft] def readLeaves(spark: SparkSession, dir: String,
+                                parts: Seq[(String, DataType)],
+                                leaves: Seq[String]): DataFrame = {
+    val fs = fsFor(spark, dir)
+    val hit = leaves.distinct.map(l => new Path(s"$dir/$l")).filter(fs.exists)
+    def firstFile(ds: Iterator[Path]) =
+      dataFiles(fs, ds.map(0L -> _).toSeq).nextOption()
+    val file = firstFile(hit.iterator)
+      .orElse(firstFile(leavesOf(fs, dir, parts.map(_._1)).iterator
+        .map(l => new Path(s"$dir/$l"))))
+      .getOrElse(throw new IOException(s"$dir holds no data file"))
+    val schema = parts.foldLeft(
+        Bridge.footerSchema(spark, file, footer(fs, file))) {
+      case (s, (p, t)) => s.add(StructField(p, t)) }
+    if (hit.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).option("basePath", dir)
+      .parquet(hit.map(_.toString): _*)
   }
 
   /** The row schema of a store opened over the bucket dirs `read`,
@@ -524,7 +560,7 @@ object IndexStore {
         kept + footerRows(fs, w.dir + "._tmp", "_kb", isAffected)
       }
       commit(spark, path, writes.zip(written),
-        meta.copy(updateSeq = newSeq, reducedGroups = groups))
+        Some(meta.copy(updateSeq = newSeq, reducedGroups = groups)))
       affected
     } finally {
       if (merged != null) merged.unpersist()
@@ -539,6 +575,13 @@ object IndexStore {
   private def bucketPairs(df: DataFrame): Set[(Int, Int)] =
     df.rdd.mapPartitions(_.map(r => (r.getInt(0), r.getInt(1))).toSet.iterator)
       .collect().toSet
+
+  /** The distinct int values of `df`'s one column, sorted: deduplicated
+    * inside each partition before the collect, so one job and no
+    * shuffle, and the driver receives at most partitions × values. */
+  private[graft] def bucketsOf(df: DataFrame): Seq[Int] =
+    df.rdd.mapPartitions(_.map(_.getInt(0)).toSet.iterator)
+      .collect().distinct.sorted.toSeq
 
   /** Purge-propagation primitive for every IndexStore-layout secondary
     * index (materialized views, Mango JSON indexes, IVF-family ANN
@@ -577,46 +620,51 @@ object IndexStore {
     affected
   }
 
-  /** Rebuild the `affected` partition directories of `destDir` from
-    * `df`: write to a temp dir, then swap each affected directory by
-    * rename ([[writeTmp]] + [[swapIn]]). */
-  private[graft] def writeSwap(spark: SparkSession, fs: FileSystem,
-                              df: DataFrame,
-                              destDir: String, pcol: String,
-                              affected: Seq[Int],
-                              sortCols: Seq[Column]): Unit = {
-    val written = writeTmp(fs, df.repartition(math.max(affected.size, 1),
-      col(pcol)).sortWithinPartitions(sortCols: _*), destDir, pcol)
-    swapIn(fs, destDir, pcol, affected, written)
-  }
-
-  /** Write `df`, partitioned by `pcol`, to `destDir._tmp`; returns the
-    * buckets that received rows. */
+  /** Write `df`, partitioned by `parts`, to `destDir._tmp`; returns the
+    * leaves that received rows. */
   private def writeTmp(fs: FileSystem, df: DataFrame, destDir: String,
-                       pcol: String): Set[Int] = {
-    val tmp = new Path(destDir + "._tmp")
-    fs.delete(tmp, true)
-    df.write.mode("overwrite").partitionBy(pcol).parquet(tmp.toString)
-    bucketDirs(fs, tmp.toString, pcol).map(_._1.toInt).toSet
+                       parts: Seq[String]): Set[String] = {
+    val tmp = destDir + "._tmp"
+    fs.delete(new Path(tmp), true)
+    df.write.mode("overwrite").partitionBy(parts: _*).parquet(tmp)
+    leavesOf(fs, tmp, parts)
   }
 
-  /** Swap the `affected` buckets of `destDir` in from `destDir._tmp`,
-    * each by rename; an affected bucket that has no rows left
-    * (`written` lacks it) is deleted — a dynamic-partition overwrite
-    * would silently leave its stale directory behind. A bucket in
-    * `written` whose temp directory is gone was swapped in before, so
-    * re-running a swap is a no-op for it. Rename/delete failures throw
-    * — a failed swap must never pass silently. */
-  private def swapIn(fs: FileSystem, destDir: String, pcol: String,
-                     affected: Seq[Int], written: Set[Int]): Unit = {
+  /** The leaf directories of `dir` for the partition columns `parts`,
+    * as paths relative to `dir` (`_kb=3`, `_p=acme/_tb=5`); a present
+    * `dir` without partition columns is its own one leaf, `""`. */
+  private def leavesOf(fs: FileSystem, dir: String,
+                       parts: Seq[String]): Set[String] =
+    if (!fs.exists(new Path(dir))) Set.empty
+    else parts.foldLeft(Seq("")) { (ls, p) =>
+      ls.flatMap(l => partDirs(fs, s"$dir/$l", p)
+        .map(d => if (l.isEmpty) d.getName else s"$l/${d.getName}"))
+    }.toSet
+
+  /** The leaf path of one partition, named as Spark's writer names it:
+    * `leaf("_p" -> "a b", "_tb" -> 5)` is `_p=a%20b/_tb=5`. */
+  private[graft] def leaf(kvs: (String, Any)*): String =
+    kvs.map { case (k, v) =>
+      ExternalCatalogUtils.getPartitionPathString(k, String.valueOf(v))
+    }.mkString("/")
+
+  /** Swap the `affected` leaves of `destDir` in from `destDir._tmp`,
+    * each by rename; an affected leaf that has no rows left (`written`
+    * lacks it) is deleted — a dynamic-partition overwrite would
+    * silently leave its stale directory behind. A leaf in `written`
+    * whose temp directory is gone was swapped in before, so re-running
+    * a swap is a no-op for it. Rename/delete failures throw — a failed
+    * swap must never pass silently. */
+  private def swapIn(fs: FileSystem, destDir: String, affected: Seq[String],
+                     written: Set[String]): Unit = {
     val tmp = destDir + "._tmp"
-    affected.foreach { b =>
-      val dst = new Path(s"$destDir/$pcol=$b")
-      val src = new Path(s"$tmp/$pcol=$b")
+    def under(dir: String, l: String) = new Path(if (l.isEmpty) dir else s"$dir/$l")
+    affected.foreach { l =>
+      val (dst, src) = (under(destDir, l), under(tmp, l))
       val fresh = fs.exists(src)
-      if ((fresh || !written(b)) && fs.exists(dst) && !fs.delete(dst, true))
+      if ((fresh || !written(l)) && fs.exists(dst) && !fs.delete(dst, true))
         throw new IOException(s"index update: could not drop stale bucket $dst")
-      if (fresh && !fs.rename(src, dst))
+      if (fresh && !(fs.mkdirs(dst.getParent) && fs.rename(src, dst)))
         throw new IOException(
           s"index update: bucket swap failed ($src -> $dst); rerun the update")
     }
@@ -624,19 +672,44 @@ object IndexStore {
   }
 
   /** One directory's rewrite in a batch: `rows` (already partitioned
-    * for the write) replace the `buckets` of `dir`. */
-  private final case class Write(dir: String, pcol: String,
-                                 buckets: Seq[Int], rows: DataFrame)
+    * for the write) replace the `leaves` of `dir` ([[leaf]] names
+    * them). A write without partition columns replaces `dir` whole. */
+  private[graft] final case class Write(dir: String, parts: Seq[String],
+                                        leaves: Seq[String], rows: DataFrame)
+
+  private[graft] object Write {
+    /** Rows that replace the integer `buckets` of `dir`. */
+    def apply(dir: String, pcol: String, buckets: Seq[Int],
+              rows: DataFrame): Write =
+      Write(dir, Seq(pcol), buckets.map(b => s"$pcol=$b"), rows)
+
+    /** `df` hash-placed by `pcol` into one task per bucket and sorted by
+      * `sortCols`, replacing the `buckets` of `dir`. */
+    def sorted(dir: String, pcol: String, buckets: Seq[Int], df: DataFrame,
+               sortCols: Seq[Column]): Write =
+      Write(dir, pcol, buckets, df.repartition(math.max(buckets.size, 1),
+        col(pcol)).sortWithinPartitions(sortCols: _*))
+
+    /** [[sorted]] over named leaves of the partition columns `parts`. */
+    def sorted(dir: String, parts: Seq[String], leaves: Seq[String],
+               df: DataFrame, sortCols: Seq[Column]): Write =
+      Write(dir, parts, leaves, df.repartition(math.max(leaves.size, 1),
+        parts.map(col): _*).sortWithinPartitions(sortCols: _*))
+
+    /** One file of `df` replacing the table at `dir` whole. */
+    def whole(dir: String, df: DataFrame): Write =
+      Write(dir, Nil, Seq(""), df.coalesce(1))
+  }
 
   /** Run the temp writes of one batch concurrently — the first on the
     * calling thread, the others on writer threads that carry its
     * session and local properties — and join them all. Returns each
-    * write's written buckets; if any write failed, every temp dir is
+    * write's written leaves; if any write failed, every temp dir is
     * deleted and the first failure is thrown with the others attached
     * as suppressed. */
   private def writeAll(spark: SparkSession, fs: FileSystem,
-                       writes: Seq[Write]): Seq[Set[Int]] = {
-    def run(w: Write) = writeTmp(fs, w.rows, w.dir, w.pcol)
+                       writes: Seq[Write]): Seq[Set[String]] = {
+    def run(w: Write) = writeTmp(fs, w.rows, w.dir, w.parts)
     val others = writes.tail.map(w => Bridge.async(spark)(run(w)))
     val first = try Right(run(writes.head)) catch { case e: Throwable => Left(e) }
     val results = first +: others.map(f =>
@@ -650,18 +723,37 @@ object IndexStore {
     results.collect { case Right(b) => b }
   }
 
+  /** Commit one batch of the store at `path`: the `writes` run
+    * concurrently to their temp dirs, then one `_graft_swap` record
+    * swaps them all in with the new `meta` (none: the meta stays), as
+    * [[merge]] does. A store that feeds a nested store commits after
+    * it. Call [[finishSwap]] before reading the store for the batch. */
+  private[graft] def commitBatch(spark: SparkSession, path: String,
+                                 writes: Seq[Write],
+                                 meta: Option[IndexMeta]): Unit =
+    if (writes.isEmpty) meta.foreach(writeMeta(spark, path, _))
+    else commit(spark, path,
+      writes.zip(writeAll(spark, fsFor(spark, path), writes)), meta)
+
   private def swapLog(path: String) = new Path(path, "_graft_swap")
 
   /** Make one batch's temp writes live: record each write's affected
-    * and written buckets plus the new meta in `_graft_swap`, apply the
-    * record, then drop it. */
+    * and written leaves plus the new meta in `_graft_swap`, apply the
+    * record, then drop it. A record line names a leaf by its partition
+    * values (`3`, `acme/5`, URL-encoded; `*` for a whole table). */
   private def commit(spark: SparkSession, path: String,
-                     writes: Seq[(Write, Set[Int])], meta: IndexMeta): Unit = {
+                     writes: Seq[(Write, Set[String])],
+                     meta: Option[IndexMeta]): Unit = {
     val fs = fsFor(spark, path)
+    def values(w: Write, ls: Seq[String]) = ls.map(l =>
+      if (w.parts.isEmpty) "*"
+      else URLEncoder.encode(l.split("/").map(s => s.drop(s.indexOf('=') + 1))
+        .mkString("/"), "UTF-8")).mkString(",")
     val text = writes.map { case (w, written) =>
-        s"swap=${w.dir.drop(path.length + 1)}|${w.pcol}|" +
-          s"${w.buckets.mkString(",")}|${written.toSeq.sorted.mkString(",")}\n"
-      }.mkString + metaText(spark, path, meta) + "end\n"
+        require(w.dir.startsWith(path + "/"), s"${w.dir} is outside $path")
+        s"swap=${w.dir.drop(path.length + 1)}|${w.parts.mkString("/")}|" +
+          s"${values(w, w.leaves)}|${values(w, w.leaves.filter(written))}\n"
+      }.mkString + meta.fold("")(metaText(spark, path, _)) + "end\n"
     writeText(fs, swapLog(path), text)
     applySwaps(fs, path, text)
     fs.delete(swapLog(path), false)
@@ -670,21 +762,25 @@ object IndexStore {
   private def applySwaps(fs: FileSystem, path: String, text: String): Unit = {
     val (swaps, metaLines) = text.linesIterator.filter(_ != "end").toSeq
       .partition(_.startsWith("swap="))
-    def ints(s: String) = s.split(",").filter(_.nonEmpty).map(_.toInt)
     swaps.foreach { l =>
-      val Array(dir, pcol, affected, written) = l.drop(5).split("\\|", -1)
-      swapIn(fs, s"$path/$dir", pcol, ints(affected).toSeq,
-        ints(written).toSet)
+      val Array(dir, pcols, affected, written) = l.drop(5).split("\\|", -1)
+      val parts = pcols.split("/").filter(_.nonEmpty).toSeq
+      def leaves(s: String) = s.split(",").filter(_.nonEmpty).toSeq.map(v =>
+        parts.zip(URLDecoder.decode(v, "UTF-8").split("/", -1))
+          .map { case (p, x) => s"$p=$x" }.mkString("/"))
+      swapIn(fs, s"$path/$dir", leaves(affected), leaves(written).toSet)
     }
-    writeText(fs, new Path(path, "_graft_meta"),
-      metaLines.mkString("", "\n", "\n"))
+    if (metaLines.nonEmpty)
+      writeText(fs, new Path(path, "_graft_meta"),
+        metaLines.mkString("", "\n", "\n"))
   }
 
   /** Roll forward a batch commit that a crash cut off after its swap
     * record was complete (every temp write had finished); a record
     * without its `end` line was cut off before any swap and is
-    * dropped. Returns true when a commit was rolled forward. */
-  private def finishSwap(spark: SparkSession, path: String): Boolean = {
+    * dropped. Every batch of a store calls this before it reads the
+    * store. Returns true when a commit was rolled forward. */
+  private[graft] def finishSwap(spark: SparkSession, path: String): Boolean = {
     val fs = fsFor(spark, path)
     if (!fs.exists(swapLog(path))) return false
     val text = readText(fs, swapLog(path))
@@ -718,13 +814,15 @@ object IndexStore {
       .map(f => footer(fs, f).getBlocks.asScala.map(_.getRowCount).sum).sum
 
   /** Per-bucket row counts — the skew diagnostic that tells an operator
-    * (or a maintenance policy) when to [[compact]]. Scans only the
-    * partition column, so the cost is footer metadata per file, not the
-    * data. */
-  def bucketStats(spark: SparkSession, path: String): Map[Int, Long] =
-    spark.read.parquet(dataDir(path))
-      .groupBy(col("_kb")).count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    * (or a maintenance policy) when to [[compact]]. Read from the
+    * Parquet footers on the driver: no Spark job, O(files). */
+  def bucketStats(spark: SparkSession, path: String): Map[Int, Long] = {
+    val fs = fsFor(spark, path)
+    bucketDirs(fs, dataDir(path), "_kb").map { d =>
+      d._1.toInt -> dataFiles(fs, Seq(d))
+        .map(f => footer(fs, f).getBlocks.asScala.map(_.getRowCount).sum).sum
+    }.filter(_._2 > 0).toMap
+  }
 
   /** Derive (or re-derive) the materialized reduced index from the
     * current raw data — used by [[graft.view.View.materializeReduced]]
@@ -782,19 +880,29 @@ object IndexStore {
     val rows = readStore(spark, dataDir(path), "_kb").drop("_kb")
     val tmp = path + "._compact"
     create(spark, tmp, rows, n, meta.updateSeq)
+    replaceStore(spark, path, tmp, "compact")
+  }
+
+  /** Replace the store at `path` whole with the one staged at `staged`,
+    * in two renames: a crash between them leaves the old store at
+    * `path._old`. */
+  private[graft] def replaceStore(spark: SparkSession, path: String,
+                                  staged: String, what: String): Unit = {
     val fs = fsFor(spark, path)
     val old = new Path(path + "._old")
     fs.delete(old, true)
-    if (!fs.rename(new Path(path), old))
-      throw new IOException(s"compact: could not move live index aside ($path)")
-    if (!fs.rename(new Path(tmp), new Path(path)))
-      throw new IOException(
-        s"compact: swap failed — old index preserved at $old, new at $tmp")
+    move(fs, new Path(path), old,
+      s"$what: could not move the live store aside ($path)")
+    move(fs, new Path(staged), new Path(path),
+      s"$what: swap failed — old store preserved at $old, new at $staged")
     fs.delete(old, true)
   }
 
-  /** Build a one-column `_id` DataFrame for literal deleted ids, typed
-    * like `idsLike`'s `_id` column. */
+  /** Rename `src` to `dst`, throwing `failure` when the rename fails. */
+  private[graft] def move(fs: FileSystem, src: Path, dst: Path,
+                            failure: => String): Unit =
+    if (!fs.rename(src, dst)) throw new IOException(failure)
+
   /** `changed` minus the rows whose id is in `deletedIds` — a batch
     * carrying BOTH an update and a tombstone for one id must let the
     * tombstone WIN (in feed order the delete is the later event);
@@ -811,6 +919,8 @@ object IndexStore {
         .toDF(idCol),
       Seq(idCol), "left_anti")
 
+  /** Build a one-column `_id` DataFrame for literal deleted ids, typed
+    * like `idsLike`'s `_id` column. */
   def idsDf(spark: SparkSession, idsLike: DataFrame,
             ids: Seq[Any]): DataFrame = {
     val schema = idsLike.select(col("_id")).schema

@@ -1,10 +1,9 @@
 package graft.view
 
-import java.io.IOException
-
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** PARTITIONED-DATABASE view storage — CouchDB 3.x partitioned
   * databases (`{"partitioned": true}`, SURVEY §1 addendum): every doc
@@ -35,7 +34,7 @@ import org.apache.spark.sql.functions._
   * partition is derivable from its id alone, so there is no by-id
   * sidecar — an incremental [[merge]] rewrites exactly the `_p`
   * directories holding changed docs (O(changed partitions) per batch),
-  * behind the same rename-swap crash discipline as [[IndexStore]].
+  * through the same one-record batch commit as [[IndexStore]].
   *
   * Global (cross-partition) queries remain legal — a plain read of
   * `data/` sees every partition, as CouchDB allows via global views in
@@ -111,58 +110,34 @@ object PartitionedStore {
     * `changedIds`: every changed or deleted doc id, a superset of
     * `newRows`' ids) with partition-local scope: only the `_p`
     * directories holding changed ids are read and rewritten, found by
-    * ARITHMETIC on the ids (no sidecar lookup). Idempotent; rename-swap
-    * per directory (crash leaves old-or-new, never truncated). Returns
-    * the rewritten partition keys. */
+    * ARITHMETIC on the ids (no sidecar lookup). Idempotent; the
+    * rewritten partitions and the new meta go live in one
+    * [[IndexStore.commitBatch]] (a crash leaves old-or-new, rolled
+    * forward by the next merge). Returns the rewritten partition keys. */
   def merge(spark: SparkSession, path: String, newRows0: DataFrame,
             changedIds: DataFrame, newSeq: Long): Seq[String] = {
+    IndexStore.finishSwap(spark, path)
     val meta = IndexStore.readMeta(spark, path)
-    val fs = IndexStore.fsFor(spark, path)
     val cids = changedIds.toDF("_id").distinct().persist()
     val newRows = newRows0.withColumn("_p", routedP(col("_id"))).persist()
     try {
       val parts = cids.select(routedP(col("_id")).as("_p")).distinct()
         .collect().map(_.getString(0)).toSeq.sorted
-      if (parts.nonEmpty) {
-        val merged = open(spark, path)
-          .filter(col("_p").isin(parts: _*))
+      val leaves = parts.map(p => IndexStore.leaf("_p" -> p))
+      val writes = Option.when(parts.nonEmpty)(IndexStore.Write.sorted(
+        dataDir(path), Seq("_p"), leaves,
+        IndexStore.readLeaves(spark, dataDir(path), Seq("_p" -> StringType),
+            leaves)
           .join(cids, Seq("_id"), "left_anti")
-          .unionByName(newRows)
-        writeSwap(spark, fs, merged, dataDir(path), parts)
-      }
-      IndexStore.writeMeta(spark, path, meta.copy(updateSeq = newSeq))
+          .unionByName(newRows),
+        Seq(col("_p"), col("_ck"), col("_id"))))
+      IndexStore.commitBatch(spark, path, writes.toSeq,
+        Some(meta.copy(updateSeq = newSeq)))
       parts
     } finally {
       cids.unpersist()
       newRows.unpersist()
     }
-  }
-
-  /** String-valued variant of [[IndexStore.writeSwap]]: partition
-    * values are arbitrary partition keys, so on-disk directory names go
-    * through Spark's own hive-path escaping — the rename targets must
-    * be byte-identical to what the writer produced. */
-  private def writeSwap(spark: SparkSession, fs: FileSystem, df: DataFrame,
-                        destDir: String, parts: Seq[String]): Unit = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val tmp = destDir + "._tmp"
-    fs.delete(new Path(tmp), true)
-    df.repartition(math.max(parts.size, 1), col("_p"))
-      .sortWithinPartitions(col("_p"), col("_ck"), col("_id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("_p").parquet(tmp)
-    parts.foreach { p =>
-      val leaf = "_p=" + ExternalCatalogUtils.escapePathName(p)
-      val dst = new Path(s"$destDir/$leaf")
-      val src = new Path(s"$tmp/$leaf")
-      if (fs.exists(dst) && !fs.delete(dst, true))
-        throw new IOException(
-          s"partitioned index update: could not drop stale partition $dst")
-      if (fs.exists(src) && !fs.rename(src, dst))
-        throw new IOException(
-          s"partitioned index update: swap failed ($src -> $dst); " +
-            "rerun the update")
-    }
-    fs.delete(new Path(tmp), true)
   }
 
   /** CouchDB's `GET /db/_partition/{p}` partition-info surface: per-

@@ -666,21 +666,42 @@ class IndexStoreSpec extends SparkSpecBase {
   }
 }
 
-/** The local filesystem with one injected crash: the first bucket
-  * rename out of a `<dir>._tmp` directory named by `crashAt` throws,
-  * as if the process died there. */
+/** The local filesystem with one injected crash: the first rename of a
+  * path below a `<dir>._tmp` directory named by `crashAt` (at any
+  * depth, outside a committer's `_temporary` tree), or the first delete
+  * of a path named `crashDelete`, throws, as if the process died there. */
 class CrashingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
   override def rename(src: org.apache.hadoop.fs.Path,
                       dst: org.apache.hadoop.fs.Path): Boolean = {
     val at = CrashingLocalFs.crashAt
-    if (at != null && src.getParent.getName == at) {
+    if (at != null && CrashingLocalFs.below(src, at)) {
       CrashingLocalFs.crashAt = null
       throw new java.io.IOException(s"injected crash renaming $src")
     }
     super.rename(src, dst)
   }
+
+  override def delete(p: org.apache.hadoop.fs.Path,
+                      recursive: Boolean): Boolean = {
+    val at = CrashingLocalFs.crashDelete
+    if (at != null && p.getName == at) {
+      CrashingLocalFs.crashDelete = null
+      throw new java.io.IOException(s"injected crash deleting $p")
+    }
+    super.delete(p, recursive)
+  }
 }
 
 object CrashingLocalFs {
   @volatile var crashAt: String = null
+  @volatile var crashDelete: String = null
+
+  /** True iff `src` lies below a directory named `at`, with no
+    * `_temporary` directory in between. */
+  def below(src: org.apache.hadoop.fs.Path, at: String): Boolean = {
+    val up = Iterator.iterate(src.getParent)(_.getParent)
+      .takeWhile(_ != null).map(_.getName).toSeq
+    val i = up.indexOf(at)
+    i >= 0 && !up.take(i).contains("_temporary")
+  }
 }
