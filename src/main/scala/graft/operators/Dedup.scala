@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.gfunctions.round4
 
@@ -203,7 +204,15 @@ object Dedup {
     * Returns `(doc_id, cluster_id)` for every doc appearing in a pair,
     * where `cluster_id` is the component's minimum doc id (the
     * conventional canonical representative). */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 25): DataFrame =
+    components(pairs, maxIters)
+      .select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
+
+  /** The `(id, lbl)` fixpoint of [[connectedComponents]]: a
+    * checkpointed frame the caller releases with `Bridge.release` once
+    * it is done with every frame derived from it. */
+  private[operators] def components(pairs: DataFrame,
+                                    maxIters: Int = 25): DataFrame = {
     val edges = pairs
       .select(col("doc_a").cast("long").as("src"),
         col("doc_b").cast("long").as("dst"))
@@ -214,26 +223,28 @@ object Dedup {
       .select(col("id"), col("id").as("lbl")).localCheckpoint()
     var it = 0
     var converged = false
-    while (!converged && it < maxIters) {
-      val nbrMin = sym
-        .join(labels.select(col("id").as("src"), col("lbl").as("_sl")), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("_sl")).as("_nl"))
-      val next = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lbl"), coalesce(col("_nl"), col("lbl"))).as("lbl"))
-        .localCheckpoint()
-      converged = next
-        .join(labels.select(col("id"), col("lbl").as("_old")), "id")
-        .filter(col("lbl") < col("_old")).isEmpty
-      labels.unpersist()
-      labels = next
-      it += 1
-    }
+    try {
+      while (!converged && it < maxIters) {
+        val nbrMin = sym
+          .join(labels.select(col("id").as("src"), col("lbl").as("_sl")), "src")
+          .groupBy(col("dst").as("id")).agg(min(col("_sl")).as("_nl"))
+        val next = labels.join(nbrMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("lbl"), coalesce(col("_nl"), col("lbl"))).as("lbl"))
+          .localCheckpoint()
+        converged = next
+          .join(labels.select(col("id"), col("lbl").as("_old")), "id")
+          .filter(col("lbl") < col("_old")).isEmpty
+        Bridge.release(labels)
+        labels = next
+        it += 1
+      }
+    } finally Bridge.release(sym)
+    if (!converged) Bridge.release(labels)
     require(converged,
       s"connectedComponents: no fixpoint after $maxIters rounds " +
         "(component diameter exceeds maxIters — raise it)")
-    sym.unpersist()
-    labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
+    labels
   }
 
   /** END-TO-END corpus dedup — the composed pipeline a training-data
@@ -275,15 +286,15 @@ object Dedup {
         case None => minhashCandidatePairs(keepers, col("doc_id"),
           col("_text"))
       }
-      val cc = connectedComponents(pairs)
-        .withColumnRenamed("doc_id", "_keeper")
-        .withColumnRenamed("cluster_id", "_rep")
-      exactMap.select(col("doc_id"), col("_keeper"))
-        .join(cc, Seq("_keeper"), "left")
+      val cc = components(pairs)
+      try exactMap.select(col("doc_id"), col("_keeper"))
+        .join(cc.select(col("id").as("_keeper"), col("lbl").as("_rep")),
+          Seq("_keeper"), "left")
         .select(col("doc_id"),
           coalesce(col("_rep"), col("_keeper")).as("kept_id"))
         .localCheckpoint()
-    } finally fp.unpersist()
+      finally Bridge.release(cc)
+    } finally Bridge.release(fp)
   }
 
   /** [[dedupCorpus]] with QUALITY-AWARE canonical selection — real
@@ -418,25 +429,22 @@ object Dedup {
   def upsertSimhashDocs(spark: SparkSession, path: String,
                         changedDocs: DataFrame, id: Column,
                         textCol: String, deletedIds: Seq[Long] = Nil,
-                        newSeq: Long = -1L): Seq[Int] = {
-    import spark.implicits._
+                        newSeq: Long = -1L): Seq[Int] =
+    upsertSimhashDocs(spark, path, graft.view.IndexStore.Delta(changedDocs,
+      id.cast("long"), deletedIds), id, textCol, newSeq)
+
+  private[graft] def upsertSimhashDocs(spark: SparkSession, path: String,
+                                       d: graft.view.IndexStore.Delta,
+                                       id: Column, textCol: String,
+                                       newSeq: Long): Seq[Int] = {
     import graft.view.IndexStore
     import IndexStore.Write
     IndexStore.finishSwap(spark, path)
     val meta = IndexStore.readMeta(spark, path)
     val nB = meta.buckets
-    val live =
-      if (deletedIds.isEmpty) changedDocs
-      // coalesce: three-valued logic would DROP null-id rows here while
-      // the deletedIds-empty branch keeps them; null ids never match a
-      // tombstone (the IndexStore.minusDeleted anti-join contract)
-      else changedDocs.filter(
-        coalesce(!id.cast("long").isin(deletedIds: _*), lit(true)))
-    val newRows = simhashBandRows(live, id, textCol, nB).persist()
-    val cids0 = changedDocs.select(id.cast("long").as("doc_id")).distinct()
-    val cids = (if (deletedIds.isEmpty) cids0
-                else cids0.unionByName(deletedIds.toDF("doc_id")))
-      .distinct().persist()
+    val newRows = simhashBandRows(d.live, id, textCol, nB).persist()
+    val cids = d.changedIds(id.cast("long")).toDF("doc_id").distinct()
+      .persist()
     try {
       val ibs = IndexStore.bucketsOf(
         cids.select(IndexStore.idBucket(col("doc_id"), nB)))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.view.{IndexMeta, IndexStore}
 
@@ -91,15 +92,14 @@ object DedupIndex {
           struct(a.as("doc_a"), b.as("doc_b")))))).as("_p"))
       .select(col("_p.doc_a"), col("_p.doc_b")).distinct()
 
-  /** Labels for every doc in `allIds`: component min where paired,
-    * self where singleton. */
-  private def labelsOf(allIds: DataFrame, pairs: DataFrame): DataFrame = {
-    val cc = Dedup.connectedComponents(pairs)
-      .withColumnRenamed("cluster_id", "_cl")
-    allIds.join(cc, Seq("doc_id"), "left")
+  /** Labels for every doc in `allIds` from the components `cc` of its
+    * pairs ([[Dedup.components]]): component min where paired, self
+    * where singleton. */
+  private def labelsOf(allIds: DataFrame, cc: DataFrame): DataFrame =
+    allIds.join(cc.select(col("id").as("doc_id"), col("lbl").as("_cl")),
+        Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("_cl"), col("doc_id")).as("cluster_id"))
-  }
 
   /** Composite members partition: cluster hash × member hash. A
     * cluster's rows span [[MemberSub]] sub-buckets, so a membership
@@ -147,8 +147,9 @@ object DedupIndex {
       .sortWithinPartitions(col("_ib"), col("doc_id"))
       .write.mode("overwrite").partitionBy("_ib").parquet(path + "/ids")
     val allIds = docs.select(id.cast("long").as("doc_id")).distinct()
-    writeLabelLayouts(spark, path,
-      labelsOf(allIds, pairsOf(stored, maxBucket)), nBuckets)
+    val cc = Dedup.components(pairsOf(stored, maxBucket))
+    try writeLabelLayouts(spark, path, labelsOf(allIds, cc), nBuckets)
+    finally Bridge.release(cc)
     import spark.implicits._
     Seq(FormatVersion).toDF("fmt").coalesce(1)
       .write.mode("overwrite").parquet(path + "/fmt")
@@ -185,30 +186,36 @@ object DedupIndex {
 
   /** Apply one change batch: re-hash `changedDocs`, rewrite their
     * old∪new band buckets, and re-cluster ONLY the affected membership
-    * (see the soundness note above). Returns the re-clustered doc
-    * count. */
+    * (see the soundness note above). A store of a stale layout is
+    * refused, naming its path. Returns the re-clustered doc count. */
   def upsert(spark: SparkSession, path: String, changedDocs: DataFrame,
              id: Column, text: Column, deletedIds: Seq[Long] = Nil,
              k: Int = 8, bands: Int = 4, maxBucket: Int = 1000,
-             newSeq: Long = -1L): Long = {
+             newSeq: Long = -1L): Long =
+    upsert(spark, path, IndexStore.Delta(changedDocs, id.cast("long"),
+      deletedIds), id, text, k, bands, maxBucket, newSeq)
+
+  private[graft] def upsert(spark: SparkSession, path: String,
+                            d: IndexStore.Delta, id: Column, text: Column,
+                            k: Int, bands: Int, maxBucket: Int,
+                            newSeq: Long): Long = {
     import spark.implicits._
     import IndexStore.Write
     IndexStore.finishSwap(spark, path)
+    if (!indexCurrent(spark, path))
+      throw IndexStore.staleLayout("dedup-cluster", path, FormatVersion,
+        "DedupIndex.build")
     val meta = IndexStore.readMeta(spark, path)
     val nB = meta.buckets
-    val live =
-      if (deletedIds.isEmpty) changedDocs
-      // coalesce: three-valued logic would DROP null-id rows here while
-      // the deletedIds-empty branch keeps them; null ids never match a
-      // tombstone (the IndexStore.minusDeleted anti-join contract)
-      else changedDocs.filter(
-        coalesce(!id.cast("long").isin(deletedIds: _*), lit(true)))
-    val newRows = bandRowsOf(live, id, text, k, bands, nB).persist()
-    val liveIds = changedDocs.select(id.cast("long").as("doc_id"))
+    val newRows = bandRowsOf(d.live, id, text, k, bands, nB).persist()
+    val liveIds = d.live.select(id.cast("long").as("doc_id"))
       .distinct().persist()
-    val cids = (if (deletedIds.isEmpty) liveIds
-                else liveIds.unionByName(deletedIds.toDF("doc_id")))
-      .distinct().persist()
+    val cids = d.changedIds(id.cast("long")).toDF("doc_id").distinct()
+      .persist()
+    // the tombstoned ids: the changed ids without a live row
+    val dels =
+      if (d.ids.isEmpty) liveIds.limit(0)
+      else cids.join(liveIds, Seq("doc_id"), "left_anti")
     val pins = scala.collection.mutable.ListBuffer[DataFrame](
       newRows, liveIds, cids)
     def pin(df: DataFrame): DataFrame = { pins += df; df.persist() }
@@ -264,9 +271,7 @@ object DedupIndex {
         .select(col("doc_id"))
       // M = surviving old members + live changed docs (deleted drop out)
       val m = pin(oldMembers.unionByName(liveIds).distinct()
-        .join(if (deletedIds.isEmpty) liveIds.limit(0)
-              else deletedIds.toDF("doc_id"),
-          Seq("doc_id"), "left_anti"))
+        .join(dels, Seq("doc_id"), "left_anti"))
       // ---- re-cluster M from its bands after the batch
       val mibs = buckets(m, IndexStore.idBucket(col("doc_id"), nB))
       val mbbs =
@@ -278,7 +283,9 @@ object DedupIndex {
           Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
         else pairsOf(merged("bands", "_bb", mbbs, newBands)
           .join(m, Seq("doc_id"), "left_semi"), maxBucket)
-      val newLabels = pin(labelsOf(m, mPairs))
+      val cc = Dedup.components(mPairs)
+      pins += cc
+      val newLabels = pin(labelsOf(m, cc))
       // ---- rename-efficient rewrites: only rows whose LABEL CHANGED (or
       // whose doc was deleted) rewrite. Unchanged M docs keep identical
       // (doc_id, cluster_id) rows, so leaving their buckets on disk is
@@ -296,10 +303,7 @@ object DedupIndex {
       val changed = pin(newLabels
         .join(oldLabelsM, Seq("doc_id", "cluster_id"), "left_anti"))
       val n = newLabels.count()
-      val delDf =
-        if (deletedIds.isEmpty) liveIds.limit(0)
-        else deletedIds.toDF("doc_id")
-      val touched = pin(changed.select(col("doc_id")).unionByName(delDf)
+      val touched = pin(changed.select(col("doc_id")).unionByName(dels)
         .distinct())
       val lbs = buckets(touched, IndexStore.idBucket(col("doc_id"), nB))
       // the touched docs' OLD member rows drop from their sub-buckets
@@ -334,6 +338,6 @@ object DedupIndex {
         bandWrites ++ labelWrites ++ memberWrites, Some(meta.copy(
           updateSeq = if (newSeq >= 0) newSeq else meta.updateSeq + 1)))
       n
-    } finally pins.foreach(_.unpersist())
+    } finally pins.foreach(Bridge.release)
   }
 }

@@ -1382,27 +1382,18 @@ object Mango {
                              newSeq: Long = -1L): Unit = {
     require(index.partitioned,
       "upsertIndexPartitioned requires a partitioned index")
-    val live =
-      if (deletedIds.isEmpty) changedDocs
-      // coalesce: three-valued logic would DROP null-id rows here while
-      // the deletedIds-empty branch keeps them; null ids never match a
-      // tombstone (the IndexStore.minusDeleted anti-join contract)
-      else changedDocs.filter(
-        coalesce(!col(idCol).isin(deletedIds: _*), lit(true)))
+    val d = IndexStore.Delta(changedDocs, col(idCol), deletedIds)
     val matching = index.partial match {
       case Some(pf) =>
-        live.filter(compile(parseSelector(pf), live.schema))
-      case None => live
+        d.live.filter(compile(parseSelector(pf), d.live.schema))
+      case None => d.live
     }
     val newRows = indexView(matching, idCol, index.fields).rows
-    val cids0 = changedDocs.select(col(idCol).as("_id"))
-    val cids =
-      if (deletedIds.isEmpty) cids0
-      else cids0.unionByName(IndexStore.idsDf(spark, cids0, deletedIds))
     val seq =
       if (newSeq >= 0) newSeq
       else IndexStore.readMeta(spark, index.path).updateSeq + 1
-    graft.view.PartitionedStore.merge(spark, index.path, newRows, cids, seq)
+    graft.view.PartitionedStore.merge(spark, index.path, newRows,
+      d.changedIds(col(idCol)), seq)
   }
 
   /** Catch a JSON index up to its document store's `purge_seq` —

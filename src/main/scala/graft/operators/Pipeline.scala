@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** End-to-end training-data pipeline compositions — the stages exist
   * individually ([[Text.qualityFilter]], [[Dedup.dedupCorpusBest]],
@@ -100,8 +101,8 @@ object Pipeline {
         // 4-6. the mix → shuffle → pack tail, shared with the delta
         // release path so the two can never drift
         releaseTail(d3, budgetOf(d3.count()), seed, seqLen, nShards)
-      } finally d2.unpersist()
-    } finally d1.unpersist()
+      } finally Bridge.release(d2)
+    } finally Bridge.release(d1)
   }
 
   /** Stages 4-6 of the release — temperature-weighted domain mix to
@@ -306,25 +307,19 @@ object Pipeline {
     val meta = IndexStore.readMeta(spark, path)
     val nB = meta.buckets
     val params = readParams(spark, path)
-    val live =
-      if (deletedIds.isEmpty) changedDocs
-      // coalesce: null ids never match a tombstone (the
-      // IndexStore.minusDeleted anti-join contract)
-      else changedDocs.filter(
-        coalesce(!id.cast("long").isin(deletedIds: _*), lit(true)))
+    val d = IndexStore.Delta(changedDocs, id.cast("long"), deletedIds)
     // localCheckpoint, not persist: the verdicts subtree (quality
     // expression forest + decontamination joins) would otherwise ride
     // INSIDE every downstream plan that references this relation —
     // through the DedupIndex.upsert boundary the repeated embedding
     // multiplies plan TEXT to heap-killing size under AQE's per-stage
     // explain. The checkpoint truncates lineage to a leaf.
-    val newV = verdictsOf(live, id, text, lang, score, domain,
+    val newV = verdictsOf(d.live, id, text, lang, score, domain,
         benchmark, bid, btext, params)
       .withColumn("_b", IndexStore.idBucket(col("doc_id"), nB))
       .localCheckpoint()
-    val cids = (changedDocs.select(id.cast("long").as("doc_id"))
-        .distinct() unionByName deletedIds.toDF("doc_id"))
-      .distinct().localCheckpoint()
+    val cids = d.changedIds(id.cast("long")).toDF("doc_id").distinct()
+      .localCheckpoint()
     // every intermediate checkpoint is registered here and released in
     // the finally: a leaked checkpoint block survives the call and,
     // over a long-lived session (the bench, a streaming driver),
@@ -422,7 +417,7 @@ object Pipeline {
       IndexStore.commitBatch(spark, path, docsW +: fpsW.toSeq,
         Option.when(newSeq >= 0)(meta.copy(updateSeq = newSeq)))
       dedupWork
-    } finally pins.foreach(_.unpersist())
+    } finally pins.foreach(Bridge.release)
   }
 
   /** Serve the release from the MAINTAINED state: reconstruct the
@@ -466,6 +461,6 @@ object Pipeline {
           col("_dom"))
         .localCheckpoint()
       releaseTail(d3, budgetOf(d3.count()), seed, seqLen, nShards)
-    } finally mapped.unpersist()
+    } finally Bridge.release(mapped)
   }
 }

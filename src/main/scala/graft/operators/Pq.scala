@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.view.IndexStore
+import graft.view.IndexStore.Delta
 
 /** Product-quantization ANN (Jégou, Douze, Schmid, "Product Quantization
   * for Nearest Neighbor Search", TPAMI 2011) — the memory-scale tier of
@@ -381,7 +382,12 @@ object Pq {
   def upsertPqVectors(spark: SparkSession, path: String,
                       changed: DataFrame, deletedIds: Seq[Any] = Nil,
                       newSeq: Long = -1L): Seq[Int] =
-    Similarity.upsertVecStore(spark, path, changed, deletedIds, newSeq)(
+    upsertPqVectors(spark, path, Similarity.vecDelta(changed, deletedIds),
+      newSeq)
+
+  private[graft] def upsertPqVectors(spark: SparkSession, path: String,
+                                     d: Delta, newSeq: Long): Seq[Int] =
+    Similarity.upsertVecStore(spark, path, d, newSeq)(
       pqRows(readCodebooks(spark, path)))
 
   /** Serve ADC top-k from the persisted index: the compressed code scan
@@ -496,7 +502,7 @@ object Pq {
                          (rows: (DataFrame, Int) => DataFrame): Unit = {
     val spark = corpus.sparkSession
     Similarity.buildVecStore(corpus, path, idBuckets, seq,
-      Seq("centroids" -> Similarity.centroidsDf(spark, cents),
+      Seq("centroids" -> Similarity.centroidTable(spark, cents),
         "codebooks" -> codebooksDf(spark, cbs)))(rows)
   }
 
@@ -517,7 +523,12 @@ object Pq {
   def upsertIvfPqVectors(spark: SparkSession, path: String,
                          changed: DataFrame, deletedIds: Seq[Any] = Nil,
                          newSeq: Long = -1L): Seq[Int] =
-    Similarity.upsertVecStore(spark, path, changed, deletedIds, newSeq)(
+    upsertIvfPqVectors(spark, path, Similarity.vecDelta(changed, deletedIds),
+      newSeq)
+
+  private[graft] def upsertIvfPqVectors(spark: SparkSession, path: String,
+                                        d: Delta, newSeq: Long): Seq[Int] =
+    Similarity.upsertVecStore(spark, path, d, newSeq)(
       ivfPqRows(Similarity.readCentroids(spark, path),
         readCodebooks(spark, path)))
 
@@ -576,7 +587,7 @@ object Pq {
     * against the (bounded) centroid table. */
   private def joinCentroidVec(df: DataFrame, cents: Seq[(Int, Array[Double])],
                               cid: Column): DataFrame = {
-    val ctab = Similarity.centroidsDf(df.sparkSession, cents)
+    val ctab = Similarity.centroidTable(df.sparkSession, cents)
       .toDF("_ccid", "_cvec")
     df.join(broadcast(ctab), cid === col("_ccid")).drop("_ccid")
   }
@@ -600,7 +611,8 @@ object Pq {
   def upsertIvfPqResiduals(spark: SparkSession, path: String,
                            changed: DataFrame, deletedIds: Seq[Any] = Nil,
                            newSeq: Long = -1L): Seq[Int] =
-    Similarity.upsertVecStore(spark, path, changed, deletedIds, newSeq)(
+    Similarity.upsertVecStore(spark, path,
+      Similarity.vecDelta(changed, deletedIds), newSeq)(
       ivfPqResidualRows(Similarity.readCentroids(spark, path),
         readCodebooks(spark, path)))
 

@@ -13,6 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 import graft.functions.DotProduct
 import graft.gfunctions.round4
 import graft.view.IndexStore
+import graft.view.IndexStore.Delta
 
 /** Similarity search over embedding columns (`array<float>`).
   * Scalar math runs through the native [[graft.functions.DotProduct]]
@@ -113,7 +114,7 @@ object Similarity {
   }
 
   /** The one incremental upsert of every persisted vector tier: the
-    * changed vectors (`vec_id`, `embedding`) minus the tombstoned ids
+    * live vectors (`vec_id`, `embedding`) of the change batch `d`
     * become stored rows through the tier's `rows`, and
     * [[graft.view.IndexStore.merge]] rewrites only the buckets holding
     * the changed or deleted ids' old rows or the new rows, all in one
@@ -121,8 +122,7 @@ object Similarity {
     * rows (SemDeDup's verdicts). `newSeq` defaults to update_seq + 1.
     * Returns the rewritten bucket ids. */
   private[operators] def upsertVecStore(spark: SparkSession, path: String,
-                                        changed: DataFrame,
-                                        deletedIds: Seq[Any], newSeq: Long,
+                                        d: Delta, newSeq: Long,
                                         sortCols: Seq[String] = Seq("_id"),
                                         finish: DataFrame => DataFrame =
                                           identity)
@@ -130,16 +130,16 @@ object Similarity {
       : Seq[Int] = {
     requireKbLayout(spark, path)
     val meta = IndexStore.readMeta(spark, path)
-    // merge tolerates duplicate ids: no distinct
-    val ids = changed.select(col("vec_id").as("_id"))
-    IndexStore.merge(spark, path, meta,
-      rows(IndexStore.minusDeleted(spark, changed, "vec_id", deletedIds),
-        meta.buckets),
-      if (deletedIds.isEmpty) ids
-      else ids.unionByName(IndexStore.idsDf(spark, ids, deletedIds)),
+    IndexStore.merge(spark, path, meta, rows(d.live, meta.buckets),
+      d.changedIds(col("vec_id")),
       if (newSeq >= 0) newSeq else meta.updateSeq + 1,
       ("_kb" +: sortCols).map(col), finish = finish)
   }
+
+  /** The change batch of a vector tier's batch upsert. */
+  private[operators] def vecDelta(changed: DataFrame,
+                                  deletedIds: Seq[Any]): Delta =
+    Delta(changed, col("vec_id"), deletedIds)
 
   /** A vector store written before the flat tiers joined the shared
     * layout keeps `data/_b=` buckets and no sidecar: refuse it, naming
@@ -203,8 +203,8 @@ object Similarity {
 
   /** A centroid table `(cid int, cvec array<double>)` — the stored
     * coarse quantizer of the IVF-family tiers. */
-  private[operators] def centroidsDf(spark: SparkSession,
-                                     cents: Seq[(Int, Array[Double])])
+  private[operators] def centroidTable(spark: SparkSession,
+                                       cents: Seq[(Int, Array[Double])])
       : DataFrame = {
     import spark.implicits._
     cents.map { case (cid, v) => (cid, v.toSeq) }.toDF("cid", "cvec")
@@ -358,8 +358,11 @@ object Similarity {
   def upsertSq8Vectors(spark: SparkSession, path: String,
                        changed: DataFrame, deletedIds: Seq[Any] = Nil,
                        newSeq: Long = -1L): Seq[Int] =
-    upsertVecStore(spark, path, changed, deletedIds, newSeq)(
-      sq8Rows(spark, path))
+    upsertSq8Vectors(spark, path, vecDelta(changed, deletedIds), newSeq)
+
+  private[graft] def upsertSq8Vectors(spark: SparkSession, path: String,
+                                      d: Delta, newSeq: Long): Seq[Int] =
+    upsertVecStore(spark, path, d, newSeq)(sq8Rows(spark, path))
 
   /** [[sq8TopK]] served from a [[buildSq8Index]] store: the corpus
     * side is the stored 8-bit codes (no embedding read, no retrain,
@@ -398,7 +401,7 @@ object Similarity {
                        seq: Long = 0L): Unit = {
     val spark = corpus.sparkSession
     buildVecStore(corpus, path, idBuckets, seq,
-      Seq("centroids" -> centroidsDf(spark, initCentroids(corpus, nCentroids)),
+      Seq("centroids" -> centroidTable(spark, initCentroids(corpus, nCentroids)),
         "model" -> sq8Train(corpus)))(ivfSq8Rows(spark, path))
   }
 
@@ -421,8 +424,11 @@ object Similarity {
   def upsertIvfSq8Vectors(spark: SparkSession, path: String,
                           changed: DataFrame, deletedIds: Seq[Any] = Nil,
                           newSeq: Long = -1L): Seq[Int] =
-    upsertVecStore(spark, path, changed, deletedIds, newSeq)(
-      ivfSq8Rows(spark, path))
+    upsertIvfSq8Vectors(spark, path, vecDelta(changed, deletedIds), newSeq)
+
+  private[graft] def upsertIvfSq8Vectors(spark: SparkSession, path: String,
+                                         d: Delta, newSeq: Long): Seq[Int] =
+    upsertVecStore(spark, path, d, newSeq)(ivfSq8Rows(spark, path))
 
   /** Catch an [[IndexStore]]-layout ANN store (IVF-SQ8 and every
     * other `_kb`-listed, by-id-sidecar tier maintained through
@@ -571,8 +577,13 @@ object Similarity {
   def upsertBinaryVectors(spark: SparkSession, path: String,
                           changed: DataFrame, deletedIds: Seq[Any] = Nil,
                           dims: Int = 64, newSeq: Long = -1L): Seq[Int] =
-    upsertVecStore(spark, path, changed, deletedIds, newSeq)(
-      binaryRows(dims))
+    upsertBinaryVectors(spark, path, vecDelta(changed, deletedIds), dims,
+      newSeq)
+
+  private[graft] def upsertBinaryVectors(spark: SparkSession, path: String,
+                                         d: Delta, dims: Int,
+                                         newSeq: Long): Seq[Int] =
+    upsertVecStore(spark, path, d, newSeq)(binaryRows(dims))
 
   /** [[binaryTopK]] served from a [[buildBinaryIndex]] store: the
     * corpus side is the stored code words (longs only — no embedding
@@ -883,7 +894,13 @@ object Similarity {
   def upsertLshVectors(spark: SparkSession, path: String,
                        changed: DataFrame, deletedIds: Seq[Any] = Nil,
                        planes: Int = 8, newSeq: Long = -1L): Seq[Int] =
-    upsertVecStore(spark, path, changed, deletedIds, newSeq, LshSort)(
+    upsertLshVectors(spark, path, vecDelta(changed, deletedIds), planes,
+      newSeq)
+
+  private[graft] def upsertLshVectors(spark: SparkSession, path: String,
+                                      d: Delta, planes: Int,
+                                      newSeq: Long): Seq[Int] =
+    upsertVecStore(spark, path, d, newSeq, LshSort)(
       (c, _) => lshRows(c, planes))
 
   /** ANN against a persisted [[buildLshIndex]] index. The probe
@@ -1181,7 +1198,7 @@ object Similarity {
     import spark.implicits._
     val cents = trainCentroids(corpus, nCentroids, refineIters)
     buildVecStore(corpus, path, idBuckets, seq,
-      Seq("centroids" -> centroidsDf(spark, cents),
+      Seq("centroids" -> centroidTable(spark, cents),
         "params" -> Seq(tau).toDF("tau")))(
       (c, _) => keepVerdicts(ivfRows(c, cents), tau))
   }
@@ -1200,11 +1217,15 @@ object Similarity {
     * presence had marked duplicate. Returns the affected cluster ids. */
   def upsertSemDedupVectors(spark: SparkSession, path: String,
                             changed: DataFrame, deletedIds: Seq[Any] = Nil,
-                            newSeq: Long = -1L): Seq[Int] = {
+                            newSeq: Long = -1L): Seq[Int] =
+    upsertSemDedupVectors(spark, path, vecDelta(changed, deletedIds), newSeq)
+
+  private[graft] def upsertSemDedupVectors(spark: SparkSession, path: String,
+                                           d: Delta,
+                                           newSeq: Long): Seq[Int] = {
     val tau = semDedupTau(spark, path)
     val cents = readCentroids(spark, path)
-    upsertVecStore(spark, path, changed, deletedIds, newSeq,
-      finish = keepVerdicts(_, tau))(
+    upsertVecStore(spark, path, d, newSeq, finish = keepVerdicts(_, tau))(
       // a placeholder verdict: `finish` re-pairs the merged buckets
       (c, _) => ivfRows(c, cents).withColumn("keep", lit(true)))
   }
@@ -1236,7 +1257,7 @@ object Similarity {
                     idBuckets: Int = 16, seq: Long = 0L): Unit = {
     val cents = trainCentroids(corpus, nCentroids, refineIters)
     buildVecStore(corpus, path, idBuckets, seq,
-      Seq("centroids" -> centroidsDf(corpus.sparkSession, cents)))(
+      Seq("centroids" -> centroidTable(corpus.sparkSession, cents)))(
       (c, _) => ivfRows(c, cents))
   }
 
@@ -1247,10 +1268,13 @@ object Similarity {
     * Returns the affected list ids. */
   def upsertIvfVectors(spark: SparkSession, path: String,
                        changed: DataFrame, deletedIds: Seq[Any] = Nil,
-                       newSeq: Long = -1L): Seq[Int] = {
+                       newSeq: Long = -1L): Seq[Int] =
+    upsertIvfVectors(spark, path, vecDelta(changed, deletedIds), newSeq)
+
+  private[graft] def upsertIvfVectors(spark: SparkSession, path: String,
+                                      d: Delta, newSeq: Long): Seq[Int] = {
     val cents = readCentroids(spark, path)
-    upsertVecStore(spark, path, changed, deletedIds, newSeq)(
-      (c, _) => ivfRows(c, cents))
+    upsertVecStore(spark, path, d, newSeq)((c, _) => ivfRows(c, cents))
   }
 
   /** ANN against a persisted [[buildIvfIndex]] index: each query scores

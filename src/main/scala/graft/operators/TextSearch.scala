@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.gfunctions.round4
+import graft.view.IndexStore.Delta
 
 /** Full-text keyword search: BM25 relevance scoring, both as a direct
   * corpus-scan operator and served from a PERSISTED inverted index —
@@ -359,24 +360,9 @@ object TextSearch {
         typedLit(an.sortedStop).as("an_stop"))
   }
 
-  /** `changedDocs` without the tombstoned ids' rows. */
-  private def liveDocs(changedDocs: DataFrame, id: Column,
-                       deletedIds: Seq[Long]): DataFrame =
-    if (deletedIds.isEmpty) changedDocs
-    // coalesce: three-valued logic would DROP null-id rows here while
-    // the deletedIds-empty branch keeps them; null ids never match a
-    // tombstone (the IndexStore.minusDeleted anti-join contract)
-    else changedDocs.filter(
-      coalesce(!id.cast("long").isin(deletedIds: _*), lit(true)))
-
-  /** Every changed or tombstoned doc id, as one `doc_id` column. */
-  private def changedIds(spark: SparkSession, changedDocs: DataFrame,
-                         id: Column, deletedIds: Seq[Long]): DataFrame = {
-    import spark.implicits._
-    val cids = changedDocs.select(id.cast("long").as("doc_id")).distinct()
-    (if (deletedIds.isEmpty) cids
-     else cids.unionByName(deletedIds.toDF("doc_id"))).distinct()
-  }
+  /** Every changed or tombstoned doc id of `d`, as one `doc_id` column. */
+  private def changedIds(d: Delta, id: Column): DataFrame =
+    d.changedIds(id).select(col("_id").cast("long").as("doc_id")).distinct()
 
   /** Incremental maintenance of a [[buildTextIndex]] index — the same
     * by-id-sidecar merge discipline as view and ANN indexes: changed
@@ -388,22 +374,31 @@ object TextSearch {
     * and the corpus stats (`n`, `sum_dl`) are adjusted by exact integer
     * deltas, so a maintained index serves bit-identical BM25 scores to
     * a fresh rebuild. `deletedIds` retire docs (tombstones); a changed
-    * doc that now has zero tokens is equivalent to a delete. Returns
-    * the affected term buckets. */
+    * doc that now has zero tokens is equivalent to a delete. A store
+    * of a stale layout is refused, naming its path. Returns the
+    * affected term buckets. */
   def upsertTextDocs(spark: SparkSession, path: String,
                      changedDocs: DataFrame, id: Column, text: Column,
                      deletedIds: Seq[Long] = Nil,
-                     newSeq: Long = -1L): Seq[Int] = {
+                     newSeq: Long = -1L): Seq[Int] =
+    upsertTextDocs(spark, path, Delta(changedDocs, id.cast("long"),
+      deletedIds), id, text, newSeq)
+
+  private[graft] def upsertTextDocs(spark: SparkSession, path: String,
+                                    d: Delta, id: Column, text: Column,
+                                    newSeq: Long): Seq[Int] = {
     import graft.view.IndexStore
     IndexStore.finishSwap(spark, path)
-    val st = IndexStore.readSmall(spark, path + "/stats", StatsRows).head
+    val rows = statsRows(spark, path + "/stats", StatsRows)
+    if (!stamped(rows, FormatVersion))
+      throw IndexStore.staleLayout("text", path, FormatVersion, "buildTextIndex")
+    val st = rows.head
     val nB = st.getAs[Int]("n_buckets")
     // changed docs tokenize under the STORED analyzer — a maintained
     // index must stay homogeneous with its build
     val an = analyzerFromRow(st)
-    upsertTerms(spark, path,
-      termFreqs(liveDocs(changedDocs, id, deletedIds), id, text, an),
-      changedIds(spark, changedDocs, id, deletedIds), nB, Nil, newSeq) {
+    upsertTerms(spark, path, termFreqs(d.live, id, text, an),
+      changedIds(d, id), nB, Nil, newSeq) {
       (rem, add) =>
         // exact integer deltas: a changed doc is removed with its old
         // dl from the sidecar and re-added with its new one
@@ -788,11 +783,8 @@ object TextSearch {
       s"partitioned text index at $path needs rebuild (fmt)")
     val an = analyzerFromRow(st0)
     val nB = st0.getAs[Int]("n_buckets")
-    val live =
-      if (deletedIds.isEmpty) changedDocs
-      else changedDocs.filter(
-        coalesce(!id.cast("string").isin(deletedIds: _*), lit(true)))
-    val routed = live
+    val d = Delta(changedDocs, id.cast("string"), deletedIds)
+    val routed = d.live
       .select(id.cast("string").as("doc_id"), text.as("_text"))
       .withColumn("_p",
         when(PartitionedStore.validId(col("doc_id")),
@@ -812,9 +804,8 @@ object TextSearch {
         sort_array(collect_list(col("_pp"))).as("pos"))
       .withColumn("_tb", termBucket(col("term"), nB))
       .persist()
-    val cids = (changedDocs.select(id.cast("string").as("doc_id"))
-        .distinct() unionByName deletedIds.toDF("doc_id"))
-      .distinct().persist()
+    val cids = d.changedIds(id.cast("string")).toDF("doc_id").distinct()
+      .persist()
     var merged: DataFrame = null
     try {
       val parts = cids
@@ -1893,15 +1884,27 @@ object TextSearch {
     * maintained index serves bit-identical BM25F scores to a rebuild.
     * `changedFields` must name the STORED fields in build order (the
     * index stays homogeneous — weights and analyzer come from the
-    * stamp, never the caller). `deletedIds` retire docs. Returns the
-    * affected term buckets. */
+    * stamp, never the caller). `deletedIds` retire docs. A store of a
+    * stale layout is refused, naming its path. Returns the affected
+    * term buckets. */
   def upsertFieldedDocs(spark: SparkSession, path: String,
                         changedDocs: DataFrame, id: Column,
                         changedFields: Seq[(String, Column)],
                         deletedIds: Seq[Long] = Nil,
-                        newSeq: Long = -1L): Seq[Int] = {
+                        newSeq: Long = -1L): Seq[Int] =
+    upsertFieldedDocs(spark, path, Delta(changedDocs, id.cast("long"),
+      deletedIds), id, changedFields, newSeq)
+
+  private[graft] def upsertFieldedDocs(spark: SparkSession, path: String,
+                                       d: Delta, id: Column,
+                                       changedFields: Seq[(String, Column)],
+                                       newSeq: Long): Seq[Int] = {
     graft.view.IndexStore.finishSwap(spark, path)
-    val stRows = fieldedStatRows(spark, path)
+    val rows = statsRows(spark, path + "/stats", FieldStatsRows)
+    if (!stamped(rows, FieldedFormatVersion, "ord"))
+      throw graft.view.IndexStore.staleLayout("fielded text", path,
+        FieldedFormatVersion, "buildFieldedTextIndex")
+    val stRows = rows.sortBy(_.getAs[Int]("ord"))
     val nB = stRows.head.getAs[Int]("n_buckets")
     // perfield: each field tokenizes under ITS stamped analyzer
     val anByField = stRows.map(r =>
@@ -1910,12 +1913,11 @@ object TextSearch {
     require(changedFields.map(_._1) == stored,
       s"changed fields ${changedFields.map(_._1)} must match the " +
         s"stored field map $stored (in build order)")
-    val live = liveDocs(changedDocs, id, deletedIds)
     upsertTerms(spark, path,
       changedFields.map { case (nm, c) =>
-        termFreqs(live, id, c, anByField(nm)).withColumn("field", lit(nm))
+        termFreqs(d.live, id, c, anByField(nm)).withColumn("field", lit(nm))
       }.reduce(_ unionByName _),
-      changedIds(spark, changedDocs, id, deletedIds), nB, Seq("field"),
+      changedIds(d, id), nB, Seq("field"),
       newSeq) { (rem, add) =>
       fieldedStatsDf(spark, stRows.map { r =>
         val f = r.getAs[String]("field")

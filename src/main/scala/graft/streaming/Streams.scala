@@ -1,9 +1,15 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.gfunctions.collation_key
+import graft.operators.{Dedup, DedupIndex, Pq, Replication, Similarity, TextSearch}
+import graft.sources.{ChangesFeed, EventStore}
+import graft.view.IndexStore
+import graft.view.IndexStore.Delta
 
 /** A closed user session emitted by [[Streams.sessionizeStream]]. */
 final case class SessionOut(user_id: Long, start_us: Long, end_us: Long,
@@ -116,6 +122,36 @@ object Streams {
       }
   }
 
+  /** The one foreachBatch loop behind every `maintain*`: each
+    * micro-batch becomes one [[graft.view.IndexStore.Delta]], split by
+    * the feed's `_deleted` tombstones of `id` (None: the stream is a
+    * log, every row goes in as it is). While the store does not
+    * `exist`, `build` runs on the live rows of the first batch `ready`
+    * accepts; every later batch is `upsert`ed. Both are stamped
+    * `seq = batchId + 1`, so a foreachBatch RETRY replays onto the same
+    * update_seq (idempotence). The split lives in the Delta and the
+    * seq rule here, once for every store kind, and no tombstone id is
+    * ever collected to the driver. */
+  private def maintain(feed: DataFrame, checkpoint: String,
+                       id: Option[Column], exists: => Boolean,
+                       ready: DataFrame => Boolean = !_.isEmpty,
+                       mode: String = "update")
+                      (build: (DataFrame, Long) => Unit)
+                      (upsert: (Delta, Long) => Unit): StreamingQuery =
+    feed.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val d = id.fold(Delta(batch, None))(Delta(batch, _))
+        if (exists) upsert(d, batchId + 1)
+        else if (ready(d.live)) build(d.live, batchId + 1)
+        ()
+      }
+      .start()
+
+  private val VecId = Some(col("vec_id"))
+  private val DocId = Some(col("doc_id"))
+
   /** Incremental view-index maintenance — the reference's design-doc view
     * updater driven by the change feed, as a streaming upsert into an
     * [[graft.view.IndexStore]] index: the first non-empty micro-batch
@@ -141,9 +177,10 @@ object Streams {
     * ([[graft.view.View.updateIndex]]'s `deletedIds`). With `_deleted`
     * present, live docs' ids also come from the raw feed via `id`, so a
     * doc whose conditional map phase stops emitting still has its old
-    * rows retired. An id with both an update and a tombstone in one
-    * batch is retired (the tombstone wins, as on the batch path).
-    * Tombstones before the index exists are no-ops.
+    * rows retired; without it they are the emitted rows' `_id`. An id
+    * with both an update and a tombstone in one batch is retired (the
+    * tombstone wins, as on the batch path). Tombstones before the
+    * index exists are no-ops.
     *
     * `locale = true` keys the index with the locale-aware collator,
     * matching a view declared with `View(..., locale = true)`.
@@ -160,111 +197,52 @@ object Streams {
                         reduce: Option[graft.view.Reduce] = None,
                         id: org.apache.spark.sql.Column = col("_id"),
                         locale: Boolean = false,
-                        autoCompactSkew: Double = 0.0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.view.IndexStore
+                        autoCompactSkew: Double = 0.0): StreamingQuery = {
     val keyFn = if (locale) graft.gfunctions.collation_key_locale _
                 else collation_key _
-    changeFeed.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val hasDel = batch.columns.contains("_deleted")
-        val deleted = coalesce(col("_deleted"), lit(false))
-        val live =
-          if (hasDel) batch.filter(!deleted).join(
-            broadcast(batch.filter(deleted).select(id.as("_graft_del"))),
-            id === col("_graft_del"), "left_anti")
-          else batch
-        val rows = emit(live)
-          .withColumn("_ck", keyFn(col("key")))
-        val n = if (buckets > 0) buckets
-                else spark.sessionState.conf.numShufflePartitions
-        if (!IndexStore.exists(spark, path)) {
-          // deletes can't refer to anything yet — creation considers
-          // only the batch's live rows
-          if (!rows.isEmpty)
-            IndexStore.create(spark, path, rows, n, seq = batchId + 1)
-        } else {
-          val meta = IndexStore.readMeta(spark, path)
-          val newRows =
-            rows.withColumn("_kb", IndexStore.bucketCol(col("_ck"), meta))
-          val changedIds =
-            if (hasDel) batch.select(id.as("_id"))
-            else rows.select(col("_id"))
-          IndexStore.merge(spark, path, meta, newRows, changedIds,
-            newSeq = batchId + 1, reduce = reduce)
-          if (autoCompactSkew > 0)
-            IndexStore.maybeCompact(spark, path, reduce, autoCompactSkew)
-        }
-        ()
-      }
-      .start()
-  }
-
-  /** The shared foreachBatch driver of every vector-feed index
-    * maintainer (feed schema `vec_id`, `embedding`, optional boolean
-    * `_deleted`): split each micro-batch into live rows and
-    * tombstoned ids, `build` on the first non-empty batch, `upsert`
-    * after — both stamped `seq = batchId + 1`, so a foreachBatch
-    * RETRY replays onto the same update_seq (idempotence). The split
-    * lives in ONE place so the G-family rules (tombstones retire; an
-    * id carrying both an update and a tombstone in one batch lets the
-    * delete win inside the upsert) cannot drift between tiers. */
-  private def maintainVecIndex(spark: SparkSession, changeFeed: DataFrame,
-                               path: String, checkpoint: String,
-                               build: (DataFrame, Long) => Unit,
-                               upsert: (DataFrame, Seq[Any], Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.view.IndexStore
-    changeFeed.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val hasDel = batch.columns.contains("_deleted")
-        val deleted = coalesce(col("_deleted"), lit(false))
-        val live = if (hasDel) batch.filter(!deleted) else batch
-        val delIds =
-          if (hasDel) batch.filter(deleted).select(col("vec_id"))
-            .distinct().collect().map(_.get(0)).toSeq
-          else Nil
-        if (!IndexStore.exists(spark, path)) {
-          if (!live.isEmpty) build(live, batchId + 1)
-        } else upsert(live, delIds, batchId + 1)
-        ()
-      }
-      .start()
+    def rows(live: DataFrame) =
+      emit(live).withColumn("_ck", keyFn(col("key")))
+    // deletes can't refer to anything yet — creation considers only the
+    // batch's live rows
+    maintain(changeFeed, checkpoint, Some(id), IndexStore.exists(spark, path),
+      ready = !rows(_).isEmpty) { (live, seq) =>
+      val n = if (buckets > 0) buckets
+              else spark.sessionState.conf.numShufflePartitions
+      IndexStore.create(spark, path, rows(live), n, seq)
+    } { (d, seq) =>
+      val meta = IndexStore.readMeta(spark, path)
+      val r = rows(d.live)
+      IndexStore.merge(spark, path, meta,
+        r.withColumn("_kb", IndexStore.bucketCol(col("_ck"), meta)),
+        d.ids.getOrElse(r.select(col("_id"))), newSeq = seq, reduce = reduce)
+      if (autoCompactSkew > 0)
+        IndexStore.maybeCompact(spark, path, reduce, autoCompactSkew)
+    }
   }
 
   /** Streaming maintenance of a persisted ANN index — the embedding-
     * corpus analogue of [[maintainViewIndex]]: the first non-empty
     * micro-batch builds the index ([[graft.operators.Similarity
     * .buildLshIndex]] or, with `ivf = true`, `buildIvfIndex` — whose
-    * quantizer is then FIXED across batches, as in any deployed IVF);
-    * every later batch upserts bucket-locally via the vector by-id
-    * sidecar (`upsertLshVectors`/`upsertIvfVectors`), so re-embedded
-    * vectors move buckets and `_deleted` tombstones retire, touching
-    * only the affected bucket directories. The change feed needs
-    * `vec_id` + `embedding` columns, plus optional boolean `_deleted`.
-    * update_seq tracks batches, exactly like view indexes. */
+    * quantizer is then FIXED across batches); every later batch
+    * upserts bucket-locally via the vector by-id sidecar
+    * (`upsertLshVectors`/`upsertIvfVectors`), so re-embedded vectors
+    * move buckets and `_deleted` tombstones retire, touching only the
+    * affected bucket directories. The change feed needs `vec_id` +
+    * `embedding` columns, plus optional boolean `_deleted`. update_seq
+    * tracks batches, exactly like view indexes. */
   def maintainAnnIndex(spark: SparkSession, changeFeed: DataFrame,
                        path: String, checkpoint: String,
                        ivf: Boolean = false, planes: Int = 8,
-                       nCentroids: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Similarity
-    maintainVecIndex(spark, changeFeed, path, checkpoint,
-      build = (live, seq) =>
-        if (ivf) Similarity.buildIvfIndex(live, path, nCentroids, seq = seq)
-        else Similarity.buildLshIndex(live, path, planes, seq = seq),
-      upsert = (live, delIds, seq) =>
-        if (ivf)
-          Similarity.upsertIvfVectors(spark, path, live, delIds,
-            newSeq = seq)
-        else
-          Similarity.upsertLshVectors(spark, path, live, delIds, planes,
-            newSeq = seq))
-  }
+                       nCentroids: Int = 16): StreamingQuery =
+    maintain(changeFeed, checkpoint, VecId,
+      IndexStore.exists(spark, path)) { (live, seq) =>
+      if (ivf) Similarity.buildIvfIndex(live, path, nCentroids, seq = seq)
+      else Similarity.buildLshIndex(live, path, planes, seq = seq)
+    } { (d, seq) =>
+      if (ivf) Similarity.upsertIvfVectors(spark, path, d, seq)
+      else Similarity.upsertLshVectors(spark, path, d, planes, seq)
+    }
 
   /** Streaming maintenance of a persisted PQ (product-quantization)
     * index — the compressed-codes analogue of [[maintainAnnIndex]]: the
@@ -277,14 +255,11 @@ object Streams {
     * update_seq tracks batches, exactly like every graft index. */
   def maintainPqIndex(spark: SparkSession, changeFeed: DataFrame,
                       path: String, checkpoint: String,
-                      m: Int = 8, ks: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Pq
-    maintainVecIndex(spark, changeFeed, path, checkpoint,
-      build = (live, seq) => Pq.buildPqIndex(live, path, m, ks, seq = seq),
-      upsert = (live, delIds, seq) =>
-        Pq.upsertPqVectors(spark, path, live, delIds, newSeq = seq))
-  }
+                      m: Int = 8, ks: Int = 16): StreamingQuery =
+    maintain(changeFeed, checkpoint, VecId,
+      IndexStore.exists(spark, path))(
+      (live, seq) => Pq.buildPqIndex(live, path, m, ks, seq = seq))(
+      Pq.upsertPqVectors(spark, path, _, _))
 
   /** Streaming maintenance of a persisted IVFADC index — the
     * list-pruned compressed tier under the same contract as
@@ -297,15 +272,13 @@ object Streams {
     * `embedding`, optional `_deleted`). */
   def maintainIvfPqIndex(spark: SparkSession, changeFeed: DataFrame,
                          path: String, checkpoint: String,
-                         nCentroids: Int = 16, m: Int = 8, ks: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Pq
-    maintainVecIndex(spark, changeFeed, path, checkpoint,
-      build = (live, seq) =>
-        Pq.buildIvfPqIndex(live, path, nCentroids, m, ks, seq = seq),
-      upsert = (live, delIds, seq) =>
-        Pq.upsertIvfPqVectors(spark, path, live, delIds, newSeq = seq))
-  }
+                         nCentroids: Int = 16, m: Int = 8,
+                         ks: Int = 16): StreamingQuery =
+    maintain(changeFeed, checkpoint, VecId,
+      IndexStore.exists(spark, path))(
+      (live, seq) =>
+        Pq.buildIvfPqIndex(live, path, nCentroids, m, ks, seq = seq))(
+      Pq.upsertIvfPqVectors(spark, path, _, _))
 
   /** Streaming maintenance of a persisted IVF-SQ8 index — the
     * list-pruned 8-bit tier under the same contract as
@@ -318,16 +291,12 @@ object Streams {
     * Same feed schema (`vec_id`, `embedding`, optional `_deleted`). */
   def maintainIvfSq8Index(spark: SparkSession, changeFeed: DataFrame,
                           path: String, checkpoint: String,
-                          nCentroids: Int = 16)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Similarity
-    maintainVecIndex(spark, changeFeed, path, checkpoint,
-      build = (live, seq) =>
-        Similarity.buildIvfSq8Index(live, path, nCentroids, seq = seq),
-      upsert = (live, delIds, seq) =>
-        Similarity.upsertIvfSq8Vectors(spark, path, live, delIds,
-          newSeq = seq))
-  }
+                          nCentroids: Int = 16): StreamingQuery =
+    maintain(changeFeed, checkpoint, VecId,
+      IndexStore.exists(spark, path))(
+      (live, seq) =>
+        Similarity.buildIvfSq8Index(live, path, nCentroids, seq = seq))(
+      Similarity.upsertIvfSq8Vectors(spark, path, _, _))
 
   /** Streaming maintenance of a persisted BINARY-quantization index —
     * the 1-bit tier under the same contract as [[maintainPqIndex]]:
@@ -340,16 +309,11 @@ object Streams {
     * boolean `_deleted`); update_seq tracks batches. */
   def maintainBinaryIndex(spark: SparkSession, changeFeed: DataFrame,
                           path: String, checkpoint: String,
-                          dims: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Similarity
-    maintainVecIndex(spark, changeFeed, path, checkpoint,
-      build = (live, seq) =>
-        Similarity.buildBinaryIndex(live, path, dims, seq = seq),
-      upsert = (live, delIds, seq) =>
-        Similarity.upsertBinaryVectors(spark, path, live, delIds,
-          dims, newSeq = seq))
-  }
+                          dims: Int = 64): StreamingQuery =
+    maintain(changeFeed, checkpoint, VecId,
+      IndexStore.exists(spark, path))(
+      (live, seq) => Similarity.buildBinaryIndex(live, path, dims, seq = seq))(
+      Similarity.upsertBinaryVectors(spark, path, _, dims, _))
 
   /** Streaming maintenance of a persisted SQ8 index — the 8-bit tier
     * under the same contract as [[maintainPqIndex]]: the first
@@ -361,14 +325,11 @@ object Streams {
     * Same feed schema (`vec_id`, `embedding`, optional boolean
     * `_deleted`); update_seq tracks batches. */
   def maintainSq8Index(spark: SparkSession, changeFeed: DataFrame,
-                       path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Similarity
-    maintainVecIndex(spark, changeFeed, path, checkpoint,
-      build = (live, seq) => Similarity.buildSq8Index(live, path, seq = seq),
-      upsert = (live, delIds, seq) =>
-        Similarity.upsertSq8Vectors(spark, path, live, delIds, newSeq = seq))
-  }
+                       path: String, checkpoint: String): StreamingQuery =
+    maintain(changeFeed, checkpoint, VecId,
+      IndexStore.exists(spark, path))(
+      (live, seq) => Similarity.buildSq8Index(live, path, seq = seq))(
+      Similarity.upsertSq8Vectors(spark, path, _, _))
 
   /** Streaming maintenance of a persisted SemDeDup index — the
     * semantic-dedup analogue of [[maintainAnnIndex]]: the first
@@ -383,73 +344,36 @@ object Streams {
   def maintainSemDedupIndex(spark: SparkSession, changeFeed: DataFrame,
                             path: String, checkpoint: String,
                             tau: Double, nCentroids: Int = 16,
-                            refineIters: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Similarity
-    maintainVecIndex(spark, changeFeed, path, checkpoint,
-      build = (live, seq) =>
-        Similarity.buildSemDedupIndex(live, path, tau, nCentroids,
-          refineIters, seq = seq),
-      upsert = (live, delIds, seq) =>
-        Similarity.upsertSemDedupVectors(spark, path, live, delIds,
-          newSeq = seq))
-  }
+                            refineIters: Int = 0): StreamingQuery =
+    maintain(changeFeed, checkpoint, VecId,
+      IndexStore.exists(spark, path))(
+      (live, seq) => Similarity.buildSemDedupIndex(live, path, tau,
+        nCentroids, refineIters, seq = seq))(
+      Similarity.upsertSemDedupVectors(spark, path, _, _))
 
   /** Streaming maintenance of a persisted inverted text index — the
     * document-corpus analogue of [[maintainViewIndex]]: the first
-    * non-empty micro-batch builds the index ([[graft.operators
-    * .TextSearch.buildTextIndex]]); every later batch upserts
-    * term-bucket-locally via the by-doc sidecar
-    * (`TextSearch.upsertTextDocs`), so edited docs re-post, `_deleted`
-    * tombstones retire, and the BM25 stats stay exact. The change feed
-    * needs `doc_id` + `text` columns, plus optional boolean
-    * `_deleted`. update_seq tracks batches, like every graft index. */
+    * micro-batch with an ANALYZED token builds the index
+    * ([[graft.operators.TextSearch.buildTextIndex]] needs a non-empty
+    * vocabulary, so a stopword-only batch defers too); every later
+    * batch upserts term-bucket-locally via the by-doc sidecar
+    * (`TextSearch.upsertTextDocs`, which re-reads the STORED analyzer —
+    * `analyzer` governs only the build, and a store of a stale layout
+    * is refused there), so edited docs re-post, `_deleted` tombstones
+    * retire, and the BM25 stats stay exact. The change feed needs
+    * `doc_id` + `text` columns, plus optional boolean `_deleted`.
+    * update_seq tracks batches, like every graft index. */
   def maintainTextIndex(spark: SparkSession, changeFeed: DataFrame,
                         path: String, checkpoint: String,
                         nBuckets: Int = 64,
-                        analyzer: graft.operators.TextSearch.Analyzer =
-                          graft.operators.TextSearch.Analyzer())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.TextSearch
-    import graft.view.IndexStore
-    changeFeed.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val hasDel = batch.columns.contains("_deleted")
-        val deleted = coalesce(col("_deleted"), lit(false))
-        val live = if (hasDel) batch.filter(!deleted) else batch
-        val delIds =
-          if (hasDel) batch.filter(deleted).select(col("doc_id"))
-            .distinct().collect().map(_.getLong(0)).toSeq
-          else Nil
-        if (!IndexStore.exists(spark, path)) {
-          // defer creation past batches with no ANALYZED tokens (build
-          // requires a non-empty vocabulary — same deferral as the view
-          // maintainer; a stopword-only batch must also defer)
-          if (!live.filter(
-              size(analyzer.tokens(col("text"))) > 0).isEmpty)
-            TextSearch.buildTextIndex(live, col("doc_id"), col("text"),
-              path, nBuckets, seq = batchId + 1, analyzer = analyzer)
-        } else {
-          // same stale-layout contract as the dedup maintainer: a v2
-          // (pre-analyzer) artifact would crash the upsert on missing
-          // analyzer stats columns — fail actionably instead
-          if (!TextSearch.indexCurrent(spark, path))
-            throw new IllegalStateException(
-              s"text index at $path has a stale on-disk layout " +
-                s"(expected fmt ${TextSearch.FormatVersion}) — rebuild " +
-                "it with TextSearch.buildTextIndex over the full " +
-                "corpus before resuming streaming maintenance")
-          // upsert re-reads the STORED analyzer; the param only governs
-          // the initial build
-          TextSearch.upsertTextDocs(spark, path, live, col("doc_id"),
-            col("text"), delIds, newSeq = batchId + 1)
-        }
-        ()
-      }
-      .start()
-  }
+                        analyzer: TextSearch.Analyzer = TextSearch.Analyzer())
+      : StreamingQuery =
+    maintain(changeFeed, checkpoint, DocId,
+      IndexStore.exists(spark, path),
+      ready = !_.filter(size(analyzer.tokens(col("text"))) > 0).isEmpty)(
+      (live, seq) => TextSearch.buildTextIndex(live, col("doc_id"),
+        col("text"), path, nBuckets, seq = seq, analyzer = analyzer))(
+      TextSearch.upsertTextDocs(spark, path, _, col("doc_id"), col("text"), _))
 
   /** Streaming maintenance of a persisted FIELDED (BM25F) text index —
     * [[maintainTextIndex]] with a field map: the first batch with ≥1
@@ -464,44 +388,19 @@ object Streams {
     * field expressions read (+ optional `_deleted`). */
   def maintainFieldedTextIndex(spark: SparkSession, changeFeed: DataFrame,
                                path: String, checkpoint: String,
-                               fields: Seq[(String, org.apache.spark.sql.Column, Double)],
+                               fields: Seq[(String, Column, Double)],
                                nBuckets: Int = 64,
-                               analyzer: graft.operators.TextSearch.Analyzer =
-                                 graft.operators.TextSearch.Analyzer())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.TextSearch
-    changeFeed.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val hasDel = batch.columns.contains("_deleted")
-        val deleted = coalesce(col("_deleted"), lit(false))
-        val live = if (hasDel) batch.filter(!deleted) else batch
-        val delIds =
-          if (hasDel) batch.filter(deleted).select(col("doc_id"))
-            .distinct().collect().map(_.getLong(0)).toSeq
-          else Nil
-        if (!graft.view.IndexStore.exists(spark, path)) {
-          val anyTokens = fields
-            .map { case (_, c, _) => size(analyzer.tokens(c)) }
-            .reduce(_ + _)
-          if (!live.filter(anyTokens > 0).isEmpty)
-            TextSearch.buildFieldedTextIndex(live, col("doc_id"), fields,
-              path, nBuckets, seq = batchId + 1, analyzer = analyzer)
-        } else {
-          if (!TextSearch.fieldedCurrent(spark, path))
-            throw new IllegalStateException(
-              s"fielded text index at $path has a stale on-disk layout " +
-                s"(expected fmt ${TextSearch.FieldedFormatVersion}) — " +
-                "rebuild it with TextSearch.buildFieldedTextIndex over " +
-                "the full corpus before resuming streaming maintenance")
-          TextSearch.upsertFieldedDocs(spark, path, live, col("doc_id"),
-            fields.map { case (n, c, _) => (n, c) }, delIds,
-            newSeq = batchId + 1)
-        }
-        ()
-      }
-      .start()
+                               analyzer: TextSearch.Analyzer =
+                                 TextSearch.Analyzer()): StreamingQuery = {
+    val anyTokens =
+      fields.map { case (_, c, _) => size(analyzer.tokens(c)) }.reduce(_ + _)
+    maintain(changeFeed, checkpoint, DocId,
+      IndexStore.exists(spark, path),
+      ready = !_.filter(anyTokens > 0).isEmpty)(
+      (live, seq) => TextSearch.buildFieldedTextIndex(live, col("doc_id"),
+        fields, path, nBuckets, seq = seq, analyzer = analyzer))(
+      TextSearch.upsertFieldedDocs(spark, path, _, col("doc_id"),
+        fields.map { case (n, c, _) => (n, c) }, _))
   }
 
   /** Streaming maintenance of a persisted SimHash band index — same
@@ -512,79 +411,30 @@ object Streams {
     * retire. Change feed: `doc_id` + `text` (+ optional `_deleted`). */
   def maintainSimhashIndex(spark: SparkSession, changeFeed: DataFrame,
                            path: String, checkpoint: String,
-                           nBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Dedup
-    import graft.view.IndexStore
-    changeFeed.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val hasDel = batch.columns.contains("_deleted")
-        val deleted = coalesce(col("_deleted"), lit(false))
-        val live = if (hasDel) batch.filter(!deleted) else batch
-        val delIds =
-          if (hasDel) batch.filter(deleted).select(col("doc_id"))
-            .distinct().collect().map(_.getLong(0)).toSeq
-          else Nil
-        if (!IndexStore.exists(spark, path)) {
-          if (!live.isEmpty)
-            Dedup.buildSimhashIndex(live, col("doc_id"), "text", path,
-              nBuckets, seq = batchId + 1)
-        } else {
-          Dedup.upsertSimhashDocs(spark, path, live, col("doc_id"),
-            "text", delIds, newSeq = batchId + 1)
-        }
-        ()
-      }
-      .start()
-  }
+                           nBuckets: Int = 64): StreamingQuery =
+    maintain(changeFeed, checkpoint, DocId,
+      IndexStore.exists(spark, path))(
+      (live, seq) => Dedup.buildSimhashIndex(live, col("doc_id"), "text",
+        path, nBuckets, seq = seq))(
+      Dedup.upsertSimhashDocs(spark, path, _, col("doc_id"), "text", _))
 
   /** Streaming maintenance of the persisted dedup-cluster index
     * ([[graft.operators.DedupIndex]]): a crawl delta re-hashes only
     * its docs and re-clusters only the components it touches —
-    * continuously-correct near-dup clusters over a live corpus.
-    * Change feed: `doc_id` + `text` (+ optional `_deleted`). */
+    * continuously-correct near-dup clusters over a live corpus. A
+    * store of a stale layout cannot be upgraded from a change feed
+    * (the stream does not carry the corpus) and is refused by the
+    * upsert. Change feed: `doc_id` + `text` (+ optional `_deleted`). */
   def maintainDedupClusters(spark: SparkSession, changeFeed: DataFrame,
                             path: String, checkpoint: String,
-                            nBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.DedupIndex
-    import graft.view.IndexStore
-    changeFeed.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val hasDel = batch.columns.contains("_deleted")
-        val deleted = coalesce(col("_deleted"), lit(false))
-        val live = if (hasDel) batch.filter(!deleted) else batch
-        val delIds =
-          if (hasDel) batch.filter(deleted).select(col("doc_id"))
-            .distinct().collect().map(_.getLong(0)).toSeq
-          else Nil
-        if (!IndexStore.exists(spark, path)) {
-          if (!live.isEmpty)
-            DedupIndex.build(live, col("doc_id"), col("text"), path,
-              nBuckets = nBuckets, seq = batchId + 1)
-        } else {
-          // a present-but-stale-layout artifact CANNOT be upgraded from
-          // a change feed (the stream doesn't carry the corpus) and
-          // must not be rebuilt from one batch (that would drop every
-          // doc outside it) — fail with the actionable error, not a
-          // crash-loop on a missing-column AnalysisException
-          if (!DedupIndex.indexCurrent(spark, path))
-            throw new IllegalStateException(
-              s"dedup-cluster index at $path has a stale on-disk " +
-                s"layout (expected fmt ${DedupIndex.FormatVersion}) — " +
-                "rebuild it with DedupIndex.build over the full corpus " +
-                "before resuming streaming maintenance")
-          DedupIndex.upsert(spark, path, live, col("doc_id"),
-            col("text"), delIds, newSeq = batchId + 1)
-        }
-        ()
-      }
-      .start()
-  }
+                            nBuckets: Int = 64): StreamingQuery =
+    maintain(changeFeed, checkpoint, DocId,
+      IndexStore.exists(spark, path))(
+      (live, seq) => DedupIndex.build(live, col("doc_id"), col("text"), path,
+        nBuckets = nBuckets, seq = seq))(
+      // k, bands and maxBucket: the build's defaults
+      DedupIndex.upsert(spark, path, _, col("doc_id"), col("text"), 8, 4,
+        1000, _))
 
   /** Streaming ingestion into a [[graft.sources.EventStore]] — each
     * micro-batch of events appends into its `_day` partitions (the
@@ -595,34 +445,13 @@ object Streams {
     * business, never the ingest path's. */
   def maintainEventStore(spark: SparkSession, eventStream: DataFrame,
                          path: String, checkpoint: String,
-                         filesPerDay: Int = 1)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.sources.EventStore
-    eventStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val exists = new org.apache.hadoop.fs.Path(path)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(new org.apache.hadoop.fs.Path(path))
-          if (!exists) EventStore.write(batch, path, filesPerDay)
-          else EventStore.append(batch, path, filesPerDay)
-        }
-        ()
-      }
-      .start()
-  }
+                         filesPerDay: Int = 1): StreamingQuery =
+    maintain(eventStream, checkpoint, None,
+      IndexStore.fsFor(spark, path).exists(new Path(path)), mode = "append")(
+      (b, _) => EventStore.write(b, path, filesPerDay))(
+      (d, _) =>
+        if (!d.live.isEmpty) EventStore.append(d.live, path, filesPerDay))
 
-  /** Streaming maintenance of a [[graft.sources.ChangesFeed]] store —
-    * the write-side of the replication backbone: each micro-batch of
-    * change rows `(seq, id, rev, deleted)` is appended into its seq
-    * buckets (the first non-empty batch creates the store). Append-only
-    * by design — a log never upserts — so a batch's cost is exactly its
-    * own rows' bucket writes; consumers tail with
-    * `ChangesFeed.since(checkpoint)` concurrently (readers see whole
-    * parquet files, and a half-visible batch only shortens the feed,
-    * never corrupts it). */
   /** CONTINUOUS replication — CouchDB's `continuous=true`, the
     * reference replicator left running: each micro-batch of source
     * change rows (anything with an `id` column; the
@@ -640,18 +469,11 @@ object Streams {
                           revHash: Column, deleted: Column,
                           ancestors: Column, targetPath: String,
                           checkpoint: String, numBuckets: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    changeStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Replication.syncBatch(spark, targetPath,
-            source, id, revPos, revHash, deleted, ancestors,
-            batch.select(col("id")), numBuckets, newSeq = batchId + 1)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    maintain(changeStream, checkpoint, None, true, mode = "append")(
+      (_, _) => ())(
+      replicate(spark, source, id, revPos, revHash, deleted, ancestors,
+        targetPath, numBuckets)(identity))
 
   /** G14: CONTINUOUS filtered replication — CouchDB's
     * `continuous=true` with a `selector` body: every micro-batch's
@@ -674,44 +496,46 @@ object Streams {
                                   docs: DataFrame, docIdCol: String,
                                   selectorJson: String,
                                   targetPath: String, checkpoint: String,
-                                  numBuckets: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+                                  numBuckets: Int = 0): StreamingQuery = {
     import graft.operators.Mango
     val pred = Mango.compile(Mango.parseSelector(selectorJson),
       docs.schema)
     val matching = docs.filter(pred)
       .select(col(docIdCol).as("id")).distinct()
-    changeStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Replication.syncBatch(spark, targetPath,
-            source, id, revPos, revHash, deleted, ancestors,
-            batch.select(col("id"))
-              .join(matching, Seq("id"), "left_semi"),
-            numBuckets, newSeq = batchId + 1)
-        ()
-      }
-      .start()
+    maintain(changeStream, checkpoint, None, true, mode = "append")(
+      (_, _) => ())(
+      replicate(spark, source, id, revPos, revHash, deleted, ancestors,
+        targetPath, numBuckets)(_.join(matching, Seq("id"), "left_semi")))
   }
 
+  /** The upsert of a replication target: every non-empty batch syncs
+    * the changed ids `keep` retains, and the first creates the target
+    * (so the target always "exists" for [[maintain]]). */
+  private def replicate(spark: SparkSession, source: DataFrame, id: Column,
+                        revPos: Column, revHash: Column, deleted: Column,
+                        ancestors: Column, targetPath: String,
+                        numBuckets: Int)
+                       (keep: DataFrame => DataFrame): (Delta, Long) => Unit =
+    (d, seq) =>
+      if (!d.live.isEmpty)
+        Replication.syncBatch(spark, targetPath, source, id, revPos,
+          revHash, deleted, ancestors, keep(d.live.select(col("id"))),
+          numBuckets, newSeq = seq)
+
+  /** Streaming maintenance of a [[graft.sources.ChangesFeed]] store —
+    * the write-side of the replication backbone: each micro-batch of
+    * change rows `(seq, id, rev, deleted)` is appended into its seq
+    * buckets (the first non-empty batch creates the store). Append-only
+    * by design — a log never upserts — so a batch's cost is exactly its
+    * own rows' bucket writes; consumers tail with
+    * `ChangesFeed.since(checkpoint)` concurrently (readers see whole
+    * parquet files, and a half-visible batch only shortens the feed,
+    * never corrupts it). */
   def maintainChangesFeed(spark: SparkSession, changeStream: DataFrame,
                           path: String, checkpoint: String,
-                          width: Long = 1024L)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.sources.ChangesFeed
-    changeStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          if (!ChangesFeed.exists(spark, path))
-            ChangesFeed.write(batch, path, width)
-          else ChangesFeed.append(batch, path)
-        }
-        ()
-      }
-      .start()
-  }
+                          width: Long = 1024L): StreamingQuery =
+    maintain(changeStream, checkpoint, None, ChangesFeed.exists(spark, path),
+      mode = "append")(
+      (b, _) => ChangesFeed.write(b, path, width))(
+      (d, _) => if (!d.live.isEmpty) ChangesFeed.append(d.live, path))
 }

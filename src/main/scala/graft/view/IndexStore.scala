@@ -337,6 +337,15 @@ object IndexStore {
       readSmall(spark, dir, 1).headOption.exists(r =>
         r.schema.fieldNames.contains("fmt") && r.getAs[Int]("fmt") == fmt)
 
+  /** The refusal an upsert gives a `what` store at `path` whose layout
+    * stamp is not `fmt`: a change batch cannot upgrade it, and a
+    * rebuild from the batch alone would drop every doc outside it. */
+  private[graft] def staleLayout(what: String, path: String, fmt: Int,
+                                 build: String): IllegalStateException =
+    new IllegalStateException(s"$what index at $path has a stale on-disk " +
+      s"layout (expected fmt $fmt) — rebuild it with $build over the full " +
+      "corpus before maintaining it incrementally")
+
   /** The `part=<value>` partition directories of `dir`, any value
     * (none if `dir` is absent). */
   private[graft] def partDirs(spark: SparkSession, dir: String,
@@ -611,7 +620,8 @@ object IndexStore {
       if (ids.isEmpty) Nil
       else {
         val none = readBuckets(spark, dataDir(path), "_kb", Nil).limit(0)
-        merge(spark, path, meta, none, idsDf(spark, none, ids),
+        val d = Delta(none, col("_id"), ids)
+        merge(spark, path, meta, d.live, d.changedIds(col("_id")),
           meta.updateSeq, dataSortCols, rf, finish)
       }
     if (newPurgeSeq >= 0)
@@ -903,28 +913,48 @@ object IndexStore {
                             failure: => String): Unit =
     if (!fs.rename(src, dst)) throw new IOException(failure)
 
-  /** `changed` minus the rows whose id is in `deletedIds` — a batch
-    * carrying BOTH an update and a tombstone for one id must let the
-    * tombstone WIN (in feed order the delete is the later event);
-    * without this cut the updated row re-enters the store right after
-    * the merge removed it (resurrection). Every incremental upsert
-    * routes its changed set through here before deriving new store
-    * rows. */
-  private[graft] def minusDeleted(spark: SparkSession, changed: DataFrame,
-                                  idCol: String,
-                                  deletedIds: Seq[Any]): DataFrame =
-    if (deletedIds.isEmpty) changed
-    else changed.join(
-      idsDf(spark, changed.select(col(idCol).as("_id")), deletedIds)
-        .toDF(idCol),
-      Seq(idCol), "left_anti")
+  /** One change batch of an incrementally maintained store, split once
+    * by the tombstone rule every upsert shares. `live` is the batch's
+    * rows minus every row whose id the batch tombstones: a tombstone
+    * wins over an update of the same id (in feed order the delete is
+    * the later event), and a null id never matches one. `ids`, when
+    * the batch carries tombstones, is every changed id — the batch
+    * rows' ids plus the tombstoned ones, duplicates harmless — as one
+    * column `_id`; without tombstones it is None ([[changedIds]]).
+    * Tombstones stay a DataFrame and are cut by a broadcast anti-join,
+    * so no tombstone id is collected to the driver. */
+  final case class Delta(live: DataFrame, ids: Option[DataFrame]) {
+    /** Every changed id as one `_id` column: [[ids]], or the live rows'
+      * own under `id` when the batch carries no tombstone. */
+    def changedIds(id: Column): DataFrame =
+      ids.getOrElse(live.select(id.as("_id")))
+  }
 
-  /** Build a one-column `_id` DataFrame for literal deleted ids, typed
-    * like `idsLike`'s `_id` column. */
-  def idsDf(spark: SparkSession, idsLike: DataFrame,
-            ids: Seq[Any]): DataFrame = {
-    val schema = idsLike.select(col("_id")).schema
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(ids.map(Row(_)), 1), schema)
+  object Delta {
+    /** A change-feed batch: a row whose optional boolean `_deleted` is
+      * true tombstones its `id` (a null `_deleted` is an update). */
+    def apply(batch: DataFrame, id: Column): Delta =
+      if (!batch.columns.contains("_deleted")) Delta(batch, None)
+      else {
+        val deleted = coalesce(col("_deleted"), lit(false))
+        Delta(cut(batch.filter(!deleted), id,
+            batch.filter(deleted).select(id.as("_graft_del"))),
+          Some(batch.select(id.as("_id"))))
+      }
+
+    /** The batch API's change batch: the `changed` docs, identified by
+      * `id`, and the literal `deletedIds`, typed like `id`. */
+    def apply(changed: DataFrame, id: Column, deletedIds: Seq[Any]): Delta =
+      if (deletedIds.isEmpty) Delta(changed, None)
+      else {
+        val ids = changed.select(id.as("_id"))
+        val tombs = changed.sparkSession.createDataFrame(
+          deletedIds.map(Row(_)).asJava, ids.schema)
+        Delta(cut(changed, id, tombs.toDF("_graft_del")),
+          Some(ids.unionByName(tombs)))
+      }
+
+    private def cut(rows: DataFrame, id: Column, tombs: DataFrame): DataFrame =
+      rows.join(broadcast(tombs), id === col("_graft_del"), "left_anti")
   }
 }

@@ -749,33 +749,15 @@ final class View private (
     * only the `_p` directories holding changed docs are read and
     * rewritten, behind the same rename-swap discipline. O(changed
     * partitions) per batch. */
-  /** `changedDocs` minus the deleted ids — a batch carrying BOTH an
-    * update and a tombstone for one doc lets the tombstone WIN (in
-    * feed order the delete is the later event); without this cut the
-    * updated doc's rows re-enter the index right after the merge
-    * removed them. */
-  private def minusDeleted(spark: SparkSession, changedDocs: DataFrame,
-                           deletedIds: Seq[Any]): DataFrame =
-    if (deletedIds.isEmpty) changedDocs
-    else {
-      val del = IndexStore.idsDf(spark,
-          changedDocs.select(idCol.as("_id")), deletedIds)
-        .withColumnRenamed("_id", "_graft_del_id")
-      changedDocs.join(del, idCol === col("_graft_del_id"), "left_anti")
-    }
-
   def updatePartitionedIndex(spark: SparkSession, path: String,
                              changedDocs: DataFrame,
                              deletedIds: Seq[Any] = Nil,
                              newSeq: Long = -1L): Unit = {
     val meta = IndexStore.readMeta(spark, path)
-    val newRows = mapPhase(minusDeleted(spark, changedDocs, deletedIds))
-    val cids = changedDocs.select(idCol.as("_id")).distinct()
-    val allIds =
-      if (deletedIds.isEmpty) cids
-      else cids.unionByName(IndexStore.idsDf(spark, cids, deletedIds))
+    val d = IndexStore.Delta(changedDocs, idCol, deletedIds)
     val seq = if (newSeq >= 0) newSeq else meta.updateSeq + 1
-    PartitionedStore.merge(spark, path, newRows, allIds, seq)
+    PartitionedStore.merge(spark, path, mapPhase(d.live), d.changedIds(idCol),
+      seq)
   }
 
   /** Incremental index maintenance — the reference's change-feed driven
@@ -803,15 +785,11 @@ final class View private (
       deletedIds: Seq[Any] = Nil,
       newSeq: Long = -1L): Unit = {
     val meta = IndexStore.readMeta(spark, path)
-    val newRows = mapPhase(minusDeleted(spark, changedDocs, deletedIds))
-      .withColumn("_kb", IndexStore.bucketCol(col("_ck"), meta))
-    val cids = changedDocs.select(idCol.as("_id"))
-    val allIds =
-      if (deletedIds.isEmpty) cids
-      else cids.unionByName(IndexStore.idsDf(spark, cids, deletedIds))
+    val d = IndexStore.Delta(changedDocs, idCol, deletedIds)
     val seq = if (newSeq >= 0) newSeq else meta.updateSeq + 1
-    IndexStore.merge(spark, path, meta, newRows, allIds, seq,
-      reduce = reduceFn)
+    IndexStore.merge(spark, path, meta,
+      mapPhase(d.live).withColumn("_kb", IndexStore.bucketCol(col("_ck"), meta)),
+      d.changedIds(idCol), seq, reduce = reduceFn)
   }
 
   /** Catch this view's materialized index up to its document store's

@@ -31,6 +31,18 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Drop what `df` pins: its cached plan, and the checkpointed RDD
+    * of a `localCheckpoint`ed frame, which `unpersist` alone keeps
+    * registered (and its blocks held) until the RDD is collected. */
+  def release(df: org.apache.spark.sql.DataFrame): Unit = {
+    df.unpersist()
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+  }
+
   private lazy val writers = ThreadUtils.newDaemonCachedThreadPool("graft-write")
 
   /** Run `body` on a pooled daemon thread that carries the calling

@@ -28,9 +28,6 @@ class CrashMatrixSpec extends SparkSpecBase {
   private final case class Kind(build: String => Unit, batch: String => Unit,
                                 tables: Seq[String],
                                 serve: String => Seq[String] = _ => Nil,
-                                /** Its batch releases every pin it
-                                  * persisted, failed or not. */
-                                releasesPins: Boolean = true,
                                 /** The replay; the batch by default. */
                                 replay: Option[String => Unit] = None) {
     lazy val base: String = {
@@ -88,9 +85,8 @@ class CrashMatrixSpec extends SparkSpecBase {
       val p = copyOf(k.base)
       val pinned = spark.sparkContext.getPersistentRDDs.keySet
       crashed(c)(k.batch(p))
-      if (k.releasesPins)
-        assert(spark.sparkContext.getPersistentRDDs.keySet == pinned,
-          "the failed batch left persisted RDDs behind")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == pinned,
+        "the failed batch left persisted RDDs behind")
       spark.catalog.clearCache()
       k.replay.getOrElse(k.batch)(p)
       assert(k.state(p) == k.clean)
@@ -194,9 +190,7 @@ class CrashMatrixSpec extends SparkSpecBase {
     p => DedupIndex.upsert(spark, p, dupBatch, $"doc_id", $"text",
       deletedIds = Seq(tomb, ids(3)), newSeq = 2),
     Seq("bands", "ids", "labels", "members"),
-    p => DedupIndex.clusters(spark, p).collect().map(_.toString).sorted.toSeq,
-    // Dedup.connectedComponents' localCheckpoint pins outlive the call
-    releasesPins = false)
+    p => DedupIndex.clusters(spark, p).collect().map(_.toString).sorted.toSeq)
   for (d <- Seq("bands", "ids", "labels", "members"))
     crashTest(s"dedup clusters: a crash at $d._tmp", clusters,
       Crash(rename = s"$d._tmp"))
@@ -218,9 +212,7 @@ class CrashMatrixSpec extends SparkSpecBase {
         $"doc_id", $"text",
         deletedIds = ids.filter(_ % 13 == 5), newSeq = 2),
       Seq("docs", "fps", "dedup/labels", "dedup/members"),
-      p => Seq(IndexStore.readMeta(spark, s"$p/dedup").updateSeq.toString),
-      // the release state's localCheckpoint pins outlive the call
-      releasesPins = false)
+      p => Seq(IndexStore.readMeta(spark, s"$p/dedup").updateSeq.toString))
   }
   for (d <- Seq("docs", "fps", "labels"))
     crashTest(s"release state: a crash at $d._tmp", release,

@@ -493,9 +493,10 @@ class StreamingSpec extends SparkSpecBase {
     }
   }
 
-  // 17 jobs measured for each (18 and 22 before the tiers shared one
+  // 13 jobs measured for each (17 before the micro-batch stopped
+  // collecting its tombstone ids, 18 and 22 before the tiers shared one
   // store path); one job of slack, as for the view batch
-  for ((tier, budget) <- Seq("ivf" -> 18, "pq" -> 18))
+  for ((tier, budget) <- Seq("ivf" -> 14, "pq" -> 14))
     test(s"one $tier vector-index maintenance micro-batch stays within its job budget") {
       implicit val sql = spark.sqlContext
       val dir = Files.createTempDirectory(s"graft-stream-$tier-jobs").toString
@@ -530,8 +531,10 @@ class StreamingSpec extends SparkSpecBase {
     }
 
   // measured job counts plus one job of slack, as for the view batch
-  // (25 and 17 measured with the one-record batch commit)
-  for ((kind, budget) <- Seq("fielded text" -> 26, "simhash" -> 18))
+  // (23, 15 and 74 measured once the micro-batch stopped collecting
+  // its tombstone ids; 25 and 17 with the one-record batch commit)
+  for ((kind, budget) <- Seq("fielded text" -> 24, "simhash" -> 16,
+                             "dedup cluster" -> 75))
     test(s"one $kind-index maintenance micro-batch stays within its job budget") {
       implicit val sql = spark.sqlContext
       val dir = Files.createTempDirectory("graft-stream-kind-jobs").toString
@@ -539,13 +542,17 @@ class StreamingSpec extends SparkSpecBase {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .select($"doc_id", $"text").as[(Long, String)].collect().toSeq
       val in = MemoryStream[TextChg]
-      val q =
-        if (kind == "simhash")
+      val q = kind match {
+        case "simhash" =>
           Streams.maintainSimhashIndex(spark, in.toDF(), path, s"$dir/ckpt",
             nBuckets = 8)
-        else Streams.maintainFieldedTextIndex(spark, in.toDF(), path,
+        case "dedup cluster" =>
+          Streams.maintainDedupClusters(spark, in.toDF(), path, s"$dir/ckpt",
+            nBuckets = 8)
+        case _ => Streams.maintainFieldedTextIndex(spark, in.toDF(), path,
           s"$dir/ckpt", Seq(("title", substring($"text", 1, 24), 2.0),
             ("body", $"text", 1.0)), nBuckets = 8)
+      }
       val (h1, h2) = docs.splitAt(docs.size / 2)
       in.addData(h1.map { case (i, t) => TextChg(i, t, _deleted = false) }: _*)
       q.processAllAvailable()
@@ -593,10 +600,11 @@ class StreamingSpec extends SparkSpecBase {
     }
     q.stop()
     info(s"$jobs Spark jobs in the micro-batch")
-    // 24 measured (26 before the one-record batch commit, 34 before the
-    // format check and the stats read moved to the driver and the store
-    // opens to footer schemas)
-    val budget = 25
+    // 22 measured (24 before the micro-batch stopped collecting its
+    // tombstone ids, 26 before the one-record batch commit, 34 before
+    // the format check and the stats read moved to the driver and the
+    // store opens to footer schemas)
+    val budget = 23
     assert(jobs <= budget,
       s"$jobs Spark jobs for one text maintenance micro-batch (budget $budget)")
     val corpus = (docs.take(docs.size / 2 + 3).filterNot(d =>
@@ -609,6 +617,152 @@ class StreamingSpec extends SparkSpecBase {
       assert(TextSearch.searchIndexed(spark, path, t, 10).collect().toSeq ==
         TextSearch.searchIndexed(spark, fresh, t, 10).collect().toSeq,
         s"maintained text index diverges from rebuild for $t")
+  }
+
+  test("one replication micro-batch stays within its job budget") {
+    import graft.operators.Replication
+    implicit val sql = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-stream-repl-jobs").toString
+    val source = (0 until 40).map(i =>
+        (s"m$i", 2L, s"s$i", i % 9 == 4, Seq(s"1-a$i")))
+      .toDF("id", "rev_pos", "rev_hash", "deleted", "ancestors")
+    val in = MemoryStream[(Long, String)]
+    val q = Streams.maintainReplication(spark, in.toDF().toDF("seq", "id"),
+      source, $"id", $"rev_pos", $"rev_hash", $"deleted", $"ancestors",
+      s"$dir/target", s"$dir/ckpt", numBuckets = 4)
+    in.addData((0 until 20).map(i => (i.toLong, s"m$i")): _*)
+    q.processAllAvailable()
+    // one warm batch: the budget is for a steady-state batch
+    in.addData((20L, "m20"))
+    q.processAllAvailable()
+    // new docs, a tombstoned leaf and a re-sent id
+    val jobs = org.apache.spark.graft.JobCounter(spark.sparkContext,
+        q.runId.toString) {
+      in.addData((21L, "m21"), (22L, "m22"), (23L, "m13"), (24L, "m3"))
+      q.processAllAvailable()
+    }
+    q.stop()
+    info(s"$jobs Spark jobs in the micro-batch")
+    // 32 measured; one job of slack, as for the view batch
+    val budget = 33
+    assert(jobs <= budget,
+      s"$jobs Spark jobs for one replication micro-batch (budget $budget)")
+    assert(Replication.openTarget(spark, s"$dir/target").count() == 23)
+  }
+
+  test("a tombstone-heavy micro-batch collects no tombstone ids and matches a rebuild") {
+    import graft.operators.{Similarity, TextSearch}
+    import org.apache.spark.sql.execution.QueryExecution
+    implicit val sql = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-stream-tombs").toString
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select($"doc_id", $"text").as[(Long, String)].collect().toSeq
+    val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select($"vec_id", $"embedding").as[(Long, Array[Float])].collect().toSeq
+    // every micro-batch job reports the stream's own call site (`start
+    // at Streams.scala`), so the driver collects are read from the
+    // actions instead: the output columns of each Dataset `collect`.
+    // Registered before the queries start, so their sessions inherit it.
+    val collects = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]
+    @volatile var on = false
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (on && f == "collect") collects.add(qe.analyzed.output.map(_.name))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // 550 tombstones: 300 stored ids (the first also updated in the
+    // batch — the tombstone wins) and 250 never stored; plus 4 edits
+    def tombs(ids: Seq[Long]) = ids.take(300) ++ (1L to 250L).map(_ + 100000L)
+    val (tGone, vGone) = (tombs(docs.map(_._1)), tombs(vecs.map(_._1)))
+    val (tEdits, vEdits) = (docs.slice(300, 304), vecs.slice(300, 304))
+    val tIn = MemoryStream[TextChg]
+    val vIn = MemoryStream[VecChg]
+    val qt = Streams.maintainTextIndex(spark, tIn.toDF(), s"$dir/txt",
+      s"$dir/ckt", nBuckets = 8)
+    val qv = Streams.maintainAnnIndex(spark, vIn.toDF(), s"$dir/ann",
+      s"$dir/ckv")
+    try {
+      tIn.addData(docs.map { case (i, t) => TextChg(i, t, _deleted = false) }: _*)
+      vIn.addData(vecs.map { case (i, e) => VecChg(i, e, _deleted = false) }: _*)
+      qt.processAllAvailable()
+      qv.processAllAvailable()
+      val tBatch = TextChg(tGone.head, "zebra resurrected", _deleted = false) +:
+        (tEdits.map { case (i, _) => TextChg(i, "hash stream zebra", _deleted = false) } ++
+          tGone.map(TextChg(_, "", _deleted = true)))
+      val vBatch = VecChg(vGone.head, vecs.last._2, _deleted = false) +:
+        (vEdits.map { case (i, e) => VecChg(i, e.map(-_), _deleted = false) } ++
+          vGone.map(VecChg(_, Array.empty[Float], _deleted = true)))
+      on = true
+      org.apache.spark.graft.JobCounter(spark.sparkContext, qt.runId.toString) {
+        tIn.addData(tBatch: _*)
+        vIn.addData(vBatch: _*)
+        qt.processAllAvailable()
+        qv.processAllAvailable()
+      }
+      on = false
+      val idCollects = collects.toArray.toSeq.collect {
+        case c: Seq[_] if c == Seq("doc_id") || c == Seq("vec_id") => c }
+      assert(idCollects.isEmpty,
+        s"the micro-batch collected tombstone ids to the driver: $idCollects")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      qt.stop()
+      qv.stop()
+    }
+    val tFresh = s"$dir/txt_fresh"
+    TextSearch.buildTextIndex((docs.filterNot(d => tGone.contains(d._1) ||
+        tEdits.exists(_._1 == d._1)) ++
+        tEdits.map { case (i, _) => (i, "hash stream zebra") })
+      .toDF("doc_id", "text"), $"doc_id", $"text", tFresh, nBuckets = 8)
+    for (t <- Seq(Seq("hash", "stream"), Seq("zebra"), Seq("the", "data")))
+      assert(TextSearch.searchIndexed(spark, s"$dir/txt", t, 10).collect().toSeq ==
+        TextSearch.searchIndexed(spark, tFresh, t, 10).collect().toSeq,
+        s"maintained text index diverges from a rebuild for $t")
+    val vFresh = s"$dir/ann_fresh"
+    val survivors = (vecs.filterNot(v => vGone.contains(v._1) ||
+        vEdits.exists(_._1 == v._1)) ++
+        vEdits.map { case (i, e) => (i, e.map(-_)) })
+      .toDF("vec_id", "embedding")
+    Similarity.buildLshIndex(survivors, vFresh)
+    val queries = survivors.filter($"vec_id" % 7 === 0)
+    assert(Similarity.lshTopKIndexed(spark, s"$dir/ann", queries, 5)
+        .collect().map(_.toSeq).toSet ==
+      Similarity.lshTopKIndexed(spark, vFresh, queries, 5)
+        .collect().map(_.toSeq).toSet,
+      "maintained ANN index diverges from a rebuild")
+  }
+
+  test("batch upserts refuse a stale-layout store, naming its path") {
+    import graft.operators.{DedupIndex, TextSearch}
+    implicit val sql = spark.sqlContext
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select($"doc_id", $"text").limit(20)
+    val batch = Seq((1L, "some changed text")).toDF("doc_id", "text")
+    val fs = graft.view.IndexStore.fsFor(spark, sfDir)
+    def restamp(dir: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      df.coalesce(1).write.parquet(s"$dir.new")
+      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+      fs.rename(new org.apache.hadoop.fs.Path(s"$dir.new"),
+        new org.apache.hadoop.fs.Path(dir))
+    }
+    // a text store whose stats row carries the previous layout stamp
+    val t = Files.createTempDirectory("graft-stale-batch-txt").toString + "/idx"
+    TextSearch.buildTextIndex(docs, $"doc_id", $"text", t, nBuckets = 8)
+    restamp(s"$t/stats", spark.read.parquet(s"$t/stats")
+      .withColumn("fmt", lit(TextSearch.FormatVersion - 1)).localCheckpoint())
+    val e1 = intercept[IllegalStateException](
+      TextSearch.upsertTextDocs(spark, t, batch, $"doc_id", $"text"))
+    assert(e1.getMessage.contains("stale on-disk layout") &&
+      e1.getMessage.contains(t), e1.getMessage)
+    // a dedup-cluster store stamped with the previous layout
+    val c = Files.createTempDirectory("graft-stale-batch-dcx").toString + "/idx"
+    DedupIndex.build(docs, $"doc_id", $"text", c, nBuckets = 8)
+    restamp(s"$c/fmt", Seq(DedupIndex.FormatVersion - 1).toDF("fmt"))
+    val e2 = intercept[IllegalStateException](
+      DedupIndex.upsert(spark, c, batch, $"doc_id", $"text"))
+    assert(e2.getMessage.contains("stale on-disk layout") &&
+      e2.getMessage.contains(c), e2.getMessage)
   }
 
   test("streamed FIELDED index builds then upserts; matches a rebuild") {

@@ -12,13 +12,15 @@
 # and partitioned search, refined and filtered ANN, and eight gates of
 # the stores that commit through IndexStore.commitBatch: streamed and
 # fielded text upserts, text purge, streamed SimHash, bulk docs, local
-# docs and the release delta) and checks them
-# against the DuckDB oracle. Exits non-zero on any failure — do NOT
-# snapshot-commit if this script fails.
+# docs and the release delta, and eight more streaming maintainers: ANN,
+# IVF-PQ, SQ8, IVF-SQ8, the changes feed, the event store, replication
+# and filtered replication) and checks them against the DuckDB oracle.
+# Exits non-zero on any failure — do NOT snapshot-commit if this script
+# fails.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-GATES="${1:-q01_emit_sum,q115_mango_find,q158_ivfpq_ann,q94_view_maintenance,q105_view_upsert,q109_compaction,q242_purge_view_index,q60_text_search,q53_ann_ivf,q116_mango_find_indexed,q207_sq8_index_ann,q209_stream_binary_index,q112_semdedup_index,q263_purge_ann_index,q59_bm25,q72_filtered_search,q262_search_highlights,q270_partitioned_search,q55_ann_ivf_refined,q79_filtered_ann,q95_streaming_text_index,q96_fielded_upsert,q104_streaming_fielded,q244_purge_text_index,q102_streaming_simhash,q220_bulk_docs_store,q251_local_docs,q273_release_delta}"
+GATES="${1:-q01_emit_sum,q115_mango_find,q158_ivfpq_ann,q94_view_maintenance,q105_view_upsert,q109_compaction,q242_purge_view_index,q60_text_search,q53_ann_ivf,q116_mango_find_indexed,q207_sq8_index_ann,q209_stream_binary_index,q112_semdedup_index,q263_purge_ann_index,q59_bm25,q72_filtered_search,q262_search_highlights,q270_partitioned_search,q55_ann_ivf_refined,q79_filtered_ann,q95_streaming_text_index,q96_fielded_upsert,q104_streaming_fielded,q244_purge_text_index,q102_streaming_simhash,q220_bulk_docs_store,q251_local_docs,q273_release_delta,q101_streaming_ann,q170_streaming_ivfpq,q210_stream_sq8_index,q215_stream_ivfsq8,q138_streaming_changes,q140_streaming_events,q187_streaming_replication,q201_streaming_filtered_repl}"
 SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/snapshot_check.XXXXXX)"
 
